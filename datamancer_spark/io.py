@@ -815,7 +815,7 @@ def compact_parquet(
 # — every execution still scans the parquet files. File identity
 # (size + mtime_ns) invalidates the entry when the driver regenerates
 # testdata; weak session keys drop entries when a session is replaced.
-_TABLE_CACHE = None  # weakref.WeakKeyDictionary[SparkSession, dict]
+_TABLE_CACHE = None  # WeakKeyDictionary[SparkSession, {path: (sig, df)}]
 
 
 def _session_cache(spark: SparkSession) -> dict:
@@ -824,11 +824,7 @@ def _session_cache(spark: SparkSession) -> dict:
         import weakref
 
         _TABLE_CACHE = weakref.WeakKeyDictionary()
-    cache = _TABLE_CACHE.get(spark)
-    if cache is None:
-        cache = {"defaults": False, "tables": {}}
-        _TABLE_CACHE[spark] = cache
-    return cache
+    return _TABLE_CACHE.setdefault(spark, {})
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: Sequence[str] | None = None) -> dict[str, DamFrame]:
@@ -844,21 +840,12 @@ def load_tables(spark: SparkSession, sf_dir: str, names: Sequence[str] | None = 
 
     cache = _session_cache(spark)
     # Defensive: the caller's session may not be ours (the verification
-    # driver builds its own); these confs are required for correct reads.
-    # Once per session — plus a one-conf sentinel check on every later
-    # call (ADVICE r15): the threat model is a foreign driver session,
-    # and if that driver mutates a required conf mid-session the cached
-    # "defaults applied" flag would otherwise go stale. One conf.get is
-    # ~1 ms of py4j; re-assert everything only when it drifted.
-    if not cache["defaults"]:
-        ensure_session_defaults(spark)
-        cache["defaults"] = True
-    else:
-        try:
-            if spark.conf.get("spark.sql.session.timeZone", None) != "UTC":
-                ensure_session_defaults(spark)
-        except Exception:
-            ensure_session_defaults(spark)
+    # driver builds its own), and a foreign driver may mutate a required
+    # conf mid-session. These confs are required for correct reads, so
+    # re-assert all of them on every call: the eight conf.set calls cost
+    # ~2 ms of py4j, and a check on any one sentinel conf cannot see
+    # drift in the others.
+    ensure_session_defaults(spark)
 
     out: dict[str, DamFrame] = {}
     for n in names:
@@ -871,20 +858,27 @@ def load_tables(spark: SparkSession, sf_dir: str, names: Sequence[str] | None = 
         if os.path.isdir(p):
             # Directory datasets (Spark-written {name}.parquet dirs):
             # in-place rewrites change MEMBER files without necessarily
-            # touching the directory's own size/mtime (ADVICE r15), so
-            # fold the members' stats into the signature. Driver
+            # touching any directory's own size/mtime (ADVICE r15), so
+            # fold the stats of every member of the tree — partition
+            # subdirectories included — into the signature. Driver
             # testdata tables are single files and never take this
             # branch; it exists so a stale FileIndex can't be served
             # for directory inputs.
             try:
                 members = []
-                for m in sorted(os.listdir(p)):
-                    ms = os.stat(os.path.join(p, m))
-                    members.append((m, ms.st_size, ms.st_mtime_ns))
+                for root, dirs, files in os.walk(p):
+                    dirs.sort()
+                    for m in sorted(files):
+                        mp = os.path.join(root, m)
+                        ms = os.stat(mp)
+                        members.append(
+                            (os.path.relpath(mp, p), ms.st_size,
+                             ms.st_mtime_ns)
+                        )
                 sig = sig + (tuple(members),)
             except OSError:
                 pass
-        hit = cache["tables"].get(p)
+        hit = cache.get(p)
         if hit is not None and hit[0] == sig:
             out[n] = hit[1]
             continue
@@ -895,7 +889,7 @@ def load_tables(spark: SparkSession, sf_dir: str, names: Sequence[str] | None = 
         # exactness (doubles can't hold ns epochs > 2^53).
         if n == "events" and isinstance(df.schema["ts"].dataType, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        cache["tables"][p] = (sig, df)
+        cache[p] = (sig, df)
         out[n] = df
     return {k: DamFrame(v) for k, v in out.items()}
 

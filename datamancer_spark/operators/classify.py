@@ -225,7 +225,12 @@ def naive_bayes_classify(
     class-level model frames are tiny and broadcast; the per-(doc,
     class) score is one aggregation over the doc's tokens × |classes|
     — |classes| is small by the problem's nature, so the fan-out is a
-    constant factor, never quadratic."""
+    constant factor, never quadratic.
+
+    Eager: calling this runs Spark jobs while the plan is built
+    (``materialize`` of the label, token and class-count frames), and
+    the pinned blocks live until GC or unpersist unless
+    ``set_checkpoint_dir`` was called."""
     from ..session import materialize
 
     # the token stream and the (id, label) projection feed MANY

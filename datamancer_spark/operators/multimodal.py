@@ -492,8 +492,7 @@ def png_decode_pixels(blob: bytes):
 def decode_image_blob(blob: bytes):
     """ONE image blob → ``(width, height, channels, pixels uint8
     (h, w, ch))`` or ``None`` — the pure-Python decode chain shared by
-    every image kernel and by the codec-backend verification oracle
-    (``operators/codecbackend.py``). Format walk: PNG → baseline/
+    every image kernel. Format walk: PNG → baseline/
     progressive JPEG → GIF (first frame) → BMP → TIFF → lossless
     WebP. No codec library anywhere; ``None`` means undecodable (an
     unsupported format or a loud decode refusal), never an error."""
@@ -530,30 +529,20 @@ def decode_images(
     bin_col: str = "content",
     allow_fake: bool = False,
     on_unsupported: str = "null",
-    backend=None,
 ) -> DataFrame:
     """Decode images to (width, height, channels, mean_intensity).
 
-    The real-decode chain (``decode_image_blob``: PNG, JPEG, GIF, BMP,
-    TIFF, lossless WebP — no codec library) runs through the pluggable
-    batch backend interface (``operators/codecbackend.py``);
-    ``backend`` accepts an ``ImageDecodeBackend`` instance or a
-    registered name, defaulting to the pure-Python reference (or the
-    ``DATAMANCER_IMAGE_BACKEND`` env var). An accelerated backend must
-    pass ``validate_image_backend`` (bit-for-bit pixel equality vs the
-    reference) before use. Blobs no backend can decode fall through to
-    PIL when present; without PIL, ``allow_fake=True`` substitutes a
+    Every blob goes through the real-decode chain
+    (``decode_image_blob``: PNG, JPEG, GIF, BMP, TIFF, lossless WebP —
+    no codec library). Blobs it cannot decode fall through to PIL when
+    present; without PIL, ``allow_fake=True`` substitutes a
     deterministic md5-derived fake, and otherwise the row comes back
     with NULL metrics (``on_unsupported="null"``, the default — at
     100 TB one undecodable blob must never kill the job; pass
     ``on_unsupported="error"`` to fail fast instead). Arrow-batched
-    mapInPandas either way — the UDF boundary is per-batch, so a C
-    backend slots in without touching plan shape."""
+    mapInPandas."""
     if on_unsupported not in ("null", "error"):
         raise ValueError(f"on_unsupported must be null|error, got {on_unsupported!r}")
-    from .codecbackend import resolve_image_backend
-
-    backend = resolve_image_backend(backend)
 
     try:
         import PIL.Image  # noqa: F401
@@ -565,9 +554,9 @@ def decode_images(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = {"path": [], "width": [], "height": [], "channels": [], "mean_intensity": []}
-            blobs = [bytes(b) for b in pdf[bin_col]]
-            results = backend.decode_batch(blobs)
-            for path, blob, res in zip(pdf["path"], blobs, results):
+            for path, blob in zip(pdf["path"], pdf[bin_col]):
+                blob = bytes(blob)
+                res = decode_image_blob(blob)
                 if res is not None:
                     w, h, ch, px = res
                     mean = round(float(px.mean()) / 255.0, 6)
@@ -1248,44 +1237,23 @@ def audio_features(
     bin_col: str = "content",
     allow_fake: bool = False,
     envelope_bins: int = 8,
-    backend=None,
 ) -> DataFrame:
     """Per-clip audio features (duration, sample rate, RMS loudness
     envelope). The WAV family (integer PCM, G.711, IMA ADPCM), FLAC,
     AIFF/AIFC, MPEG-1 Layer I/III (real MP3, late r7) and Ogg Vorbis
-    (r9) decode FOR REAL with stdlib + numpy through the pluggable
-    batch backend interface (``operators/codecbackend.py``; ``backend``
-    = instance, registered name, or the ``DATAMANCER_AUDIO_BACKEND``
-    env var — default pure-Python reference). Ogg Opus and the
-    documented MPEG refusal set come back NULL, or md5-derived fakes
-    under ``allow_fake=True``. Arrow-batched mapInPandas; the UDF
-    boundary is per-batch, so an accelerated backend slots in without
-    touching plan shape."""
-    import numpy as np
-
-    from .codecbackend import resolve_audio_backend
-
-    backend = resolve_audio_backend(backend)
-
-    def _envelope(rate, mono):
-        n = len(mono)
-        edges = np.linspace(0, n, envelope_bins + 1, dtype=np.int64)
-        env = [
-            round(float(np.sqrt(np.mean(mono[a:b] ** 2))), 6)
-            if b > a
-            else 0.0
-            for a, b in zip(edges[:-1], edges[1:])
-        ]
-        return (round(n / rate, 6), int(rate), env)
+    (r9) decode FOR REAL with stdlib + numpy (``wav_decode_samples`` over
+    ``audio_decode_array``, per blob). Ogg Opus and the documented MPEG
+    refusal set come back NULL, or md5-derived fakes under
+    ``allow_fake=True``. Arrow-batched mapInPandas."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = {"path": [], "duration_s": [], "sample_rate": [], "loudness": []}
-            blobs = [bytes(b) for b in pdf[bin_col]]
-            results = backend.decode_batch(blobs)
-            for path, blob, res in zip(pdf["path"], blobs, results):
+            for path, blob in zip(pdf["path"], pdf[bin_col]):
+                blob = bytes(blob)
+                res = wav_decode_samples(blob, envelope_bins)
                 if res is not None:
-                    dur, rate, env = _envelope(res[0], res[1])
+                    dur, rate, env = res
                 elif allow_fake:
                     d = hashlib.md5(blob).digest()
                     dur = round(1 + d[0] / 8.0, 3)
@@ -1946,7 +1914,7 @@ def _decode_gray(blob: bytes):
     px = _decode_rgb(blob)
     if px is None:
         return None
-    return _gray_of(px)
+    return px.mean(axis=2) if px.shape[2] > 1 else px[:, :, 0]
 
 
 def box_resample(arr, out_h: int, out_w: int):
@@ -2023,13 +1991,19 @@ def png_encode(px) -> bytes:
             + chunk(b"IEND", b""))
 
 
-def _px_post(blob: bytes, px):
-    """Shared post-decode steps, independent of which backend produced
-    the pixels: channel-axis normalization and the JPEG-only EXIF
-    upright (the orientation tag is a header read on the BLOB, so it
-    composes with any decode backend)."""
+def _decode_rgb(blob: bytes):
+    """(h, w, c) uint8 from any REAL decoder (c = 1 or 3), with EXIF
+    orientation uprighted for JPEGs; None when undecodable. r10: the
+    format walk is the SHARED ``decode_image_blob`` chain (single
+    source of truth — a format added there reaches the perceptual
+    screens automatically); the orientation tag is a header read on
+    the blob."""
     import numpy as np
 
+    decoded = decode_image_blob(blob)
+    if decoded is None:
+        return None
+    px = decoded[3]
     if px.ndim == 2:
         px = px[:, :, None]
     if blob[:2] == b"\xff\xd8":  # JPEG: hash camera photos upright
@@ -2041,22 +2015,6 @@ def _px_post(blob: bytes, px):
                 axis=2,
             )
     return px
-
-
-def _gray_of(px):
-    return px.mean(axis=2) if px.shape[2] > 1 else px[:, :, 0]
-
-
-def _decode_rgb(blob: bytes):
-    """(h, w, c) uint8 from any REAL decoder (c = 1 or 3), with EXIF
-    orientation uprighted for JPEGs; None when undecodable. r10: the
-    format walk is the SHARED ``decode_image_blob`` chain (single
-    source of truth — a format added there reaches the perceptual
-    screens automatically) plus ``_px_post``."""
-    decoded = decode_image_blob(blob)
-    if decoded is None:
-        return None
-    return _px_post(blob, decoded[3])
 
 
 RESIZE_SCHEMA = StructType(
@@ -2115,40 +2073,20 @@ def image_dhash(
     df: DataFrame,
     bin_col: str = "content",
     id_col: str = "path",
-    backend=None,
 ) -> DataFrame:
     """Per-image 64-bit perceptual dHash over the REAL decoders (the
     shared ``decode_image_blob`` chain — PNG, baseline+progressive
     JPEG, GIF, BMP, TIFF, lossless WebP); other formats (video needs
     ffmpeg, absent here) yield NULL — one undecodable
-    blob must never kill a 100 TB job. ``backend`` (r10): an
-    ``ImageDecodeBackend`` instance/name routes pixel production
-    through the pluggable batch interface — the dHash SCREENS are the
-    decode-bound stage at crawl scale (SCALING.md), so this is where
-    an accelerated backend pays; it must pass
-    ``validate_image_backend`` first, and the EXIF upright + grayscale
-    post-steps are backend-independent (header reads on the blob).
-    Arrow-batched mapInPandas; only
+    blob must never kill a 100 TB job. Arrow-batched mapInPandas; only
     (id, 8-byte hash) rows ever shuffle downstream. Output
     (``id_col``, dhash: long|NULL). Pair with ``dhash_pairs`` for the
     bucketed near-dup join — the image analog of SimHash over text."""
-    if backend is not None:
-        from .codecbackend import resolve_image_backend
-
-        backend = resolve_image_backend(backend)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = {id_col: [], "dhash": []}
-            blobs = [bytes(b) for b in pdf[bin_col]]
-            if backend is not None:
-                results = backend.decode_batch(blobs)
-                grays = [
-                    None if r is None else _gray_of(_px_post(b, r[3]))
-                    for b, r in zip(blobs, results)
-                ]
-            else:
-                grays = [_decode_gray(b) for b in blobs]
+            grays = [_decode_gray(bytes(b)) for b in pdf[bin_col]]
             for rid, gray in zip(pdf[id_col], grays):
                 out[id_col].append(rid)
                 out["dhash"].append(None if gray is None else dhash64_gray(gray))
@@ -2225,7 +2163,6 @@ def audio_dhash(
     df: DataFrame,
     bin_col: str = "content",
     id_col: str = "path",
-    backend=None,
 ) -> DataFrame:
     """Per-clip 64-bit perceptual fingerprint over the REAL stdlib
     decoders (``audio_decode_array`` → ``audio_dhash64``): the WAV
@@ -2236,22 +2173,12 @@ def audio_dhash(
     Arrow-batched mapInPandas; only
     (id, 8-byte hash) rows shuffle downstream. Pair with
     ``audio_dhash_pairs`` — the audio analog of ``image_dhash``/SimHash,
-    sharing ``dedup.hamming_band_pairs``. ``backend`` (r10): an
-    ``AudioDecodeBackend`` instance/name routes sample production
-    through the pluggable batch interface (see ``image_dhash``)."""
-    if backend is not None:
-        from .codecbackend import resolve_audio_backend
-
-        backend = resolve_audio_backend(backend)
+    sharing ``dedup.hamming_band_pairs``."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = {id_col: [], "dhash": []}
-            blobs = [bytes(b) for b in pdf[bin_col]]
-            if backend is not None:
-                results = backend.decode_batch(blobs)
-            else:
-                results = [audio_decode_array(b) for b in blobs]
+            results = [audio_decode_array(bytes(b)) for b in pdf[bin_col]]
             for rid, decoded in zip(pdf[id_col], results):
                 out[id_col].append(rid)
                 out["dhash"].append(

@@ -1113,7 +1113,11 @@ def ann_recall(
 
     Plan: two key-keyed aggregates and one equi-join on (query,
     neighbor) — truth is |queries|×k rows, tiny by construction, so
-    AQE broadcasts freely; nothing corpus-sized moves."""
+    AQE broadcasts freely; nothing corpus-sized moves.
+
+    Eager: calling this runs Spark jobs while the plan is built
+    (``materialize`` of the candidate list), and the pinned blocks live
+    until GC or unpersist unless ``set_checkpoint_dir`` was called."""
     # Enforce the eval's own contract (ADVICE r12): a duplicated
     # (query, neighbor) row in EITHER input would fan the left join out
     # and inflate n_true/n_hit — recall could exceed 1. The kNN tiers

@@ -18,7 +18,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DEFAULTS: dict[str, str] = {
+# Session-settable at runtime. Applied defensively to externally-created
+# sessions (e.g. the verification driver's) so engine queries behave
+# identically regardless of who built the SparkSession: without
+# nanosAsLong a vanilla session cannot even read TIMESTAMP(NANOS)
+# parquet, and a non-UTC timezone would skew every timestamp comparison
+# against the DuckDB oracle.
+_RUNTIME_DEFAULTS: dict[str, str] = {
     # Adaptive execution: runtime re-planning, partition coalescing and
     # skew-join splitting — essential at 100 TB, harmless at sf0.001.
     "spark.sql.adaptive.enabled": "true",
@@ -39,6 +45,10 @@ _DEFAULTS: dict[str, str] = {
     # columns as long (ns since epoch) and convert at the API layer
     # (io.load_tables) to microsecond timestamps — DuckDB's precision.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+_DEFAULTS: dict[str, str] = {
+    **_RUNTIME_DEFAULTS,
     # Headless default: the UI's AppStatusListener retains state for every
     # job/stage, and over a long batch session (the bench runs ~1000 AQE
     # jobs) its bookkeeping measurably inflates per-job latency on tiny
@@ -49,22 +59,18 @@ _DEFAULTS: dict[str, str] = {
 }
 
 
-# The subset of _DEFAULTS that is session-settable at runtime. Applied
-# defensively to externally-created sessions (e.g. the verification
-# driver's) so engine queries behave identically regardless of who built
-# the SparkSession: without nanosAsLong a vanilla session cannot even
-# read TIMESTAMP(NANOS) parquet, and a non-UTC timezone would skew every
-# timestamp comparison against the DuckDB oracle.
-_RUNTIME_DEFAULTS: dict[str, str] = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.ansi.enabled": "false",
-    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-}
+def _default_driver_mem_bytes() -> int:
+    """Driver heap default: 32 GiB, capped at half of the host's
+    MemTotal so the JVM never asks for more than the machine has."""
+    cap = 32 << 30
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return min(cap, int(line.split()[1]) * 1024 // 2)
+    except OSError:
+        pass
+    return cap
 
 
 def ensure_session_defaults(spark: SparkSession) -> SparkSession:
@@ -137,9 +143,12 @@ def get_spark(
     # local[n] runs executors inside the driver JVM, whose DEFAULT heap is
     # 1g — 32 concurrent tasks on 1g spills/OOMs long before the machine's
     # RAM matters. Builder-time only (ignored for already-running JVMs).
-    builder = builder.config(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
-    ).config("spark.driver.maxResultSize", "4g")
+    driver_mem = os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", f"{_default_driver_mem_bytes() >> 20}m"
+    )
+    builder = builder.config("spark.driver.memory", driver_mem).config(
+        "spark.driver.maxResultSize", "4g"
+    )
     conf = dict(_DEFAULTS)
     if shuffle_partitions is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")

@@ -658,28 +658,38 @@ class TestLoadTablesCache:
             )["events"].df
             assert not isinstance(ev.schema["ts"].dataType, LongType)
 
-    def test_sentinel_conf_reasserted_on_cache_hit(self, spark):
-        """r16 (ADVICE r15): a foreign driver mutating a required conf
-        mid-session is healed on the next load_tables call — the cached
-        defaults flag alone no longer suppresses re-assertion."""
+    @pytest.mark.parametrize(
+        "key, drifted",
+        [
+            ("spark.sql.session.timeZone", "America/New_York"),
+            ("spark.sql.ansi.enabled", "true"),
+        ],
+        ids=["timeZone", "ansi"],
+    )
+    def test_sentinel_conf_reasserted_on_cache_hit(self, spark, key, drifted):
+        """r16 (ADVICE r15): a foreign driver mutating ANY required conf
+        mid-session is healed on the next load_tables call, cache hit
+        or not."""
         from datamancer_spark.io import load_tables
+        from datamancer_spark.session import _RUNTIME_DEFAULTS
 
         load_tables(spark, "/root/testdata/sf0.001", ["orders"])
-        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        spark.conf.set(key, drifted)
         try:
             load_tables(spark, "/root/testdata/sf0.001", ["orders"])
-            assert (
-                spark.conf.get("spark.sql.session.timeZone") == "UTC"
-            )
+            assert spark.conf.get(key) == _RUNTIME_DEFAULTS[key]
         finally:
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
+            spark.conf.set(key, _RUNTIME_DEFAULTS[key])
 
+    @pytest.mark.parametrize("partitioned", [False, True],
+                             ids=["flat", "partitioned"])
     def test_directory_dataset_inplace_rewrite_invalidates(
-        self, spark, tmp_path
+        self, spark, tmp_path, partitioned
     ):
         """r16 (ADVICE r15): for a Spark-written DIRECTORY dataset the
-        signature folds member-file stats in, so an in-place rewrite
-        that leaves the directory inode's own stats unchanged still
+        signature folds the stats of every member file in, down through
+        ``key=value/`` partition subdirectories, so an in-place rewrite
+        that leaves every directory inode's own stats unchanged still
         yields a fresh handle."""
         import os
         import shutil
@@ -689,15 +699,19 @@ class TestLoadTablesCache:
         d = str(tmp_path / "sf")
         os.makedirs(d)
         tbl = f"{d}/orders.parquet"  # a DIRECTORY this time
-        spark.range(5).selectExpr(
-            "id as o_orderkey"
-        ).coalesce(1).write.parquet(tbl)
+        cols = ["id as o_orderkey"] + (["id % 2 as part"] if partitioned else [])
+        w = spark.range(5).selectExpr(*cols).coalesce(1).write
+        member_dir = tbl
+        if partitioned:
+            w = w.partitionBy("part")
+            member_dir = f"{tbl}/part=0"  # holds keys 0, 2, 4
+        w.parquet(tbl)
         a = load_tables(spark, d, ["orders"])["orders"].df
         assert a.count() == 5
 
-        # rewrite the member file in place; pin the directory's own
+        # rewrite the member file in place; pin the directories' own
         # stats so only the member signature can catch the change
-        dstat = os.stat(tbl)
+        pinned = {p: os.stat(p) for p in {tbl, member_dir}}
         spark.range(9).selectExpr(
             "id as o_orderkey"
         ).coalesce(1).write.parquet(str(tmp_path / "_stage"))
@@ -707,17 +721,19 @@ class TestLoadTablesCache:
             if p.endswith(".parquet")
         )
         member = next(
-            p for p in os.listdir(tbl) if p.endswith(".parquet")
+            p for p in os.listdir(member_dir) if p.endswith(".parquet")
         )
         shutil.copyfile(
-            str(tmp_path / "_stage" / src), f"{tbl}/{member}"
+            str(tmp_path / "_stage" / src), f"{member_dir}/{member}"
         )
         # drop Hadoop LocalFS checksum sidecars invalidated by the
         # in-place copy (an object-store rewrite has no sidecars)
-        for p in os.listdir(tbl):
+        for p in os.listdir(member_dir):
             if p.endswith(".crc"):
-                os.remove(f"{tbl}/{p}")
-        os.utime(tbl, ns=(dstat.st_atime_ns, dstat.st_mtime_ns))
+                os.remove(f"{member_dir}/{p}")
+        for p, st in pinned.items():
+            os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
         b = load_tables(spark, d, ["orders"])["orders"].df
         assert b is not a
-        assert b.count() == 9
+        # partitioned: 9 rewritten rows in part=0 plus keys 1, 3 in part=1
+        assert b.count() == (11 if partitioned else 9)
