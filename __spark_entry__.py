@@ -3224,7 +3224,7 @@ def image_dhash_real_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def audio_dhash_real_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL perceptual audio pipeline under the driver gate
-    (operators/multimodal.py audio_dhash_pairs: WAV PCM16 decode →
+    (operators/multimodal.py dhash_pairs(kind="audio"): WAV PCM16 decode →
     65-frame RMS envelope → audio_dhash64 → banded Hamming join):
     amplitude-walk WAV fixtures engineered so each clip's fingerprint
     EQUALS the arithmetic signature of image_dhash_pairs — decode +
@@ -3234,19 +3234,19 @@ def audio_dhash_real_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_blob_frame,
         wav_dhash_blob,
     )
-    from datamancer_spark.operators.multimodal import audio_dhash_pairs
+    from datamancer_spark.operators.multimodal import dhash_pairs
 
     doc = _t(spark, sf_dir, "documents")["documents"].df
     blobs = synth_blob_frame(doc.select("doc_id"), wav_dhash_blob)
-    return audio_dhash_pairs(
-        blobs, id_col="doc_id", max_hamming=3, bands=4
+    return dhash_pairs(
+        blobs, id_col="doc_id", max_hamming=3, bands=4, kind="audio"
     ).select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
 
 def curate_audio_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end curate_audio composition under the driver gate
     (operators/multimodal.py curate_audio: metadata gates → exact byte
-    dedup → audio_dhash_pairs → connected components → canonical
+    dedup → dhash_pairs(kind="audio") → connected components → canonical
     keep): amplitude-walk WAVs (fingerprint = the (doc_id%37,
     doc_id%6) group signature) mixed with undecodable Ogg stubs. At
     max_hamming=0 the perceptual clusters are the signature-equality

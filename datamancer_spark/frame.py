@@ -59,18 +59,8 @@ def _to_col(c: ColumnOrName) -> Column:
 
 
 def _error_condition(e: AnalysisException) -> str:
-    """Best-effort error class of an AnalysisException (Spark 4 names it
-    getCondition; older builds getErrorClass), falling back to str(e)."""
-    for attr in ("getCondition", "getErrorClass"):
-        fn = getattr(e, attr, None)
-        if fn is not None:
-            try:
-                cond = fn()
-            except Exception:
-                continue
-            if cond:
-                return cond
-    return str(e)
+    """Error condition of an AnalysisException, falling back to str(e)."""
+    return e.getCondition() or str(e)
 
 
 # Error classes Catalyst raises when an aggregate appears in a row-level

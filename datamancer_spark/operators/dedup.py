@@ -263,6 +263,12 @@ def minhash_lsh_pairs(
     # pairs with two equi-joins, (3) emit identical-signature groups
     # (always candidates — they share every band) directly. Measured
     # 4.5× fewer candidate rows at 16× sf0.1; output set is identical.
+    # The pin earns its eager job: dedup_minhash (build + toPandas) on
+    # perfbench's full-scale seed-301 documents, 10 alternating pairs on
+    # a 4-vCPU host, took 1.15 s pinned vs 1.52 s lazy (median; pinned
+    # won all 10). Lazy cut build from 0.89 s to 0.50 s but raised
+    # execution from 0.26 s to 1.02 s, re-deriving the signatures for
+    # every join leg.
     if sig is None:
         sig = materialize(
             minhash_signature(df, text_col, id_col, num_hashes, shingle_n)
@@ -570,6 +576,19 @@ def band_hash_columns(
                 ",", *[sig[b * rows + r].cast("string") for r in range(rows)]
             )
         ).alias(f"bhash_{b}")
+        for b in range(bands)
+    ]
+
+
+def bit_block_columns(sig: Column, bands: int) -> list[Column]:
+    """The ``bands`` equal-width bit blocks of a 64-bit signature as
+    separate columns, lowest block first — block b is bits
+    [b*w, (b+1)*w) with w = 64 // bands, an unsigned value. The
+    Hamming-LSH counterpart of ``band_hash_columns``: two signatures
+    within ``bands - 1`` bits share at least one equal block."""
+    width = 64 // bands
+    return [
+        F.shiftrightunsigned(sig, b * width).bitwiseAND(F.lit((1 << width) - 1))
         for b in range(bands)
     ]
 
@@ -1011,7 +1030,6 @@ def hamming_band_pairs(
             f"max_hamming={max_hamming} needs bands>={max_hamming + 1} "
             f"for exact band-LSH recall (got bands={bands})"
         )
-    width = 64 // bands
     # Same distinct-signature decomposition as minhash_lsh_pairs: the
     # block self-join runs on DISTINCT signatures (a group of m equal
     # signatures otherwise contributes m²·bands candidate rows — 698M
@@ -1026,13 +1044,10 @@ def hamming_band_pairs(
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(i).alias("blk"),
-                        F.shiftrightunsigned(F.col(sig_col), i * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("val"),
+                    F.struct(F.lit(i).alias("blk"), blk.alias("val"))
+                    for i, blk in enumerate(
+                        bit_block_columns(F.col(sig_col), bands)
                     )
-                    for i in range(bands)
                 ]
             )
         ).alias("b"),

@@ -24,7 +24,7 @@ decoders are — the encoder and decoder share no code, so a bit error in
 either side breaks the loop.
 
 Scale posture: this runs inside Arrow-batched mapInPandas kernels
-(multimodal.decode_images / image_dhash); pixels never leave the
+(multimodal.decode_images / dhash); pixels never leave the
 executor — only dims/means/hashes shuffle.
 """
 
@@ -52,11 +52,6 @@ for _k in range(8):
         _C[_k, _n] = np.cos(np.pi * (2 * _n + 1) * _k / 16.0) * (
             np.sqrt(1.0 / 8.0) if _k == 0 else np.sqrt(2.0 / 8.0)
         )
-
-
-def idct2_8x8(block: np.ndarray) -> np.ndarray:
-    """2-D inverse DCT of one 8×8 coefficient block (orthonormal)."""
-    return _C.T @ block @ _C
 
 
 class _HuffTable:

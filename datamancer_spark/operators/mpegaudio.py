@@ -6,7 +6,7 @@ Scope and honesty
 This closes most of the "compressed-audio sample decode" boundary the
 round-6 verdict ranked as missing #1: MP3 (MPEG-1 Layer III) and
 Layer I clips now decode to PCM for the perceptual screens
-(``audio_dhash``, ``audio_features``, ``curate_audio``) instead of
+(``dhash(kind="audio")``, ``audio_features``, ``curate_audio``) instead of
 staying metadata-only. Remaining refusals, each deliberate:
 
 * **Layer III frames selecting Huffman tables 10, 13, or 16-31** — the

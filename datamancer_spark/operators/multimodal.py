@@ -13,7 +13,7 @@ Two tiers:
   stdlib marker walk) and ``wav_metadata`` (canonical RIFF layout in
   pure Catalyst) parse actual on-disk formats with no codec library.
 - **Pixel/sample decode — REAL for every image format plus PCM audio,
-  stubbed only where a codec is genuinely unavoidable.** PNG pixels
+  refused only where a codec is genuinely unavoidable.** PNG pixels
   (stdlib zlib + filter inversion), baseline JPEG pixels (own
   entropy/IDCT pipeline, ``operators.jpegcodec``), PCM + G.711
   A-law/mu-law WAV samples, animated-GIF frames (stdlib LZW), and
@@ -23,12 +23,9 @@ Two tiers:
   docstring for the refusal set), and Ogg Vorbis
   (``operators.vorbiscodec``, r9), and lossless WebP
   (``operators.webpcodec``, r9). Compressed video codecs (mp4/webm,
-  non-MJPEG AVI) and Ogg Opus audio DECODE
-  needs ffmpeg (absent here) — those rows yield NULLs, or a
-  deterministic md5-derived fake under ``allow_fake=True`` so the
-  Spark-side plumbing — schema, batch iteration, partition shape,
-  output contract — stays testable end-to-end. Swapping in a real
-  codec changes only the marked inner function.
+  non-MJPEG AVI) and Ogg Opus audio DECODE needs ffmpeg — those rows
+  yield NULLs (``sample_frames`` drops them), and
+  ``media_decode_coverage`` reports the fraction left undecoded.
 
   r9 determination on Opus specifically (why it stays refused while
   Vorbis was closed): Opus is NOT self-describing — CELT's PVQ band
@@ -47,7 +44,6 @@ structs) flow into joins/aggregations downstream.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -135,7 +131,7 @@ def media_decode_coverage(df: DataFrame, bin_col: str = "content") -> DataFrame:
     fraction of each media container this engine can actually SCREEN —
     produce pixels/samples for perceptual (dHash) dedup — versus
     metadata-only. A pipeline that runs
-    ``audio_dhash_pairs``/``dhash_pairs`` must report "N% of blobs
+    ``dhash_pairs`` must report "N% of blobs
     screenable" instead of silently screening the decodable minority.
 
     Screenability is CAPABILITY BY CONTAINER/CODEC from the cheap
@@ -317,7 +313,7 @@ def png_decode_array(blob: bytes):
     Returns ``(width, height, channels, pixels)`` with pixels an
     (h, w, channels) uint8 ndarray — alpha dropped, palette expanded
     through PLTE to RGB — or ``None`` for non-PNG / malformed input.
-    ``png_decode_pixels`` wraps this for summary stats; ``image_dhash``
+    ``png_decode_pixels`` wraps this for summary stats; ``dhash``
     consumes the array."""
     import struct
     import zlib
@@ -527,64 +523,31 @@ def decode_image_blob(blob: bytes):
 def decode_images(
     df: DataFrame,
     bin_col: str = "content",
-    allow_fake: bool = False,
     on_unsupported: str = "null",
 ) -> DataFrame:
     """Decode images to (width, height, channels, mean_intensity).
 
     Every blob goes through the real-decode chain
     (``decode_image_blob``: PNG, JPEG, GIF, BMP, TIFF, lossless WebP —
-    no codec library). Blobs it cannot decode fall through to PIL when
-    present; without PIL, ``allow_fake=True`` substitutes a
-    deterministic md5-derived fake, and otherwise the row comes back
-    with NULL metrics (``on_unsupported="null"``, the default — at
-    100 TB one undecodable blob must never kill the job; pass
+    no codec library). A blob it cannot decode comes back with NULL
+    metrics (``on_unsupported="null"``, the default — at 100 TB one
+    undecodable blob must never kill the job; pass
     ``on_unsupported="error"`` to fail fast instead). Arrow-batched
     mapInPandas."""
     if on_unsupported not in ("null", "error"):
         raise ValueError(f"on_unsupported must be null|error, got {on_unsupported!r}")
 
-    try:
-        import PIL.Image  # noqa: F401
-
-        have_pil = True
-    except ImportError:
-        have_pil = False
-
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = {"path": [], "width": [], "height": [], "channels": [], "mean_intensity": []}
             for path, blob in zip(pdf["path"], pdf[bin_col]):
-                blob = bytes(blob)
-                res = decode_image_blob(blob)
+                res = decode_image_blob(bytes(blob))
                 if res is not None:
                     w, h, ch, px = res
                     mean = round(float(px.mean()) / 255.0, 6)
-                elif have_pil:  # pragma: no cover - real codec path
-                    import io
-
-                    import numpy as np
-                    import PIL.Image as Image
-
-                    img = Image.open(io.BytesIO(blob))
-                    w, h = img.size
-                    ch = len(img.getbands())
-                    mean = round(
-                        float(np.asarray(img, dtype=np.float64).mean())
-                        / 255.0,
-                        6,
-                    )
-                elif allow_fake:
-                    # FAKE DECODE (deterministic stub): dims derived from
-                    # the digest so tests are stable.
-                    d = hashlib.md5(blob).digest()
-                    w, h = 64 + d[0] % 512, 64 + d[1] % 512
-                    ch = 3
-                    mean = round(d[2] / 255.0, 6)
                 elif on_unsupported == "error":
                     raise NotImplementedError(
-                        f"decode beyond the no-codec-library chain "
-                        f"requires PIL (not in this environment): {path}"
+                        f"no decoder in the no-codec-library chain for: {path}"
                     )
                 else:
                     w = h = ch = mean = None
@@ -662,7 +625,6 @@ def sample_frames(
     bin_col: str = "content",
     every_n: int = 10,
     max_frames: int = 8,
-    allow_fake: bool = False,
 ) -> DataFrame:
     """Sample every-Nth frame from animation/video blobs → one row per
     frame (explode-shaped output, bounded by max_frames so one giant
@@ -671,8 +633,7 @@ def sample_frames(
     canvas after compositing), and MJPEG-in-AVI video decodes FOR REAL
     too (``avi_mjpeg_frames`` — RIFF walk + the baseline JPEG decoder);
     compressed video codecs (mp4/webm, non-MJPEG AVI) are refused —
-    those rows are dropped, or get md5-chained fake frames under
-    ``allow_fake=True``.
+    those rows are dropped.
 
     r9 DETERMINATION on compressed-video decode (the carried r7 #2
     gap): VP8/VP9/AV1 and H.264 all entropy-code against LARGE
@@ -719,16 +680,7 @@ def sample_frames(
                         rows["path"].append(path)
                         rows["frame_idx"].append(idx)
                         rows["frame_bytes"].append(rgb)
-                    continue
-                if not allow_fake:
-                    continue  # undecodable without ffmpeg: drop the row
-                n_fake_frames = max(1, len(blob) // max(every_n, 1))
-                for i in range(min(n_fake_frames, max_frames)):
-                    rows["path"].append(path)
-                    rows["frame_idx"].append(i * every_n)
-                    rows["frame_bytes"].append(
-                        hashlib.md5(blob + i.to_bytes(4, "big")).digest()
-                    )
+                # anything else is undecodable without ffmpeg: no rows
             yield pd.DataFrame(rows)
 
     return df.select("path", bin_col).mapInPandas(batches, FRAME_SCHEMA)
@@ -888,7 +840,7 @@ def wav_decode_array(blob: bytes):
     a float64 array in [-1, 1] (channel-mixed), or ``None`` for
     non-WAV / compressed (mp3/ADPCM/...) / malformed input.
     ``wav_decode_samples`` wraps this for the RMS envelope;
-    ``audio_dhash`` consumes the array."""
+    ``dhash(kind="audio")`` consumes the array."""
     import struct
 
     import numpy as np
@@ -1235,7 +1187,6 @@ def wav_decode_samples(blob: bytes, envelope_bins: int = 8):
 def audio_features(
     df: DataFrame,
     bin_col: str = "content",
-    allow_fake: bool = False,
     envelope_bins: int = 8,
 ) -> DataFrame:
     """Per-clip audio features (duration, sample rate, RMS loudness
@@ -1243,24 +1194,14 @@ def audio_features(
     AIFF/AIFC, MPEG-1 Layer I/III (real MP3, late r7) and Ogg Vorbis
     (r9) decode FOR REAL with stdlib + numpy (``wav_decode_samples`` over
     ``audio_decode_array``, per blob). Ogg Opus and the documented MPEG
-    refusal set come back NULL, or md5-derived fakes under
-    ``allow_fake=True``. Arrow-batched mapInPandas."""
+    refusal set come back NULL. Arrow-batched mapInPandas."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = {"path": [], "duration_s": [], "sample_rate": [], "loudness": []}
             for path, blob in zip(pdf["path"], pdf[bin_col]):
-                blob = bytes(blob)
-                res = wav_decode_samples(blob, envelope_bins)
-                if res is not None:
-                    dur, rate, env = res
-                elif allow_fake:
-                    d = hashlib.md5(blob).digest()
-                    dur = round(1 + d[0] / 8.0, 3)
-                    rate = 16000
-                    env = [round(b / 255.0, 4) for b in d[:envelope_bins]]
-                else:
-                    dur = rate = env = None
+                res = wav_decode_samples(bytes(blob), envelope_bins)
+                dur, rate, env = (None, None, None) if res is None else res
                 rows["path"].append(path)
                 rows["duration_s"].append(dur)
                 rows["sample_rate"].append(rate)
@@ -1272,8 +1213,8 @@ def audio_features(
 
 # -- REAL header metadata (no codec libraries needed) ------------------------
 #
-# Pixel/sample DECODE needs PIL/ffmpeg (absent here, stubbed above) — but
-# container HEADERS are plain bytes. These parsers are real, not stubs:
+# Compressed video and Opus DECODE needs ffmpeg (those rows decode to NULL
+# above) — but container HEADERS are plain bytes. These parsers are real:
 # PNG/GIF/BMP dimensions and canonical WAV metadata are pure Catalyst
 # expressions (substring on binary + hex + conv, evaluated JVM-side next
 # to the scan); JPEG needs a marker walk (variable-length segments), done
@@ -1814,27 +1755,6 @@ def frame_features(
 # -- perceptual near-dup (dHash) ---------------------------------------------
 
 
-DHASH_SCHEMA = StructType(
-    [
-        StructField("path", StringType()),
-        StructField("dhash", LongType()),
-    ]
-)
-
-
-def _dhash_schema_for(df: DataFrame, id_col: str) -> StructType:
-    """(id, dhash) output schema preserving the INPUT id type — a
-    numeric doc_id must not be silently coerced to the string schema
-    the path-keyed default assumes."""
-    id_field = df.schema[id_col]
-    return StructType(
-        [
-            StructField(id_col, id_field.dataType, id_field.nullable),
-            StructField("dhash", LongType()),
-        ]
-    )
-
-
 def jpeg_exif_orientation(blob: bytes):
     """EXIF orientation tag (1-8) from a JPEG's APP1 segment — marker
     walk + minimal TIFF IFD0 scan (both byte orders), tag 0x0112.
@@ -2069,69 +1989,6 @@ def resize_images(
     ).mapInPandas(batches, RESIZE_SCHEMA)
 
 
-def image_dhash(
-    df: DataFrame,
-    bin_col: str = "content",
-    id_col: str = "path",
-) -> DataFrame:
-    """Per-image 64-bit perceptual dHash over the REAL decoders (the
-    shared ``decode_image_blob`` chain — PNG, baseline+progressive
-    JPEG, GIF, BMP, TIFF, lossless WebP); other formats (video needs
-    ffmpeg, absent here) yield NULL — one undecodable
-    blob must never kill a 100 TB job. Arrow-batched mapInPandas; only
-    (id, 8-byte hash) rows ever shuffle downstream. Output
-    (``id_col``, dhash: long|NULL). Pair with ``dhash_pairs`` for the
-    bucketed near-dup join — the image analog of SimHash over text."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {id_col: [], "dhash": []}
-            grays = [_decode_gray(bytes(b)) for b in pdf[bin_col]]
-            for rid, gray in zip(pdf[id_col], grays):
-                out[id_col].append(rid)
-                out["dhash"].append(None if gray is None else dhash64_gray(gray))
-            # dtype=object is load-bearing: one NULL (undecodable blob)
-            # in a batch would otherwise coerce the column to float64,
-            # silently mangling the low ~11 bits of EVERY hash > 2^53
-            # in that batch — false hamming-0 merges (caught by the r9
-            # curate_media_mix fixture; corrupt blobs are certain at
-            # crawl scale, so mixed batches are the norm, not the edge)
-            yield pd.DataFrame(
-                {
-                    id_col: out[id_col],
-                    "dhash": pd.Series(out["dhash"], dtype="object"),
-                }
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(
-        batches, _dhash_schema_for(df, id_col)
-    )
-
-
-def dhash_pairs(
-    df: DataFrame,
-    bin_col: str = "content",
-    id_col: str = "path",
-    max_hamming: int = 3,
-    bands: int = 4,
-) -> DataFrame:
-    """Perceptual image near-dup pairs: dHash signatures + the SAME
-    bit-block band LSH engine SimHash uses (``dedup.hamming_band_pairs``
-    — distinct-signature banded self-join, pigeonhole-exact for
-    ``max_hamming <= bands-1``, never all-pairs). Undecodable blobs
-    (NULL dhash) are excluded rather than clustered together. Output
-    (id_a < id_b, hamming)."""
-    from ..session import materialize
-    from .dedup import hamming_band_pairs
-
-    sigs = materialize(
-        image_dhash(df, bin_col, id_col).filter(F.col("dhash").isNotNull())
-    )
-    return hamming_band_pairs(
-        sigs, "dhash", id_col, max_hamming=max_hamming, bands=bands
-    )
-
-
 def audio_dhash64(mono) -> int:
     """64-bit perceptual audio fingerprint: the dHash idea applied to
     the loudness envelope — 65 equal-length frames, per-frame RMS
@@ -2159,106 +2016,114 @@ def audio_dhash64(mono) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def audio_dhash(
+def _image_blob_dhash(blob) -> int | None:
+    gray = None if blob is None else _decode_gray(bytes(blob))
+    return None if gray is None else dhash64_gray(gray)
+
+
+def _audio_blob_dhash(blob) -> int | None:
+    dec = None if blob is None else audio_decode_array(bytes(blob))
+    return None if dec is None else audio_dhash64(dec[1])
+
+
+# per-blob dHash kernels: blob (or None) -> signed 64-bit hash, None when
+# the blob is NULL or undecodable
+_DHASH_KERNELS = {"image": _image_blob_dhash, "audio": _audio_blob_dhash}
+
+
+def _dhash_kernel(kind: str):
+    if kind not in _DHASH_KERNELS:
+        raise ValueError(f"kind must be image|audio, got {kind!r}")
+    return _DHASH_KERNELS[kind]
+
+
+def dhash(
     df: DataFrame,
     bin_col: str = "content",
     id_col: str = "path",
+    kind: str = "image",
 ) -> DataFrame:
-    """Per-clip 64-bit perceptual fingerprint over the REAL stdlib
-    decoders (``audio_decode_array`` → ``audio_dhash64``): the WAV
-    family, FLAC (r7), AIFF/AIFC, MPEG-1 Layer I/III — real MP3
-    (late r7; WAV↔MP3 same-clip pairs fingerprint 0 bits apart in the
-    cross-codec test) — and Ogg Vorbis (r9). Ogg Opus and the MPEG
-    refusal set yield NULL.
-    Arrow-batched mapInPandas; only
-    (id, 8-byte hash) rows shuffle downstream. Pair with
-    ``audio_dhash_pairs`` — the audio analog of ``image_dhash``/SimHash,
-    sharing ``dedup.hamming_band_pairs``."""
+    """Per-blob 64-bit perceptual dHash over the REAL decoders.
+    ``kind="image"``: the shared ``decode_image_blob`` chain (PNG,
+    baseline+progressive JPEG, GIF, BMP, TIFF, lossless WebP) →
+    ``dhash64_gray``. ``kind="audio"``: ``audio_decode_array`` (the WAV
+    family, FLAC, AIFF/AIFC, MPEG-1 Layer I/III, Ogg Vorbis) →
+    ``audio_dhash64`` — WAV↔MP3 same-clip pairs fingerprint 0 bits apart
+    in the cross-codec test. NULL or undecodable blobs (video, Ogg Opus,
+    the MPEG refusal set) yield NULL — one undecodable blob must never
+    kill a 100 TB job. Arrow-batched mapInPandas; only (id, 8-byte hash)
+    rows ever shuffle downstream. Output (``id_col`` with its input
+    type, dhash: long|NULL). Pair with ``dhash_pairs`` for the bucketed
+    near-dup join — the media analog of SimHash over text."""
+    kernel = _dhash_kernel(kind)
+    id_field = df.schema[id_col]
+    schema = StructType(
+        [
+            StructField(id_col, id_field.dataType, id_field.nullable),
+            StructField("dhash", LongType()),
+        ]
+    )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = {id_col: [], "dhash": []}
-            results = [audio_decode_array(bytes(b)) for b in pdf[bin_col]]
-            for rid, decoded in zip(pdf[id_col], results):
-                out[id_col].append(rid)
-                out["dhash"].append(
-                    None if decoded is None else audio_dhash64(decoded[1])
-                )
-            # dtype=object: see image_dhash — a mixed decodable/NULL
-            # batch must not coerce int64 hashes through float64
+            # dtype=object is load-bearing: one NULL (undecodable blob)
+            # in a batch would otherwise coerce the column to float64,
+            # silently mangling the low ~11 bits of EVERY hash > 2^53
+            # in that batch — false hamming-0 merges (caught by the r9
+            # curate_media_mix fixture; corrupt blobs are certain at
+            # crawl scale, so mixed batches are the norm, not the edge)
             yield pd.DataFrame(
                 {
-                    id_col: out[id_col],
-                    "dhash": pd.Series(out["dhash"], dtype="object"),
+                    id_col: list(pdf[id_col]),
+                    "dhash": pd.Series(
+                        [kernel(b) for b in pdf[bin_col]], dtype="object"
+                    ),
                 }
             )
 
-    return df.select(id_col, bin_col).mapInPandas(
-        batches, _dhash_schema_for(df, id_col)
-    )
+    return df.select(id_col, bin_col).mapInPandas(batches, schema)
 
 
-def audio_dhash_pairs(
+def dhash_pairs(
     df: DataFrame,
     bin_col: str = "content",
     id_col: str = "path",
     max_hamming: int = 3,
     bands: int = 4,
+    kind: str = "image",
 ) -> DataFrame:
-    """Perceptual audio near-dup pairs: ``audio_dhash`` signatures
-    through the same banded Hamming-LSH engine as SimHash and image
-    dHash (``dedup.hamming_band_pairs`` — distinct-signature band join,
-    pigeonhole-exact for ``max_hamming <= bands-1``, never all-pairs).
-    Undecodable clips (NULL fingerprint) are excluded. Output
-    (id_a < id_b, hamming)."""
+    """Perceptual near-dup pairs: ``dhash`` signatures of ``kind`` +
+    the SAME bit-block band LSH engine SimHash uses
+    (``dedup.hamming_band_pairs`` — distinct-signature banded
+    self-join, pigeonhole-exact for ``max_hamming <= bands-1``, never
+    all-pairs). Undecodable blobs (NULL dhash) are excluded rather than
+    clustered together. Output (id_a < id_b, hamming)."""
     from ..session import materialize
     from .dedup import hamming_band_pairs
 
     sigs = materialize(
-        audio_dhash(df, bin_col, id_col).filter(F.col("dhash").isNotNull())
+        dhash(df, bin_col, id_col, kind).filter(F.col("dhash").isNotNull())
     )
     return hamming_band_pairs(
         sigs, "dhash", id_col, max_hamming=max_hamming, bands=bands
     )
 
 
-def dhash_scalar_udf():
-    """Arrow-batched SCALAR pandas UDF computing the 64-bit image dHash
-    from a binary column (PNG/baseline-JPEG/GIF via the real stdlib
-    decoders, NULL otherwise) — the column-preserving form of ``image_dhash`` for
-    plans that must stay stateless projections (streaming screens):
+def dhash_scalar_udf(kind: str = "image"):
+    """Arrow-batched SCALAR pandas UDF computing the 64-bit dHash of
+    ``kind`` from a binary column (NULL for NULL or undecodable blobs)
+    — the column-preserving form of ``dhash`` for plans that must stay
+    stateless projections (streaming screens):
     ``df.withColumn("dhash", dhash_scalar_udf()(F.col("content")))``."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
+
+    kernel = _dhash_kernel(kind)
 
     @pandas_udf(LongType())
     def _dhash(blobs: pd.Series) -> pd.Series:
-        out = []
-        for blob in blobs:
-            gray = None if blob is None else _decode_gray(bytes(blob))
-            out.append(None if gray is None else dhash64_gray(gray))
-        return pd.Series(out, dtype="object")
+        return pd.Series([kernel(b) for b in blobs], dtype="object")
 
     return _dhash
-
-
-def audio_dhash_scalar_udf():
-    """Arrow-batched SCALAR pandas UDF computing the 64-bit audio
-    envelope dHash from a binary column (WAV family / FLAC / AIFF /
-    MP3 / Ogg Vorbis via the real decoders, NULL otherwise) — the
-    column-preserving form of ``audio_dhash`` for stateless streaming
-    screens, the audio twin of ``dhash_scalar_udf``."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(LongType())
-    def _adhash(blobs: pd.Series) -> pd.Series:
-        out = []
-        for blob in blobs:
-            dec = None if blob is None else audio_decode_array(bytes(blob))
-            out.append(None if dec is None else audio_dhash64(dec[1]))
-        return pd.Series(out, dtype="object")
-
-    return _adhash
 
 
 def dhash_band_index(
@@ -2280,7 +2145,7 @@ def dhash_band_index(
     signatures lets the probe verify true Hamming distance and stay
     exact at any corpus size. Write it as the media index;
     ``streaming.streaming_media_screen`` probes incoming blobs against
-    it statelessly, and compaction refreshes it with ``image_dhash``
+    it statelessly, and compaction refreshes it with ``dhash``
     over the accumulated corpus. Index size is bands x n_distinct_sigs
     entries total across the arrays — per-bucket arrays grow ~linearly
     past 65k distinct signatures; re-derive with wider bands (e.g.
@@ -2288,25 +2153,18 @@ def dhash_band_index(
     ``kind="audio"`` (r9) indexes the audio envelope dHash instead —
     same engine, cross-codec by construction (WAV/FLAC/MP3/Vorbis of
     the same clip land in the same buckets)."""
-    if kind not in ("image", "audio"):
-        raise ValueError(f"kind must be image|audio, got {kind!r}")
-    width = 64 // bands
-    hasher = image_dhash if kind == "image" else audio_dhash
-    sigs = hasher(df, bin_col, id_col).filter(
-        F.col("dhash").isNotNull()
-    )
+    from .dedup import bit_block_columns
+
+    sigs = dhash(df, bin_col, id_col, kind).filter(F.col("dhash").isNotNull())
     banded = sigs.select(
         F.col("dhash").alias("sig"),
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("dhash"), b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("val"),
+                    F.struct(F.lit(b).alias("band"), blk.alias("val"))
+                    for b, blk in enumerate(
+                        bit_block_columns(F.col("dhash"), bands)
                     )
-                    for b in range(bands)
                 ]
             )
         ).alias("bv"),
@@ -2864,7 +2722,7 @@ def audio_container_metadata(
     fields, never errors.
 
     ``decodable`` states whether THIS ENGINE can turn the clip into
-    samples (``audio_decode_array`` → ``audio_dhash``): True for the
+    samples (``audio_decode_array`` → ``audio_dhash64``): True for the
     WAV PCM/G.711/IMA-ADPCM family, FLAC (r7, ``flaccodec``) and
     MPEG-1 Layer I/III streams whose side info stays inside the
     shipped feature set (late r7, ``mpegaudio``) and Ogg Vorbis whose
@@ -2998,6 +2856,35 @@ def _keep_min_per_signature(cur: DataFrame, sigs: DataFrame, id_col: str):
     return cur.join(losers, id_col, "left_anti")
 
 
+def _dedup_and_cover(cur, bin_col, id_col, max_hamming, bands, kind):
+    """Shared tail of ``curate_media``/``curate_audio``: exact byte
+    dedup (smallest id per md5 digest keeps), perceptual near-dup
+    removal on the ``kind`` dHash, and the decode-coverage report over
+    the survivors."""
+    from .components import dedup_keep_canonical
+
+    exact_keep = (
+        cur.select(F.col(id_col), F.md5(F.col(bin_col)).alias("_dg"))
+        .groupBy("_dg")
+        .agg(F.min(id_col).alias(id_col))
+        .select(id_col)
+    )
+    cur = cur.join(exact_keep, id_col, "left_semi")
+    if max_hamming == 0:
+        from ..session import materialize
+
+        sigs = materialize(
+            dhash(cur, bin_col, id_col, kind).filter(F.col("dhash").isNotNull())
+        )
+        survivors = _keep_min_per_signature(cur, sigs, id_col)
+    else:
+        pairs = dhash_pairs(
+            cur, bin_col, id_col, max_hamming=max_hamming, bands=bands, kind=kind
+        )
+        survivors = dedup_keep_canonical(cur, pairs, id_col=id_col)
+    return survivors, media_decode_coverage(survivors, bin_col)
+
+
 def curate_media(
     df: DataFrame,
     bin_col: str = "content",
@@ -3026,8 +2913,6 @@ def curate_media(
     move only in the survivor projections — the gates are scan-side
     filters, exact dedup shuffles (digest, id), and the near-dup tier
     shuffles 8-byte signatures through the banded engine."""
-    from .components import dedup_keep_canonical
-
     cur = df
     if max_bytes is not None:
         cur = cur.filter(F.length(F.col(bin_col)) <= max_bytes)
@@ -3047,29 +2932,7 @@ def curate_media(
             viol = viol | (F.col("height") < min_height)
         drop_ids = dims.filter(viol).select(id_col)
         cur = cur.join(drop_ids, id_col, "left_anti")
-    # exact byte dedup: smallest id per digest keeps
-    exact_keep = (
-        cur.select(F.col(id_col), F.md5(F.col(bin_col)).alias("_dg"))
-        .groupBy("_dg")
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
-    )
-    cur = cur.join(exact_keep, id_col, "left_semi")
-    if max_hamming == 0:
-        from ..session import materialize
-
-        sigs = materialize(
-            image_dhash(cur, bin_col, id_col).filter(
-                F.col("dhash").isNotNull()
-            )
-        )
-        survivors = _keep_min_per_signature(cur, sigs, id_col)
-    else:
-        pairs = dhash_pairs(
-            cur, bin_col, id_col, max_hamming=max_hamming, bands=bands
-        )
-        survivors = dedup_keep_canonical(cur, pairs, id_col=id_col)
-    return survivors, media_decode_coverage(survivors, bin_col)
+    return _dedup_and_cover(cur, bin_col, id_col, max_hamming, bands, "image")
 
 
 def curate_audio(
@@ -3086,14 +2949,12 @@ def curate_audio(
     (duration/sample-rate from ``audio_container_metadata`` — drops
     only PROVABLY violating clips, unknown metadata survives), exact
     byte dedup (smallest id per digest), perceptual near-dup removal
-    via ``audio_dhash_pairs`` → connected components → canonical keep,
+    via ``dhash_pairs(kind="audio")`` → connected components → canonical keep,
     and the decode-coverage report over the survivors (so a pipeline
     reports "N% of kept audio was actually screened" — Ogg and the
     MPEG refusal set pass the perceptual stage unscreened by design;
     supported MP3 screens for real since late r7). Returns
     ``(survivors, coverage)``."""
-    from .components import dedup_keep_canonical
-
     cur = df
     if (min_duration_s is not None or max_duration_s is not None
             or min_sample_rate is not None):
@@ -3110,25 +2971,4 @@ def curate_audio(
             viol = viol | (F.col("sample_rate") < min_sample_rate)
         drop_ids = meta.filter(viol).select(id_col)
         cur = cur.join(drop_ids, id_col, "left_anti")
-    exact_keep = (
-        cur.select(F.col(id_col), F.md5(F.col(bin_col)).alias("_dg"))
-        .groupBy("_dg")
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
-    )
-    cur = cur.join(exact_keep, id_col, "left_semi")
-    if max_hamming == 0:
-        from ..session import materialize
-
-        sigs = materialize(
-            audio_dhash(cur, bin_col, id_col).filter(
-                F.col("dhash").isNotNull()
-            )
-        )
-        survivors = _keep_min_per_signature(cur, sigs, id_col)
-    else:
-        pairs = audio_dhash_pairs(
-            cur, bin_col, id_col, max_hamming=max_hamming, bands=bands
-        )
-        survivors = dedup_keep_canonical(cur, pairs, id_col=id_col)
-    return survivors, media_decode_coverage(survivors, bin_col)
+    return _dedup_and_cover(cur, bin_col, id_col, max_hamming, bands, "audio")

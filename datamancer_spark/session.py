@@ -98,7 +98,7 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def materialize(df, eager: bool = True):
+def materialize(df):
     """Cut lineage on an intermediate the plan reuses (self-join legs,
     iterative updates): reliable ``checkpoint()`` when a checkpoint dir
     is configured, else executor-local ``localCheckpoint()``.
@@ -111,8 +111,8 @@ def materialize(df, eager: bool = True):
     upgrades to reliable storage automatically."""
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint()
+    return df.localCheckpoint()
 
 
 def set_checkpoint_dir(spark: SparkSession, path: str) -> None:

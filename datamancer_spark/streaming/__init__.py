@@ -31,10 +31,6 @@ def read_json_stream(
     )
 
 
-def with_watermark(stream: DataFrame, ts_col: str, delay: str = "10 minutes") -> DataFrame:
-    return stream.withWatermark(ts_col, delay)
-
-
 def tumbling_agg(
     stream: DataFrame,
     ts_col: str,
@@ -531,15 +527,12 @@ def streaming_media_screen(
     index (``dhash_band_index(..., kind="audio")``) — cross-codec by
     construction: a Vorbis re-encode of an indexed WAV lands within
     the Hamming radius and is dropped."""
-    from ..operators.multimodal import (
-        audio_dhash_scalar_udf,
-        dhash_scalar_udf,
-    )
+    from ..operators.dedup import bit_block_columns
+    from ..operators.multimodal import dhash_scalar_udf
 
     if emit not in ("survivors", "hits"):
         raise ValueError(f"emit must be 'survivors' or 'hits', got {emit!r}")
-    if kind not in ("image", "audio"):
-        raise ValueError(f"kind must be image|audio, got {kind!r}")
+    sig_udf = dhash_scalar_udf(kind)
 
     if max_hamming > bands - 1:
         raise ValueError(
@@ -547,16 +540,13 @@ def streaming_media_screen(
             f"of bands={bands} (any signature within {bands - 1} bits "
             f"shares at least one exact band); raise bands"
         )
-    width = 64 // bands
-    sig_udf = dhash_scalar_udf if kind == "image" else audio_dhash_scalar_udf
-    out = stream.withColumn("_dh", sig_udf()(F.col(bin_col)))
-    for b in range(bands):
-        out = out.withColumn(
-            f"_bv{b}",
-            F.shiftrightunsigned(F.col("_dh"), b * width).bitwiseAND(
-                F.lit((1 << width) - 1)
-            ),
-        )
+    out = stream.withColumn("_dh", sig_udf(F.col(bin_col)))
+    out = out.withColumns(
+        {
+            f"_bv{b}": blk
+            for b, blk in enumerate(bit_block_columns(F.col("_dh"), bands))
+        }
+    )
     hit_cols = []
     for b in range(bands):
         static_b = band_index.filter(F.col("band") == b).select(

@@ -311,11 +311,11 @@ def test_flac_decode_array_contract():
 
 def test_cross_codec_wav_flac_perceptual_pairing(spark):
     """The same clip shipped as PCM WAV and as FLAC must pair in
-    audio_dhash_pairs (hamming <= 1) — FLAC is lossless so the
+    dhash_pairs(kind="audio") (hamming <= 1) — FLAC is lossless so the
     envelopes are identical; an unrelated clip must not pair."""
     import struct
 
-    from datamancer_spark.operators.multimodal import audio_dhash_pairs
+    from datamancer_spark.operators.multimodal import dhash_pairs
 
     rate = 8000
     t = np.arange(rate) / rate
@@ -339,7 +339,7 @@ def test_cross_codec_wav_flac_perceptual_pairing(spark):
     df = spark.createDataFrame(rows, "path string, content binary")
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in audio_dhash_pairs(df, max_hamming=1).collect()
+        for r in dhash_pairs(df, max_hamming=1, kind="audio").collect()
     }
     assert ("clip.flac", "clip.wav") in pairs
     assert all("other.flac" not in p for p in pairs)

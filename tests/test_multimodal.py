@@ -1,5 +1,5 @@
 """Multimodal plumbing: binaryFile ingestion, Catalyst magic sniffing,
-digest dedup, and the stubbed decode pipelines (schema/batch contract)."""
+digest dedup, and the real decode and perceptual-hash pipelines."""
 
 import os
 import tempfile
@@ -46,22 +46,8 @@ def test_media_dedup(spark, media_dir):
     assert os.path.basename(dups[0]["keep_path"]) == "a.png"
 
 
-def test_decode_images_stub_contract(spark, media_dir):
-    from datamancer_spark.operators.multimodal import decode_images, read_binary_dir
-
-    src = read_binary_dir(spark, media_dir, glob="*.png")
-    out = decode_images(src, allow_fake=True)
-    rows = out.collect()
-    assert len(rows) == 2
-    assert out.columns == ["path", "width", "height", "channels", "mean_intensity"]
-    # deterministic: identical bytes → identical fake decode
-    by_name = {os.path.basename(r["path"]): (r["width"], r["height"]) for r in rows}
-    assert by_name["a.png"] == by_name["dup.png"]
-    assert all(64 <= r["width"] < 576 for r in rows)
-
-
 def test_decode_images_null_for_undecodable(spark, media_dir):
-    """Without PIL and without fake, non-PNG blobs yield NULL metrics by
+    """Blobs the real-decode chain cannot read yield NULL metrics by
     default (a 100 TB job must not die on one bad blob) and raise only
     under on_unsupported='error'."""
     from datamancer_spark.operators.multimodal import decode_images, read_binary_dir
@@ -69,28 +55,30 @@ def test_decode_images_null_for_undecodable(spark, media_dir):
     src = read_binary_dir(spark, media_dir, glob="b.jpg")
     rows = decode_images(src).collect()
     assert len(rows) == 1 and rows[0]["width"] is None
-    with pytest.raises(Exception, match="requires PIL"):
+    with pytest.raises(Exception, match="no decoder"):
         decode_images(src, on_unsupported="error").collect()
     with pytest.raises(ValueError, match="on_unsupported"):
         decode_images(src, on_unsupported="panic")
 
 
-def test_sample_frames_bounded(spark, media_dir):
-    from datamancer_spark.operators.multimodal import read_binary_dir, sample_frames
+@pytest.mark.parametrize("kind", ["image", "audio"])
+def test_dhash_null_and_undecodable_blobs(spark, kind):
+    """Both kernels map a NULL or undecodable blob to a NULL hash, in
+    the batched and the scalar form alike; an unknown kind is refused."""
+    from datamancer_spark.operators.multimodal import dhash, dhash_scalar_udf
 
-    src = read_binary_dir(spark, media_dir, glob="c.bin")
-    out = sample_frames(src, every_n=10, max_frames=4, allow_fake=True)
-    rows = out.collect()
-    assert 1 <= len(rows) <= 4
-    assert rows[0]["frame_idx"] == 0 and len(rows[0]["frame_bytes"]) == 16
-
-
-def test_audio_features_stub(spark, media_dir):
-    from datamancer_spark.operators.multimodal import audio_features, read_binary_dir
-
-    out = audio_features(read_binary_dir(spark, media_dir, glob="b.jpg"), allow_fake=True)
-    r = out.collect()[0]
-    assert r["sample_rate"] == 16000 and len(r["loudness"]) == 8
+    df = spark.createDataFrame(
+        [("null", None), ("junk", bytearray(b"not media"))],
+        "path string, content binary",
+    )
+    assert {r["path"]: r["dhash"] for r in dhash(df, kind=kind).collect()} == {
+        "null": None,
+        "junk": None,
+    }
+    scalar = df.select(dhash_scalar_udf(kind)(F.col("content")).alias("h"))
+    assert [r["h"] for r in scalar.collect()] == [None, None]
+    with pytest.raises(ValueError, match="kind must be"):
+        dhash(df, kind="video")
 
 
 class TestRealHeaderParsers:
@@ -304,7 +292,7 @@ class TestRealPngDecode:
 
     def test_decode_images_real_png_no_fake(self, spark, tmp_path):
         """The verdict's done-criterion: a real PNG fixture decodes to
-        pixel stats through the Spark operator WITHOUT allow_fake."""
+        pixel stats through the Spark operator."""
         import numpy as np
 
         from datamancer_spark.operators.multimodal import (
@@ -721,7 +709,7 @@ class TestImageDhash:
     def test_image_dhash_png_gif_and_null(self, spark):
         import numpy as np
 
-        from datamancer_spark.operators.multimodal import image_dhash
+        from datamancer_spark.operators.multimodal import dhash
 
         rng = np.random.default_rng(11)
         base = rng.integers(0, 256, size=(32, 32), dtype=np.uint8)
@@ -738,7 +726,7 @@ class TestImageDhash:
             ("jpegish", bytearray(b"\xff\xd8\xff not decodable")),
         ]
         df = spark.createDataFrame(rows, "path string, content binary")
-        got = {r["path"]: r["dhash"] for r in image_dhash(df).collect()}
+        got = {r["path"]: r["dhash"] for r in dhash(df).collect()}
         assert got["jpegish"] is None
         assert got["gif_a"] is not None
         assert got["png_a"] == got["png_near"]  # tiny edit -> same hash
@@ -754,8 +742,8 @@ class TestImageDhash:
         from datamancer_spark.operators.fixtures import pattern_png_blob
         from datamancer_spark.operators.multimodal import (
             _decode_gray,
+            dhash,
             dhash64_gray,
-            image_dhash,
         )
 
         rows = []
@@ -773,7 +761,7 @@ class TestImageDhash:
         ).coalesce(1)  # one partition -> one mixed batch
         got = {
             r["doc_id"]: r["dhash"]
-            for r in image_dhash(df, id_col="doc_id").collect()
+            for r in dhash(df, id_col="doc_id").collect()
         }
         assert got == want
 
@@ -865,8 +853,8 @@ class TestAudioDhash:
         diff = bin((audio_dhash64(a) ^ audio_dhash64(b)) & (2**64 - 1)).count("1")
         assert diff >= 16
 
-    def test_audio_dhash_pairs_end_to_end(self, spark):
-        from datamancer_spark.operators.multimodal import audio_dhash_pairs
+    def test_dhash_pairs_audio_end_to_end(self, spark):
+        from datamancer_spark.operators.multimodal import dhash_pairs
 
         rows = [
             ("a", bytearray(self._am_wav(bits=16))),
@@ -876,7 +864,7 @@ class TestAudioDhash:
         ]
         df = spark.createDataFrame(rows, "path string, content binary")
         pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-                 for r in audio_dhash_pairs(df, max_hamming=3).collect()}
+                 for r in dhash_pairs(df, max_hamming=3, kind="audio").collect()}
         assert ("a", "a_deep") in pairs and pairs[("a", "a_deep")] <= 3
         assert all("b" not in p and "mp3ish" not in p for p in pairs)
 
@@ -884,16 +872,16 @@ class TestAudioDhash:
 def test_image_dhash_numeric_id_column(spark):
     """The signature frame must preserve the INPUT id type: a corpus
     keyed by a LongType doc_id (not a path string) flows through
-    image_dhash/dhash_pairs without schema coercion."""
+    dhash/dhash_pairs without schema coercion."""
     import numpy as np
 
-    from datamancer_spark.operators.multimodal import image_dhash
+    from datamancer_spark.operators.multimodal import dhash
 
     rng = np.random.default_rng(23)
     img = rng.integers(0, 256, size=(16, 16), dtype=np.uint8)
     rows = [(101, bytearray(_encode_png(img, 0, [0]))), (102, bytearray(b"junk"))]
     df = spark.createDataFrame(rows, "doc_id long, content binary")
-    out = image_dhash(df, id_col="doc_id")
+    out = dhash(df, id_col="doc_id")
     assert dict(out.dtypes)["doc_id"] == "bigint"
     got = {r["doc_id"]: r["dhash"] for r in out.collect()}
     assert got[101] is not None and got[102] is None
@@ -2228,8 +2216,8 @@ class TestCurateMedia:
         )
         from datamancer_spark.operators.multimodal import (
             curate_media,
+            dhash,
             dhash_pairs,
-            image_dhash,
         )
 
         rng = np.random.default_rng(73)
@@ -2789,7 +2777,7 @@ class TestRealBmpDecode:
 
         from datamancer_spark.operators.multimodal import (
             decode_images,
-            image_dhash,
+            dhash,
         )
 
         rng = np.random.default_rng(13)
@@ -2801,5 +2789,5 @@ class TestRealBmpDecode:
         [row] = decode_images(df).collect()
         assert (row["width"], row["height"], row["channels"]) == (24, 24, 3)
         assert row["mean_intensity"] == round(float(px.mean()) / 255.0, 6)
-        [hrow] = image_dhash(df).collect()
+        [hrow] = dhash(df).collect()
         assert hrow["dhash"] is not None

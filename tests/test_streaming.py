@@ -736,7 +736,7 @@ def test_streaming_media_screen_verifies_hamming(spark, tmp_path):
     neighbor, which is dropped."""
     import numpy as np
 
-    from datamancer_spark.operators.multimodal import image_dhash
+    from datamancer_spark.operators.multimodal import dhash
     from datamancer_spark.streaming import streaming_media_screen
     from tests.test_multimodal import _encode_png
 
@@ -746,7 +746,7 @@ def test_streaming_media_screen_verifies_hamming(spark, tmp_path):
     frame = spark.createDataFrame(
         [("probe", blob)], "path string, content binary"
     )
-    [row] = image_dhash(frame).collect()
+    [row] = dhash(frame).collect()
     sig = row["dhash"]
 
     def to_signed(x):

@@ -312,7 +312,7 @@ class TestTiffIntegration:
         from datamancer_spark.operators.multimodal import (
             _classify_decode_tier,
             decode_images,
-            image_dhash,
+            dhash,
         )
 
         px = _img_rgb(24, 24)
@@ -330,7 +330,7 @@ class TestTiffIntegration:
             float(px.mean()) / 255.0, 6
         )
         assert got["b"]["width"] is None  # refusal -> NULL, not error
-        hashes = {r["path"]: r["dhash"] for r in image_dhash(df).collect()}
+        hashes = {r["path"]: r["dhash"] for r in dhash(df).collect()}
         assert hashes["a"] is not None and hashes["b"] is None
 
     def test_cross_format_perceptual_pair(self):

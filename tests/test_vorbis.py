@@ -380,7 +380,7 @@ class TestIntegration:
 
     def test_cross_codec_dhash_wav_vs_ogg(self):
         """Same clip through WAV and Vorbis fingerprints within the
-        engine's near-dup radius (audio_dhash_pairs max_hamming=3)."""
+        engine's near-dup radius (dhash_pairs(kind="audio") max_hamming=3)."""
         from datamancer_spark.operators.multimodal import (
             audio_decode_array,
             audio_dhash64,

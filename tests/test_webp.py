@@ -248,7 +248,7 @@ class TestIntegration:
         image formats already satisfy."""
         from datamancer_spark.operators.multimodal import (
             decode_images,
-            image_dhash,
+            dhash,
         )
         from tests.test_multimodal import _encode_png
 
@@ -263,7 +263,7 @@ class TestIntegration:
         )
         dec = {r["path"]: r for r in decode_images(df).collect()}
         assert dec["w.webp"]["width"] == 24 and dec["w.webp"]["channels"] == 3
-        hashes = {r["path"]: r["dhash"] for r in image_dhash(df).collect()}
+        hashes = {r["path"]: r["dhash"] for r in dhash(df).collect()}
         assert hashes["p.png"] == hashes["w.webp"]
 
 
