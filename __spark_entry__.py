@@ -3026,24 +3026,7 @@ def image_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a brute-force DuckDB twin must match it bit for bit. The real
     image path (PNG/GIF decode → dhash64_gray) is pytest-proven against
     encoded fixtures — the testdata tables carry no image blobs."""
-    from datamancer_spark.operators.dedup import (
-        hamming_band_pairs,
-        portable_hash,
-    )
-    from datamancer_spark.session import materialize
-
-    doc = _t(spark, sf_dir, "documents")["documents"].df
-    base = portable_hash((F.col("doc_id") % 37).cast("string"), seed=11)
-    mask = F.element_at(
-        F.array(*[F.lit(m) for m in _DHASH_MASKS]),
-        (F.col("doc_id") % 6 + 1).cast("int"),
-    )
-    sigs = materialize(
-        doc.select("doc_id", base.bitwiseXOR(mask).alias("dhash"))
-    )
-    return hamming_band_pairs(
-        sigs, "dhash", "doc_id", max_hamming=3, bands=4
-    ).select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
+    return _synthetic_dhash_pairs(spark, sf_dir, max_hamming=3, bands=4)
 
 
 def image_dhash_pairs_b8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3054,6 +3037,14 @@ def image_dhash_pairs_b8(spark: SparkSession, sf_dir: str) -> DataFrame:
     EVERY intra-group pair (mask distances 1..5) must surface. The
     blowup posture (8 probes/sig, bounded candidate sets) is measured
     in SCALING.md."""
+    return _synthetic_dhash_pairs(spark, sf_dir, max_hamming=7, bands=8)
+
+
+def _synthetic_dhash_pairs(
+    spark: SparkSession, sf_dir: str, max_hamming: int, bands: int
+) -> DataFrame:
+    """``hamming_band_pairs`` over the synthetic signatures shared by
+    image_dhash_pairs and image_dhash_pairs_b8."""
     from datamancer_spark.operators.dedup import (
         hamming_band_pairs,
         portable_hash,
@@ -3070,7 +3061,7 @@ def image_dhash_pairs_b8(spark: SparkSession, sf_dir: str) -> DataFrame:
         doc.select("doc_id", base.bitwiseXOR(mask).alias("dhash"))
     )
     return hamming_band_pairs(
-        sigs, "dhash", "doc_id", max_hamming=7, bands=8
+        sigs, "dhash", "doc_id", max_hamming=max_hamming, bands=bands
     ).select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
 

@@ -24,6 +24,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 from ..functions.rounding import prnd
 from ..session import materialize
@@ -94,6 +95,22 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     hot paths prefer projecting ``tokens(text)`` into a column first and
     calling ``shingles_from_tokens`` on the attribute (see its note)."""
     return shingles_from_tokens(tokens(text), n)
+
+
+def _shingle_hashes(
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int, out: str = "shs"
+) -> DataFrame:
+    """(id, out: array<long>) — each document's distinct word-shingle
+    ``hash32`` values, with tokenization hoisted into its own projection
+    (see ``shingles_from_tokens``)."""
+    return df.select(
+        F.col(id_col), tokens(F.col(text_col)).alias("_toks")
+    ).select(
+        F.col(id_col),
+        F.transform(
+            shingles_from_tokens(F.col("_toks"), shingle_n), hash32
+        ).alias(out),
+    )
 
 
 # -- exact dedup -------------------------------------------------------------
@@ -250,35 +267,50 @@ def minhash_lsh_pairs(
     are still always emitted via the intra leg). Measured at 16× sf0.1
     with a synthesized 1500-doc boilerplate family: see SCALING.md
     hot-band rows."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands}): "
-            "the b-bands-of-r-rows scheme requires b*r = k"
-        )
-    # Duplicate-heavy corpora (the whole point of dedup) collapse to far
-    # fewer DISTINCT signatures than docs: a group of m identical
-    # signatures would fan the band self-join out by m² per band and
-    # then need a giant pair-level distinct. Instead: (1) run LSH on
-    # distinct signatures only, (2) expand signature pairs back to doc
-    # pairs with two equi-joins, (3) emit identical-signature groups
-    # (always candidates — they share every band) directly. Measured
-    # 4.5× fewer candidate rows at 16× sf0.1; output set is identical.
+    # band_hash_columns checks k % b before the signature pin runs a job.
     # The pin earns its eager job: dedup_minhash (build + toPandas) on
     # perfbench's full-scale seed-301 documents, 10 alternating pairs on
     # a 4-vCPU host, took 1.15 s pinned vs 1.52 s lazy (median; pinned
     # won all 10). Lazy cut build from 0.89 s to 0.50 s but raised
     # execution from 0.26 s to 1.02 s, re-deriving the signatures for
     # every join leg.
+    keys = band_hash_columns(F.col("sig"), num_hashes, bands)
     if sig is None:
         sig = materialize(
             minhash_signature(df, text_col, id_col, num_hashes, shingle_n)
         )
-    # ds is NOT checkpointed: it derives from the pinned sig with one
-    # cheap distinct whose exchange Catalyst reuses across both
-    # self-join legs (ReusedExchange) — a second eager materialization
-    # only added fixed latency (the r3 +0.48s bench regression).
-    ds = sig.select("sig").distinct()
-    banded = _band_keys(ds, num_hashes, bands)
+    return _banded_pairs(sig, id_col, "sig", keys, max_band_freq=max_band_freq)
+
+
+def _banded_pairs(
+    sig: DataFrame,
+    id_col: str,
+    sig_col: str,
+    band_keys: list[Column],
+    keep=None,
+    max_band_freq: int | None = None,
+) -> DataFrame:
+    """Banded-signature self-join core of ``minhash_lsh_pairs`` and
+    ``hamming_band_pairs``: doc pairs (id_a < id_b) whose signatures
+    share a band key. ``sig`` is a pinned (id, ``sig_col``) frame, one
+    signature per doc; ``band_keys`` are columns over ``sig_col``;
+    ``keep`` optionally maps the (sig_a, sig_b) signature pairs, equal
+    ones included — a filter, and any column it adds rides to the
+    output; ``max_band_freq`` is the hot-bucket guard of
+    ``minhash_lsh_pairs``.
+
+    Duplicate-heavy corpora collapse to far fewer DISTINCT signatures
+    than docs, and a group of m equal signatures would fan the band
+    self-join out by m² per band (698M candidates for 12.4M true pairs,
+    measured on the Hamming join at 16× sf0.1). So the distinct
+    signatures are banded and self-joined, signature pairs expand back
+    to doc pairs with two equi-joins (``inter``), and equal-signature
+    groups pair directly (``intra``): 4.5× fewer candidate rows on the
+    MinHash join at 16× sf0.1, same output. The distinct is NOT
+    checkpointed: Catalyst reuses its exchange across both self-join
+    legs (ReusedExchange), and a second eager materialization only
+    added fixed latency (the r3 +0.48s bench regression)."""
+    banded = _band_keys(sig.select(sig_col).distinct(), band_keys)
     if max_band_freq is not None:
         hot = (
             banded.groupBy("band", "bhash")
@@ -287,43 +319,43 @@ def minhash_lsh_pairs(
             .select("band", "bhash")
         )
         banded = banded.join(hot, ["band", "bhash"], "left_anti")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    # array<long> comparison is a total order in Spark, so "sig_a < sig_b"
-    # both orients and dedupes signature pairs; the distinct runs over
-    # signature pairs (small), never over doc pairs (the output).
-    sig_pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bhash") == F.col("b.bhash"))
-            & (F.col("a.sig") < F.col("b.sig")),
-        )
-        .select(F.col("a.sig").alias("sig_a"), F.col("b.sig").alias("sig_b"))
-        .distinct()
+    a, b = banded.alias("a"), banded.alias("b")
+    # signatures compare in a total order (array<long> included), so
+    # "sig_a < sig_b" both orients and dedupes signature pairs; ``keep``
+    # filters BEFORE the distinct, so rejected pairs never shuffle, and
+    # the distinct runs over signature pairs (small), never doc pairs.
+    pairs = a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bhash") == F.col("b.bhash"))
+        & (F.col(f"a.{sig_col}") < F.col(f"b.{sig_col}")),
+    ).select(
+        F.col(f"a.{sig_col}").alias("sig_a"), F.col(f"b.{sig_col}").alias("sig_b")
     )
-    ma = sig.select(F.col(id_col).alias("_ida"), F.col("sig").alias("sig_a"))
-    mb = sig.select(F.col(id_col).alias("_idb"), F.col("sig").alias("sig_b"))
+    sig_pairs = (keep(pairs) if keep else pairs).distinct()
+    extra = [c for c in sig_pairs.columns if c not in ("sig_a", "sig_b")]
+    ma = sig.select(F.col(id_col).alias("_ida"), F.col(sig_col).alias("sig_a"))
+    mb = sig.select(F.col(id_col).alias("_idb"), F.col(sig_col).alias("sig_b"))
     inter = (
         sig_pairs.join(ma, "sig_a")
         .join(mb, "sig_b")
         .select(
             F.least("_ida", "_idb").alias("id_a"),
             F.greatest("_ida", "_idb").alias("id_b"),
+            *extra,
         )
     )
-    intra = (
-        sig.alias("x")
-        .join(
-            sig.alias("y"),
-            (F.col("x.sig") == F.col("y.sig"))
-            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
-        )
-        .select(
-            F.col(f"x.{id_col}").alias("id_a"),
-            F.col(f"y.{id_col}").alias("id_b"),
-        )
+    equal = sig.alias("x").join(
+        sig.alias("y"),
+        (F.col(f"x.{sig_col}") == F.col(f"y.{sig_col}"))
+        & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
+    ).select(
+        F.col(f"x.{id_col}").alias("id_a"),
+        F.col(f"y.{id_col}").alias("id_b"),
+        F.col(f"x.{sig_col}").alias("sig_a"),
+        F.col(f"y.{sig_col}").alias("sig_b"),
     )
+    intra = (keep(equal) if keep else equal).select("id_a", "id_b", *extra)
     # a doc pair appears exactly once: one signature per doc, signature
     # pairs are distinct, and intra (equal sigs) is disjoint from inter
     # (strictly ordered sigs) — no pair-level distinct needed.
@@ -374,40 +406,17 @@ def minhash_dedup_verified(
     return exact.join(cands, ["id_a", "id_b"], "left_semi")
 
 
-def _band_keys(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """Explode a (…, sig: array<long>) frame into b LSH band keys:
-    (…, band, bhash). bhash is the md5 of the band's r signature slots —
-    identical construction on both corpora sides and in the DuckDB
-    oracle, so band equality is engine-portable. At r=1 (the
-    recall-certain geometry the LSH capstone pins) the md5 adds
-    nothing — one slot IS the band key — so the slot value serializes
-    directly: band equality is unchanged (both sides use the same
-    construction) and the per-signature hash work drops b× (measured
-    on the capstone: the md5 chain was ~16 digest calls per distinct
-    signature)."""
-    rows = num_hashes // bands
-    if rows == 1:
-        key = lambda b: F.col("sig")[b].cast("string")  # noqa: E731
-    else:
-        key = lambda b: F.md5(  # noqa: E731
-            F.concat_ws(
-                ",",
-                *[
-                    F.col("sig")[b * rows + r].cast("string")
-                    for r in range(rows)
-                ],
-            )
-        )
+def _band_keys(sig: DataFrame, keys: list[Column]) -> DataFrame:
+    """Explode a signature frame into one row per band key: (…, band,
+    bhash), ``keys`` being the band-key columns (``band_hash_columns``
+    or ``bit_block_columns`` over the frame's signature)."""
     return sig.select(
         "*",
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        key(b).alias("bhash"),
-                    )
-                    for b in range(bands)
+                    F.struct(F.lit(b).alias("band"), k.alias("bhash"))
+                    for b, k in enumerate(keys)
                 ]
             )
         ).alias("_bk"),
@@ -433,21 +442,15 @@ def fuzzy_dedup_against(
 
     Plan shape (100 TB): MinHash signatures per side — at scale the
     ``seen`` side is the persisted signature index (one 16-slot array
-    per historical doc), re-read as columns, not recomputed from text.
-    Both sides reduce to DISTINCT signatures before banding, so the
-    (band, bhash) equi-join moves O(distinct_sigs × b) rows; identical
-    signatures across corpora match through every band, so no special
-    equality leg is needed (unlike the self-join case, which must orient
-    pairs). With ``verify=True`` the band candidates are then confirmed
-    by exact n-gram Jaccard computed ONLY on candidate docs (semi-join
-    shrink on both corpora before any shingle explodes); band-only mode
-    (``verify=False``) is the cheap high-recall screen.
+    per historical doc), re-read as columns, not recomputed from text
+    (``fuzzy_dedup_against_index``). Band candidates come from
+    ``_cross_candidates``; with ``verify=True`` they are then confirmed
+    by exact n-gram Jaccard computed ONLY on candidate docs
+    (``_jaccard_screen``); band-only mode (``verify=False``) is the
+    cheap high-recall screen.
 
     Returns the surviving rows of ``new`` (all original columns)."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands})"
-        )
+    keys = band_hash_columns(F.col("sig"), num_hashes, bands)
     # ONE signature pass over the tagged union of both corpora (ids may
     # collide across snapshots, so the grouping key is (side, id)), then
     # one materialization that every downstream consumer filters — the
@@ -461,80 +464,96 @@ def fuzzy_dedup_against(
     sig_all = materialize(
         minhash_signature(tagged, text_col, "_key", num_hashes, shingle_n)
     )
-    sig_new = sig_all.filter(F.col("_key._side") == 0).select(
-        F.col(f"_key.{id_col}").alias(id_col), "sig"
-    )
-    sig_seen = sig_all.filter(F.col("_key._side") == 1).select(
-        F.col(f"_key.{id_col}").alias(id_col), "sig"
-    )
-    bn = _band_keys(sig_new.select("sig").distinct(), num_hashes, bands)
-    bs = _band_keys(
-        sig_seen.select("sig").distinct(), num_hashes, bands
-    ).withColumnRenamed("sig", "sig_seen")
-    # candidate signature pairs (new sig, seen sig) via band buckets
-    sig_cands = (
-        bn.join(
-            bs,
-            (bn["band"] == bs["band"]) & (bn["bhash"] == bs["bhash"]),
+    sig_new, sig_seen = (
+        sig_all.filter(F.col("_key._side") == side).select(
+            F.col(f"_key.{id_col}").alias(id_col), "sig"
         )
-        .select("sig", "sig_seen")
-        .distinct()
+        for side in (0, 1)
     )
+    sig_cands, cands = _cross_candidates(sig_new, sig_seen, id_col, keys)
     if not verify:
         flagged_sigs = sig_cands.select("sig").distinct()
         flagged = sig_new.join(flagged_sigs, "sig", "left_semi").select(id_col)
         return new.join(flagged, id_col, "left_anti")
-    # expand signature candidates back to (new_id, seen_id) doc pairs
-    cands = materialize(
-        sig_cands.join(sig_new, "sig")
-        .select(F.col(id_col).alias("_nid"), "sig_seen")
+    return _jaccard_screen(
+        new,
+        cands,
+        new,
+        seen,
+        id_col,
+        threshold,
+        lambda d: _shingle_hashes(d, text_col, id_col, shingle_n),
+    )
+
+
+def _cross_candidates(
+    new_sig: DataFrame, seen_sig: DataFrame, id_col: str, keys: list[Column]
+) -> tuple[DataFrame, DataFrame]:
+    """Band-candidate step of the cross-corpus screens over two (id,
+    sig, …) frames: the distinct (sig, sig_seen) signature pairs that
+    share a band key, and the lazy (_nid, _sid) doc pairs they expand
+    to. Only DISTINCT signatures are banded, so the equi-join moves
+    O(distinct_sigs × b) rows; equal signatures across corpora match
+    through every band, so no equality leg is needed."""
+    bn = _band_keys(new_sig.select("sig").distinct(), keys)
+    bs = _band_keys(seen_sig.select("sig").distinct(), keys)
+    sig_cands = (
+        bn.join(bs.withColumnRenamed("sig", "sig_seen"), ["band", "bhash"])
+        .select("sig", "sig_seen")
+        .distinct()
+    )
+    cands = (
+        sig_cands.join(new_sig.select(F.col(id_col).alias("_nid"), "sig"), "sig")
         .join(
-            sig_seen.withColumnRenamed("sig", "sig_seen").withColumnRenamed(
-                id_col, "_sid"
+            seen_sig.select(
+                F.col(id_col).alias("_sid"), F.col("sig").alias("sig_seen")
             ),
             "sig_seen",
         )
         .select("_nid", "_sid")
     )
-    # exact Jaccard, only over candidate docs on each side. The shingle
-    # frames ARE checkpointed: each feeds two consumers (explode leg,
-    # size leg) — measured 3× slower without the pin (the semi-join +
-    # corpus scan re-execute per consumer).
-    def _shingle_rows(df: DataFrame, out_id: str) -> DataFrame:
-        arr = df.select(
-            F.col(id_col).alias(out_id),
-            tokens(F.col(text_col)).alias("_toks"),
-        ).select(
-            out_id,
-            F.transform(
-                shingles_from_tokens(F.col("_toks"), shingle_n),
-                lambda s: hash32(s),
-            ).alias("_shs"),
-        )
-        return materialize(arr)
+    return sig_cands, cands
 
-    arr_n = _shingle_rows(
-        new.join(cands.select(F.col("_nid").alias(id_col)).distinct(), id_col, "left_semi"),
-        "_nid",
-    )
-    arr_s = _shingle_rows(
-        seen.join(cands.select(F.col("_sid").alias(id_col)).distinct(), id_col, "left_semi"),
-        "_sid",
-    )
-    ex_n = arr_n.select("_nid", F.explode("_shs").alias("sh"))
-    ex_s = arr_s.select("_sid", F.explode("_shs").alias("sh"))
+
+def _jaccard_screen(
+    new: DataFrame,
+    cands: DataFrame,
+    new_src: DataFrame,
+    seen_src: DataFrame,
+    id_col: str,
+    threshold: float,
+    shingles=None,
+) -> DataFrame:
+    """Verify tail of the cross-corpus screens: ``new`` minus the rows
+    with a candidate pair (``cands``: (_nid, _sid)) of exact shingle
+    Jaccard ≥ threshold. Each source is semi-joined to its candidate
+    docs BEFORE ``shingles`` maps it to (id, shs) (``None``: it already
+    carries ``shs``, like a ``build_minhash_index``); set sizes ride the
+    explode. ``cands`` is pinned: three consumers read it."""
+    cands = materialize(cands)
+
+    def _side(src: DataFrame, key: str, sz: str) -> DataFrame:
+        ids = cands.select(F.col(key).alias(id_col)).distinct()
+        shs = src.join(ids, id_col, "left_semi")
+        # text sides are pinned after shingling: dedup_fuzzy_incremental
+        # at sf0.1 took 8.1 s unpinned vs 4.1 s pinned (median of 5);
+        # index sides are stored columns and stay lazy.
+        shs = materialize(shingles(shs)) if shingles else shs
+        return shs.select(
+            F.col(id_col).alias(key),
+            F.size("shs").cast("long").alias(sz),
+            F.explode("shs").alias("sh"),
+        )
+
     inter = (
-        ex_n.join(ex_s, "sh")
-        .groupBy("_nid", "_sid")
+        _side(new_src, "_nid", "sz_n")
+        .join(_side(seen_src, "_sid", "sz_s"), "sh")
+        .groupBy("_nid", "_sid", "sz_n", "sz_s")
         .agg(F.count(F.lit(1)).alias("inter"))
         .join(cands, ["_nid", "_sid"], "left_semi")
     )
-    sz_n = arr_n.select("_nid", F.size("_shs").cast("long").alias("sz_n"))
-    sz_s = arr_s.select("_sid", F.size("_shs").cast("long").alias("sz_s"))
     flagged = (
-        inter.join(sz_n, "_nid")
-        .join(sz_s, "_sid")
-        .filter(
+        inter.filter(
             F.col("inter") / (F.col("sz_n") + F.col("sz_s") - F.col("inter"))
             >= threshold
         )
@@ -565,15 +584,34 @@ def sig_from_shingle_hashes(shs: Column, num_hashes: int = 16) -> Column:
 def band_hash_columns(
     sig: Column, num_hashes: int = 16, bands: int = 4
 ) -> list[Column]:
-    """The b LSH band hashes of a signature as SEPARATE columns (md5 of
-    each band's r slots — same construction as ``_band_keys``, which
-    explodes them to rows instead). Column form suits streaming plans,
-    where per-doc aggregation over exploded band rows would need state."""
+    """The b LSH band keys of a MinHash signature as SEPARATE columns —
+    the one band-key encoding: the self-join, the cross-corpus screens
+    and ``minhash_band_index`` explode these columns to rows
+    (``_band_keys``), and the streaming screen keeps them as columns
+    (per-doc aggregation over exploded band rows would need state), so
+    band keys agree everywhere. Band b is the md5 of its r = k/b
+    signature slots, identical in the DuckDB oracle. At r=1 (the
+    recall-certain geometry the LSH capstone pins) the md5 adds nothing
+    — one slot IS the band key — so the slot value serializes directly
+    and the per-signature hash work drops b× (measured on the capstone:
+    the md5 chain was ~16 digest calls per distinct signature).
+
+    Raises ValueError unless ``bands`` divides ``num_hashes``."""
+    if num_hashes % bands != 0:
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be divisible by bands ({bands}): "
+            "the b-bands-of-r-rows scheme requires b*r = k"
+        )
     rows = num_hashes // bands
     return [
-        F.md5(
-            F.concat_ws(
-                ",", *[sig[b * rows + r].cast("string") for r in range(rows)]
+        (
+            sig[b].cast("string")
+            if rows == 1
+            else F.md5(
+                F.concat_ws(
+                    ",",
+                    *[sig[b * rows + r].cast("string") for r in range(rows)],
+                )
             )
         ).alias(f"bhash_{b}")
         for b in range(bands)
@@ -600,9 +638,10 @@ def minhash_band_index(
     (band, bhash) keys — the compact membership structure a streaming
     screen joins against (one row per occupied band bucket, not per
     doc)."""
-    return _band_keys(
-        index.select("sig").distinct(), num_hashes, bands
-    ).select("band", "bhash").distinct()
+    keys = band_hash_columns(F.col("sig"), num_hashes, bands)
+    return _band_keys(index.select("sig").distinct(), keys).select(
+        "band", "bhash"
+    ).distinct()
 
 
 def build_minhash_index(
@@ -632,12 +671,7 @@ def build_minhash_index(
     right trade for an index-build write job (scan→project→write, no
     shuffle at any size); for compute-bound in-job signature use, prefer
     ``minhash_signature``."""
-    shs = F.transform(
-        shingles_from_tokens(F.col("_toks"), shingle_n), lambda s: hash32(s)
-    )
-    d = df.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("_toks")
-    ).select(F.col(id_col), shs.alias("shs"))
+    d = _shingle_hashes(df, text_col, id_col, shingle_n)
     sig = sig_from_shingle_hashes(F.col("shs"), num_hashes)
     return d.select(
         F.col(id_col),
@@ -683,55 +717,64 @@ def fuzzy_dedup_against_index(
     the index's stored shingle arrays. Output and semantics are
     identical to ``fuzzy_dedup_against(new, seen)`` when ``index =
     build_minhash_index(seen)`` (pinned by test)."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands})"
-        )
+    keys = band_hash_columns(F.col("sig"), num_hashes, bands)
     ni = materialize(
         build_minhash_index(new, text_col, id_col, num_hashes, shingle_n)
     )
-    bn = _band_keys(ni.select("sig").distinct(), num_hashes, bands)
-    bs = _band_keys(
-        index.select("sig").distinct(), num_hashes, bands
-    ).withColumnRenamed("sig", "sig_seen")
-    sig_cands = (
-        bn.join(
-            bs, (bn["band"] == bs["band"]) & (bn["bhash"] == bs["bhash"])
+    _, cands = _cross_candidates(ni, index, id_col, keys)
+    return _jaccard_screen(new, cands, ni, index, id_col, threshold)
+
+
+def _posting_pairs(
+    postings: DataFrame,
+    id_col: str,
+    max_key_freq: int | None,
+    agg: Column,
+    sizes,
+) -> DataFrame:
+    """Posting-list self-join core of ``ngram_jaccard_pairs``,
+    ``ngram_containment_pairs`` and ``tfidf.tfidf_cosine_pairs``: doc
+    pairs (id_a < id_b) sharing a key, with ``agg`` over their shared
+    postings (``a.``/``b.`` name the sides: a count, or Σ a.w·b.w).
+
+    ``postings`` is (id, key: array of a doc's distinct keys, exploded
+    here) or (id, key, w) rows, pinned ONCE here: it feeds both
+    self-join legs and the sizes (Spark plans self-joins as independent
+    subtrees — unpinned, tokenization + shingling + md5 re-execute per
+    leg). ``max_key_freq`` drops keys posted by more than that many docs
+    before the join (huge fan-out, little signal; LOSSY). ``sizes(pinned,
+    kept)`` gives each doc's (id, m) — from the pinned frame or the kept
+    postings — joined to the pairs as m_a and m_b."""
+    pinned = materialize(postings)
+    kept = pinned
+    if isinstance(pinned.schema["key"].dataType, ArrayType):
+        kept = pinned.select(F.col(id_col), F.explode("key").alias("key"))
+    if max_key_freq is not None:
+        rare = (
+            kept.groupBy("key")
+            .agg(F.count(F.lit(1)).alias("_df"))
+            .filter(F.col("_df") <= max_key_freq)
+            .select("key")
         )
-        .select("sig", "sig_seen")
-        .distinct()
-    )
-    cands = materialize(
-        sig_cands.join(ni.select(F.col(id_col).alias("_nid"), "sig"), "sig")
-        .join(
-            index.select(F.col(id_col).alias("_sid"), F.col("sig").alias("sig_seen")),
-            "sig_seen",
+        kept = kept.join(rare, "key", "left_semi")
+    a, b = kept.alias("a"), kept.alias("b")
+    pairs = (
+        a.join(
+            b,
+            (F.col("a.key") == F.col("b.key"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
-        .select("_nid", "_sid")
-    )
-    arr_n = ni.join(
-        cands.select(F.col("_nid").alias(id_col)).distinct(), id_col, "left_semi"
-    ).select(F.col(id_col).alias("_nid"), "shs", F.col("sz").alias("sz_n"))
-    arr_s = index.join(
-        cands.select(F.col("_sid").alias(id_col)).distinct(), id_col, "left_semi"
-    ).select(F.col(id_col).alias("_sid"), "shs", F.col("sz").alias("sz_s"))
-    ex_n = arr_n.select("_nid", "sz_n", F.explode("shs").alias("sh"))
-    ex_s = arr_s.select("_sid", "sz_s", F.explode("shs").alias("sh"))
-    inter = (
-        ex_n.join(ex_s, "sh")
-        .groupBy("_nid", "_sid", "sz_n", "sz_s")
-        .agg(F.count(F.lit(1)).alias("inter"))
-        .join(cands, ["_nid", "_sid"], "left_semi")
-    )
-    flagged = (
-        inter.filter(
-            F.col("inter") / (F.col("sz_n") + F.col("sz_s") - F.col("inter"))
-            >= threshold
+        .groupBy(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
         )
-        .select(F.col("_nid").alias(id_col))
-        .distinct()
+        .agg(agg)
     )
-    return new.join(flagged, id_col, "left_anti")
+    m = sizes(pinned, kept)
+    (col,) = [c for c in m.columns if c != id_col]
+    ma = m.select(F.col(id_col).alias("id_a"), F.col(col).alias(f"{col}_a"))
+    mb = m.select(F.col(id_col).alias("id_b"), F.col(col).alias(f"{col}_b"))
+    return pairs.join(ma, "id_a").join(mb, "id_b")
 
 
 def ngram_jaccard_pairs(
@@ -744,66 +787,35 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity join via an inverted shingle index:
     explode distinct shingles → self-join on shingle → count shared →
-    |A∩B| / (|A|+|B|-|A∩B|) ≥ threshold.
+    |A∩B| / (|A|+|B|-|A∩B|) ≥ threshold (``_posting_pairs``).
 
     Fully relational (GROUP BY + JOIN), so DuckDB-checkable. The join key
     is the portable 32-bit shingle hash, not the shingle string — 8-byte
     shuffle keys instead of ~30-char strings (hash collisions fold two
     shingles together identically in both engines, so differential
-    equality holds). At scale the inverted index is the standard
-    text-similarity-join plan; extremely common shingles should be pruned
-    upstream (df.filter on doc frequency) — exposed as a follow-up knob,
-    not silently applied.
+    equality holds).
 
-    The (id, hashed-shingle-array) frame is built ONCE per row and
-    localCheckpointed: it feeds both self-join legs (Spark plans
-    self-joins as independent subtrees — without pinning, tokenization +
-    shingling + md5 re-execute per leg), and set sizes come narrowly
-    from ``F.size`` on the array instead of a separate explode+groupBy
-    pass."""
-    arr = (
-        spread_partitions(df)
-        .select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .select(
-            F.col(id_col),
-            F.transform(
-                shingles_from_tokens(F.col("_toks"), shingle_n),
-                lambda s: hash32(s),
-            ).alias("_shs"),
-        )
-    )
-    arr = materialize(arr)
-    sh = arr.select(F.col(id_col), F.explode("_shs").alias("sh"))
-    if max_doc_freq is not None:
-        # Recall/cost knob: drop boilerplate shingles present in more than
-        # max_doc_freq docs BEFORE the pair join (they contribute huge
-        # join fan-out but little similarity signal). LOSSY: jaccard is
-        # then computed over the pruned shingle sets — document choice,
-        # don't silently default.
-        rare = (
-            sh.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_doc_freq)
-            .select("sh")
-        )
-        sh = sh.join(rare, "sh", "left_semi")
-        # LOSSY path: sizes must reflect the PRUNED shingle sets
-        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    else:
-        sizes = arr.select(
-            F.col(id_col), F.size("_shs").cast("long").alias("sz")
-        )
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
+    ``max_doc_freq`` drops boilerplate shingles present in more than
+    that many docs before the pair join. LOSSY: Jaccard is then
+    computed over the pruned shingle sets, sizes included."""
+
+    def sizes(pinned: DataFrame, kept: DataFrame) -> DataFrame:
+        if max_doc_freq is None:
+            return pinned.select(
+                F.col(id_col), F.size("key").cast("long").alias("sz")
+            )
+        return kept.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
+
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _posting_pairs(
+            _shingle_hashes(
+                spread_partitions(df), text_col, id_col, shingle_n, "key"
+            ),
+            id_col,
+            max_doc_freq,
+            F.count(F.lit(1)).alias("inter"),
+            sizes,
+        )
         .withColumn(
             "jaccard",
             F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
@@ -847,48 +859,17 @@ def ngram_containment_pairs(
     entirely in boilerplate shingles (which is the point). Matches
     ``ngram_jaccard_pairs``' ``max_doc_freq`` (dedup.py) and the LSH
     band join's ``max_band_freq`` knob."""
-    arr = (
-        spread_partitions(df)
-        .select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .select(
-            F.col(id_col),
-            F.transform(
-                shingles_from_tokens(F.col("_toks"), shingle_n),
-                lambda s: hash32(s),
-            ).alias("_shs"),
-        )
-    )
-    arr = materialize(arr)
-    sh = arr.select(F.col(id_col), F.explode("_shs").alias("sh"))
     # denominators ALWAYS come from the unpruned shingle sets — see the
-    # one-sided-error contract in the docstring
-    sizes = arr.select(
-        F.col(id_col), F.size("_shs").cast("long").alias("sz")
+    # one-sided-error contract above
+    both = _posting_pairs(
+        _shingle_hashes(spread_partitions(df), text_col, id_col, shingle_n, "key"),
+        id_col,
+        max_doc_freq,
+        F.count(F.lit(1)).alias("inter"),
+        lambda pinned, kept: pinned.select(
+            F.col(id_col), F.size("key").cast("long").alias("sz")
+        ),
     )
-    if max_doc_freq is not None:
-        rare = (
-            sh.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_doc_freq)
-            .select("sh")
-        )
-        sh = sh.join(rare, "sh", "left_semi")
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
-    both = inter.join(sa, "id_a").join(sb, "id_b")
     fwd = both.select(
         F.col("id_a").alias("src_id"),
         F.col("id_b").alias("dst_id"),
@@ -1020,83 +1001,20 @@ def hamming_band_pairs(
 
     Input must be a MATERIALIZED (id, sig) frame (both self-join legs
     and the member-expansion joins consume it; an unpinned upstream
-    would re-execute per leg). Output (id_a < id_b, hamming).
-    Scale shape: distinct signatures join banded (a group of m equal
-    signatures would otherwise contribute m²·bands candidate rows);
-    identical signatures pair directly at hamming 0; the Hamming filter
-    runs BEFORE the pair distinct so rejected candidates never shuffle."""
+    would re-execute per leg). Output (id_a < id_b, hamming): the
+    ``_banded_pairs`` core over the bit blocks, with the Hamming filter
+    as its ``keep`` step (identical signatures pair at hamming 0)."""
     if max_hamming > bands - 1:
         raise ValueError(
             f"max_hamming={max_hamming} needs bands>={max_hamming + 1} "
             f"for exact band-LSH recall (got bands={bands})"
         )
-    # Same distinct-signature decomposition as minhash_lsh_pairs: the
-    # block self-join runs on DISTINCT signatures (a group of m equal
-    # signatures otherwise contributes m²·bands candidate rows — 698M
-    # candidates for 12.4M true pairs measured at 16× sf0.1), identical
-    # signatures become direct hamming-0 pairs, and the distinct runs
-    # over signature pairs instead of doc pairs.
-    # derives from pinned sh; the distinct's exchange is reused across
-    # both self-join legs — no second eager materialization needed
-    ds = sh.select(sig_col).distinct()
-    blocked = ds.select(
-        sig_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("blk"), blk.alias("val"))
-                    for i, blk in enumerate(
-                        bit_block_columns(F.col(sig_col), bands)
-                    )
-                ]
-            )
-        ).alias("b"),
-    ).select(sig_col, "b.blk", "b.val")
-    a, b = blocked.alias("a"), blocked.alias("b")
-    sig_pairs = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col(f"a.{sig_col}") < F.col(f"b.{sig_col}")),
-        )
-        .select(
-            F.col(f"a.{sig_col}").alias("sig_a"),
-            F.col(f"b.{sig_col}").alias("sig_b"),
-            F.bit_count(
-                F.col(f"a.{sig_col}").bitwiseXOR(F.col(f"b.{sig_col}"))
-            ).alias("hamming"),
-        )
-        # hamming filter BEFORE the distinct: rejected signature pairs
-        # never enter the dedup shuffle or the member expansion
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+    keep = lambda p: p.withColumn("hamming", hamming).filter(  # noqa: E731
+        F.col("hamming") <= max_hamming
     )
-    ma = sh.select(F.col(id_col).alias("_ida"), F.col(sig_col).alias("sig_a"))
-    mb = sh.select(F.col(id_col).alias("_idb"), F.col(sig_col).alias("sig_b"))
-    inter = (
-        sig_pairs.join(ma, "sig_a")
-        .join(mb, "sig_b")
-        .select(
-            F.least("_ida", "_idb").alias("id_a"),
-            F.greatest("_ida", "_idb").alias("id_b"),
-            "hamming",
-        )
-    )
-    intra = (
-        sh.alias("x")
-        .join(
-            sh.alias("y"),
-            (F.col(f"x.{sig_col}") == F.col(f"y.{sig_col}"))
-            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
-        )
-        .select(
-            F.col(f"x.{id_col}").alias("id_a"),
-            F.col(f"y.{id_col}").alias("id_b"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-    )
-    return inter.unionByName(intra)
+    blocks = bit_block_columns(F.col(sig_col), bands)
+    return _banded_pairs(sh, id_col, sig_col, blocks, keep)
 
 
 # -- embedding near-dup ------------------------------------------------------

@@ -2153,24 +2153,15 @@ def dhash_band_index(
     ``kind="audio"`` (r9) indexes the audio envelope dHash instead —
     same engine, cross-codec by construction (WAV/FLAC/MP3/Vorbis of
     the same clip land in the same buckets)."""
-    from .dedup import bit_block_columns
+    from .dedup import _band_keys, bit_block_columns
 
     sigs = dhash(df, bin_col, id_col, kind).filter(F.col("dhash").isNotNull())
-    banded = sigs.select(
-        F.col("dhash").alias("sig"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), blk.alias("val"))
-                    for b, blk in enumerate(
-                        bit_block_columns(F.col("dhash"), bands)
-                    )
-                ]
-            )
-        ).alias("bv"),
+    banded = _band_keys(
+        sigs.select(F.col("dhash").alias("sig")),
+        bit_block_columns(F.col("sig"), bands),
     )
     return (
-        banded.select("bv.band", "bv.val", "sig")
+        banded.select("band", F.col("bhash").alias("val"), "sig")
         .distinct()
         .groupBy("band", "val")
         .agg(F.sort_array(F.collect_list("sig")).alias("sigs"))

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import prnd
 from ..session import materialize
-from .dedup import spread_partitions, tokens
+from .dedup import _posting_pairs, spread_partitions, tokens
 
 
 def term_counts(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -194,12 +194,12 @@ def tfidf_cosine_pairs(
 
     sim(a,b) = Σ_t w_at·w_bt / (‖a‖·‖b‖), computed relationally:
     per-doc term weights (partial-aggregated), per-doc norms from one
-    groupBy, then a self-join ON TERM accumulates the dot products —
-    shuffle volume is Σ_t df(t)², so ``max_doc_freq`` prunes
-    stop-word-class terms (df > cap) before the join, the same
-    LOSSY-knob pattern as ngram_jaccard's doc-freq cap (high-df terms
-    carry ~zero idf weight anyway). Output (id_a < id_b, cosine ≥
-    threshold)."""
+    groupBy, then the ``dedup._posting_pairs`` self-join ON TERM
+    accumulates the dot products — shuffle volume is Σ_t df(t)², so
+    ``max_doc_freq`` prunes stop-word-class terms (df > cap) before the
+    join, the same LOSSY-knob pattern as ngram_jaccard's doc-freq cap
+    (high-df terms carry ~zero idf weight anyway). Output (id_a < id_b,
+    cosine ≥ threshold)."""
     tc = term_counts(df, text_col, id_col)
     dfreq = doc_freq(tc, id_col).crossJoin(F.broadcast(_n_docs_frame(df)))
     if max_doc_freq_frac is not None:
@@ -217,30 +217,20 @@ def tfidf_cosine_pairs(
     ).drop("_n")
     # no broadcast hint: vocabulary-sized frame (see _idf_frame)
     w = tc.join(idf, "term").select(
-        F.col(id_col), "term", (F.col("tf") * F.col("idf")).alias("w")
+        F.col(id_col),
+        F.col("term").alias("key"),
+        (F.col("tf") * F.col("idf")).alias("w"),
     )
-    w = materialize(w)  # feeds norms + both self-join legs
-    norms = w.groupBy(id_col).agg(
-        F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm")
-    )
-    a, b = w.alias("a"), w.alias("b")
-    dots = (
-        a.join(
-            b,
-            (F.col("a.term") == F.col("b.term"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.sum(F.col("a.w") * F.col("b.w")).alias("dot"))
-    )
-    na = norms.select(F.col(id_col).alias("id_a"), F.col("nrm").alias("nrm_a"))
-    nb = norms.select(F.col(id_col).alias("id_b"), F.col("nrm").alias("nrm_b"))
     return (
-        dots.join(na, "id_a")
-        .join(nb, "id_b")
+        _posting_pairs(
+            w,
+            id_col,
+            None,
+            F.sum(F.col("a.w") * F.col("b.w")).alias("dot"),
+            lambda pinned, kept: pinned.groupBy(id_col).agg(
+                F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm")
+            ),
+        )
         .withColumn("cosine", F.col("dot") / (F.col("nrm_a") * F.col("nrm_b")))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", prnd("cosine", 6).alias("cosine"))

@@ -53,14 +53,33 @@ def test_q1_shuffle_budget(spark, sf_dir):
     assert shuffle_count(df) <= 2  # agg exchange (+ AQE reads)
 
 
-def test_minhash_no_cartesian(spark, sf_dir):
-    """LSH candidate generation must never plan a cartesian product."""
-    from datamancer_spark.operators.dedup import minhash_lsh_pairs
+@pytest.mark.parametrize(
+    "join",
+    [
+        "minhash_lsh_pairs",
+        "simhash_pairs",
+        "ngram_jaccard_pairs",
+        "ngram_containment_pairs",
+        "tfidf_cosine_pairs",
+        "fuzzy_dedup_against",
+    ],
+)
+def test_minhash_no_cartesian(spark, sf_dir, join):
+    """Every similarity join filters through band or posting keys: none
+    may plan a cartesian product or a nested-loop join."""
+    from datamancer_spark.operators import dedup, tfidf
     from datamancer_spark.plans import executed_plan
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    plan = executed_plan(minhash_lsh_pairs(docs))
+    fn = getattr(dedup, join, None) or getattr(tfidf, join)
+    if join == "fuzzy_dedup_against":
+        odd = F.col("doc_id") % 2 == 1
+        out = fn(docs.filter(~odd), docs.filter(odd))
+    else:
+        out = fn(docs)
+    plan = executed_plan(out)
     assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_knn_corpus_not_shuffled(spark, sf_dir):

@@ -238,6 +238,76 @@ def test_interval_join_matches_naive(spark, pts, ivs, bucket):
     assert got == want
 
 
+@given(
+    texts=st.lists(
+        st.lists(st.sampled_from(["a", "b", "c", "d", "e"]), max_size=7),
+        min_size=2,
+        max_size=8,
+    ),
+    n=st.integers(1, 3),
+    threshold=st.sampled_from([0.2, 0.5, 0.8]),
+    max_doc_freq=st.sampled_from([None, 2]),
+)
+@SETTINGS
+def test_ngram_pair_joins_match_brute_force(
+    spark, texts, n, threshold, max_doc_freq
+):
+    """For any small corpus, the posting-list joins return exactly the
+    pairs a brute-force pass over every document pair finds, with the
+    same values to 6 decimals — including with doc-frequency pruning
+    (Jaccard over the pruned sets; containment over pruned overlaps and
+    unpruned sizes)."""
+    from collections import Counter
+
+    from datamancer_spark.operators.dedup import (
+        _shingle_hashes,
+        ngram_containment_pairs,
+        ngram_jaccard_pairs,
+    )
+
+    d = spark.createDataFrame(
+        [(i, " ".join(t)) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    full = {
+        r["doc_id"]: set(r["shs"])
+        for r in _shingle_hashes(d, "text", "doc_id", n).collect()
+    }
+    dfreq = Counter(h for s in full.values() for h in s)
+    kept = {
+        i: {h for h in s if max_doc_freq is None or dfreq[h] <= max_doc_freq}
+        for i, s in full.items()
+    }
+    want_j, want_c = {}, {}
+    for i in full:
+        for j in full:
+            inter = len(kept[i] & kept[j])
+            if i == j or inter == 0:
+                continue
+            if i < j:
+                jac = inter / len(kept[i] | kept[j])
+                if jac >= threshold:
+                    want_j[(i, j)] = jac
+            if inter / len(full[i]) >= threshold:
+                want_c[(i, j)] = inter / len(full[i])
+    got_j = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in ngram_jaccard_pairs(
+            d, shingle_n=n, threshold=threshold, max_doc_freq=max_doc_freq
+        ).collect()
+    }
+    got_c = {
+        (r["src_id"], r["dst_id"]): r["containment"]
+        for r in ngram_containment_pairs(
+            d, shingle_n=n, threshold=threshold, max_doc_freq=max_doc_freq
+        ).collect()
+    }
+    assert got_j.keys() == want_j.keys()
+    assert got_c.keys() == want_c.keys()
+    for got, want in ((got_j, want_j), (got_c, want_c)):
+        for k, v in want.items():
+            assert got[k] == pytest.approx(v, abs=1e-6), k
+
+
 class TestDecoderRoundtripProperties:
     """Property round-trips for the stdlib media decoders: any image the
     reference encoders can produce must decode bit-exactly — including

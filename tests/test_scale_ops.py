@@ -162,6 +162,21 @@ def test_minhash_rejects_indivisible_bands(spark, sf_dir):
         minhash_lsh_pairs(docs, num_hashes=16, bands=5)
 
 
+def test_band_index_rejects_indivisible_bands(spark):
+    """The band index checks k % b like the pair join does: at bands=5
+    it would otherwise silently band 15 of the 16 signature slots."""
+    from datamancer_spark.operators.dedup import (
+        build_minhash_index,
+        minhash_band_index,
+    )
+
+    idx = build_minhash_index(
+        spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    )
+    with pytest.raises(ValueError, match="divisible"):
+        minhash_band_index(idx, 16, 5)
+
+
 def test_winsorize_keyless_no_global_window(spark, sf_dir):
     from datamancer_spark.operators.sampling import winsorize
     from datamancer_spark.plans import executed_plan

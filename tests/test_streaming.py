@@ -282,6 +282,16 @@ def test_streaming_fuzzy_screen(spark, tmp_path):
     """Stream docs are screened against a persisted MinHash band index:
     exact and near duplicates of history drop in-flight, novel docs
     survive; the streaming plan is stateless (no aggregation state)."""
+    _check_streaming_fuzzy_screen(spark, tmp_path, bands=4)
+
+
+def test_streaming_fuzzy_screen_one_row_bands(spark, tmp_path):
+    """bands=16 over 16 hashes is the r=1 geometry, where the batch
+    index and the stream must still encode band keys the same way."""
+    _check_streaming_fuzzy_screen(spark, tmp_path, bands=16)
+
+
+def _check_streaming_fuzzy_screen(spark, tmp_path, bands):
     from datamancer_spark.operators.dedup import (
         build_minhash_index,
         minhash_band_index,
@@ -296,7 +306,7 @@ def test_streaming_fuzzy_screen(spark, tmp_path):
     history = spark.createDataFrame(
         [(1, base)], "doc_id long, text string"
     )
-    bidx = minhash_band_index(build_minhash_index(history))
+    bidx = minhash_band_index(build_minhash_index(history), 16, bands)
 
     d = str(tmp_path / "in")
     os.makedirs(d)
@@ -308,16 +318,16 @@ def test_streaming_fuzzy_screen(spark, tmp_path):
     stream = (
         spark.readStream.schema(SCHEMA).json(d)
     )
-    out = streaming_fuzzy_screen(stream, bidx)
+    out = streaming_fuzzy_screen(stream, bidx, num_hashes=16, bands=bands)
     q = (
         out.writeStream.format("memory")
-        .queryName("fuzzy_screen")
+        .queryName(f"fuzzy_screen_{bands}")
         .outputMode("append")
         .start()
     )
     try:
         q.processAllAvailable()
-        rows = spark.sql("SELECT text FROM fuzzy_screen").collect()
+        rows = spark.sql(f"SELECT text FROM fuzzy_screen_{bands}").collect()
     finally:
         q.stop()
     texts = {r["text"] for r in rows}
