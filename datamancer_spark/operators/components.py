@@ -55,7 +55,10 @@ def connected_components(
     """(node, component) — component = min node id reachable.
 
     ``pairs`` is an undirected edge list; isolated nodes don't appear
-    (join your full id set afterwards with fill = own id)."""
+    (join your full id set afterwards with fill = own id). Raises
+    ``ValueError`` when the last of ``max_iter`` rounds still changed a
+    label: an unconverged prefix would split components (``k_core``
+    raises the same way)."""
     # materialize (r13): the edge list is joined EVERY round, and the
     # caller's pairs lineage is typically the expensive part (e.g.
     # minhash_dedup_verified — banded LSH + verify); without the
@@ -108,6 +111,9 @@ def connected_components(
         labels = merged.select("node", F.col("new_comp").alias("comp"))
         if changed == 0:
             break
+    else:
+        raise ValueError(f"connected_components: labels still changing "
+                         f"after max_iter={max_iter} rounds")
     return labels.select(F.col("node"), F.col("comp").alias("component"))
 
 

@@ -518,6 +518,42 @@ def _read_scalefactors(bits: _Bits, g, scfsi_ch, prev):
     return sf_long, None, bits.pos - start
 
 
+def _big_value_regions(g, rate: int):
+    """``[(table_select, pair_count), ...]`` per big_values region of
+    one granule, as ``_L3Decoder.feed`` decodes and
+    ``mpeg_stream_supported`` screens them; a region of 0 pairs reads
+    no table. None when the bounds run backwards."""
+    sfb_l = _SFB_LONG[rate]
+    if g["window_switching"]:
+        # ISO 11172-3 2.4.2.7: region0_count is IMPLIED when
+        # window_switching is set — 8 for pure short (counted in
+        # short-sfb triples -> 36 samples), 7 otherwise (start/stop/
+        # mixed -> sfb_l[8], which is 36 at all three MPEG-1 rates).
+        # dist10 hardcodes 36 for both.
+        if g["block_type"] == 2 and not g["mixed_block"]:
+            r1 = 36
+        else:
+            r1 = sfb_l[g["region0_count"] + 1]
+        bounds = [r1, 576]
+    else:
+        i0 = min(g["region0_count"] + 1, 22)
+        i1 = min(i0 + g["region1_count"] + 1, 22)
+        bounds = [sfb_l[i0], sfb_l[i1]]
+    bv2 = g["big_values"] * 2
+    ends = [min(bounds[0], bv2), min(bounds[1], bv2)]
+    if not g["window_switching"]:
+        ends.append(bv2)
+    regions = []
+    prev_end = 0
+    for select, end in zip(g["table_select"], ends):
+        count = (end - prev_end) // 2
+        if count < 0:
+            return None
+        regions.append((select, count))
+        prev_end = max(prev_end, end)
+    return regions
+
+
 def _huffman_region(bits: _Bits, select: int, count: int, out, idx,
                     limit: int):
     """Decode ``count`` PAIRS from a big_values region. Returns new idx
@@ -820,43 +856,16 @@ class _L3Decoder:
                 if gr == 0:
                     self._sf_prev[ch] = sf_long
                 xr = [0.0] * 576
-                # region boundaries in samples
-                if g["window_switching"]:
-                    # ISO 11172-3 2.4.2.7: region0_count is IMPLIED when
-                    # window_switching is set — 8 for pure short (counted
-                    # in short-sfb triples -> 36 samples), 7 otherwise
-                    # (start/stop/mixed -> sfb_l[8], which is 36 at all
-                    # three MPEG-1 rates). dist10 hardcodes 36 for both.
-                    if g["block_type"] == 2 and not g["mixed_block"]:
-                        r1 = 36
-                    else:
-                        sfb_l = _SFB_LONG[self.rate]
-                        r1 = sfb_l[g["region0_count"] + 1]
-                    bounds = [r1, 576]
-                else:
-                    sfb_l = _SFB_LONG[self.rate]
-                    i0 = min(g["region0_count"] + 1, 22)
-                    i1 = min(i0 + g["region1_count"] + 1, 22)
-                    bounds = [sfb_l[i0], sfb_l[i1]]
-                bv2 = g["big_values"] * 2
+                regions = _big_value_regions(g, self.rate)
+                if regions is None:
+                    return False
                 idx = 0
-                regions = [
-                    (g["table_select"][0], min(bounds[0], bv2)),
-                    (g["table_select"][1], min(bounds[1], bv2)),
-                ]
-                if not g["window_switching"]:
-                    regions.append((g["table_select"][2], bv2))
-                prev_end = 0
-                for select, end in regions:
-                    count = (end - prev_end) // 2
-                    if count < 0:
-                        return False
+                for select, count in regions:
                     got = _huffman_region(bits, select, count, xr, idx,
                                           limit)
                     if got is None:
                         return False
                     idx = got
-                    prev_end = max(prev_end, end)
                 if bits.pos < limit:
                     got = _count1_region(bits, g["count1table_select"],
                                          xr, idx, limit)
@@ -945,6 +954,25 @@ def _skip_id3(blob: bytes):
     return start, end
 
 
+def _first_frame(data: bytes):
+    """``(pos, header)`` of the first frame in the first 64 KiB that a
+    same-layer, same-rate frame follows (or that fills the rest of
+    ``data``) — the false-sync discipline the decoder and its screen
+    share. None when there is none."""
+    for pos in range(min(len(data), 65536)):
+        hdr = parse_frame_header(data, pos)
+        if hdr is None:
+            continue
+        fb = hdr["frame_bytes"]
+        nxt = parse_frame_header(data, pos + fb)
+        if nxt is not None and nxt["layer"] == hdr["layer"] \
+                and nxt["samplerate"] == hdr["samplerate"]:
+            return pos, hdr
+        if pos + fb >= len(data) >= fb:
+            return pos, hdr  # single-frame stream
+    return None
+
+
 def mpeg_audio_decode_array(blob: bytes):
     """Decode an MPEG-1 Layer I/III stream -> (sample_rate, mono
     float64) or ``None``. Strict: ANY frame that needs an unsupported
@@ -957,24 +985,7 @@ def mpeg_audio_decode_array(blob: bytes):
 
     start, end = _skip_id3(blob)
     data = blob[start:end]
-    # find the first position with two consecutive valid same-layer
-    # frames (same false-sync discipline as mp3_header_info)
-    pos = 0
-    first = None
-    scan_limit = min(len(data), 65536)
-    while pos < scan_limit:
-        hdr = parse_frame_header(data, pos)
-        if hdr is not None:
-            nxt = parse_frame_header(data, pos + hdr["frame_bytes"])
-            if nxt is not None and nxt["layer"] == hdr["layer"] \
-                    and nxt["samplerate"] == hdr["samplerate"]:
-                first = (pos, hdr)
-                break
-            if pos + hdr["frame_bytes"] >= len(data) and len(data) >= \
-                    hdr["frame_bytes"]:
-                first = (pos, hdr)  # single-frame stream
-                break
-        pos += 1
+    first = _first_frame(data)
     if first is None:
         return None
     pos, hdr0 = first
@@ -1021,8 +1032,6 @@ def mpeg_audio_decode_array(blob: bytes):
     # streams may retain a residual encoder-dependent offset (no Xing
     # gapless info is parsed) — irrelevant at envelope granularity.
     if layer == 1:
-        import numpy as np
-
         chans = []
         for ch in range(nch):
             # per frame: [sb][12 samples] -> (12, 32) vectors
@@ -1044,35 +1053,27 @@ def mpeg_audio_decode_array(blob: bytes):
 def mpeg_stream_supported(blob: bytes) -> bool:
     """Cheap all-frames side-info check: True iff every frame of the
     stream parses as MPEG-1 Layer I, or Layer III whose side info only
-    references supported Huffman tables (intensity stereo is supported
-    since r9 — mono-mix contract). This
-    is what the ``decodable`` metadata column reports for mp3 — it can
-    miss a mid-stream Huffman desync (rare, corrupt input), in which
-    case ``mpeg_audio_decode_array`` still returns ``None``."""
+    selects supported Huffman tables for the regions the decoder reads
+    — the same first frame (``_first_frame``), only big_values regions
+    with pairs (``_big_value_regions``), none in a reservoir-underflow
+    frame (decoded as silence). The ``decodable`` metadata column and
+    the coverage report for mp3: False means
+    ``mpeg_audio_decode_array`` returns ``None``; True can still miss a
+    mid-stream Huffman desync (rare, corrupt input)."""
     from .mpeghuff import COUNT1_TABLES, pair_table_for_select
 
     start, end = _skip_id3(blob)
     data = blob[start:end]
-    pos = 0
-    hdr0 = None
-    scan_limit = min(len(data), 65536)
-    while pos < scan_limit:
-        hdr = parse_frame_header(data, pos)
-        if hdr is not None:
-            nxt = parse_frame_header(data, pos + hdr["frame_bytes"])
-            if (nxt is not None and nxt["layer"] == hdr["layer"]) or (
-                pos + hdr["frame_bytes"] >= len(data)
-                and len(data) >= hdr["frame_bytes"]
-            ):
-                hdr0 = hdr
-                break
-        pos += 1
-    if hdr0 is None:
+    first = _first_frame(data)
+    if first is None:
         return False
+    pos, hdr0 = first
     if hdr0["layer"] == 2:
         return False
     frames = 0
+    reservoir = 0  # bytes of main data the decoder holds back (<= 511)
     nch = hdr0["channels"]
+    side_len = 17 if nch == 1 else 32
     while pos + 4 <= len(data):
         hdr = parse_frame_header(data, pos)
         if hdr is None:
@@ -1082,7 +1083,6 @@ def mpeg_stream_supported(blob: bytes) -> bool:
             break
         if hdr["layer"] == 3:
             off = 4 + (2 if hdr["protection"] else 0)
-            side_len = 17 if nch == 1 else 32
             if len(data) < pos + off + side_len:
                 break
             side = _parse_side_info(
@@ -1090,14 +1090,19 @@ def mpeg_stream_supported(blob: bytes) -> bool:
             )
             if side is None:
                 return False
-            _mdb, _scfsi, granules = side
-            for gr in granules:
-                for g in gr:
-                    for sel in g["table_select"]:
-                        if sel and pair_table_for_select(sel) is None:
-                            return False
-                    if g["count1table_select"] not in COUNT1_TABLES:
+            main_data_begin, _scfsi, granules = side
+            if main_data_begin > reservoir:
+                granules = []  # reservoir underflow: decoded as silence
+            reservoir = min(511, reservoir + fb - off - side_len)
+            for g in (g for gr in granules for g in gr):
+                regions = _big_value_regions(g, hdr0["samplerate"])
+                if regions is None:
+                    return False
+                for sel, count in regions:
+                    if count and sel and pair_table_for_select(sel) is None:
                         return False
+                if g["count1table_select"] not in COUNT1_TABLES:
+                    return False
         frames += 1
         pos += fb
     return frames > 0

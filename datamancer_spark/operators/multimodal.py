@@ -6,36 +6,40 @@ extraction as pure Catalyst expressions over the bytes (magic sniffing,
 sizes), and decode/feature stages as Arrow-batched ``mapInPandas``
 pipelines.
 
-Two tiers:
+One format table, ``_FORMATS``, has a row per container: its magic
+test, ``sniff_kind`` label, media kind, header capability walk, decode,
+audio metadata and frame sampler. ``sniff_kind``, the coverage tier
+(``media_decode_coverage``), ``decode_image_blob``,
+``audio_decode_array``, ``sample_frames`` and
+``audio_container_metadata`` all dispatch through it, so each magic
+test exists once and the ``screenable`` / ``decodable`` answer is the
+same function everywhere: False means the decode returns None.
 
-- **Header metadata — REAL.** Container headers are plain bytes, so
-  ``image_dimensions`` (PNG/GIF/BMP in pure Catalyst, JPEG via a
-  stdlib marker walk) and ``wav_metadata`` (canonical RIFF layout in
-  pure Catalyst) parse actual on-disk formats with no codec library.
-- **Pixel/sample decode — REAL for every image format plus PCM audio,
-  refused only where a codec is genuinely unavoidable.** PNG pixels
-  (stdlib zlib + filter inversion), baseline JPEG pixels (own
-  entropy/IDCT pipeline, ``operators.jpegcodec``), PCM + G.711
-  A-law/mu-law WAV samples, animated-GIF frames (stdlib LZW), and
-  MJPEG-in-AVI video frames (RIFF walk + the JPEG decoder) decode for
-  real, as do FLAC (``operators.flaccodec``) and MPEG-1 audio Layers
-  I/III — real MP3 samples (``operators.mpegaudio``, late r7; see its
-  docstring for the refusal set), and Ogg Vorbis
-  (``operators.vorbiscodec``, r9), and lossless WebP
-  (``operators.webpcodec``, r9). Compressed video codecs (mp4/webm,
-  non-MJPEG AVI) and Ogg Opus audio DECODE needs ffmpeg — those rows
-  yield NULLs (``sample_frames`` drops them), and
-  ``media_decode_coverage`` reports the fraction left undecoded.
+- **Header metadata — REAL.** Container headers are plain bytes:
+  ``image_dimensions`` (PNG/GIF/BMP/WebP in pure Catalyst, JPEG/TIFF via
+  stdlib walks), ``wav_metadata`` (canonical RIFF layout in Catalyst),
+  ``audio_container_metadata`` and ``video_metadata`` parse actual
+  on-disk formats with no codec library.
+- **Pixel/sample decode — REAL for every image format plus PCM and the
+  table-driven audio codecs, refused only where a codec is genuinely
+  unavoidable.** PNG, baseline/progressive JPEG (``jpegcodec``), GIF
+  (stdlib LZW), BMP, TIFF (``tiffcodec``), lossless WebP
+  (``webpcodec``), MJPEG-in-AVI frames, WAV (PCM/float/G.711/ADPCM),
+  AIFF/AIFC, FLAC (``flaccodec``), MPEG-1 Layer I/III (``mpegaudio``)
+  and Ogg Vorbis (``vorbiscodec``) decode for real. Compressed video
+  (mp4/webm, non-MJPEG AVI), Ogg Opus and ADTS-AAC need a codec — those
+  rows yield NULLs and ``media_decode_coverage`` reports the fraction
+  left undecoded.
 
-  r9 determination on Opus specifically (why it stays refused while
-  Vorbis was closed): Opus is NOT self-describing — CELT's PVQ band
-  probability model and SILK's LTP/LSF codebooks are large
-  spec-constant PDF tables driving a range coder, with no Kraft-style
-  structural self-check (a range coder accepts ANY probability table
-  and silently decodes plausible noise from a wrong one). Same gate
-  failure as the MP3 ESC tables (``mpeghuff.py``) and the video
-  probability tables (``sample_frames``); metadata (rate/channels/
-  duration via the Ogg page walk) stays real.
+  Why Opus stays refused while Vorbis decodes: Opus is NOT
+  self-describing — CELT's PVQ band probability model and SILK's
+  LTP/LSF codebooks are large spec-constant PDF tables driving a range
+  coder, with no Kraft-style structural self-check (a range coder
+  accepts ANY probability table and silently decodes plausible noise
+  from a wrong one). Same gate failure as the MP3 ESC tables
+  (``mpeghuff.py``) and the video probability tables
+  (``sample_frames``); metadata (rate/channels/duration via the Ogg
+  page walk) stays real.
 
 Scale notes: binary payloads never shuffle — every stage here is
 narrow (mapInPandas over the scan); only extracted features (small
@@ -45,6 +49,7 @@ structs) flow into joins/aggregations downstream.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import Callable, NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -60,6 +65,18 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .flaccodec import flac_decode_array
+from .jpegcodec import jpeg_decode_array
+from .mpegaudio import (
+    _skip_id3,
+    mpeg_audio_decode_array,
+    mpeg_stream_supported,
+    parse_frame_header,
+)
+from .tiffcodec import tiff_decode_array, tiff_supported
+from .vorbiscodec import vorbis_decode_array, vorbis_stream_supported
+from .webpcodec import vp8l_decode_array, webp_supported
 
 # -- ingestion ---------------------------------------------------------------
 
@@ -79,22 +96,11 @@ def read_binary_dir(
 
 # -- metadata (pure Catalyst expressions, no Python) -------------------------
 
-MAGIC_KINDS: list[tuple[bytes, str]] = [
-    (b"\x89PNG", "image/png"),
-    (b"\xff\xd8\xff", "image/jpeg"),
-    (b"GIF8", "image/gif"),
-    (b"II*\x00", "image/tiff"),
-    (b"MM\x00*", "image/tiff"),
-    (b"RIFF", "riff"),  # wav/avi/webp → refined below
-    (b"\x00\x00\x00", "video/mp4-ish"),
-    (b"ID3", "audio/mp3"),
-    (b"OggS", "audio/ogg"),
-]
-
-
 def sniff_kind(bin_col: F.Column) -> F.Column:
     """Media-kind detection from magic bytes — Catalyst-only (substring on
-    binary + hex compare), evaluated next to the scan."""
+    binary + hex compare), evaluated next to the scan. The labels are
+    ``MAGIC_KINDS``, built from the rows of the format table
+    (``_FORMATS``)."""
     head = F.hex(F.substring(bin_col, 1, 4))
     expr = F.lit("application/octet-stream")
     for magic, kind in reversed(MAGIC_KINDS):
@@ -134,33 +140,33 @@ def media_decode_coverage(df: DataFrame, bin_col: str = "content") -> DataFrame:
     ``dhash_pairs`` must report "N% of blobs
     screenable" instead of silently screening the decodable minority.
 
-    Screenability is CAPABILITY BY CONTAINER/CODEC from the cheap
-    header walks (no full decode attempt): PNG/JPEG/GIF/BMP images →
-    pixels (all baseline + progressive-JPEG profiles decode;
-    uncompressed BMP since r9, RLE refuses); WAV
-    PCM/G.711/IMA-ADPCM and FLAC → samples (per the fmt chunk /
-    flaccodec); MP3 → samples when every frame's side info stays
-    within the MPEG-1 Layer I/III feature set this engine decodes
-    (``mpegaudio.mpeg_stream_supported``, late r7); Ogg Vorbis →
-    samples when the setup header parses inside the r9 feature set
-    (``vorbiscodec.vorbis_stream_supported``); Ogg Opus / MP4 / WebM /
-    WebP → metadata only; MJPEG AVI → frames
-    (fourcc walked in the header region). Individually malformed
-    blobs still fail at decode time and surface as NULL features
-    there. Output: (container, n, n_screenable, screenable_frac),
-    one small row per container — aggregate-only, nothing
-    corpus-sized moves."""
+    Screenability is the matching ``_FORMATS`` row's ``capable``
+    header walk (no full decode attempt): PNG/JPEG/GIF images →
+    pixels; BMP when uncompressed (RLE refuses); TIFF and lossless WebP
+    when their profile walks pass; WAV when the last ``fmt `` chunk
+    names a code the decoder handles (PCM/float/G.711/MS+IMA ADPCM);
+    FLAC; AIFF/AIFC by compression fourcc; MP3 when every frame's side
+    info stays inside the MPEG-1 Layer I/III feature set
+    (``mpegaudio.mpeg_stream_supported``); Ogg Vorbis when the setup
+    header parses (``vorbiscodec.vorbis_stream_supported``); MJPEG AVI
+    by its stream fourcc. Ogg Opus, ADTS-AAC, MP4, WebM and lossy WebP
+    are metadata only.
+
+    The contract: ``screenable`` False means the row's decode
+    (``decode_image_blob`` / ``audio_decode_array``) returns None — the
+    report never under-counts what the dHash screen hashes. True may
+    still decode to None: the walk reads headers, so a payload
+    truncated or corrupted mid-stream over-reports. Output:
+    (container, n, n_screenable, screenable_frac), one small row per
+    container — aggregate-only, nothing corpus-sized moves."""
     from ..functions.rounding import prnd
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = {"container": [], "screenable": []}
-            for blob in pdf[bin_col]:
-                blob = bytes(blob)
-                container, screen = _classify_decode_tier(blob)
-                out["container"].append(container)
-                out["screenable"].append(screen)
-            yield pd.DataFrame(out)
+            yield pd.DataFrame(
+                [_classify_decode_tier(bytes(b)) for b in pdf[bin_col]],
+                columns=["container", "screenable"],
+            )
 
     rows = df.select(bin_col).mapInPandas(
         batches,
@@ -188,100 +194,6 @@ def media_decode_coverage(df: DataFrame, bin_col: str = "content") -> DataFrame:
             ),
         )
     )
-
-
-def _classify_decode_tier(blob: bytes):
-    """(container, screenable) for one blob — header walks only."""
-    import struct as _struct
-
-    if blob[:8] == b"\x89PNG\r\n\x1a\n":
-        return ("png", True)
-    if blob[:3] == b"\xff\xd8\xff":
-        return ("jpeg", True)
-    if blob[:4] == b"GIF8":
-        return ("gif", True)
-    if blob[:4] in (b"II*\x00", b"MM\x00*"):
-        from .tiffcodec import tiff_supported
-
-        # r9: baseline TIFF (none/PackBits/LZW strips, 8-bit) decodes
-        # for real; fax/JPEG-in-TIFF/tiled/16-bit stay metadata-only
-        return ("tiff", tiff_supported(blob))
-    if blob[:2] == b"BM" and len(blob) >= 54:
-        hdr_size = _struct.unpack("<I", blob[14:18])[0]
-        if hdr_size in (40, 52, 56, 108, 124):
-            bpp = _struct.unpack("<H", blob[28:30])[0]
-            comp = _struct.unpack("<I", blob[30:34])[0]
-            # r9: uncompressed BI_RGB (and default-mask BITFIELDS)
-            # decode for real; RLE stays metadata-only
-            return (
-                "bmp",
-                bpp in (1, 4, 8, 24, 32) and comp in (0, 3),
-            )
-    if len(blob) >= 12 and blob[:4] == b"RIFF":
-        sub = blob[8:12]
-        if sub == b"WAVE":
-            pos = 12
-            while pos + 8 <= len(blob):
-                cid = blob[pos : pos + 4]
-                ln = _struct.unpack("<I", blob[pos + 4 : pos + 8])[0]
-                if cid == b"fmt " and ln >= 16:
-                    # guard the slice: a truncated blob may declare
-                    # ln >= 16 yet end before pos+24 (ADVICE r7)
-                    body = blob[pos + 8 : pos + 8 + ln]
-                    if len(body) < 16:
-                        return ("wav", False)
-                    afmt, _ch, _r, _br, _ba, bits = _struct.unpack(
-                        "<HHIIHH", body[:16]
-                    )
-                    return ("wav", _wav_fmt_decodable(afmt, bits))
-                pos += 8 + ln + (ln & 1)
-            return ("wav", False)
-        if sub == b"AVI ":
-            # MJPEG streams decode via avi_mjpeg_frames; other fourccs
-            # (compressed video) are metadata-only. Real strh/strf walk
-            # (r7) — a substring sniff can miss or false-positive
-            return ("avi", avi_video_fourcc(blob) == "MJPG")
-        if sub == b"WEBP":
-            from .webpcodec import webp_supported
-
-            # r9: lossless VP8L decodes for real when the stream avoids
-            # the refused neighbor-distance table — a true capability
-            # walk of the symbol stream, not container sniffing; lossy
-            # VP8 stays metadata-only (compressed-video determination)
-            return ("webp", webp_supported(blob))
-        return ("riff", False)
-    if blob[:4] == b"fLaC":
-        return ("flac", True)  # r7: flaccodec decodes samples for real
-    if len(blob) >= 12 and blob[:4] == b"FORM" and blob[8:12] in (
-        b"AIFF", b"AIFC"
-    ):
-        comm = _aiff_comm(blob)
-        return (
-            "aiff",
-            comm is not None and comm[4].lower() in _AIFC_DECODABLE,
-        )
-    if blob[:4] == b"OggS":
-        from .vorbiscodec import vorbis_stream_supported
-
-        # r9: Vorbis decodes for real; the capability walk parses the
-        # three header packets only (floor 1 / residue 0-2 / mapping 0)
-        return ("ogg", vorbis_stream_supported(blob))
-    if blob[:3] == b"ID3" or (
-        len(blob) > 1 and blob[0] == 0xFF and (blob[1] & 0xE0) == 0xE0
-    ):
-        # the ADTS layer bits (00) also satisfy the loose MPEG sync —
-        # a chained frame-length walk (r10) disambiguates before the
-        # per-frame MPEG side-info screen runs
-        if adts_metadata(blob) is not None:
-            return ("aac/adts", False)
-        from .mpegaudio import mpeg_stream_supported
-
-        return ("mp3", mpeg_stream_supported(blob))
-    if len(blob) >= 12 and blob[4:8] == b"ftyp":
-        return ("mp4", False)
-    if blob[:4] == b"\x1a\x45\xdf\xa3":
-        return ("webm", False)
-    return ("unknown", False)
 
 
 # -- decode / feature extraction (Arrow batch pipelines) ---------------------
@@ -487,37 +399,14 @@ def png_decode_pixels(blob: bytes):
 
 def decode_image_blob(blob: bytes):
     """ONE image blob → ``(width, height, channels, pixels uint8
-    (h, w, ch))`` or ``None`` — the pure-Python decode chain shared by
-    every image kernel. Format walk: PNG → baseline/
-    progressive JPEG → GIF (first frame) → BMP → TIFF → lossless
-    WebP. No codec library anywhere; ``None`` means undecodable (an
-    unsupported format or a loud decode refusal), never an error."""
-    import numpy as np
-
-    from .jpegcodec import jpeg_decode_array
-
-    decoded = png_decode_array(blob)
-    if decoded is None:
-        decoded = jpeg_decode_array(blob)
-    if decoded is None:
-        first = next(iter(gif_decode_frames(blob, max_frames=1)), None)
-        if first is not None:
-            _, w, h, rgb = first
-            decoded = (
-                w, h, 3,
-                np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3),
-            )
-    if decoded is None:
-        decoded = bmp_decode_array(blob)
-    if decoded is None and blob[:4] in (b"II*\x00", b"MM\x00*"):
-        from .tiffcodec import tiff_decode_array
-
-        decoded = tiff_decode_array(blob)
-    if decoded is None and blob[:4] == b"RIFF" and blob[8:12] == b"WEBP":
-        from .webpcodec import vp8l_decode_array
-
-        decoded = vp8l_decode_array(blob)
-    return decoded
+    (h, w, ch))`` or ``None`` — the pure-Python decode shared by every
+    image kernel, dispatched through the image rows of ``_FORMATS``:
+    PNG, baseline/progressive JPEG, GIF (first frame), BMP, TIFF,
+    lossless WebP. No codec library anywhere; ``None`` means
+    undecodable (an unsupported format or a loud decode refusal),
+    never an error."""
+    row = _format_of(blob)
+    return row.decode(blob) if row.kind == "image" else None
 
 
 def decode_images(
@@ -577,45 +466,41 @@ def avi_mjpeg_frames(blob: bytes, every_n: int = 1, max_frames: int = 64):
     JPEG (``jpegcodec.jpeg_decode_array``). Walks RIFF('AVI ') →
     LIST('movi') → '##dc'/'##db' chunks, decodes every ``every_n``-th
     frame, yields ``(frame_idx, width, height, rgb_bytes)`` like
-    ``gif_decode_frames``. Compressed codecs inside AVI (and mp4/webm
-    containers) still return nothing — those genuinely need ffmpeg."""
-    import struct
+    ``gif_decode_frames``. Only a stream whose fourcc names MJPG
+    (``avi_video_fourcc``, the avi row's capability) decodes: other
+    codecs inside AVI (and mp4/webm containers) return nothing — those
+    genuinely need ffmpeg."""
+    import numpy as np
 
-    from .jpegcodec import jpeg_decode_array
-
-    if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
+    if avi_video_fourcc(blob) != "MJPG":
         return
-    pos = 12
-    movi = None
+    movi = next(
+        (
+            (s + 4, s + ln)
+            for cid, s, ln in _riff_chunks(blob)
+            if cid == b"LIST" and blob[s : s + 4] == b"movi"
+        ),
+        None,
+    )
+    if movi is None:
+        return
+    frame_idx = 0
+    emitted = 0
     try:
-        while pos + 8 <= len(blob):
-            cid = blob[pos : pos + 4]
-            ln = struct.unpack("<I", blob[pos + 4 : pos + 8])[0]
-            if cid == b"LIST" and blob[pos + 8 : pos + 12] == b"movi":
-                movi = (pos + 12, pos + 8 + ln)
-                break
-            pos += 8 + ln + (ln & 1)
-        if movi is None:
-            return
-        p, end = movi
-        frame_idx = 0
-        emitted = 0
-        while p + 8 <= end and emitted < max_frames:
-            cid = blob[p : p + 4]
-            ln = struct.unpack("<I", blob[p + 4 : p + 8])[0]
-            if cid[2:4] in (b"dc", b"db"):
-                if frame_idx % every_n == 0:
-                    decoded = jpeg_decode_array(blob[p + 8 : p + 8 + ln])
-                    if decoded is not None:
-                        w, h, ch, px = decoded
-                        if ch == 1:
-                            import numpy as np
-
-                            px = np.repeat(px, 3, axis=2)
-                        yield (frame_idx, w, h, px.tobytes())
-                        emitted += 1
-                frame_idx += 1
-            p += 8 + ln + (ln & 1)
+        for cid, s, ln in _riff_chunks(blob, *movi):
+            if emitted >= max_frames:
+                return
+            if cid[2:4] not in (b"dc", b"db"):
+                continue
+            if frame_idx % every_n == 0:
+                decoded = jpeg_decode_array(blob[s : s + ln])
+                if decoded is not None:
+                    w, h, ch, px = decoded
+                    if ch == 1:
+                        px = np.repeat(px, 3, axis=2)
+                    yield (frame_idx, w, h, px.tobytes())
+                    emitted += 1
+            frame_idx += 1
     except Exception:
         return
 
@@ -633,21 +518,16 @@ def sample_frames(
     canvas after compositing), and MJPEG-in-AVI video decodes FOR REAL
     too (``avi_mjpeg_frames`` — RIFF walk + the baseline JPEG decoder);
     compressed video codecs (mp4/webm, non-MJPEG AVI) are refused —
-    those rows are dropped.
+    those rows are dropped. Dispatch is the ``frames`` sampler of the
+    blob's ``_FORMATS`` row.
 
-    r9 DETERMINATION on compressed-video decode (the carried r7 #2
-    gap): VP8/VP9/AV1 and H.264 all entropy-code against LARGE
-    spec-constant tables (VP8's default coefficient-probability
-    tables, H.264's CAVLC code tables / CABAC context initializers)
-    that fail the same verifiable-transcription standard the MP3 ESC
-    tables failed (mpeghuff.py) — unlike Huffman length vectors they
-    carry no Kraft-style structural self-check at all, so a
-    mis-remembered probability silently decodes plausible-looking
-    garbage forever. Vorbis was closable because its tables travel in
-    the stream (vorbiscodec.py, r9); Theora shares that property but
-    is ~absent from modern crawls. Until real source material or a
-    conformance stream enters the environment, compressed video stays
-    a LOUD refusal: containers yield metadata + codec ids
+    Why compressed video stays refused: VP8/VP9/AV1 and H.264 entropy-
+    code against LARGE spec-constant tables (VP8's coefficient
+    probabilities, H.264's CAVLC tables / CABAC initializers) with no
+    Kraft-style structural self-check, so a mis-transcribed entry
+    silently decodes plausible garbage — the gate the MP3 ESC tables
+    failed (mpeghuff.py). Vorbis decodes because its tables travel in
+    the stream. Containers yield metadata + codec ids
     (``video_metadata``), ``media_decode_coverage`` reports the
     unscreenable fraction, and curation never silently drops what it
     cannot read."""
@@ -657,30 +537,13 @@ def sample_frames(
             rows = {"path": [], "frame_idx": [], "frame_bytes": []}
             for path, blob in zip(pdf["path"], pdf[bin_col]):
                 blob = bytes(blob)
-                if blob[:4] == b"GIF8":
-                    # decode sequentially (compositing needs every frame)
-                    # but EMIT only every-Nth, capped at max_frames
-                    emitted = 0
-                    for idx, w, h, rgb in gif_decode_frames(
-                        blob, max_frames=every_n * max_frames
-                    ):
-                        if idx % every_n:
-                            continue
-                        rows["path"].append(path)
-                        rows["frame_idx"].append(idx)
-                        rows["frame_bytes"].append(rgb)
-                        emitted += 1
-                        if emitted >= max_frames:
-                            break
-                    continue
-                if blob[:4] == b"RIFF" and blob[8:12] == b"AVI ":
-                    for idx, w, h, rgb in avi_mjpeg_frames(
-                        blob, every_n=every_n, max_frames=max_frames
-                    ):
-                        rows["path"].append(path)
-                        rows["frame_idx"].append(idx)
-                        rows["frame_bytes"].append(rgb)
-                # anything else is undecodable without ffmpeg: no rows
+                row = _format_of(blob)
+                if row.frames is None:
+                    continue  # undecodable without ffmpeg: no rows
+                for idx, _w, _h, rgb in row.frames(blob, every_n, max_frames):
+                    rows["path"].append(path)
+                    rows["frame_idx"].append(idx)
+                    rows["frame_bytes"].append(rgb)
             yield pd.DataFrame(rows)
 
     return df.select("path", bin_col).mapInPandas(batches, FRAME_SCHEMA)
@@ -768,19 +631,13 @@ def _ms_adpcm_decode(data: bytes, block_align: int, channels: int = 1):
     return np.concatenate(out)
 
 
-def _ima_adpcm_decode(data: bytes, block_align: int, channels: int = 1):
-    """IMA ADPCM (WAV fmt 0x11) decode — a pure table codec, no library
-    needed: per block, a 4-byte header PER CHANNEL (16-bit predictor
-    seed + step index), then the channels' nibble streams interleaved
-    in 4-byte words (8 samples of channel 0, 8 of channel 1, ...), low
-    nibble first within each byte. Returns channel-mixed float64
-    samples in [-1, 1] or None for malformed blocks."""
-    if channels < 1 or block_align < 4 * channels + 1:
-        return None
-    import numpy as np
-
-    def run(nibbles, pred, idx, out):
-        for nib in nibbles:
+def _ima_nibbles(packed: bytes, pred: int, idx: int, out: list):
+    """The IMA ADPCM core both IMA codecs share: expand ``packed``'s
+    4-bit codes (low nibble first) from predictor ``pred`` and step
+    index ``idx``, appending int16 samples to ``out``; returns the
+    final ``(pred, idx)``."""
+    for byte in packed:
+        for nib in (byte & 0x0F, byte >> 4):
             step = _IMA_STEPS[idx]
             diff = step >> 3
             if nib & 1:
@@ -793,7 +650,19 @@ def _ima_adpcm_decode(data: bytes, block_align: int, channels: int = 1):
             pred = max(-32768, min(32767, pred))
             idx = max(0, min(88, idx + _IMA_INDEX[nib & 7]))
             out.append(pred)
-        return pred, idx
+    return pred, idx
+
+
+def _ima_adpcm_decode(data: bytes, block_align: int, channels: int = 1):
+    """IMA ADPCM (WAV fmt 0x11) decode — a pure table codec, no library
+    needed: per block, a 4-byte header PER CHANNEL (16-bit predictor
+    seed + step index), then the channels' nibble streams interleaved
+    in 4-byte words (8 samples of channel 0, 8 of channel 1, ...), low
+    nibble first within each byte. Returns channel-mixed float64
+    samples in [-1, 1] or None for malformed blocks."""
+    if channels < 1 or block_align < 4 * channels + 1:
+        return None
+    import numpy as np
 
     chans = [[] for _ in range(channels)]
     for b0 in range(0, len(data) - block_align + 1, block_align):
@@ -815,11 +684,9 @@ def _ima_adpcm_decode(data: bytes, block_align: int, channels: int = 1):
                 word = body[w0 + 4 * c : w0 + 4 * c + 4]
                 if len(word) < 4:
                     break
-                nibs = []
-                for byte in word:
-                    nibs.append(byte & 0x0F)
-                    nibs.append(byte >> 4)
-                preds[c], idxs[c] = run(nibs, preds[c], idxs[c], chans[c])
+                preds[c], idxs[c] = _ima_nibbles(
+                    word, preds[c], idxs[c], chans[c]
+                )
     if not chans[0]:
         return None
     n = min(len(c) for c in chans)
@@ -827,6 +694,53 @@ def _ima_adpcm_decode(data: bytes, block_align: int, channels: int = 1):
         np.stack([np.asarray(c[:n], dtype=np.float64) for c in chans]), axis=0
     )
     return mix / 32768.0
+
+
+def _riff_chunks(blob: bytes, pos: int = 12, end: int | None = None,
+                 order: str = "<"):
+    """The one RIFF chunk-list walk: ``(fourcc, body_start,
+    declared_len)`` per chunk in ``blob[pos:end]``, stepping over the
+    pad byte that word-aligns odd-length chunks. ``order=">"`` walks
+    AIFF's big-endian IFF form of the same layout. The declared length
+    may run past the blob on a truncated file — slice, don't trust."""
+    import struct
+
+    end = len(blob) if end is None else min(end, len(blob))
+    while pos + 8 <= end:
+        (ln,) = struct.unpack(order + "I", blob[pos + 4 : pos + 8])
+        yield blob[pos : pos + 4], pos + 8, ln
+        pos += 8 + ln + (ln & 1)
+
+
+def _wav_fmt_data(blob: bytes):
+    """``(fmt, data)`` of a WAVE blob from one chunk walk: the LAST
+    ``fmt `` chunk with a full 16-byte body, unpacked as (format code,
+    channels, rate, byte rate, block align, bits), and the last
+    ``data`` chunk as (body start, declared length); either may be
+    None. The decoder, its capability and the metadata all read this."""
+    import struct
+
+    fmt = data = None
+    for cid, s, ln in _riff_chunks(blob):
+        if cid == b"fmt " and ln >= 16 and s + 16 <= len(blob):
+            fmt = struct.unpack("<HHIIHH", blob[s : s + 16])
+        elif cid == b"data":
+            data = (s, ln)
+    return fmt, data
+
+
+# WAV fmt codes wav_decode_array turns into samples, per bit depth:
+# integer PCM (fmt 1: 8/16/24/32-bit), MS ADPCM (2), IEEE float (3:
+# 32/64-bit), G.711 A-law/mu-law (6/7: 8-bit), IMA ADPCM (0x11).
+# Everything else is metadata-only.
+def _wav_fmt_decodable(audio_fmt, bits) -> bool:
+    if audio_fmt == 1:
+        return bits in (8, 16, 24, 32)
+    if audio_fmt == 3:
+        return bits in (32, 64)
+    if audio_fmt in (6, 7):
+        return bits == 8
+    return audio_fmt in (2, 0x11)
 
 
 def wav_decode_array(blob: bytes):
@@ -841,99 +755,88 @@ def wav_decode_array(blob: bytes):
     non-WAV / compressed (mp3/ADPCM/...) / malformed input.
     ``wav_decode_samples`` wraps this for the RMS envelope;
     ``dhash(kind="audio")`` consumes the array."""
-    import struct
-
     import numpy as np
 
     if len(blob) < 44 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
         return None
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(blob):
-        cid, ln = blob[pos : pos + 4], struct.unpack("<I", blob[pos + 4 : pos + 8])[0]
-        body = blob[pos + 8 : pos + 8 + ln]
-        if cid == b"fmt " and len(body) >= 16:
-            fmt = struct.unpack("<HHIIHH", body[:16])
-        elif cid == b"data":
-            data = body
-        pos += 8 + ln + (ln & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
+    fmt, span = _wav_fmt_data(blob)
+    if fmt is None or span is None:
         return None
+    data = blob[span[0] : span[0] + span[1]]
     audio_fmt, channels, rate, _brate, _balign, bits = fmt
     if channels == 0 or rate == 0:
         return None
     if audio_fmt in (6, 7):  # G.711 A-law / mu-law: formula codecs
-        usable = len(data) - (len(data) % channels)
-        if usable <= 0 or bits != 8:
-            return None
-        enc = np.frombuffer(data[:usable], dtype=np.uint8).astype(np.int64)
-        if audio_fmt == 7:  # mu-law (ITU-T G.711): invert the companding
-            u = ~enc & 0xFF
-            sign = np.where(u & 0x80, -1.0, 1.0)
-            exp = (u >> 4) & 7
-            man = u & 0x0F
-            mag = ((man.astype(np.float64) * 2 + 33) * (2.0 ** exp)) - 33
-            x = sign * mag / 8031.0
-        else:  # A-law (sign bit 1 = POSITIVE — opposite of mu-law)
-            a = enc ^ 0x55
-            sign = np.where(a & 0x80, 1.0, -1.0)
-            exp = (a >> 4) & 7
-            man = (a & 0x0F).astype(np.float64)
-            mag = np.where(
-                exp == 0, man * 2 + 1, (man * 2 + 33) * (2.0 ** (exp - 1))
-            )
-            x = sign * mag / 4096.0
-        mono = x.reshape(-1, channels).mean(axis=1)
-        return (int(rate), mono)
-    if audio_fmt == 17:  # IMA ADPCM (table codec), mono or stereo
+        mono = _g711_mono(data, audio_fmt, channels) if bits == 8 else None
+    elif audio_fmt == 17:  # IMA ADPCM (table codec), mono or stereo
         mono = _ima_adpcm_decode(data, _balign, channels)
-        if mono is None:
-            return None
-        return (int(rate), mono)
-    if audio_fmt == 2:  # MS ADPCM (r7: predictor-coefficient codec)
+    elif audio_fmt == 2:  # MS ADPCM (r7: predictor-coefficient codec)
         mono = _ms_adpcm_decode(data, _balign, channels)
-        if mono is None:
-            return None
-        return (int(rate), mono)
-    if audio_fmt == 3:  # IEEE float PCM (r7)
-        dt = {32: np.float32, 64: np.float64}.get(bits)
-        if dt is None:
-            return None
-        width = bits // 8
-        usable = len(data) - (len(data) % (width * channels))
-        if usable <= 0:
-            return None
-        x = np.frombuffer(data[:usable], dtype=dt).astype(np.float64)
-        mono = x.reshape(-1, channels).mean(axis=1)
-        return (int(rate), np.clip(mono, -1.0, 1.0))
-    if audio_fmt != 1:  # perceptual codecs (mp3 etc.) need a codec lib
-        return None
-    if bits == 24:  # 3-byte little-endian signed samples (r7)
-        usable = len(data) - (len(data) % (3 * channels))
-        if usable <= 0:
-            return None
-        raw = np.frombuffer(data[:usable], dtype=np.uint8).reshape(-1, 3)
-        v = (
-            raw[:, 0].astype(np.int64)
-            | (raw[:, 1].astype(np.int64) << 8)
-            | (raw[:, 2].astype(np.int64) << 16)
+    elif audio_fmt == 3:  # IEEE float PCM (r7)
+        dt = {32: "<f4", 64: "<f8"}.get(bits)
+        mono = None if dt is None else _pcm_mono(data, dt, channels)
+        mono = None if mono is None else np.clip(mono, -1.0, 1.0)
+    elif audio_fmt == 1:  # integer PCM; 8-bit is unsigned, centered at 128
+        dt = {8: "u1", 16: "<i2", 24: "<i3", 32: "<i4"}.get(bits)
+        mono = None if dt is None else _pcm_mono(
+            data, dt, channels, offset=128.0 if bits == 8 else 0.0,
+            denom=float(1 << (bits - 1)),
         )
-        v = np.where(v >= 1 << 23, v - (1 << 24), v)
-        x = v.astype(np.float64) / float(1 << 23)
-        mono = x.reshape(-1, channels).mean(axis=1)
-        return (int(rate), mono)
-    dt = {8: np.uint8, 16: np.int16, 32: np.int32}.get(bits)
-    if dt is None:
+    else:  # perceptual codecs (mp3 etc.) need a codec lib
         return None
-    width = bits // 8
+    return None if mono is None else (int(rate), mono)
+
+
+def _g711_mono(data: bytes, law: int, channels: int):
+    """G.711 bytes (``law`` = WAV fmt code: 6 A-law, 7 mu-law) → the
+    channel mean of the expanded samples in [-1, 1], over whole frames
+    only; None when there is none. Pure companding formulas."""
+    import numpy as np
+
+    usable = len(data) - (len(data) % channels)
+    if usable <= 0:
+        return None
+    enc = np.frombuffer(data[:usable], dtype=np.uint8).astype(np.int64)
+    if law == 7:  # mu-law (ITU-T G.711): invert the companding
+        u = ~enc & 0xFF
+        sign = np.where(u & 0x80, -1.0, 1.0)
+        exp = (u >> 4) & 7
+        man = u & 0x0F
+        mag = ((man.astype(np.float64) * 2 + 33) * (2.0 ** exp)) - 33
+        x = sign * mag / 8031.0
+    else:  # A-law (sign bit 1 = POSITIVE — opposite of mu-law)
+        a = enc ^ 0x55
+        sign = np.where(a & 0x80, 1.0, -1.0)
+        exp = (a >> 4) & 7
+        man = (a & 0x0F).astype(np.float64)
+        mag = np.where(
+            exp == 0, man * 2 + 1, (man * 2 + 33) * (2.0 ** (exp - 1))
+        )
+        x = sign * mag / 4096.0
+    return x.reshape(-1, channels).mean(axis=1)
+
+
+def _pcm_mono(data: bytes, dtype: str, channels: int, offset: float = 0.0,
+              denom: float = 1.0):
+    """Interleaved PCM of numpy ``dtype`` (``"<i3"``/``">i3"``: packed
+    signed 24-bit) → the channel mean of ``(x - offset) / denom`` as
+    float64, over whole frames only; None when there is none."""
+    import numpy as np
+
+    width = 3 if dtype[1:] == "i3" else np.dtype(dtype).itemsize
     usable = len(data) - (len(data) % (width * channels))
     if usable <= 0:
         return None
-    x = np.frombuffer(data[:usable], dtype=dt).astype(np.float64)
-    if bits == 8:  # 8-bit WAV is unsigned, centered at 128
-        x = x - 128.0
-    x /= float(2 ** (bits - 1) if bits > 8 else 128)
-    mono = x.reshape(-1, channels).mean(axis=1)
-    return (int(rate), mono)
+    if width == 3:
+        raw = np.frombuffer(data[:usable], dtype=np.uint8).reshape(-1, 3)
+        raw = (raw[:, ::-1] if dtype[0] == ">" else raw).astype(np.int64)
+        v = raw[:, 0] | (raw[:, 1] << 8) | (raw[:, 2] << 16)
+        x = np.where(v >= 1 << 23, v - (1 << 24), v).astype(np.float64)
+    else:
+        x = np.frombuffer(data[:usable], dtype=dtype).astype(np.float64)
+    if offset:
+        x = x - offset
+    return (x / denom).reshape(-1, channels).mean(axis=1)
 
 
 def _aifc_ima4_decode(data: bytes, channels: int):
@@ -958,21 +861,7 @@ def _aifc_ima4_decode(data: bytes, channels: int):
             idx = pre & 0x7F
             if idx > 88:
                 return None
-            out = chans[c]
-            for byte in pkt[2:]:
-                for nib in (byte & 0xF, byte >> 4):  # low nibble first
-                    step = _IMA_STEPS[idx]
-                    diff = step >> 3
-                    if nib & 1:
-                        diff += step >> 2
-                    if nib & 2:
-                        diff += step >> 1
-                    if nib & 4:
-                        diff += step
-                    pred = pred - diff if nib & 8 else pred + diff
-                    pred = max(-32768, min(32767, pred))
-                    idx = max(0, min(88, idx + _IMA_INDEX[nib & 7]))
-                    out.append(pred)
+            _ima_nibbles(pkt[2:], pred, idx, chans[c])
         pos += 34 * channels
     if not chans[0]:
         return None
@@ -1013,21 +902,19 @@ _AIFC_DECODABLE = frozenset(
 
 def _aiff_comm(blob: bytes):
     """The COMM facts every AIFF consumer needs — one chunk walk shared
-    by ``aiff_decode_array``, ``audio_container_metadata`` and
-    ``_classify_decode_tier`` (previously triplicated, a drift hazard):
-    ``(channels, frames, bits, rate, comp)`` with rate validated to a
-    plausible audio range (0 excluded), or ``None``."""
+    by ``aiff_decode_array`` and the aiff row of ``_FORMATS`` (its
+    capability and metadata): ``(channels, frames, bits, rate, comp)``
+    with rate validated to a plausible audio range (0 excluded), or
+    ``None``."""
     import struct
 
     if len(blob) < 12 or blob[:4] != b"FORM" or blob[8:12] not in (
         b"AIFF", b"AIFC"
     ):
         return None
-    pos = 12
-    while pos + 8 <= len(blob):
-        ln = struct.unpack(">I", blob[pos + 4 : pos + 8])[0]
-        if blob[pos : pos + 4] == b"COMM":
-            body = blob[pos + 8 : pos + 8 + ln]
+    for cid, s, ln in _riff_chunks(blob, order=">"):
+        if cid == b"COMM":
+            body = blob[s : s + ln]
             if len(body) < 18:
                 return None
             ch, frames, bits = struct.unpack(">HIH", body[:8])
@@ -1036,7 +923,6 @@ def _aiff_comm(blob: bytes):
             if not (0 < rate <= 10_000_000):
                 return None  # corrupt/absurd rate: unusable metadata
             return (ch, frames, bits, int(round(rate)), comp)
-        pos += 8 + ln + (ln & 1)
     return None
 
 
@@ -1045,7 +931,7 @@ def aiff_decode_array(blob: bytes):
     FORM chunk walk, COMM (channels, frames, bits, 80-bit extended
     sample rate, AIFC compression fourcc), SSND PCM. Covers big-endian
     integer PCM 8/16/24/32 ('NONE'), little-endian 16-bit ('sowt'),
-    32-bit float ('fl32'), and G.711 ('alaw'/'ulaw' via the WAV-path
+    32-bit float ('fl32'), and G.711 ('alaw'/'ulaw', the WAV path's
     companding formulas). Returns ``(sample_rate, mono float64)`` or
     ``None``."""
     import struct
@@ -1059,107 +945,48 @@ def aiff_decode_array(blob: bytes):
     if ch == 0:
         return None
     data = None
-    pos = 12
-    while pos + 8 <= len(blob):
-        cid = blob[pos : pos + 4]
-        ln = struct.unpack(">I", blob[pos + 4 : pos + 8])[0]
-        body = blob[pos + 8 : pos + 8 + ln]
+    for cid, s, ln in _riff_chunks(blob, order=">"):
+        body = blob[s : s + ln]
         if cid == b"SSND" and len(body) >= 8:
             off = struct.unpack(">I", body[:4])[0]
             data = body[8 + off :]
             break
-        pos += 8 + ln + (ln & 1)  # chunks are word-aligned
     if data is None:
         return None
+    if comp in (b"fl32", b"FL32"):
+        mono = _pcm_mono(data, ">f4", ch)
+        return None if mono is None else (rate, np.clip(mono, -1.0, 1.0))
     if comp in (b"alaw", b"ALAW", b"ulaw", b"ULAW"):
-        # reuse the WAV G.711 path by wrapping as fmt 6/7
-        fmt = 6 if comp.lower() == b"alaw" else 7
-        wav = (b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-               + b"fmt " + struct.pack("<IHHIIHH", 16, fmt, ch, rate,
-                                       rate * ch, ch, 8)
-               + b"data" + struct.pack("<I", len(data)) + data)
-        return wav_decode_array(wav)
-    if comp == b"fl32" or comp == b"FL32":
-        usable = len(data) - (len(data) % (4 * ch))
-        if usable <= 0:
-            return None
-        x = np.frombuffer(data[:usable], dtype=">f4").astype(np.float64)
-        return (rate, np.clip(x.reshape(-1, ch).mean(axis=1), -1.0, 1.0))
-    if comp == b"sowt":  # little-endian 16-bit PCM (Mac convention)
-        dt = "<i2"
-        width = 2
-        denom = float(1 << 15)
-    elif comp in (b"NONE", b"\x00\x00\x00\x00"):
-        if bits == 24:
-            usable = len(data) - (len(data) % (3 * ch))
-            if usable <= 0:
-                return None
-            raw = np.frombuffer(data[:usable], dtype=np.uint8).reshape(-1, 3)
-            v = (
-                (raw[:, 0].astype(np.int64) << 16)
-                | (raw[:, 1].astype(np.int64) << 8)
-                | raw[:, 2].astype(np.int64)
-            )
-            v = np.where(v >= 1 << 23, v - (1 << 24), v)
-            x = v.astype(np.float64) / float(1 << 23)
-            return (rate, x.reshape(-1, ch).mean(axis=1))
-        dt = {8: ">i1", 16: ">i2", 32: ">i4"}.get(bits)
-        if dt is None:
-            return None
-        width = bits // 8
-        denom = float(1 << (bits - 1))
+        mono = _g711_mono(data, 6 if comp.lower() == b"alaw" else 7, ch)
     elif comp == b"ima4":
         mono = _aifc_ima4_decode(data, ch)
-        if mono is None:
+    elif comp == b"sowt":  # little-endian 16-bit PCM (Mac convention)
+        mono = _pcm_mono(data, "<i2", ch, denom=float(1 << 15))
+    elif comp in (b"NONE", b"\x00\x00\x00\x00"):
+        dt = {8: ">i1", 16: ">i2", 24: ">i3", 32: ">i4"}.get(bits)
+        if dt is None:
             return None
-        return (rate, mono)
+        mono = _pcm_mono(data, dt, ch, denom=float(1 << (bits - 1)))
     else:
         return None  # other compressed AIFC codecs
-    usable = len(data) - (len(data) % (width * ch))
-    if usable <= 0:
-        return None
-    x = np.frombuffer(data[:usable], dtype=dt).astype(np.float64) / denom
-    return (rate, x.reshape(-1, ch).mean(axis=1))
+    return None if mono is None else (rate, mono)
 
 
 def audio_decode_array(blob: bytes):
-    """Samples from ANY container this engine decodes: WAV
-    (integer PCM / G.711 A-law+mu-law / MS+IMA ADPCM) via
-    ``wav_decode_array``, AIFF/AIFC via ``aiff_decode_array`` (r7),
-    FLAC via the pure-stdlib ``flaccodec.flac_decode_array`` (r7),
-    MPEG-1 audio Layers I/III — real MP3 sample decode — via
-    ``mpegaudio.mpeg_audio_decode_array`` (late r7; see that module's
-    docstring for the exact refusal set: Layer II, LSF,
-    and frames selecting unshipped Huffman tables — intensity stereo
-    decodes exactly under the mono contract since r9), and Ogg
-    Vorbis via ``vorbiscodec.vorbis_decode_array`` (r9: floor 1 +
-    residues 0/1/2 + mapping 0 — the feature set real encoders emit;
-    Opus and exotic setups refuse). Returns ``(sample_rate, mono
-    float64 in [-1, 1])`` or ``None`` for undecodable input."""
-    got = wav_decode_array(blob)
-    if got is not None:
-        return got
-    if blob[:4] == b"FORM":
-        return aiff_decode_array(blob)
-    if blob[:4] == b"fLaC":
-        from .flaccodec import flac_decode_array
-
-        return flac_decode_array(blob)
-    if blob[:4] == b"OggS":
-        from .vorbiscodec import vorbis_decode_array
-
-        return vorbis_decode_array(blob)
-    if blob[:4] == b"RIFF":
-        return None  # non-WAVE RIFF is video
-    if blob[:3] == b"ID3" or (
-        len(blob) > 1 and blob[0] == 0xFF and (blob[1] & 0xE0) == 0xE0
-    ):
-        # same mp3 gate as _classify_decode_tier; the decoder itself
-        # re-validates (two consecutive frames) before trusting a sync
-        from .mpegaudio import mpeg_audio_decode_array
-
-        return mpeg_audio_decode_array(blob)
-    return None
+    """Samples from ANY container this engine decodes, dispatched
+    through the audio rows of ``_FORMATS``: WAV (integer PCM / IEEE
+    float / G.711 A-law+mu-law / MS+IMA ADPCM) via ``wav_decode_array``,
+    AIFF/AIFC via ``aiff_decode_array``, FLAC via the pure-stdlib
+    ``flaccodec.flac_decode_array``, MPEG-1 audio Layers I/III — real
+    MP3 sample decode — via ``mpegaudio.mpeg_audio_decode_array`` (see
+    that module's docstring for the exact refusal set: Layer II, LSF,
+    and frames selecting unshipped Huffman tables), and Ogg Vorbis via
+    ``vorbiscodec.vorbis_decode_array`` (floor 1 + residues 0/1/2 +
+    mapping 0 — the feature set real encoders emit; Opus and exotic
+    setups refuse). ADTS-AAC is metadata only. Returns ``(sample_rate,
+    mono float64 in [-1, 1])`` or ``None`` for undecodable input."""
+    row = _format_of(blob)
+    return row.decode(blob) if row.kind == "audio" else None
 
 
 def wav_decode_samples(blob: bytes, envelope_bins: int = 8):
@@ -1282,6 +1109,11 @@ def bmp_dimensions(b: F.Column) -> F.Column:
     )
 
 
+# BITMAPINFOHEADER and its V2-V5 extensions: the header sizes whose
+# bpp/compression fields sit where the decoder and its capability read
+_BMP_INFO_SIZES = (40, 52, 56, 108, 124)
+
+
 def bmp_decode_array(blob: bytes):
     """REAL BMP pixel decode (r9) — uncompressed BI_RGB (and the
     equivalent default-mask BITFIELDS) at 1/4/8-bit palette or
@@ -1298,7 +1130,7 @@ def bmp_decode_array(blob: bytes):
     try:
         data_off = _struct.unpack("<I", blob[10:14])[0]
         hdr_size = _struct.unpack("<I", blob[14:18])[0]
-        if hdr_size not in (40, 52, 56, 108, 124):
+        if hdr_size not in _BMP_INFO_SIZES:
             return None  # BITMAPCOREHEADER and friends: refuse
         w, h = _struct.unpack("<ii", blob[18:26])
         bpp = _struct.unpack("<H", blob[28:30])[0]
@@ -1632,6 +1464,8 @@ def gif_decode_frames(blob: bytes, max_frames: int = 64):
             if table is None:
                 return
             min_code = blob[pos]
+            if min_code > 8:  # LZW roots are 8-bit palette indices
+                return
             pos += 1
             data = bytearray()
             while blob[pos]:
@@ -1926,14 +1760,13 @@ def _decode_rgb(blob: bytes):
     px = decoded[3]
     if px.ndim == 2:
         px = px[:, :, None]
-    if blob[:2] == b"\xff\xd8":  # JPEG: hash camera photos upright
-        orient = jpeg_exif_orientation(blob)
-        if orient and orient != 1:
-            px = np.stack(
-                [_apply_exif_orientation(px[:, :, i], orient)
-                 for i in range(px.shape[2])],
-                axis=2,
-            )
+    orient = jpeg_exif_orientation(blob)  # JPEG: hash camera photos upright
+    if orient and orient != 1:
+        px = np.stack(
+            [_apply_exif_orientation(px[:, :, i], orient)
+             for i in range(px.shape[2])],
+            axis=2,
+        )
     return px
 
 
@@ -2234,13 +2067,10 @@ def mp4_metadata_blob(blob: bytes):
                     elif t2 == b"trak" and width is None:
                         tw = th = tcodec = None
                         for t3, b3, e3 in boxes(blob, b2, e2):
-                            if t3 == b"tkhd":
-                                ver = blob[b3]
-                                off = b3 + (32 if ver == 0 else 44)
+                            if t3 == b"tkhd":  # v0/v1: dims sit last
                                 w16, h16 = struct.unpack(
                                     ">II", blob[e3 - 8 : e3]
                                 )
-                                _ = off  # layout documented; dims sit last
                                 if w16 and h16:
                                     tw, th = w16 >> 16, h16 >> 16
                             elif t3 == b"mdia":
@@ -2306,9 +2136,8 @@ def webm_metadata(blob: bytes):
     if len(blob) < 8 or blob[:4] != b"\x1a\x45\xdf\xa3":
         return None
 
-    def walk(pos, end, targets, depth=0):
-        """Yield (element_id, body_start, body_end) for targets at this
-        level; recurse into container ids listed in ``targets`` dicts."""
+    def walk(pos, end):
+        """Yield (element_id, body_start, body_end) at this level."""
         while pos < end:
             eid = _ebml_vint(blob, pos, True)
             if eid is None:
@@ -2326,16 +2155,16 @@ def webm_metadata(blob: bytes):
     try:
         # skip the EBML header element, find Segment (0x18538067)
         seg = None
-        for eid, b, e in walk(0, len(blob), None):
+        for eid, b, e in walk(0, len(blob)):
             if eid == 0x18538067:
                 seg = (b, e)
                 break
         if seg is None:
             return None
-        for eid, b, e in walk(seg[0], seg[1], None):
+        for eid, b, e in walk(seg[0], seg[1]):
             if eid == 0x1549A966:  # Info
                 raw_dur = None
-                for eid2, b2, e2 in walk(b, e, None):
+                for eid2, b2, e2 in walk(b, e):
                     if eid2 == 0x2AD7B1:  # TimecodeScale (uint)
                         tscale = int.from_bytes(blob[b2:e2], "big") or tscale
                     elif eid2 == 0x4489:  # Duration (float 4/8 bytes)
@@ -2346,17 +2175,17 @@ def webm_metadata(blob: bytes):
                 if raw_dur is not None:
                     duration = round(raw_dur * tscale / 1e9, 6)
             elif eid == 0x1654AE6B and width is None:  # Tracks
-                for eid2, b2, e2 in walk(b, e, None):
+                for eid2, b2, e2 in walk(b, e):
                     if eid2 != 0xAE:  # TrackEntry
                         continue
                     tcodec = None
                     has_video = False
-                    for eid3, b3, e3 in walk(b2, e2, None):
+                    for eid3, b3, e3 in walk(b2, e2):
                         if eid3 == 0x86:  # CodecID (ASCII)
                             tcodec = blob[b3:e3].decode("ascii", "replace")
                         elif eid3 == 0xE0:  # Video
                             has_video = True
-                            for eid4, b4, e4 in walk(b3, e3, None):
+                            for eid4, b4, e4 in walk(b3, e3):
                                 if eid4 == 0xB0:
                                     width = int.from_bytes(blob[b4:e4], "big")
                                 elif eid4 == 0xBA:
@@ -2377,17 +2206,12 @@ def avi_video_fourcc(blob: bytes):
     signal for ``media_decode_coverage`` — a substring sniff over the
     header bytes can both miss real MJPEG and false-positive on
     metadata text."""
-    import struct
-
     if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
         return None
 
-    def chunks(pos, end):
-        while pos + 8 <= end:
-            cid = blob[pos : pos + 4]
-            ln = struct.unpack("<I", blob[pos + 4 : pos + 8])[0]
-            yield cid, pos + 8, min(pos + 8 + ln, end)
-            pos += 8 + ln + (ln & 1)
+    def chunks(pos, end):  # (fourcc, body start, body end within end)
+        for cid, s, ln in _riff_chunks(blob, pos, end):
+            yield cid, s, min(s + ln, end)
 
     for cid, s, e in chunks(12, len(blob)):
         if cid != b"LIST" or blob[s : s + 4] != b"hdrl":
@@ -2446,7 +2270,7 @@ def video_metadata(df: DataFrame, bin_col: str = "content") -> DataFrame:
                 elif wb is not None:
                     dur, w, h, codec = wb
                     container = "webm"
-                elif blob[:4] == b"RIFF" and blob[8:12] == b"AVI ":
+                elif _format_of(blob).container == "avi":
                     container = "avi"
                     codec = avi_video_fourcc(blob)
                     # canonical avih: LIST hdrl at 12, avih body at 32
@@ -2483,20 +2307,6 @@ AUDIO_META_SCHEMA = StructType(
     ]
 )
 
-# WAV fmt codes wav_decode_array turns into samples, per bit depth:
-# integer PCM (fmt 1: 8/16/24/32-bit), MS ADPCM (2), IEEE float (3:
-# 32/64-bit), G.711 A-law/mu-law (6/7: 8-bit), IMA ADPCM (0x11).
-# Everything else is metadata-only.
-def _wav_fmt_decodable(audio_fmt, bits) -> bool:
-    if audio_fmt == 1:
-        return bits in (8, 16, 24, 32)
-    if audio_fmt == 3:
-        return bits in (32, 64)
-    if audio_fmt in (6, 7):
-        return bits == 8
-    return audio_fmt in (2, 0x11)
-
-
 def flac_streaminfo(blob: bytes):
     """REAL FLAC metadata from the mandatory STREAMINFO block — pure
     stdlib bit unpacking, no audio library (FLAC is how the large
@@ -2524,11 +2334,6 @@ def flac_streaminfo(blob: bytes):
     return (rate, channels, bits, dur)
 
 
-_MP3_BITRATES_V1L3 = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192,
-                      224, 256, 320, 0]  # kbit/s, MPEG-1 Layer III
-_MP3_RATES_V1 = [44100, 48000, 32000, 0]
-
-
 def mp3_header_info(blob: bytes):
     """MP3 metadata from the first MPEG-1 Layer III frame header (after
     an optional ID3v2 tag): (sample_rate, channels, bitrate_kbps,
@@ -2536,51 +2341,36 @@ def mp3_header_info(blob: bytes):
     frame count when present (exact for the dominant VBR encodes, r7);
     otherwise the CBR estimate audio_bytes*8/bitrate, with an ID3v1
     trailer excluded from the byte count. None for non-MP3 input."""
-    pos = 0
-    if blob[:3] == b"ID3" and len(blob) > 10:
-        # syncsafe 28-bit tag size
-        sz = ((blob[6] & 0x7F) << 21) | ((blob[7] & 0x7F) << 14)             | ((blob[8] & 0x7F) << 7) | (blob[9] & 0x7F)
-        pos = 10 + sz
+    pos = _skip_id3(blob)[0] if len(blob) > 10 else 0  # ID3v2 tag
     # scan a bounded window for the frame sync (junk prefixes exist)
     end = min(len(blob) - 4, pos + 4096)
     while pos <= end:
-        if blob[pos] == 0xFF and (blob[pos + 1] & 0xE0) == 0xE0:
-            b1, b2, b3 = blob[pos + 1], blob[pos + 2], blob[pos + 3]
-            version = (b1 >> 3) & 3   # 3 = MPEG-1
-            layer = (b1 >> 1) & 3     # 1 = Layer III
-            if version == 3 and layer == 1:
-                br = _MP3_BITRATES_V1L3[(b2 >> 4) & 0xF]
-                rate = _MP3_RATES_V1[(b2 >> 2) & 3]
-                if br and rate:
-                    channels = 1 if ((b3 >> 6) & 3) == 3 else 2
-                    audio_bytes = len(blob) - pos
-                    if blob[-128:-125] == b"TAG":
-                        audio_bytes -= 128  # ID3v1 trailer is not audio
-                    dur = round(audio_bytes * 8 / (br * 1000), 6)
-                    # VBR: a Xing/Info header in the first frame's side-
-                    # info region carries the TRUE frame count (the CBR
-                    # estimate is wrong for VBR, the common encode).
-                    # Offset past the 4-byte header: MPEG-1 side info is
-                    # 32 bytes stereo-family / 17 mono.
-                    # protection bit 0 => a 2-byte CRC precedes the
-                    # side info (and the Xing tag with it)
-                    crc = 2 if (b1 & 1) == 0 else 0
-                    xoff = pos + 4 + crc + (17 if channels == 1 else 32)
-                    tag = blob[xoff : xoff + 4]
-                    if tag in (b"Xing", b"Info") and len(blob) >= xoff + 12:
-                        flags = int.from_bytes(
-                            blob[xoff + 4 : xoff + 8], "big"
-                        )
-                        if flags & 0x1:  # frame count present
-                            nframes = int.from_bytes(
-                                blob[xoff + 8 : xoff + 12], "big"
-                            )
-                            # 1152 samples per MPEG-1 Layer III frame
-                            dur = round(nframes * 1152 / rate, 6)
-                    return (rate, channels, br, dur)
-            # false sync (wrong version/layer or reserved bitrate/rate
-            # index) — 0xFFEx pairs occur in junk prefixes, so keep
-            # scanning the bounded window instead of aborting
+        hdr = parse_frame_header(blob, pos)
+        if hdr is not None and hdr["layer"] == 3:
+            rate, channels = hdr["samplerate"], hdr["channels"]
+            br = hdr["bitrate"] // 1000
+            audio_bytes = len(blob) - pos
+            if blob[-128:-125] == b"TAG":
+                audio_bytes -= 128  # ID3v1 trailer is not audio
+            dur = round(audio_bytes * 8 / (br * 1000), 6)
+            # VBR: a Xing/Info header in the first frame's side-info
+            # region carries the TRUE frame count (the CBR estimate is
+            # wrong for VBR, the common encode). Offset past the 4-byte
+            # header (and the 2-byte CRC when protected): MPEG-1 side
+            # info is 32 bytes stereo-family / 17 mono.
+            crc = 2 if hdr["protection"] else 0
+            xoff = pos + 4 + crc + (17 if channels == 1 else 32)
+            tag = blob[xoff : xoff + 4]
+            if tag in (b"Xing", b"Info") and len(blob) >= xoff + 12:
+                flags = int.from_bytes(blob[xoff + 4 : xoff + 8], "big")
+                if flags & 0x1:  # frame count present
+                    nframes = int.from_bytes(blob[xoff + 8 : xoff + 12], "big")
+                    # 1152 samples per MPEG-1 Layer III frame
+                    dur = round(nframes * 1152 / rate, 6)
+            return (rate, channels, br, dur)
+        # false sync (wrong version/layer or reserved bitrate/rate
+        # index) — 0xFFEx pairs occur in junk prefixes, so keep
+        # scanning the bounded window instead of aborting
         pos += 1
     return None
 
@@ -2700,133 +2490,252 @@ def ogg_metadata(blob: bytes):
     return (codec, rate, channels, dur)
 
 
+# -- the media format table --------------------------------------------------
+#
+# One row per container. Every dispatch site walks it: sniff_kind's
+# MAGIC_KINDS, the coverage tier, decode_image_blob, audio_decode_array,
+# sample_frames and audio_container_metadata. A blob belongs to the FIRST
+# row whose magic it passes, so each magic test exists once, here, and a
+# row's ``capable`` header walk is the one answer both the coverage report
+# and the ``decodable`` metadata column give. Contract: ``capable`` False
+# means ``decode`` returns None (the walk may over-report — a payload
+# truncated mid-stream passes the header walk — but never under-reports).
+
+
+def _refuse(blob: bytes) -> None:
+    """Capability, decode and metadata of a row that has none."""
+    return None
+
+
+def _accept(blob: bytes) -> bool:
+    return True
+
+
+class _Format(NamedTuple):
+    container: str  # the coverage / metadata label
+    kind: str | None  # "image" | "audio" | "video": which decode entry
+    magic: tuple[bytes, ...]  # leading bytes, any of; b"" = no prefix
+    mime: str | None = None  # sniff_kind's label for the magic prefixes
+    test: Callable[[bytes], bool] | None = None  # rest of the magic test
+    capable: Callable[[bytes], bool | None] = _refuse  # header walk
+    decode: Callable = _refuse  # blob -> pixels / samples, or None
+    meta: Callable[[bytes], dict | None] = _refuse  # audio metadata fields
+    frames: Callable | None = None  # (blob, every_n, max_frames) -> frames
+
+
+def _form(*types: bytes):
+    """Magic test for RIFF / IFF containers: the form type at 8-12."""
+    return lambda b: b[8:12] in types
+
+
+def _bmp_info_header(blob: bytes) -> bool:
+    import struct
+
+    return len(blob) >= 54 and (
+        struct.unpack("<I", blob[14:18])[0] in _BMP_INFO_SIZES
+    )
+
+
+def _bmp_supported(blob: bytes) -> bool:
+    """Uncompressed BI_RGB or default-mask BITFIELDS; RLE refuses."""
+    import struct
+
+    bpp, comp = struct.unpack("<HI", blob[28:34])
+    return bpp in (1, 4, 8, 24, 32) and comp in (0, 3)
+
+
+def _gif_decode_array(blob: bytes):
+    """First composited GIF frame as ``(w, h, 3, pixels)`` or None."""
+    import numpy as np
+
+    first = next(iter(gif_decode_frames(blob, max_frames=1)), None)
+    if first is None:
+        return None
+    _, w, h, rgb = first
+    return (w, h, 3, np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3))
+
+
+def _gif_sampled_frames(blob: bytes, every_n: int, max_frames: int):
+    """``gif_decode_frames`` thinned to every ``every_n``-th frame, at
+    most ``max_frames`` of them (``avi_mjpeg_frames``' convention).
+    Compositing decodes every frame; only the sampled ones are kept."""
+    from itertools import islice
+
+    sampled = (
+        f for f in gif_decode_frames(blob, max_frames=every_n * max_frames)
+        if f[0] % every_n == 0
+    )
+    return islice(sampled, max_frames)
+
+
+def _wav_supported(blob: bytes) -> bool:
+    fmt, _data = _wav_fmt_data(blob)
+    return fmt is not None and _wav_fmt_decodable(fmt[0], fmt[5])
+
+
+_META = ("duration_s", "sample_rate", "channels", "bits_per_sample")
+_RATE_CH = ("sample_rate", "channels")
+
+
+def _fields(got, *names: str):
+    """A parser's result tuple as metadata fields, by position (names
+    outside ``AUDIO_META_SCHEMA`` are dropped)."""
+    return None if got is None else dict(zip(names, got))
+
+
+def _wav_meta(blob: bytes):
+    # any fmt code: rate/channels/bits even for codecs the decoder refuses
+    fmt, data = _wav_fmt_data(blob)
+    if fmt is None:
+        return None
+    _code, ch, rate, brate, _align, bits = fmt
+    dur = round(data[1] / brate, 6) if data is not None and brate else None
+    return _fields((dur, rate, ch, bits), *_META)
+
+
+def _aiff_supported(blob: bytes) -> bool:
+    comm = _aiff_comm(blob)
+    return comm is not None and comm[4].lower() in _AIFC_DECODABLE
+
+
+def _aiff_meta(blob: bytes):
+    comm = _aiff_comm(blob)
+    if comm is None:
+        return None
+    ch, frames, bits, rate, _comp = comm
+    return _fields((round(frames / rate, 6), rate, ch, bits), *_META)
+
+
+def _ogg_meta(blob: bytes):
+    og = ogg_metadata(blob)
+    if og is None:
+        return None
+    codec, rate, ch, dur = og
+    return {"container": f"ogg/{codec}", "duration_s": dur,
+            "sample_rate": rate, "channels": ch}
+
+
+# MPEG-1 Layer I/III decode for real; the all-frames side-info screen
+# is the capability (see operators/mpegaudio.py for the refusal set)
+_MPEG = dict(
+    capable=mpeg_stream_supported, decode=mpeg_audio_decode_array,
+    meta=lambda b: _fields(mp3_header_info(b), *_RATE_CH, "kbps", "duration_s"),
+)
+
+_FORMATS = (
+    _Format("png", "image", (_PNG_SIG,), "image/png",
+            capable=_accept, decode=png_decode_array),
+    _Format("jpeg", "image", (b"\xff\xd8\xff",), "image/jpeg",
+            capable=_accept, decode=jpeg_decode_array),
+    _Format("gif", "image", (b"GIF8",), "image/gif", capable=_accept,
+            decode=_gif_decode_array, frames=_gif_sampled_frames),
+    _Format("tiff", "image", (b"II*\x00", b"MM\x00*"), "image/tiff",
+            capable=tiff_supported, decode=tiff_decode_array),
+    _Format("bmp", "image", (b"BM",), test=_bmp_info_header,
+            capable=_bmp_supported, decode=bmp_decode_array),
+    _Format("wav", "audio", (b"RIFF",), "riff", test=_form(b"WAVE"),
+            capable=_wav_supported, decode=wav_decode_array, meta=_wav_meta),
+    # MJPEG streams decode; other fourccs are compressed video
+    _Format("avi", "video", (b"RIFF",), "riff", test=_form(b"AVI "),
+            capable=lambda b: avi_video_fourcc(b) == "MJPG",
+            frames=avi_mjpeg_frames),
+    # lossless VP8L decodes; lossy VP8 is compressed video
+    _Format("webp", "image", (b"RIFF",), "riff", test=_form(b"WEBP"),
+            capable=webp_supported, decode=vp8l_decode_array),
+    _Format("riff", None, (b"RIFF",), "riff", test=lambda b: len(b) >= 12),
+    _Format("flac", "audio", (b"fLaC",), capable=_accept,
+            decode=flac_decode_array,
+            meta=lambda b: _fields(flac_streaminfo(b), *_RATE_CH,
+                                   "bits_per_sample", "duration_s")),
+    _Format("aiff", "audio", (b"FORM",), test=_form(b"AIFF", b"AIFC"),
+            capable=_aiff_supported, decode=aiff_decode_array,
+            meta=_aiff_meta),
+    _Format("ogg", "audio", (b"OggS",), "audio/ogg",
+            capable=vorbis_stream_supported, decode=vorbis_decode_array,
+            meta=_ogg_meta),
+    # ADTS layer bits (00) also pass the loose MPEG sync below: only the
+    # chained frame-length walk proves ADTS, and it must win. Decode
+    # refuses (see adts_metadata)
+    _Format("aac/adts", "audio", (b"\xff",),
+            test=lambda b: adts_metadata(b) is not None,
+            meta=lambda b: _fields(adts_metadata(b), *_RATE_CH, "duration_s")),
+    _Format("mp3", "audio", (b"ID3",), "audio/mp3", **_MPEG),
+    _Format("mp3", "audio", (b"\xff",),
+            test=lambda b: len(b) > 1 and b[1] & 0xE0 == 0xE0, **_MPEG),
+    # ISO-BMFF: the box type sits at byte 4 behind a size of any value;
+    # sniff_kind labels only the usual 3-zero-byte size prefix
+    _Format("mp4", "video", (b"\x00\x00\x00", b""), "video/mp4-ish",
+            test=lambda b: len(b) >= 12 and b[4:8] == b"ftyp"),
+    _Format("webm", "video", (b"\x1a\x45\xdf\xa3",)),
+)
+_UNKNOWN = _Format("unknown", None, ())
+
+#: sniff_kind's (leading bytes, label) pairs: the rows' magic prefixes
+#: Catalyst can compare (the first four bytes)
+MAGIC_KINDS: list[tuple[bytes, str]] = list(dict.fromkeys(
+    (m[:4], row.mime) for row in _FORMATS if row.mime for m in row.magic if m
+))
+
+
+def _format_of(blob: bytes) -> _Format:
+    """The first ``_FORMATS`` row whose magic test ``blob`` passes, else
+    ``_UNKNOWN``."""
+    for row in _FORMATS:
+        if blob.startswith(row.magic) and (row.test is None or row.test(blob)):
+            return row
+    return _UNKNOWN
+
+
+def _classify_decode_tier(blob: bytes):
+    """(container, screenable) for one blob — the matching row's header
+    walk, no decode."""
+    row = _format_of(blob)
+    return (row.container, bool(row.capable(blob)))
+
+
+def _audio_meta(blob: bytes) -> dict:
+    """``audio_container_metadata``'s fields for one blob: the matching
+    audio row's metadata, ``decodable`` from its capability; empty for
+    anything else."""
+    row = _format_of(blob)
+    if row.kind != "audio":
+        return {}
+    return {"container": row.container, "decodable": bool(row.capable(blob)),
+            **(row.meta(blob) or {})}
+
+
 def audio_container_metadata(
     df: DataFrame, bin_col: str = "content"
 ) -> DataFrame:
-    """Per-clip audio container metadata for curation: FLAC via
-    STREAMINFO, Ogg Opus/Vorbis via the page walk (duration from the
-    last granule), MP3 via the first MPEG frame header (CBR-estimate
-    duration), WAV via the RIFF fmt/data walk (any fmt code — the
+    """Per-clip audio container metadata for curation, from the audio
+    rows of ``_FORMATS``: FLAC via STREAMINFO, Ogg Opus/Vorbis via the
+    page walk (duration from the last granule; container
+    ``ogg/<codec>``), AIFF/AIFC via COMM, ADTS-AAC via the chained
+    frame walk, MP3 via the first MPEG frame header (CBR-estimate or
+    Xing duration), WAV via the RIFF fmt/data walk (any fmt code — the
     metadata layer reports rate/channels/bits even for codecs the
-    decoder refuses). Filter by rate/channels/duration next to the
-    scan, before any decode attempt. Unknown containers yield NULL
-    fields, never errors.
+    decoder refuses). The container is the blob's MAGIC (the loose MPEG
+    sync never outranks a WAV, AIFF or ADTS header); fields its parser
+    cannot read stay NULL. Filter by rate/channels/duration next to the
+    scan, before any decode attempt. Non-audio and unknown blobs yield
+    NULL fields, never errors.
 
-    ``decodable`` states whether THIS ENGINE can turn the clip into
-    samples (``audio_decode_array`` → ``audio_dhash64``): True for the
-    WAV PCM/G.711/IMA-ADPCM family, FLAC (r7, ``flaccodec``) and
-    MPEG-1 Layer I/III streams whose side info stays inside the
-    shipped feature set (late r7, ``mpegaudio``) and Ogg Vorbis whose
-    setup parses inside the r9 feature set (``vorbiscodec``), False
-    for Ogg Opus, MPEG streams needing the documented refusal set,
-    and unsupported WAV fmt codes, NULL for unrecognized
-    containers. A pipeline must
-    report the screenable fraction rather than silently dHash-screen
-    the WAV minority of a crawl (r6 advice #8);
-    ``media_decode_coverage`` aggregates it per container."""
-    import struct
+    ``decodable`` is the row's capability — the same function
+    ``media_decode_coverage`` calls — so the two always agree. False
+    means ``audio_decode_array`` returns None (Ogg Opus, ADTS-AAC, the
+    MPEG refusal set, WAV fmt codes the decoder lacks); True may still
+    decode to None, e.g. a payload truncated mid-stream. A pipeline
+    must report the screenable fraction rather than silently
+    dHash-screen the decodable minority of a crawl (r6 advice #8)."""
+    names = [f.name for f in AUDIO_META_SCHEMA.fields]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = {"path": [], "container": [], "duration_s": [],
-                   "sample_rate": [], "channels": [], "bits_per_sample": [],
-                   "decodable": []}
+            out = {k: [] for k in names}
             for path, blob in zip(pdf["path"], pdf[bin_col]):
-                blob = bytes(blob)
-                container = dur = rate = ch = bits = dec = None
-                fl = flac_streaminfo(blob)
-                og = ogg_metadata(blob) if fl is None else None
-                # AIFF's FORM magic is unambiguous and must beat the
-                # HEURISTIC mp3 sync scan: big-endian PCM routinely
-                # contains 0xFFEx byte pairs (~5% of noise clips
-                # false-hit), so magic-based containers go first
-                aiff_magic = (
-                    len(blob) >= 12 and blob[:4] == b"FORM"
-                    and blob[8:12] in (b"AIFF", b"AIFC")
-                )
-                aif = (
-                    _aiff_comm(blob) if fl is None and og is None else None
-                )
-                # ADTS before the mp3 sync scan: an ADTS header also
-                # matches the looser MPEG sync heuristic, but only the
-                # chained frame-length walk proves ADTS
-                adts = (
-                    adts_metadata(blob)
-                    if fl is None and og is None and not aiff_magic
-                    else None
-                )
-                mp = (
-                    mp3_header_info(blob)
-                    if fl is None and og is None and not aiff_magic
-                    and adts is None
-                    else None
-                )
-                if fl is not None:
-                    rate, ch, bits, dur = fl
-                    container = "flac"
-                    dec = True  # r7: real pure-stdlib FLAC decode
-                elif og is not None:
-                    codec, rate, ch, dur = og
-                    container = f"ogg/{codec}"
-                    if codec == "vorbis":
-                        from .vorbiscodec import vorbis_stream_supported
-
-                        dec = vorbis_stream_supported(blob)
-                    else:
-                        dec = False
-                elif aif is not None:
-                    ch, frames, bits, rate, comp = aif
-                    container = "aiff"
-                    dur = round(frames / rate, 6) if rate else None
-                    dec = comp.lower() in _AIFC_DECODABLE
-                elif aiff_magic:
-                    # FORM magic but corrupt/absurd COMM: still an AIFF
-                    # container (NULL fields), never an mp3 false hit
-                    container = "aiff"
-                    dec = False
-                elif adts is not None:
-                    rate, ch, dur, _nf = adts
-                    container = "aac/adts"
-                    # decode refuses: spectral Huffman codebooks fail
-                    # the transcription gate (see adts_metadata)
-                    dec = False
-                elif mp is not None:
-                    rate, ch, _br, dur = mp
-                    container = "mp3"
-                    # r7: MPEG-1 Layer I/III streams decode for real
-                    # (operators/mpegaudio.py); the side-info screen
-                    # reports whether every frame stays within the
-                    # shipped Huffman tables / feature set
-                    from .mpegaudio import mpeg_stream_supported
-
-                    dec = mpeg_stream_supported(blob)
-                elif (len(blob) >= 12 and blob[:4] == b"RIFF"
-                      and blob[8:12] == b"WAVE"):
-                    container = "wav"
-                    pos, fmt, dlen = 12, None, None
-                    while pos + 8 <= len(blob):
-                        cid = blob[pos : pos + 4]
-                        ln = struct.unpack("<I", blob[pos + 4 : pos + 8])[0]
-                        if cid == b"fmt " and ln >= 16:
-                            body = blob[pos + 8 : pos + 8 + ln]
-                            if len(body) >= 16:  # truncation guard
-                                fmt = struct.unpack("<HHIIHH", body[:16])
-                        elif cid == b"data":
-                            dlen = ln
-                        pos += 8 + ln + (ln & 1)
-                    dec = False
-                    if fmt is not None:
-                        afmt, ch, rate, brate, _, bits = fmt
-                        if dlen is not None and brate:
-                            dur = round(dlen / brate, 6)
-                        dec = _wav_fmt_decodable(afmt, bits)
-                out["path"].append(path)
-                out["container"].append(container)
-                out["duration_s"].append(dur)
-                out["sample_rate"].append(rate)
-                out["channels"].append(ch)
-                out["bits_per_sample"].append(bits)
-                out["decodable"].append(dec)
+                got = {"path": path, **_audio_meta(bytes(blob))}
+                for k in names:
+                    out[k].append(got.get(k))
             yield pd.DataFrame(out)
 
     return df.select("path", bin_col).mapInPandas(batches, AUDIO_META_SCHEMA)

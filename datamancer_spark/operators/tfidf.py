@@ -185,7 +185,6 @@ def tfidf_cosine_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.3,
-    max_doc_freq: int | None = None,
     max_doc_freq_frac: float | None = None,
 ) -> DataFrame:
     """Sparse document-similarity join: cosine over TF-IDF vectors via
@@ -196,22 +195,18 @@ def tfidf_cosine_pairs(
     per-doc term weights (partial-aggregated), per-doc norms from one
     groupBy, then the ``dedup._posting_pairs`` self-join ON TERM
     accumulates the dot products — shuffle volume is Σ_t df(t)², so
-    ``max_doc_freq`` prunes stop-word-class terms (df > cap) before the
-    join, the same LOSSY-knob pattern as ngram_jaccard's doc-freq cap
-    (high-df terms carry ~zero idf weight anyway). Output (id_a < id_b,
-    cosine ≥ threshold)."""
+    ``max_doc_freq_frac`` prunes stop-word-class terms (df > frac·N)
+    before the join, the same LOSSY-knob pattern as ngram_jaccard's
+    doc-freq cap (high-df terms carry ~zero idf weight anyway); the cap
+    is a fraction of the corpus so it prunes the same share as N grows.
+    Output (id_a < id_b, cosine ≥ threshold)."""
     tc = term_counts(df, text_col, id_col)
     dfreq = doc_freq(tc, id_col).crossJoin(F.broadcast(_n_docs_frame(df)))
     if max_doc_freq_frac is not None:
-        # scale-invariant form of the cap: df <= frac * N keeps the
-        # pruned set meaningful as the corpus grows (an absolute cap
-        # prunes ever harder at larger N). floor(frac*N) matches the
-        # old int() driver-side truncation.
+        # floor(frac*N): the int() truncation, computed in-plan
         dfreq = dfreq.filter(
             F.col("df") <= F.floor(F.lit(max_doc_freq_frac) * F.col("_n"))
         )
-    elif max_doc_freq is not None:
-        dfreq = dfreq.filter(F.col("df") <= max_doc_freq)
     idf = dfreq.withColumn(
         "idf", F.log((F.col("_n") + 1) / (F.col("df") + 1)) + 1.0
     ).drop("_n")

@@ -337,3 +337,16 @@ def test_k_core_rejects_nonpositive_max_rounds(spark):
     edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     with _pytest.raises(ValueError, match="max_rounds must be >= 1"):
         k_core(edges, k=1, rounds=None, max_rounds=0)
+
+
+def test_components_raises_when_max_iter_cannot_converge(spark):
+    """A 64-node path needs several pointer-jumping rounds; one round
+    leaves labels changing, and the unconverged labelling must not be
+    returned silently."""
+    from datamancer_spark.operators.components import connected_components
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], ["id_a", "id_b"]
+    )
+    with pytest.raises(ValueError, match="max_iter=1"):
+        connected_components(pairs, max_iter=1)

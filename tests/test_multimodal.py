@@ -2791,3 +2791,168 @@ class TestRealBmpDecode:
         assert row["mean_intensity"] == round(float(px.mean()) / 255.0, 6)
         [hrow] = dhash(df).collect()
         assert hrow["dhash"] is not None
+
+
+def _mutations(blob: bytes, rng, n: int):
+    """``n`` seeded corruptions of ``blob``, cycling truncation, 1-4
+    byte flips and 1-8 byte inserts."""
+    for k in range(n):
+        b = bytearray(blob)
+        if k % 3 == 0:
+            yield bytes(b[: rng.randrange(1, len(b))])
+        elif k % 3 == 1:
+            for _ in range(rng.randint(1, 4)):
+                b[rng.randrange(len(b))] = rng.randrange(256)
+            yield bytes(b)
+        else:
+            at = rng.randrange(len(b) + 1)
+            ins = bytes(rng.randrange(256) for _ in range(rng.randint(1, 8)))
+            yield bytes(b[:at]) + ins + bytes(b[at:])
+
+
+def _mp3_zero_region_witness() -> bytes:
+    """A one-frame MP3 whose side info selects the refused table 30 for
+    a big_values region of ZERO pairs — a table the decoder never
+    reads (byte 11 sits in the first granule's table_select bits)."""
+    from datamancer_spark.operators.fixtures import mp3_ws_blob
+
+    b = bytearray(mp3_ws_blob(0))
+    b[11] = 0xFF
+    return bytes(b)
+
+
+def _wav_two_fmt_witness() -> bytes:
+    """A WAVE whose first ``fmt `` chunk names MPEG (0x55) and whose
+    second names PCM-16: the LAST fmt chunk is the one that decodes."""
+    import struct
+
+    import numpy as np
+
+    pcm = (np.sin(np.arange(800) / 5.0) * 9000).astype("<i2").tobytes()
+
+    def chunk(cid, body):
+        return cid + struct.pack("<I", len(body)) + body
+
+    body = (b"WAVE"
+            + chunk(b"fmt ", struct.pack("<HHIIHH", 0x55, 1, 8000, 2000, 1, 0))
+            + chunk(b"fmt ", struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16))
+            + chunk(b"data", pcm))
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+class TestFormatTableContract:
+    """The coverage tier never under-reports: ``screenable`` False
+    means the decoders return None, on real fixtures and on seeded
+    corruptions of them."""
+
+    def test_screenable_false_never_decodes(self):
+        import random
+
+        from datamancer_spark.operators import fixtures as fx
+        from datamancer_spark.operators.multimodal import (
+            _classify_decode_tier,
+            audio_decode_array,
+            decode_image_blob,
+        )
+
+        gens = [
+            fx.solid_png_blob, fx.pattern_png_blob, fx.wav_const_blob,
+            fx.wav_dhash_blob, fx.wav_truncated_blob, fx.ogg_stub_blob,
+            fx.mp4_stub_blob, fx.mp3_ws_blob, fx.ogg_vorbis_blob,
+            fx.solid_bmp_blob, fx.solid_tiff_blob, fx.bmp_exact_blob,
+            fx.tiff_exact_blob, fx.webp_exact_blob, fx.webp_grad_blob,
+            fx.adts_aac_blob,
+        ]
+        corpus = [_mp3_zero_region_witness(), _wav_two_fmt_witness()]
+        for gen in gens:
+            rng = random.Random(gen.__name__)
+            for i in range(4):
+                base = gen(i)
+                corpus.append(base)
+                corpus.extend(_mutations(base, rng, 24))
+        assert len(corpus) == 2 + 16 * 4 * 25
+        under = []
+        for blob in corpus:
+            container, screenable = _classify_decode_tier(blob)
+            if screenable:
+                continue
+            if decode_image_blob(blob) is not None or (
+                audio_decode_array(blob) is not None
+            ):
+                under.append((container, blob[:16]))
+        assert under == []
+
+    def test_mp3_table_in_zero_length_region_is_not_read(self):
+        from datamancer_spark.operators.mpegaudio import mpeg_stream_supported
+        from datamancer_spark.operators.multimodal import (
+            _classify_decode_tier,
+            audio_decode_array,
+        )
+
+        blob = _mp3_zero_region_witness()
+        rate, mono = audio_decode_array(blob)
+        assert (rate, len(mono)) == (44100, 1183)
+        assert mpeg_stream_supported(blob)
+        assert _classify_decode_tier(blob) == ("mp3", True)
+
+    def test_wav_last_fmt_chunk_decides(self, spark):
+        from datamancer_spark.operators.multimodal import (
+            audio_container_metadata,
+            audio_decode_array,
+            media_decode_coverage,
+        )
+
+        blob = _wav_two_fmt_witness()
+        rate, mono = audio_decode_array(blob)
+        assert (rate, len(mono)) == (8000, 800)
+        df = spark.createDataFrame(
+            [("w.wav", bytearray(blob))], "path string, content binary"
+        )
+        [row] = audio_container_metadata(df).collect()
+        assert (row["container"], row["decodable"]) == ("wav", True)
+        assert (row["sample_rate"], row["bits_per_sample"]) == (8000, 16)
+        [cov] = media_decode_coverage(df).collect()
+        assert (cov["container"], cov["n"], cov["n_screenable"]) == (
+            "wav", 1, 1)
+
+    def test_avi_frames_follow_the_fourcc(self):
+        """JPEG frames behind a non-MJPG fourcc are refused, as the
+        coverage tier reports them."""
+        import numpy as np
+
+        from datamancer_spark.operators.multimodal import (
+            _classify_decode_tier,
+            avi_mjpeg_frames,
+        )
+        from tests.test_jpeg import _encode_avi_mjpeg, encode_jpeg
+
+        frame = encode_jpeg(np.full((8, 8), 90, dtype=np.uint8))
+        h264 = _encode_avi_mjpeg([frame], 8, 8, fourcc=b"H264")
+        assert _classify_decode_tier(h264) == ("avi", False)
+        assert list(avi_mjpeg_frames(h264)) == []
+        mjpg = _encode_avi_mjpeg([frame], 8, 8)
+        assert [f[0] for f in avi_mjpeg_frames(mjpg)] == [0]
+
+    def test_aifc_g711_decodes_at_any_rate_times_channels(self):
+        """AIFC A-law shares the WAV path's expansion directly; a rate
+        times channel count past 2**32 once overflowed the WAV header
+        it was re-wrapped in, and the decode raised."""
+        from datamancer_spark.operators.multimodal import audio_decode_array
+
+        blob = TestAiff._aiff(None, 9_000_000, bits=8, form=b"AIFC",
+                              comp=b"alaw", data=bytes(800), channels=600)
+        rate, mono = audio_decode_array(blob)
+        assert (rate, len(mono)) == (9_000_000, 1)
+
+    def test_gif_lzw_root_over_8_bits_yields_nothing(self):
+        from datamancer_spark.operators.multimodal import (
+            decode_image_blob,
+            gif_decode_frames,
+        )
+
+        blob = _encode_gif([bytes(4)], TestRealGifDecode.PAL4, 2, 2)
+        lzw_at = blob.index(b"\x2c") + 10  # image descriptor, no LCT
+        bad = blob[:lzw_at] + bytes([11]) + blob[lzw_at + 1 :]
+        assert list(gif_decode_frames(bad)) == []
+        assert decode_image_blob(bad) is None
+        assert decode_image_blob(blob) is not None
