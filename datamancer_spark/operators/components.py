@@ -1,19 +1,29 @@
-"""Connected components over near-duplicate pair graphs.
+"""Graph operators over edge lists: connected components, PageRank, HITS
+and k-core.
 
 The post-dedup step every pipeline needs: candidate/verified PAIRS say
 "a ~ b", but keeping one doc per duplicate GROUP requires the transitive
 closure — connected components. Implemented as large-/small-star-free
 min-label propagation: each iteration joins the current labels across
-edges and keeps the per-node minimum neighbor label; converges in
-O(diameter) rounds (≤ O(log n) for the short chains dedup graphs have).
+edges and keeps the per-node minimum neighbor label; a pointer-jumping
+step (comp := comp(comp)) gives O(log diameter) rounds. Every iteration
+is one shuffle on node id and the edge list never grows.
 
-Scale notes: every iteration is one shuffle on node id; the edge list
-never grows, and a pointer-jumping step (comp := comp(comp)) gives
-O(log diameter) rounds. The driver loop holds only a convergence check
-(one count per round) and a hard cap — iterative algorithms can't be a
-single Catalyst plan, so this is the documented exception to "no
-driver-side loops": log-many rounds of fully distributed work, not
-per-row driver logic. localCheckpoint truncates lineage each round.
+Iterative algorithms can't be a single Catalyst plan, so the four
+operators share one driver loop, ``_fixpoint`` — the documented
+exception to "no driver-side loops": log-many rounds of fully
+distributed work, not per-row driver logic. It checks the round cap
+once (it must be >= 1), pins the start state and each round's state
+(localCheckpoint truncates lineage) and runs the convergence test, when
+there is one, on the pinned frames.
+
+One non-convergence contract holds for all four: an operator that
+tests convergence (``connected_components`` always, ``pagerank``/``hits``
+when ``tol`` is set, ``k_core`` when ``rounds=None``) raises
+``ValueError`` naming its cap parameter when the cap is reached
+unconverged — a silently returned prefix mislabels nodes. The
+fixed-count forms (``tol=None``, ``k_core(rounds=…)``, which the
+differential twins unroll) run exactly the cap.
 """
 
 from __future__ import annotations
@@ -22,6 +32,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import materialize
+
+
+def _fixpoint(state, step, cap, done=None, *, op: str, param: str):
+    """Run ``step`` from ``state`` for up to ``cap`` rounds; returns
+    ``(state, rounds_run)``. The start state and each round's output are
+    pinned, then ``done(prev, state)`` runs on the pinned frames (one
+    driver scalar) and stops the loop when true. With ``done``, reaching
+    the cap unconverged raises; without, ``cap`` is the fixed round
+    count. ``op``/``param`` name the caller and its cap parameter in
+    errors."""
+    cap = int(cap)
+    if cap < 1:
+        raise ValueError(f"{op}: {param} must be >= 1 (got {cap})")
+    state = materialize(state)
+    for rounds in range(1, cap + 1):
+        prev, state = state, materialize(step(state))
+        if done is not None and done(prev, state):
+            return state, rounds
+    if done is not None:
+        raise ValueError(
+            f"{op}: no fixpoint within {param}={cap} rounds; raise {param}"
+        )
+    return state, cap
 
 
 def _check_rounding_resolution(n: int, round_decimals: int | None) -> None:
@@ -46,6 +79,55 @@ def _check_rounding_resolution(n: int, round_decimals: int | None) -> None:
         )
 
 
+def _link_graph(edges: DataFrame, src: str, dst: str,
+                round_decimals: int | None):
+    """The power iterations' shared prelude: ``(e, nodes, n)`` — the
+    pinned distinct (u, v) edge list, the pinned src∪dst node set and
+    its size, with the rounding guard applied.
+
+    A crawl edge list carries NULL endpoints (unresolvable hrefs); they
+    are not nodes — dropped, not propagated into the node set. The edge
+    list is pinned FIRST (r13): everything downstream re-evaluates its
+    lineage otherwise, and a crawl caller's lineage is WARC parse + HTML
+    link extraction (measured 7.5s/pass at sf0.1: the unmaterialized
+    seam paid it ~3x, 33s -> 17s with this one checkpoint)."""
+    e = materialize(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .na.drop()
+        .distinct()
+    )
+    nodes = materialize(
+        e.select(F.col("u").alias("node"))
+        .unionByName(e.select(F.col("v").alias("node")))
+        .distinct()
+    )
+    n = nodes.count()
+    _check_rounding_resolution(n, round_decimals)
+    return e, nodes, n
+
+
+def _rounded(c, round_decimals: int | None):
+    return F.round(c, round_decimals) if round_decimals is not None else c
+
+
+def _max_delta_within(tol: float | None, col: str):
+    """The power iterations' convergence test for ``_fixpoint``: max
+    |Δcol| between two pinned rounds ≤ tol (one distributed aggregate →
+    one driver scalar). None (a fixed count) when ``tol`` is None."""
+    if tol is None:
+        return None
+
+    def done(prev: DataFrame, cur: DataFrame) -> bool:
+        d = (
+            cur.join(prev.select("node", F.col(col).alias("_prev")), "node")
+            .agg(F.max(F.abs(F.col(col) - F.col("_prev"))).alias("d"))
+            .collect()[0]["d"]
+        )
+        return d is not None and d <= tol
+
+    return done
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
@@ -56,9 +138,9 @@ def connected_components(
 
     ``pairs`` is an undirected edge list; isolated nodes don't appear
     (join your full id set afterwards with fill = own id). Raises
-    ``ValueError`` when the last of ``max_iter`` rounds still changed a
-    label: an unconverged prefix would split components (``k_core``
-    raises the same way)."""
+    ``ValueError`` when ``max_iter`` < 1, or when the last of
+    ``max_iter`` rounds still changed a label: an unconverged prefix
+    would split components."""
     # materialize (r13): the edge list is joined EVERY round, and the
     # caller's pairs lineage is typically the expensive part (e.g.
     # minhash_dedup_verified — banded LSH + verify); without the
@@ -74,9 +156,8 @@ def connected_components(
         .agg(F.least(F.min("v"), F.first("u")).alias("comp"))
         .select(F.col("u").alias("node"), "comp")
     )
-    labels = materialize(labels)
 
-    for _ in range(max_iter):
+    def step(labels: DataFrame) -> DataFrame:
         # 1) neighbor propagation: min over neighbors u of comp(u)
         prop = (
             edges.join(labels, edges.u == labels.node)
@@ -94,26 +175,20 @@ def connected_components(
         # 2) pointer jumping: comp(node) := min(comp(node), comp(comp(node)))
         # — path doubling turns O(diameter) convergence into O(log diameter)
         l2 = stepped.select(F.col("node").alias("pnode"), F.col("comp").alias("pcomp"))
-        merged = stepped.join(
-            l2, stepped.comp == l2.pnode, "left"
-        ).select(
+        return stepped.join(l2, stepped.comp == l2.pnode, "left").select(
             "node",
             F.least(F.col("comp"), F.coalesce(F.col("pcomp"), F.col("comp"))).alias(
-                "new_comp"
+                "comp"
             ),
             F.col("_old"),
         )
-        # checkpoint FIRST, then count on the materialized frame — the
-        # two round joins execute once, not once for the count and again
-        # for the checkpoint
-        merged = materialize(merged)
-        changed = merged.filter(F.col("new_comp") < F.col("_old")).limit(1).count()
-        labels = merged.select("node", F.col("new_comp").alias("comp"))
-        if changed == 0:
-            break
-    else:
-        raise ValueError(f"connected_components: labels still changing "
-                         f"after max_iter={max_iter} rounds")
+
+    def settled(_prev: DataFrame, labels: DataFrame) -> bool:
+        # counted on the pinned round: its two joins execute once
+        return labels.filter(F.col("comp") < F.col("_old")).limit(1).count() == 0
+
+    labels, _ = _fixpoint(labels, step, max_iter, settled,
+                          op="connected_components", param="max_iter")
     return labels.select(F.col("node"), F.col("comp").alias("component"))
 
 
@@ -147,20 +222,17 @@ def pagerank(
     tol: float | None = None,
     return_rounds: bool = False,
 ) -> DataFrame:
-    """PageRank by fixed-iteration power method (r11) — the link-graph
-    quality signal crawl curation ranks and samples by. Directed
-    ``edges``; the node set is src∪dst; ranks start uniform (1/n) and
-    each round every node keeps (1−d)/n plus d · the sum of incoming
-    rank/out-degree, with DANGLING mass (nodes without out-edges)
-    redistributed uniformly — so the ranks sum to 1 every iteration,
-    the standard formulation.
+    """PageRank by power method (r11) — the link-graph quality signal
+    crawl curation ranks and samples by. Directed ``edges``; the node
+    set is src∪dst; ranks start uniform (1/n) and each round every node
+    keeps (1−d)/n plus d · the sum of incoming rank/out-degree, with
+    DANGLING mass (nodes without out-edges) redistributed uniformly —
+    so the ranks sum to 1 every iteration, the standard formulation.
 
     Plan per round: one broadcast-able join of ranks to the (static)
     out-degreed edge list, one groupBy(dst) sum, one left join back to
     the node set, one 1-row dangling-mass crossJoin — all distributed;
-    the driver loop is the documented fixed-count exception (same as
-    ``connected_components``), with localCheckpoint truncating lineage
-    each round. Returns (node, rank).
+    the rounds run through ``_fixpoint``. Returns (node, rank).
 
     ``round_decimals``: round ranks after EVERY iteration. Float sums
     are association-order dependent at ~1e-16; per-iteration rounding
@@ -169,37 +241,17 @@ def pagerank(
     differential-gate convention (the gate rounds at 6 and compares at
     4). None keeps full precision.
 
-    ``tol`` (r12, VERDICT r11 #8 — the early-stop tier): when set,
-    each round additionally computes max |Δrank| (one distributed agg
-    → one driver scalar, the ``connected_components`` convergence-
-    check convention) and stops as soon as it is ≤ tol; ``iters``
-    becomes the CAP. At scale a fixed count wastes whole rounds after
-    convergence — each a full edge-list join — while web-graph power
-    iteration typically converges long before a conservative cap.
-    With ``round_decimals`` set, tol=0 stops at the exact rounded
-    fixed point, where further iterations provably change nothing.
+    ``iters`` (>= 1, else ``ValueError``) is the round count. With
+    ``tol`` set (r12, the early-stop tier) it becomes the CAP: each
+    round also computes max |Δrank| and stops as soon as it is ≤ tol,
+    and reaching ``iters`` unconverged raises ``ValueError`` (the
+    module's non-convergence contract). At scale a fixed count wastes
+    whole rounds after convergence — each a full edge-list join. With
+    ``round_decimals`` set, tol=0 stops at the exact rounded fixed
+    point, where further iterations provably change nothing.
     ``return_rounds=True`` returns ``(ranks, rounds_run)`` so callers
     (and the scaling table) can see the rounds saved."""
-    # a crawl edge list carries NULL endpoints (unresolvable hrefs);
-    # they are not nodes — dropped, not propagated into the node set.
-    # Materialize the edge list FIRST (r13): everything below — the
-    # node set, the out-degree frame, the degreed edges (a self-join
-    # shape that embeds e twice) — re-evaluates e's lineage otherwise,
-    # and a crawl caller's lineage is WARC parse + HTML link extraction
-    # (measured 7.5s/pass at sf0.1: the unmaterialized seam paid it
-    # ~3x, 33s -> 17s with this one checkpoint).
-    e = materialize(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .na.drop()
-        .distinct()
-    )
-    nodes = materialize(
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    n = nodes.count()
-    _check_rounding_resolution(n, round_decimals)
+    e, nodes, n = _link_graph(edges, src, dst, round_decimals)
     deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     ed = materialize(e.join(deg, "u"))
     # r16: the dangling node SET (nodes with no out-edges) is STATIC
@@ -216,10 +268,9 @@ def pagerank(
     )
     has_dangling = dangling_nodes.limit(1).count() > 0
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    ranks = materialize(ranks)
     base = (1.0 - damping) / n
-    rounds_run = 0
-    for _ in range(int(iters)):
+
+    def step(ranks: DataFrame) -> DataFrame:
         contrib = (
             ed.join(ranks, ed.u == ranks.node)
             .select("v", (F.col("rank") / F.col("deg")).alias("c"))
@@ -227,46 +278,23 @@ def pagerank(
             .agg(F.sum("c").alias("in_rank"))
         )
         in_term = F.coalesce(F.col("in_rank"), F.lit(0.0))
+        out = nodes.join(contrib, nodes.node == contrib.v, "left")
         if has_dangling:
             # dangling nodes leak their mass — collect it as ONE scalar
-            # row and spread uniformly, keeping sum(rank) = 1. The semi
-            # join against the materialized static set replaces the old
-            # per-round anti-join against a freshly aggregated degree
-            # frame (same node set, one edge-list aggregation total
-            # instead of one per round).
+            # row (a semi join against the pinned static set) and spread
+            # it uniformly, keeping sum(rank) = 1
             dangling = (
                 ranks.join(dangling_nodes, "node", "left_semi")
                 .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
             )
-            new_rank = F.lit(base) + F.lit(damping) * (
-                in_term + F.col("dm") / n
-            )
-        else:
-            new_rank = F.lit(base) + F.lit(damping) * in_term
-        if round_decimals is not None:
-            new_rank = F.round(new_rank, round_decimals)
-        prev = ranks
-        ranks = nodes.join(contrib, nodes.node == contrib.v, "left")
-        if has_dangling:
-            ranks = ranks.crossJoin(F.broadcast(dangling))
-        ranks = ranks.select("node", new_rank.alias("rank"))
-        ranks = materialize(ranks)
-        rounds_run += 1
-        if tol is not None:
-            delta = (
-                ranks.join(
-                    prev.select(
-                        "node", F.col("rank").alias("_prev")
-                    ),
-                    "node",
-                )
-                .agg(
-                    F.max(F.abs(F.col("rank") - F.col("_prev"))).alias("d")
-                )
-                .collect()[0]["d"]
-            )
-            if delta is not None and delta <= tol:
-                break
+            out = out.crossJoin(F.broadcast(dangling))
+            in_term = in_term + F.col("dm") / n
+        new_rank = F.lit(base) + F.lit(damping) * in_term
+        return out.select("node", _rounded(new_rank, round_decimals).alias("rank"))
+
+    ranks, rounds_run = _fixpoint(ranks, step, iters,
+                                  _max_delta_within(tol, "rank"),
+                                  op="pagerank", param="iters")
     if return_rounds:
         return ranks, rounds_run
     return ranks
@@ -281,9 +309,9 @@ def hits(
     tol: float | None = None,
     return_rounds: bool = False,
 ) -> DataFrame:
-    """HITS hubs & authorities (Kleinberg) by fixed-iteration power
-    method — PageRank's companion link signal: an AUTHORITY is pointed
-    to by good hubs, a HUB points to good authorities (directories vs
+    """HITS hubs & authorities (Kleinberg) by power method —
+    PageRank's companion link signal: an AUTHORITY is pointed to by
+    good hubs, a HUB points to good authorities (directories vs
     destinations; for crawl curation, hub pages are link farms to
     deprioritize, authority pages are content to keep). Per round:
     a ← normalize(Eᵀh), then h ← normalize(E a), each normalization a
@@ -298,80 +326,41 @@ def hits(
     float association order (~1e-16) cannot move a differential
     comparison; the twin unrolls the iterations as chained CTEs.
 
-    ``tol`` / ``return_rounds`` (r12): same early-stop contract as
-    ``pagerank`` — stop when the hub vector's max |Δ| per round is
-    ≤ tol (one aggregate → one driver scalar); ``iters`` becomes the
-    cap."""
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .na.drop()
-        .distinct()
-    )
-    e = materialize(e)
-    nodes = materialize(
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    n = nodes.count()
-    _check_rounding_resolution(n, round_decimals)
+    ``iters`` / ``tol`` / ``return_rounds`` (r12): the same round-count
+    and non-convergence contract as ``pagerank``, with the early stop
+    tested on the hub vector's max |Δ| per round."""
+    e, nodes, n = _link_graph(edges, src, dst, round_decimals)
 
-    def _rnd(c):
-        return F.round(c, round_decimals) if round_decimals is not None else c
+    def spread(vec: DataFrame, frm: str, to: str, val: str, out: str):
+        # one half-round: sum ``val`` along the edges frm -> to, then
+        # normalize by the vector's sum over the full node set
+        raw = e.join(vec, e[frm] == vec.node).groupBy(to).agg(
+            F.sum(val).alias("_s")
+        )
+        tot = raw.agg(F.sum("_s").alias("_t"))
+        return (
+            nodes.join(raw, nodes.node == raw[to], "left")
+            .crossJoin(F.broadcast(tot))
+            .select(
+                "node",
+                _rounded(
+                    F.coalesce(F.col("_s"), F.lit(0.0)) / F.col("_t"),
+                    round_decimals,
+                ).alias(out),
+            )
+        )
 
-    hubs = materialize(nodes.select("node", F.lit(1.0 / n).alias("hub")))
     auths = None
-    rounds_run = 0
-    for _ in range(int(iters)):
-        raw_a = (
-            e.join(hubs, e.u == hubs.node)
-            .groupBy("v")
-            .agg(F.sum("hub").alias("_s"))
-        )
-        a_tot = raw_a.agg(F.sum("_s").alias("_t"))
-        auths = materialize(
-            nodes.join(raw_a, nodes.node == raw_a.v, "left")
-            .crossJoin(F.broadcast(a_tot))
-            .select(
-                "node",
-                _rnd(
-                    F.coalesce(F.col("_s"), F.lit(0.0)) / F.col("_t")
-                ).alias("auth"),
-            )
-        )
-        raw_h = (
-            e.join(auths, e.v == auths.node)
-            .groupBy("u")
-            .agg(F.sum("auth").alias("_s"))
-        )
-        h_tot = raw_h.agg(F.sum("_s").alias("_t"))
-        prev_hubs = hubs
-        hubs = materialize(
-            nodes.join(raw_h, nodes.node == raw_h.u, "left")
-            .crossJoin(F.broadcast(h_tot))
-            .select(
-                "node",
-                _rnd(
-                    F.coalesce(F.col("_s"), F.lit(0.0)) / F.col("_t")
-                ).alias("hub"),
-            )
-        )
-        rounds_run += 1
-        if tol is not None:
-            delta = (
-                hubs.join(
-                    prev_hubs.select(
-                        "node", F.col("hub").alias("_prev")
-                    ),
-                    "node",
-                )
-                .agg(
-                    F.max(F.abs(F.col("hub") - F.col("_prev"))).alias("d")
-                )
-                .collect()[0]["d"]
-            )
-            if delta is not None and delta <= tol:
-                break
+
+    def step(hubs: DataFrame) -> DataFrame:
+        nonlocal auths
+        auths = materialize(spread(hubs, "u", "v", "hub", "auth"))
+        return spread(auths, "v", "u", "auth", "hub")
+
+    hubs = nodes.select("node", F.lit(1.0 / n).alias("hub"))
+    hubs, rounds_run = _fixpoint(hubs, step, iters,
+                                 _max_delta_within(tol, "hub"),
+                                 op="hits", param="iters")
     out = hubs.join(auths, "node").select("node", "hub", "auth")
     if return_rounds:
         return out, rounds_run
@@ -397,14 +386,18 @@ def k_core(
     rounds). Returns (node, degree): survivors with their degree
     INSIDE the core.
 
-    ``rounds=None`` peels to the fixpoint (early-stop on unchanged
-    edge count — one driver scalar per round, the documented iterative
-    exception, same as ``connected_components``); a pinned ``rounds``
-    makes the computation closed-form unrollable for the differential
-    twin. Per round: one degree aggregation + two semi-join-shaped
-    prunes, all shuffle-partitioned on node id; the edge list only
-    shrinks, and every intermediate is materialized so lineage never
-    re-executes the peel history (the r13 graph-op lesson)."""
+    ``rounds=None`` peels to the fixpoint (early stop on an unchanged
+    edge count — one driver scalar per round) and raises ``ValueError``
+    when ``max_rounds`` is reached unconverged: peel depth is O(n) on
+    path-like graphs (each round only removes the endpoints), so a
+    capped prefix would label interior chain nodes as core members —
+    raise ``max_rounds`` or pin ``rounds``. A pinned ``rounds`` makes
+    the computation closed-form unrollable for the differential twin.
+    Either cap must be >= 1. Per round: one degree aggregation + two
+    semi-join-shaped prunes, all shuffle-partitioned on node id; the
+    edge list only shrinks, and every intermediate is materialized so
+    lineage never re-executes the peel history (the r13 graph-op
+    lesson)."""
     # materialize the CLEANED INPUT before symmetrizing: the union's two
     # branches are separate physical plans, so an expensive caller
     # lineage (e.g. WARC→extract_links) would execute TWICE inside the
@@ -416,22 +409,11 @@ def k_core(
         .select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .na.drop()
     )
-    und = materialize(directed.unionByName(
+    und = directed.unionByName(
         directed.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).distinct())
-    n_edges = und.count()
-    rounds_run = 0
-    # validate the fixpoint budget BEFORE the loop (ADVICE r14): with
-    # rounds=None and max_rounds<1 the body never runs, so the
-    # non-convergence raise below would hit an unbound n_pruned
-    # (NameError instead of the intended diagnostic)
-    if rounds is None and int(max_rounds) < 1:
-        raise ValueError(
-            f"k_core: max_rounds must be >= 1 when peeling to the "
-            f"fixpoint (got {max_rounds})"
-        )
-    cap = int(rounds) if rounds is not None else int(max_rounds)
-    while rounds_run < cap:
+    ).distinct()
+
+    def step(und: DataFrame) -> DataFrame:
         # materialized per round: the degree aggregate feeds BOTH
         # endpoint prunes, and Spark does not reuse the exchange across
         # the two semi-join build sides (plan-verified: 2x HashAggregate
@@ -443,34 +425,27 @@ def k_core(
             .filter(F.col("_deg") >= k)
             .select("u")
         )
-        pruned = materialize(
+        return (
             und.join(keep, "u", "left_semi")
-            .join(
-                keep.select(F.col("u").alias("v")), "v", "left_semi"
-            )
+            .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
             .select("u", "v")
         )
-        rounds_run += 1
-        n_pruned = pruned.count()
-        und = pruned
-        if rounds is None and n_pruned == n_edges:
-            converged = True
-            break
-        n_edges = n_pruned
+
+    if rounds is None:
+        sizes = []
+
+        def done(prev: DataFrame, pruned: DataFrame) -> bool:
+            # one count per round (plus the pinned start's, once): each
+            # round's size is remembered for the next comparison
+            if not sizes:
+                sizes.append(prev.count())
+            sizes.append(pruned.count())
+            return sizes[-1] == sizes[-2]
+
+        cap, param = max_rounds, "max_rounds"
     else:
-        converged = rounds is not None
-    if rounds is None and not converged:
-        # peel depth is O(n) on path-like graphs (each round only
-        # removes the endpoints), NOT logarithmic like pointer-jumping
-        # components — a silently returned 50-round prefix would label
-        # interior chain nodes as core members. Raising beats warning
-        # (the _check_rounding_resolution convention): the caller
-        # raises max_rounds or pins rounds= explicitly.
-        raise ValueError(
-            f"k_core: no fixpoint within max_rounds={max_rounds} "
-            f"({n_pruned} edges still peeling); raise max_rounds or "
-            "pass rounds= to accept a pinned-prefix peel"
-        )
+        done, cap, param = None, rounds, "rounds"
+    und, rounds_run = _fixpoint(und, step, cap, done, op="k_core", param=param)
     out = (
         und.groupBy("u")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))

@@ -2335,23 +2335,29 @@ def flac_streaminfo(blob: bytes):
 
 
 def mp3_header_info(blob: bytes):
-    """MP3 metadata from the first MPEG-1 Layer III frame header (after
-    an optional ID3v2 tag): (sample_rate, channels, bitrate_kbps,
-    est_duration_s). Duration comes from the Xing/Info VBR header's
-    frame count when present (exact for the dominant VBR encodes, r7);
-    otherwise the CBR estimate audio_bytes*8/bitrate, with an ID3v1
-    trailer excluded from the byte count. None for non-MP3 input."""
+    """MPEG-1 audio metadata from the first Layer I or Layer III frame
+    header (the layers the decoder reads; after an optional ID3v2 tag):
+    (sample_rate, channels, bitrate_kbps, est_duration_s). Layer III
+    duration comes from the Xing/Info VBR header's frame count when
+    present (exact for the dominant VBR encodes, r7); otherwise the CBR
+    estimate audio_bytes*8/bitrate, with an ID3v1 trailer excluded from
+    the byte count. Layer I has no VBR tag: its duration counts whole
+    frames of the first frame's size at 384 samples each (exact for an
+    unpadded stream). None for non-MPEG input."""
     pos = _skip_id3(blob)[0] if len(blob) > 10 else 0  # ID3v2 tag
     # scan a bounded window for the frame sync (junk prefixes exist)
     end = min(len(blob) - 4, pos + 4096)
     while pos <= end:
         hdr = parse_frame_header(blob, pos)
-        if hdr is not None and hdr["layer"] == 3:
+        if hdr is not None and hdr["layer"] != 2:
             rate, channels = hdr["samplerate"], hdr["channels"]
             br = hdr["bitrate"] // 1000
             audio_bytes = len(blob) - pos
             if blob[-128:-125] == b"TAG":
                 audio_bytes -= 128  # ID3v1 trailer is not audio
+            if hdr["layer"] == 1:
+                nframes = audio_bytes // hdr["frame_bytes"]
+                return (rate, channels, br, round(nframes * 384 / rate, 6))
             dur = round(audio_bytes * 8 / (br * 1000), 6)
             # VBR: a Xing/Info header in the first frame's side-info
             # region carries the TRUE frame count (the CBR estimate is

@@ -1591,6 +1591,28 @@ class TestAudioContainerMetadata:
         rate, ch, br, _dur = got
         assert (rate, ch, br) == (44100, 2, 128)
 
+    def test_mpeg_layer1_metadata(self, spark):
+        """Layer I decodes (``decodable`` True), so its rate and
+        duration are read too, not left NULL: 1 s at 44.1 kHz is 115
+        whole 384-sample frames (the encoder pads the last one)."""
+        import numpy as np
+
+        from datamancer_spark.operators.multimodal import (
+            audio_container_metadata,
+        )
+        from tests.mpeg_encoder import encode_layer1
+
+        rate = 44100
+        t = np.arange(rate) / rate
+        blob = encode_layer1([0.5 * np.sin(2 * np.pi * 440 * t)], rate)
+        df = spark.createDataFrame(
+            [("l1.mp3", bytearray(blob))], "path string, content binary"
+        )
+        [row] = audio_container_metadata(df).collect()
+        assert row["container"] == "mp3" and row["decodable"] is True
+        assert (row["sample_rate"], row["channels"]) == (rate, 1)
+        assert row["duration_s"] == round(115 * 384 / rate, 6)
+
     def test_ogg_duration_ignores_payload_oggs_impostor(self):
         """'OggS' occurring INSIDE a compressed packet payload after
         the real last page must not hijack the duration: the impostor
