@@ -1,17 +1,23 @@
 """Approximate/exact nearest-neighbor search over embedding columns.
 
-Beyond-reference surface (BASELINE.json north star). Two tiers:
+Every kNN tier is a candidate stage followed by one shared ranking
+core. ``_top_k`` keeps each query's best ``k`` rows under one total
+order (score, then ``neighbor_id`` ascending), and ``_cosine_rerank``
+scores (query, candidate) vector pairs by the portably rounded cosine
+before ranking them. The candidate stages:
 
-1. ``knn_bruteforce`` — exact top-k by cosine: broadcast the (small) query
-   set against the corpus; per-partition partial top-k via the
-   TakeOrdered-style window, merged by one final shuffle on query id.
-   Correct at any scale where |queries| is broadcastable; cost is one
-   full corpus scan per batch of queries — the right baseline.
-
-2. ``knn_lsh`` — random-hyperplane LSH (sign-bit buckets): restricts the
-   scan to colliding buckets. Hyperplanes are derived deterministically
-   from md5 (portable, seedable) — no stored model object, so the same
-   code runs identically on every executor and in tests.
+- ``knn_bruteforce`` — exact: the (small) query set is broadcast and
+  every corpus batch keeps its local top-k, so one final shuffle on
+  query id merges them.
+- ``knn_ivf`` — the candidates are the posting lists of each query's
+  ``nprobe`` nearest centroids.
+- ``knn_lsh`` — the candidates share the query's random-hyperplane
+  bucket. Hyperplanes are md5-derived (portable, seedable), so there is
+  no stored model object.
+- ``knn_pq`` / ``knn_pq_rerank`` — asymmetric distances over packed
+  product-quantization codes, optionally reranked exactly.
+- ``knn_jl_rerank`` — a shortlist in a Johnson–Lindenstrauss sketch
+  space, reranked exactly.
 """
 
 from __future__ import annotations
@@ -32,12 +38,20 @@ from ..functions.vector import cosine
 # the query set or use the fully-relational knn_lsh path.
 DEFAULT_MAX_QUERIES = 100_000
 
+_KNN_SCHEMA = "query_id long, neighbor_id long, cos double, rank int"
+
 
 def _collect_query_rows(queries: DataFrame, id_col, vec_col, max_queries: int):
     """Collect the query side, raising (not OOMing) past the cap. The
     limit(cap+1) bounds what reaches the driver even when the check
-    fails."""
-    rows = queries.select(id_col, vec_col).limit(max_queries + 1).collect()
+    fails. A query without a vector has no neighbours, so it is dropped
+    before the cap counts."""
+    rows = (
+        queries.select(id_col, vec_col)
+        .filter(F.col(vec_col).isNotNull())
+        .limit(max_queries + 1)
+        .collect()
+    )
     if len(rows) > max_queries:
         raise ValueError(
             f"query set exceeds max_queries={max_queries}: the kNN query "
@@ -45,6 +59,62 @@ def _collect_query_rows(queries: DataFrame, id_col, vec_col, max_queries: int):
             "raise max_queries explicitly if the driver can hold them"
         )
     return rows
+
+
+def _top_k(
+    scored: DataFrame, k: int, score: str = "cos", ascending: bool = False
+) -> DataFrame:
+    """Each query's ``k`` best rows of ``scored``, numbered 1..k in
+    ``rank``. The order is ``score`` descending (ascending for a
+    distance), then ``neighbor_id`` ascending, so ties rank the same in
+    every tier and in their DuckDB twins."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _cosine_rerank(pairs: DataFrame, k: int, distinct: bool = False) -> DataFrame:
+    """Exact verify-and-rank of candidate pairs (query_id, neighbor_id,
+    qv, cv): the cosine rounded half-up to 6 decimals, so the order is
+    engine-stable, then ``_top_k``. ``distinct`` collapses repeated
+    (query, neighbour, cos) rows, which repeated input rows emit."""
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        prnd(cosine(F.col("qv"), F.col("cv")), 6).alias("cos"),
+    )
+    return _top_k(scored.distinct() if distinct else scored, k)
+
+
+def _sq_dists(V, C):
+    """(len(V), len(C)) squared L2 distances between the rows of two
+    float64 matrices."""
+    return ((V[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+
+
+def _nearest(V, C):
+    """Index of the nearest row of ``C`` for each row of ``V``; ties go
+    to the lowest index (numpy argmin), the order the oracles' row_number
+    uses."""
+    return _sq_dists(V, C).argmin(axis=1)
+
+
+def _lloyd(X, k: int, rng):
+    """Lloyd's k-means over the rows of ``X`` from ``min(k, len(X))``
+    distinct rows drawn with ``rng``. Eight rounds: codebook quality
+    plateaus early. An empty cluster keeps its centre. The caller owns
+    ``rng`` so that several codebooks trained in a row draw their seeds
+    in one fixed sequence."""
+    centers = X[rng.choice(len(X), size=min(k, len(X)), replace=False)]
+    for _ in range(8):
+        nearest = _nearest(X, centers)
+        for c in range(len(centers)):
+            members = X[nearest == c]
+            if len(members):
+                centers[c] = members.mean(axis=0)
+    return centers
 
 
 def knn_bruteforce(
@@ -72,13 +142,14 @@ def knn_bruteforce(
     under the *final* total order (rounded cos desc, id asc) — so the
     global window merge over (#batches · nq · k) rows is exact. The
     corpus is scanned once and never shuffled; only top-k candidates move."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql.types import (
         DoubleType, LongType, StructField, StructType,
     )
 
     q_rows = _collect_query_rows(queries, id_col, vec_col, max_queries)
+    if not q_rows:
+        return corpus.sparkSession.createDataFrame([], _KNN_SCHEMA)
     qids = np.array([r[0] for r in q_rows], dtype=np.int64)
     Q = np.array([r[1] for r in q_rows], dtype=np.float64)
     Q /= np.linalg.norm(Q, axis=1, keepdims=True)
@@ -134,13 +205,7 @@ def knn_bruteforce(
         .filter(F.col(vec_col).isNotNull())
         .mapInPandas(score_partition, out_schema)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k)
 
 
 def plane_matrix(num_planes: int, dim: int, seed: int = 42):
@@ -176,8 +241,13 @@ def hyperplane_bits(
     from pyspark.sql.types import LongType, StructField, StructType
 
     if dim is None:
-        first = df.select(F.size(F.col(vec_col)).alias("d")).first()
-        dim = int(first["d"])
+        # a frame without vectors gets no buckets, so needs no planes
+        first = (
+            df.filter(F.col(vec_col).isNotNull())
+            .select(F.size(F.col(vec_col)).alias("d"))
+            .first()
+        )
+        dim = int(first["d"]) if first else 0
     M = plane_matrix(num_planes, dim, seed)
     bc = df.sparkSession.sparkContext.broadcast(M)
     in_cols = df.columns
@@ -218,8 +288,6 @@ def train_codebook(
     embeddings concentrated in one mega-cluster whose O(m²) kernel
     degenerates to all-pairs (measured 34× wall at 16× volume vs ~2×
     with trained centroids)."""
-    import numpy as np
-
     target = max(2000, 50 * num_centroids)
     # NULL vectors must never reach np.array (object-array -> Lloyd's
     # crash), matching ivf_assign/knn_bruteforce's guards.
@@ -231,18 +299,7 @@ def train_codebook(
     if len(sample_rows) < num_centroids:  # tiny corpus / too-thin sample
         sample_rows = vecs.limit(target).collect()
     X = np.array([r[0] for r in sample_rows], dtype=np.float64)
-    rng = np.random.default_rng(seed)
-    centers = X[
-        rng.choice(len(X), size=min(num_centroids, len(X)), replace=False)
-    ]
-    for _ in range(8):  # Lloyd's — codebook quality plateaus early
-        d2 = ((X[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-        assign_idx = d2.argmin(axis=1)
-        for c in range(len(centers)):
-            members = X[assign_idx == c]
-            if len(members):
-                centers[c] = members.mean(axis=0)
-    return centers
+    return _lloyd(X, num_centroids, np.random.default_rng(seed))
 
 
 def knn_ivf(
@@ -276,74 +333,37 @@ def knn_ivf(
     e.g. 1e-5). Pass ``codebook`` (array num_centroids × dim) to skip
     training entirely — the production path where the codebook is trained
     once offline and reused across query batches."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
-
     if codebook is not None:
         centers = np.asarray(codebook, dtype=np.float64)
     else:
         centers = train_codebook(
             corpus, vec_col, num_centroids, seed, sample_fraction
         )
-
-    bc_centers = corpus.sparkSession.sparkContext.broadcast(centers)
-    vec_field = corpus.schema[vec_col].dataType
-    assign_schema = StructType(
-        [
-            StructField("neighbor_id", LongType()),
-            StructField("cv", vec_field),
-            StructField("centroid", LongType()),
-        ]
-    )
-
-    # the vector rides through the Arrow batch, so assignment is a pure
-    # map — no corpus⋈corpus join-back shuffle to re-attach vectors
-    def assign_batches(batches):
-        C = bc_centers.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            V = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            d2 = ((V[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf[id_col].to_numpy().astype(np.int64),
-                    "cv": pdf[vec_col],
-                    "centroid": d2.argmin(axis=1).astype(np.int64),
-                }
-            )
-
-    assigned = corpus.select(id_col, vec_col).mapInPandas(
-        assign_batches, assign_schema
+    assigned = ivf_assign(corpus, centers, vec_col, id_col).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), "centroid"
     )
     q_rows = _collect_query_rows(queries, id_col, vec_col, max_queries)
-    probe_rows = []
-    for r in q_rows:
-        qv = np.asarray(r[1], dtype=np.float64)
-        d = ((centers - qv) ** 2).sum(axis=1)
-        for c in np.argsort(d)[:nprobe]:
-            probe_rows.append((int(r[0]), int(c)))
     spark = corpus.sparkSession
-    if not probe_rows:  # empty query set → empty result with the contract schema
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cos double, rank int"
-        )
-    probes = spark.createDataFrame(probe_rows, ["query_id", "centroid"])
-    qside = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    ).join(probes, "query_id")
-
-    scored = (
-        assigned.join(F.broadcast(qside), "centroid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", prnd(cosine(F.col("qv"), F.col("cv")), 6))
-        .select("query_id", "neighbor_id", "cos")
+    if not q_rows:
+        return spark.createDataFrame([], _KNN_SCHEMA)
+    Q = np.array([r[1] for r in q_rows], dtype=np.float64)
+    probes = spark.createDataFrame(
+        [
+            (int(r[0]), int(c))
+            for r, d in zip(q_rows, _sq_dists(Q, centers))
+            for c in np.argsort(d)[:nprobe]
+        ],
+        "query_id long, centroid long",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
+    qside = (
+        queries.filter(F.col(vec_col).isNotNull())
+        .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+        .join(probes, "query_id")
     )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    pairs = assigned.join(F.broadcast(qside), "centroid").filter(
+        F.col("query_id") != F.col("neighbor_id")
+    )
+    return _cosine_rerank(pairs, k)
 
 
 def knn_lsh(
@@ -380,20 +400,10 @@ def knn_lsh(
             ],
         )
         qb = qb.withColumn("bucket", F.explode(probes))
-    scored = (
-        cb.join(F.broadcast(qb), "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", prnd(cosine(F.col("qv"), F.col("cv")), 6))
-        .select("query_id", "neighbor_id", "cos")
-        .distinct()
+    pairs = cb.join(F.broadcast(qb), "bucket").filter(
+        F.col("query_id") != F.col("neighbor_id")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _cosine_rerank(pairs, k, distinct=True)
 
 
 # -- Product quantization (PQ) ANN -------------------------------------------
@@ -455,21 +465,7 @@ def train_pq_codebooks(
         X /= np.linalg.norm(X, axis=1, keepdims=True)
     sub = X.shape[1] // m
     rng = np.random.default_rng(seed)
-    books = []
-    for j in range(m):
-        S = X[:, j * sub : (j + 1) * sub]
-        centers = S[
-            rng.choice(len(S), size=min(k, len(S)), replace=False)
-        ].copy()
-        for _ in range(8):
-            d2 = ((S[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-            a = d2.argmin(axis=1)
-            for c in range(len(centers)):
-                members = S[a == c]
-                if len(members):
-                    centers[c] = members.mean(axis=0)
-        books.append(centers)
-    return books
+    return [_lloyd(X[:, j * sub : (j + 1) * sub], k, rng) for j in range(m)]
 
 
 def _pq_bits(k: int) -> int:
@@ -518,9 +514,7 @@ def pq_encode(
             packed = np.zeros(len(V), dtype=np.int64)
             for j, cb in enumerate(cbs):
                 S = V[:, j * sub : (j + 1) * sub]
-                # (n, k) squared distances; argmin ties -> lowest cid
-                d = ((S[:, None, :] - cb[None, :, :]) ** 2).sum(axis=2)
-                packed |= d.argmin(axis=1).astype(np.int64) << (bits * j)
+                packed |= _nearest(S, cb).astype(np.int64) << (bits * j)
             yield pd.DataFrame(
                 {id_col: pdf[id_col], "pq_code": packed}
             )
@@ -565,8 +559,7 @@ def knn_pq(
             V = V / np.linalg.norm(V)
         for j, cb in enumerate(codebooks):
             S = V[j * sub : (j + 1) * sub]
-            d = ((cb - S[None, :]) ** 2).sum(axis=1)
-            for cid, dv in enumerate(d):
+            for cid, dv in enumerate(_sq_dists(S[None, :], cb)[0]):
                 tab_rows.append((int(qid), j, cid, float(dv)))
     spark = corpus.sparkSession
     qtab = spark.createDataFrame(
@@ -594,13 +587,7 @@ def knn_pq(
         )
         .filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(adc, k, "adc", ascending=True)
 
 
 def knn_pq_rerank(
@@ -634,19 +621,8 @@ def knn_pq_rerank(
     qvecs = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
-    scored = (
-        cand.join(vecs, "neighbor_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .withColumn("cos", prnd(cosine(F.col("qv"), F.col("cv")), 6))
-        .select("query_id", "neighbor_id", "cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    pairs = cand.join(vecs, "neighbor_id").join(F.broadcast(qvecs), "query_id")
+    return _cosine_rerank(pairs, k)
 
 
 def mine_bitext(
@@ -729,7 +705,6 @@ def ivf_assign(
     numpy argmin and the oracle's row_number order). One Arrow-batched
     map over the scan — the vector rides through the batch, so there is
     NO join-back shuffle. Output: (id, vec, centroid)."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
@@ -752,12 +727,11 @@ def ivf_assign(
             if pdf.empty:
                 continue
             V = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            d2 = ((V[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy().astype(np.int64),
                     vec_col: pdf[vec_col],
-                    "centroid": d2.argmin(axis=1).astype(np.int64),
+                    "centroid": _nearest(V, C).astype(np.int64),
                 }
             )
 
@@ -912,22 +886,22 @@ def hashed_embedding(
     return g.select(F.col(id_col), unit.alias("embedding"))
 
 
-def _derive_dim(df: DataFrame, vec_col: str, op: str) -> int:
-    """Deterministic vector-dimension derivation (ADVICE r12): a
-    ``.first()`` on a distributed frame is plan/partition-order
-    dependent, so on a mixed-dimension corpus the chosen dim — and
-    therefore WHICH rows silently survive a size filter — would vary
-    run to run. Instead aggregate min/max of size over non-null
-    vectors and REFUSE a mixed corpus loudly; callers that genuinely
-    hold ragged vectors must pass an explicit ``dim`` (and accept the
-    documented drop of non-conforming rows)."""
-    row = df.filter(F.col(vec_col).isNotNull()).agg(
-        F.min(F.size(F.col(vec_col))).alias("lo"),
-        F.max(F.size(F.col(vec_col))).alias("hi"),
-    ).first()
-    if row is None or row["lo"] is None:
+def _size_range(df: DataFrame, vec_col: str, lo="lo", hi="hi") -> DataFrame:
+    """One-row frame: min and max vector size over non-null vectors."""
+    size = F.size(F.col(vec_col))
+    return df.filter(F.col(vec_col).isNotNull()).agg(
+        F.min(size).alias(lo), F.max(size).alias(hi)
+    )
+
+
+def _check_dim(lo, hi, op: str, vec_col: str) -> int:
+    """The vector dimension from the min/max vector sizes ``lo`` and
+    ``hi`` (``lo`` is None when no vector is non-null). Raises a
+    ValueError naming ``op`` unless all vectors share one non-zero
+    size."""
+    if lo is None:
         raise ValueError(f"{op}: no non-null vectors in '{vec_col}'")
-    lo, hi = int(row["lo"]), int(row["hi"])
+    lo, hi = int(lo), int(hi)
     if lo <= 0:
         raise ValueError(f"{op}: empty vectors present in '{vec_col}'")
     if lo != hi:
@@ -937,6 +911,19 @@ def _derive_dim(df: DataFrame, vec_col: str, op: str) -> int:
             "size are dropped)"
         )
     return lo
+
+
+def _derive_dim(df: DataFrame, vec_col: str, op: str) -> int:
+    """Deterministic vector-dimension derivation (ADVICE r12): a
+    ``.first()`` on a distributed frame is plan/partition-order
+    dependent, so on a mixed-dimension corpus the chosen dim — and
+    therefore WHICH rows silently survive a size filter — would vary
+    run to run. Instead aggregate min/max of size over non-null
+    vectors and REFUSE a mixed corpus loudly; callers that genuinely
+    hold ragged vectors must pass an explicit ``dim`` (and accept the
+    documented drop of non-conforming rows)."""
+    row = _size_range(df, vec_col).first()
+    return _check_dim(row["lo"], row["hi"], op, vec_col)
 
 
 def pca_power_scores(
@@ -990,11 +977,9 @@ def pca_power_scores(
         # aggregate fused into ONE job — posexplode_outer carries the
         # row's size() alongside each (pos, val), so one groupBy(_pos)
         # yields the per-position means AND the global min/max size
-        # (folded on the driver over d rows). _derive_dim's refusal
-        # semantics are preserved verbatim: no non-null vectors /
-        # empty vectors (posexplode_outer emits a NULL-pos row for
-        # size-0 arrays, so lo==0 catches them) / mixed sizes all
-        # raise the same messages. Saves one full corpus pass + one
+        # (folded on the driver over d rows) and feed _check_dim
+        # (posexplode_outer emits a NULL-pos row for size-0 arrays, so
+        # lo==0 catches them). Saves one full corpus pass + one
         # serialized driver job.
         rows = (
             emb.filter(vec.isNotNull())
@@ -1010,20 +995,12 @@ def pca_power_scores(
             )
             .collect()
         )
-        op = "pca_power_scores"
-        if not rows:
-            raise ValueError(f"{op}: no non-null vectors in '{vec_col}'")
-        lo = min(int(r["_lo"]) for r in rows)
-        hi = max(int(r["_hi"]) for r in rows)
-        if lo <= 0:
-            raise ValueError(f"{op}: empty vectors present in '{vec_col}'")
-        if lo != hi:
-            raise ValueError(
-                f"{op}: mixed vector sizes in '{vec_col}' ({lo}..{hi}); "
-                "pass an explicit dim= to select one (rows of any other "
-                "size are dropped)"
-            )
-        dim = lo
+        dim = _check_dim(
+            min((r["_lo"] for r in rows), default=None),
+            max((r["_hi"] for r in rows), default=None),
+            "pca_power_scores",
+            vec_col,
+        )
         x = emb.filter(vec.isNotNull() & (F.size(vec) == dim))
         m = [0.0] * dim
         for r in rows:
@@ -1133,7 +1110,12 @@ def ann_recall(
     # windows, scans and all — appeared twice in the executed plan, 0
     # ReusedExchange), so pin the |queries|×k candidate list once.
     # Bounded state: k rows per query by the kNN contract — never
-    # corpus-sized.
+    # corpus-sized. A/B, plan build + collect on 4 vCPUs, medians
+    # pinned vs lazy: at sf0.1 (20 alternating pairs) 1.66/1.48 s for
+    # ann_recall_lsh, 1.91/1.86 s for ann_recall_ivf and 2.53/2.52 s
+    # for ann_recall_jl; on a 50k x 64 corpus (6 pairs) 2.81/2.78,
+    # 3.48/3.30 and 4.99/5.38 s. Lazy re-runs the approximate tier, a
+    # cost that grows with the corpus; the pin costs one job.
     a = materialize(
         approx.select(
             F.col(query_col).alias("_q"), F.col(neighbor_col).alias("_n")
@@ -1254,8 +1236,6 @@ def knn_jl_rerank(
     engines — the property the differential twin checks. Output:
     (query_id, neighbor_id, cos, rank) — same contract as the other
     kNN tiers, so ``ann_recall`` evaluates it unchanged."""
-    from ..functions.vector import cosine
-
     # The corpus-wide pass must touch ONLY the out_dim-d sketch (ADVICE
     # r12): carrying the full-width vectors through the crossJoin and
     # the shortlist window shuffle would move 64-d payloads corpus-wide
@@ -1274,39 +1254,16 @@ def knn_jl_rerank(
     # queries min/max-size aggregates are independent 1-row frames, so
     # a crossJoin evaluates them in a single action instead of two
     # serialized driver jobs (~0.3-0.5 s of fixed job-launch latency
-    # each). Error semantics preserved: corpus-side errors first, same
-    # messages as _derive_dim.
+    # each). Corpus-side errors are raised first.
     both = (
-        corpus.filter(F.col(vec_col).isNotNull())
-        .agg(
-            F.min(F.size(F.col(vec_col))).alias("lo"),
-            F.max(F.size(F.col(vec_col))).alias("hi"),
-        )
-        .crossJoin(
-            queries.filter(F.col(vec_col).isNotNull()).agg(
-                F.min(F.size(F.col(vec_col))).alias("qlo"),
-                F.max(F.size(F.col(vec_col))).alias("qhi"),
-            )
-        )
+        _size_range(corpus, vec_col)
+        .crossJoin(_size_range(queries, vec_col, "qlo", "qhi"))
         .first()
     )
-
-    def _check(lo, hi, op: str) -> int:
-        if lo is None:
-            raise ValueError(f"{op}: no non-null vectors in '{vec_col}'")
-        lo, hi = int(lo), int(hi)
-        if lo <= 0:
-            raise ValueError(f"{op}: empty vectors present in '{vec_col}'")
-        if lo != hi:
-            raise ValueError(
-                f"{op}: mixed vector sizes in '{vec_col}' ({lo}..{hi}); "
-                "pass an explicit dim= to select one (rows of any other "
-                "size are dropped)"
-            )
-        return lo
-
-    dim = _check(both["lo"], both["hi"], "knn_jl_rerank(corpus)")
-    qdim = _check(both["qlo"], both["qhi"], "knn_jl_rerank(queries)")
+    dim = _check_dim(both["lo"], both["hi"], "knn_jl_rerank(corpus)", vec_col)
+    qdim = _check_dim(
+        both["qlo"], both["qhi"], "knn_jl_rerank(queries)", vec_col
+    )
     if qdim != dim:
         raise ValueError(
             f"knn_jl_rerank: corpus dim {dim} != queries dim {qdim}; "
@@ -1315,54 +1272,27 @@ def knn_jl_rerank(
     cp = jl_project(
         corpus, out_dim=out_dim, vec_col=vec_col, id_col=id_col,
         seed=seed, dim=dim,
-    ).select(
-        F.col(id_col).alias("_cid"),
-        F.col("jl").alias("_cj"),
-    )
+    ).select(F.col(id_col).alias("neighbor_id"), F.col("jl").alias("cv"))
     qp = jl_project(
         queries, out_dim=out_dim, vec_col=vec_col, id_col=id_col,
         seed=seed, dim=dim,
-    ).select(
-        F.col(id_col).alias("query_id"),
-        F.col("jl").alias("_qj"),
-    )
+    ).select(F.col(id_col).alias("query_id"), F.col("jl").alias("qv"))
     pairs = cp.crossJoin(F.broadcast(qp))
     if exclude_self:
-        pairs = pairs.filter(F.col("_cid") != F.col("query_id"))
-    sk = prnd(cosine(F.col("_qj"), F.col("_cj")), 6)
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("_sk").desc(), F.col("_cid").asc()
-    )
-    short = (
-        pairs.withColumn("_sk", sk)
-        .withColumn("_srank", F.row_number().over(w1))
-        .filter(F.col("_srank") <= shortlist_factor * k)
-        .select("query_id", "_cid")
+        pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
+    short = _cosine_rerank(pairs, shortlist_factor * k).select(
+        "query_id", "neighbor_id"
     )
     # full vectors rejoin the BOUNDED shortlist (|queries|×sf×k rows):
     # broadcast the shortlist against the corpus so the wide vectors
     # are read once, shuffle-free, for only the surviving candidates.
     cv = corpus.select(
-        F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv")
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
     qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
-    short = cv.join(F.broadcast(short), "_cid").join(
+    pairs = cv.join(F.broadcast(short), "neighbor_id").join(
         F.broadcast(qv), "query_id"
     )
-    ex = prnd(cosine(F.col("_qv"), F.col("_cv")), 6)
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("_cid").asc()
-    )
-    return (
-        short.withColumn("cos", ex)
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("_cid").alias("neighbor_id"),
-            "cos",
-            "rank",
-        )
-    )
+    return _cosine_rerank(pairs, k)

@@ -412,15 +412,17 @@ def streaming_fuzzy_screen(
     from ..operators.dedup import (
         hash32,
         band_hash_columns,
+        shingles_from_tokens,
         sig_from_shingle_hashes,
-        word_shingles,
+        tokens,
     )
 
-    shs = F.transform(
-        word_shingles(F.col(text_col), shingle_n), lambda s: hash32(s)
-    )
+    # tokens in their own projection: shingling reads the token array
+    # once per shingle (see shingles_from_tokens)
+    toks = stream.withColumn("_toks", tokens(F.col(text_col)))
+    shs = F.transform(shingles_from_tokens(F.col("_toks"), shingle_n), hash32)
     sig = sig_from_shingle_hashes(shs, num_hashes)
-    out = stream.withColumns(
+    out = toks.withColumns(
         {
             f"bhash_{b}": c
             for b, c in enumerate(band_hash_columns(sig, num_hashes, bands))
@@ -437,7 +439,7 @@ def streaming_fuzzy_screen(
         hit_cols.append(f"_hit{b}")
     novel = F.coalesce(*[F.col(h) for h in hit_cols]).isNull()
     kept = out.filter(novel if emit == "survivors" else ~novel)
-    return kept.drop(*hit_cols, *[f"bhash_{b}" for b in range(bands)])
+    return kept.drop("_toks", *hit_cols, *[f"bhash_{b}" for b in range(bands)])
 
 
 def streaming_span_hits(

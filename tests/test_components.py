@@ -190,11 +190,13 @@ def test_pagerank_early_stop_matches_fixed_at_convergence(spark):
     nothing at the fixed point)."""
     from datamancer_spark.operators.components import pagerank
 
-    # ring + chords: converges quickly under 1e-6 rounding
+    # ring + spokes: the spokes make in-flows uneven, so the start
+    # vector (uniform) is not stationary and the early stop needs
+    # several rounds under 1e-6 rounding
     n = 20
     edges = spark.createDataFrame(
         [(i, (i + 1) % n) for i in range(n)]
-        + [(i, (i * 7 + 3) % n) for i in range(n)],
+        + [(i, i % 4) for i in range(n)],
         "src long, dst long",
     )
     fixed = {
@@ -208,6 +210,7 @@ def test_pagerank_early_stop_matches_fixed_at_convergence(spark):
     )
     got = {r["node"]: r["rank"] for r in early.collect()}
     assert got == fixed
+    assert rounds > 1, "the start vector was already stationary"
     assert rounds < 60, "early stop never fired"
     # the scaling story: a conservative fixed cap wastes (60 - rounds)
     # full edge-join rounds after convergence

@@ -226,9 +226,9 @@ def test_knn_ivf_source_has_no_corpus_orderby():
 
     from datamancer_spark.operators import similarity
 
-    src = inspect.getsource(similarity.knn_ivf)
-    # the only orderBy allowed is the final per-query ranking WINDOW;
-    # the corpus itself must never be sorted for sampling
+    # the sampling lives in train_codebook, which knn_ivf calls; the
+    # corpus itself must never be sorted for sampling
+    src = inspect.getsource(similarity.train_codebook)
     assert "orderBy(F.abs" not in src
     assert ".sample(" in src
 

@@ -716,6 +716,59 @@ class TestNullTextRobustness:
         buckets = hyperplane_bits(emb, num_planes=4, dim=2)
         assert {r["vec_id"] for r in buckets.collect()} == {1, 2}
 
+    def test_null_vectors_excluded_from_knn_ivf(self, spark):
+        """A corpus row without a vector is no candidate (one Arrow
+        batch holding it used to crash the centroid assignment)."""
+        import numpy as np
+        from datamancer_spark.operators.similarity import knn_ivf
+
+        emb = spark.createDataFrame(
+            [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, None), (4, [0.0, 1.0])],
+            "vec_id long, embedding array<double>",
+        ).coalesce(1)
+        q = emb.filter("vec_id = 1")
+        codebook = np.array([[1.0, 0.0], [0.0, 1.0]])
+        got = knn_ivf(emb, q, k=5, nprobe=2, codebook=codebook).collect()
+        assert {r["neighbor_id"] for r in got} == {2, 4}
+        assert all(r["cos"] is not None for r in got)
+
+    def test_null_query_vectors_dropped_by_every_knn_tier(self, spark):
+        """A query without a vector has no neighbours: every tier drops
+        it, and the max_queries cap counts only queries with a vector."""
+        import numpy as np
+        from datamancer_spark.operators.similarity import (
+            knn_bruteforce,
+            knn_ivf,
+            knn_lsh,
+            knn_pq,
+            pq_codebooks,
+        )
+
+        corpus = spark.createDataFrame(
+            [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0])],
+            "vec_id long, embedding array<double>",
+        )
+        # the NULL query first, in one partition, so no tier can get
+        # past it by reading the other row first
+        queries = spark.createDataFrame(
+            [(11, None), (10, [1.0, 0.1])],
+            "vec_id long, embedding array<double>",
+        ).coalesce(1)
+        codebook = np.array([[1.0, 0.0], [0.0, 1.0]])
+        books = pq_codebooks(m=1, k=2, dim=2)
+        tiers = {
+            "brute": lambda q: knn_bruteforce(corpus, q, k=3, max_queries=1),
+            "ivf": lambda q: knn_ivf(
+                corpus, q, k=3, nprobe=2, codebook=codebook, max_queries=1
+            ),
+            "lsh": lambda q: knn_lsh(corpus, q, k=3, num_planes=1),
+            "pq": lambda q: knn_pq(corpus, q, books, k=3, max_queries=1),
+        }
+        for name, run in tiers.items():
+            got = run(queries).collect()
+            assert {r["query_id"] for r in got} == {10}, name
+            assert run(queries.filter("vec_id = 11")).collect() == [], name
+
 
 class TestBloomPrescreen:
     """r10 Bloom tier: no false negatives ever, plan adds zero
