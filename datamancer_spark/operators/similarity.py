@@ -346,13 +346,15 @@ def knn_ivf(
     spark = corpus.sparkSession
     if not q_rows:
         return spark.createDataFrame([], _KNN_SCHEMA)
-    Q = np.array([r[1] for r in q_rows], dtype=np.float64)
+
+    def nearest_centroids(v):
+        # One query at a time: O(num_centroids·dim) driver memory, not a
+        # (queries × centroids × dim) temporary at the max_queries cap.
+        d = _sq_dists(np.asarray(v, dtype=np.float64)[None, :], centers)[0]
+        return np.argsort(d)[:nprobe]
+
     probes = spark.createDataFrame(
-        [
-            (int(r[0]), int(c))
-            for r, d in zip(q_rows, _sq_dists(Q, centers))
-            for c in np.argsort(d)[:nprobe]
-        ],
+        [(int(r[0]), int(c)) for r in q_rows for c in nearest_centroids(r[1])],
         "query_id long, centroid long",
     )
     qside = (
@@ -886,11 +888,12 @@ def hashed_embedding(
     return g.select(F.col(id_col), unit.alias("embedding"))
 
 
-def _size_range(df: DataFrame, vec_col: str, lo="lo", hi="hi") -> DataFrame:
-    """One-row frame: min and max vector size over non-null vectors."""
+def _size_range(df: DataFrame, vec_col: str) -> DataFrame:
+    """One-row frame (lo, hi): min and max vector size over non-null
+    vectors."""
     size = F.size(F.col(vec_col))
     return df.filter(F.col(vec_col).isNotNull()).agg(
-        F.min(size).alias(lo), F.max(size).alias(hi)
+        F.min(size).alias("lo"), F.max(size).alias("hi")
     )
 
 
@@ -1257,7 +1260,7 @@ def knn_jl_rerank(
     # each). Corpus-side errors are raised first.
     both = (
         _size_range(corpus, vec_col)
-        .crossJoin(_size_range(queries, vec_col, "qlo", "qhi"))
+        .crossJoin(_size_range(queries, vec_col).toDF("qlo", "qhi"))
         .first()
     )
     dim = _check_dim(both["lo"], both["hi"], "knn_jl_rerank(corpus)", vec_col)
