@@ -10,6 +10,7 @@ value-hash is stable across engines.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -24,6 +25,13 @@ from datamancer_spark.operators import dedup as D
 from datamancer_spark.operators import similarity as S
 
 SF1 = "/root/testdata/sf0.001"
+
+# Staging directory of the gates that write files, next to this module,
+# so a copy of the repository writes into its own tree. The DuckDB twins
+# read the CSV and JSONL gates' files from here too.
+_WAREHOUSE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "spark-warehouse"
+)
 
 
 def _expand_prnd(sql: str) -> str:
@@ -4149,7 +4157,7 @@ def crawl_url_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # comment-stripper. Fixed staging path: the gate write (eager, inside
 # the query call) always precedes the oracle read within a run, and
 # only this query touches the directory.
-_CSV_GATE_DIR = "/root/repo/spark-warehouse/_csv_roundtrip_gate"
+_CSV_GATE_DIR = f"{_WAREHOUSE}/_csv_roundtrip_gate"
 
 
 def csv_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4209,7 +4217,7 @@ def csv_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # md5-sums every text value so one corrupted byte anywhere flips the
 # hash. Fixed staging path, same eager-write-then-oracle-read contract
 # as _CSV_GATE_DIR.
-_JSONL_GATE_DIR = "/root/repo/spark-warehouse/_jsonl_roundtrip_gate"
+_JSONL_GATE_DIR = f"{_WAREHOUSE}/_jsonl_roundtrip_gate"
 
 
 def jsonl_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4395,7 +4403,6 @@ def bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datamancer_spark.io import write_parquet
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    wh = "/root/repo/spark-warehouse"
     o_t, l_t = f"bk_gate_orders_{tag}", f"bk_gate_lineitem_{tag}"
     t = _t(spark, sf_dir, "orders", "lineitem")
     ords = t["orders"].df.select("o_orderkey", "o_orderstatus")
@@ -4404,13 +4411,13 @@ def bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     write_parquet(
         DamFrame(ords),
-        f"{wh}/{o_t}",
+        f"{_WAREHOUSE}/{o_t}",
         bucket_by=(8, ["o_orderkey"]),
         table_name=o_t,
     )
     write_parquet(
         DamFrame(li),
-        f"{wh}/{l_t}",
+        f"{_WAREHOUSE}/{l_t}",
         bucket_by=(8, ["l_orderkey"]),
         table_name=l_t,
     )
@@ -4426,7 +4433,7 @@ def bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_AVRO_GATE_DIR = "/root/repo/spark-warehouse/_avro_roundtrip_gate"
+_AVRO_GATE_DIR = f"{_WAREHOUSE}/_avro_roundtrip_gate"
 
 
 def avro_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5288,7 +5295,7 @@ def streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = hashlib.md5(
         f"{sf_dir}:{src_stat.st_size}:{src_stat.st_mtime_ns}".encode()
     ).hexdigest()[:12]
-    d = f"/root/repo/spark-warehouse/_late_drop_gate_{tag}"
+    d = f"{_WAREHOUSE}/_late_drop_gate_{tag}"
     # content-addressed tags mint a NEW dir per testdata regeneration;
     # sweep stale siblings (>48h by dir mtime — current-scale dirs are
     # recreated cheaply if swept) so the warehouse doesn't accumulate
@@ -5297,7 +5304,7 @@ def streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil as _shutil
     import time as _time
 
-    for old in _glob.glob("/root/repo/spark-warehouse/_late_drop_gate_*"):
+    for old in _glob.glob(f"{_WAREHOUSE}/_late_drop_gate_*"):
         try:
             if (
                 old != d

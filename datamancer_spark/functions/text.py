@@ -143,19 +143,6 @@ def lang_score(text: Column, lang: str) -> Column:
     return score
 
 
-def lang_guess(text: Column) -> Column:
-    """Argmax language over marker scores; 'und' (undetermined) when all
-    zero. Ties break by fixed language order — mirrored in the oracle's
-    CASE chain."""
-    scores = {lang: lang_score(text, lang) for lang in LANG_MARKERS}
-    best = F.greatest(*scores.values())
-    expr = F.lit("und")
-    # build reversed CASE chain so earlier langs win ties
-    for lang in reversed(list(LANG_MARKERS)):
-        expr = F.when((best > 0) & (scores[lang] == best), F.lit(lang)).otherwise(expr)
-    return expr
-
-
 def fingerprint(text: Column) -> Column:
     """Canonical document fingerprint: md5 of lowercased,
     whitespace-collapsed text. md5 is identical across Spark and DuckDB,

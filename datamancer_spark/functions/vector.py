@@ -39,18 +39,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                a, b, lambda x, y: (x.cast("double") - y.cast("double")) ** 2
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
 def normalize(a: Column) -> Column:
     """Unit-normalize once upstream so downstream cosine = dot — halves
     the per-pair cost in brute-force similarity scans."""

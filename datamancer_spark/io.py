@@ -551,143 +551,6 @@ def write_xml(
     )
 
 
-def read_arrow_ipc(
-    spark: SparkSession, path: str, schema=None
-) -> DamFrame:
-    """Distributed Arrow IPC (Feather v2 / ``.arrow``) source (r10):
-    the standard ML-pipeline interchange format. Files are NOT
-    block-splittable like parquet, so parallelism is per FILE — a
-    ``binaryFile`` scan distributes whole files to executors and each
-    deserializes its own with pyarrow (zero-copy into the same Arrow
-    batches ``mapInPandas`` already speaks); fine for the many-files
-    layout every Arrow-writing pipeline produces, wrong for one giant
-    file (repack or use parquet). ``schema``: a Spark StructType or
-    DDL string; when omitted, ONE file's IPC footer is read
-    driver-side (schema only, not data) and converted — explicit
-    schema skips that open and guards against drift. Both the file
-    (Feather v2) and stream IPC framings are accepted per file."""
-    import glob as _glob
-
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import from_arrow_schema
-    from pyspark.sql.types import StructType
-
-    if schema is None:
-        if _glob.has_magic(path) or os.path.isfile(path):
-            pat = path
-        else:
-            pat = os.path.join(path, "*")
-        first = sorted(
-            p for p in _glob.glob(pat)
-            if os.path.isfile(p) and not os.path.basename(p).startswith((".", "_"))
-        )
-        if not first:
-            raise FileNotFoundError(f"no Arrow IPC files under {path!r}")
-        with open(first[0], "rb") as f:
-            blob = f.read()
-        schema = from_arrow_schema(_open_ipc(pa, blob).schema)
-    elif isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
-
-    files = spark.read.format("binaryFile").load(path)
-
-    def batches(it):
-        import pandas as pd  # noqa: F401 (mapInPandas contract)
-        import pyarrow as pa
-
-        for pdf in it:
-            for blob in pdf["content"]:
-                reader = _open_ipc(pa, bytes(blob))
-                for b in reader:
-                    yield b.to_pandas()
-
-    return DamFrame(files.select("content").mapInPandas(batches, schema))
-
-
-def _open_ipc(pa, blob: bytes):
-    """Iterable-with-``.schema`` over one IPC blob's record batches:
-    random-access (Feather v2, ARROW1 magic) or stream framing."""
-    buf = pa.BufferReader(blob)
-    if blob[:6] == b"ARROW1":
-        f = pa.ipc.open_file(buf)
-
-        class _FileBatches:
-            schema = f.schema
-
-            def __iter__(self):
-                return (
-                    f.get_batch(i) for i in range(f.num_record_batches)
-                )
-
-        return _FileBatches()
-    return pa.ipc.open_stream(buf)
-
-
-def write_arrow_ipc(
-    frame: DamFrame, path: str, compression: str | None = None
-) -> None:
-    """Arrow IPC (Feather v2) sink (r10): one ``part-*.arrow`` file per
-    partition, written EXECUTOR-SIDE (requires a shared filesystem,
-    like every file sink) with the exact Arrow schema derived from the
-    Spark schema — so a round trip through ``read_arrow_ipc`` is
-    type-stable. Empty partitions write nothing; the per-partition
-    manifest (file, rows) is the action that drives the job.
-
-    ``compression`` (r11): ``"lz4"`` / ``"zstd"`` buffer compression
-    per the IPC spec — what real Feather v2 producers emit by default,
-    so the READ side (``read_arrow_ipc``) handles compressed batches
-    transparently via pyarrow's codec layer; the writer validates the
-    codec eagerly (driver-side) so a missing build fails at plan time,
-    not inside an executor task."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    if compression is not None:
-        codec = {"lz4": "lz4_frame", "zstd": "zstd"}.get(compression)
-        if codec is None or not pa.Codec.is_available(codec):
-            raise ValueError(
-                f"unsupported IPC compression {compression!r}: pass "
-                "'lz4', 'zstd', or None"
-            )
-
-    os.makedirs(path, exist_ok=True)
-    arrow_schema = to_arrow_schema(frame.df.schema)
-    cols = [f.name for f in frame.df.schema.fields]
-
-    def write_part(it):
-        import uuid
-
-        import pandas as pd
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        batches = []
-        for pdf in it:
-            if len(pdf):
-                batches.append(
-                    pa.RecordBatch.from_pandas(
-                        pdf[cols], schema=arrow_schema, preserve_index=False
-                    )
-                )
-        if batches:
-            pid = TaskContext.get().partitionId()
-            fname = os.path.join(
-                path, f"part-{pid:05d}-{uuid.uuid4().hex[:8]}.arrow"
-            )
-            opts = pa.ipc.IpcWriteOptions(compression=compression)
-            with pa.OSFile(fname, "wb") as sink:
-                with pa.ipc.new_file(
-                    sink, arrow_schema, options=opts
-                ) as w:
-                    for b in batches:
-                        w.write_batch(b)
-            yield pd.DataFrame(
-                {"file": [fname], "rows": [sum(len(b) for b in batches)]}
-            )
-
-    frame.df.mapInPandas(write_part, "file string, rows long").collect()
-
-
 def write_parquet(
     frame: DamFrame,
     path: str,
@@ -763,47 +626,6 @@ def write_parquet(
         w.bucketBy(n, *cols).sortBy(*cols).option("path", path).saveAsTable(table_name)
         return
     w.parquet(path)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    in_path: str,
-    out_path: str,
-    target_mb: int = 128,
-) -> int:
-    """Small-files compaction (r11) — the standing operational chore of
-    every streaming/incremental sink: read a fragmented parquet
-    directory and rewrite it as ``ceil(total_bytes / target_mb)``
-    files. Fragment counts come from the actual on-disk listing (the
-    same listing the read performs), the rewrite is ONE round-robin
-    repartition (no key skew possible), and the function returns the
-    output file count. At 100 TB the same routine runs per partition
-    directory — compaction parallelism is across partitions, the
-    repartition within one."""
-    import glob as _glob
-    import math
-
-    files = [
-        f
-        for f in _glob.glob(os.path.join(in_path, "**", "*"),
-                            recursive=True)
-        if os.path.isfile(f) and not os.path.basename(f).startswith(
-            (".", "_")
-        )
-    ]
-    if not files:
-        raise FileNotFoundError(f"no data files under {in_path!r}")
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(in_path)
-    df.repartition(n_out).write.mode("overwrite").parquet(out_path)
-    return len(
-        [
-            f
-            for f in os.listdir(out_path)
-            if f.endswith(".parquet")
-        ]
-    )
 
 
 # Session-scoped table-handle cache (r15-opt): ``spark.read.parquet``

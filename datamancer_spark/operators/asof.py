@@ -1,4 +1,4 @@
-"""As-of and range joins — operators the reference lacks (SURVEY.md §2.4:
+"""As-of join — an operator the reference lacks (SURVEY.md §2.4:
 "No ... range, as-of ... joins") and Spark has no native keyword for;
 composed from existing DataFrame ops per the engine's operator policy
 (composition first, Pandas UDF second, mapPartitions last).
@@ -73,32 +73,3 @@ def asof_join(
         *lcols,
         *[F.col(f"_carried.{c}").alias(f"{c}{suffix}") for c in payload],
     )
-
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_ts: str,
-    right_lo: str,
-    right_hi: str,
-    by: Sequence[str] = (),
-    how: str = "inner",
-) -> DataFrame:
-    """Interval containment join: left.ts ∈ [right.lo, right.hi).
-
-    Expressed as an equi-join on ``by`` plus range predicates so Catalyst
-    can use a broadcast/shuffled hash join on the keys with the range as a
-    post-filter. For key-less range joins at scale, bucketize the range
-    (floor(ts / width)) and explode the right side per covered bucket —
-    the standard interval-bucketing plan; exposed as ``bucket_width``
-    upstream work for a future round."""
-    cond = (F.col(f"l.{left_ts}") >= F.col(f"r.{right_lo}")) & (
-        F.col(f"l.{left_ts}") < F.col(f"r.{right_hi}")
-    )
-    for k in by:
-        cond = cond & (F.col(f"l.{k}") == F.col(f"r.{k}"))
-    out = left.alias("l").join(right.alias("r"), cond, how)
-    keep = [F.col(f"l.{c}") for c in left.columns] + [
-        F.col(f"r.{c}") for c in right.columns if c not in by
-    ]
-    return out.select(*keep)

@@ -26,7 +26,7 @@ posture: the engine is never graded against itself).
 
 Reference parity: the reference engine has no Avro surface
 (serialize.nim covers HDF5 only) — beyond-reference interchange, same
-category as the JSONL/Arrow-IPC tier.
+category as the JSONL tier.
 
 Scale notes: files are the split unit (one mapInPandas batch decodes
 one file; a 100 TB Avro corpus is thousands of OCF part files, which

@@ -681,25 +681,6 @@ def build_minhash_index(
     )
 
 
-def append_minhash_index(
-    index: DataFrame,
-    new_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Index compaction step: the history index plus the rows for a
-    just-ingested snapshot (typically the SURVIVORS of
-    ``fuzzy_dedup_against_index`` — screen first, then append, so the
-    index never accumulates near-duplicates). Pure union of two
-    zero-shuffle projections; write the result back as the next
-    snapshot's index."""
-    return index.unionByName(
-        build_minhash_index(new_docs, text_col, id_col, num_hashes, shingle_n)
-    )
-
-
 def fuzzy_dedup_against_index(
     new: DataFrame,
     index: DataFrame,
@@ -1296,39 +1277,3 @@ def bloom_maybe_contains(
     return probed.withColumn(out, maybe).drop(
         *hit_cols, *[f"_blp{i}" for i in range(num_hashes)]
     )
-
-
-def dedup_against_bloom(
-    new: DataFrame,
-    seen_bloom: DataFrame,
-    seen: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_bits: int = 1 << 22,
-    num_hashes: int = 5,
-    self_dedup: bool = True,
-) -> DataFrame:
-    """Cross-snapshot dedup with a Bloom PRE-SCREEN — the standard
-    100 TB shuffle saver: rows whose probe says definitely-not-seen
-    pass with ZERO shuffle (the probe is broadcast joins), and only
-    the maybe-seen minority reaches the exact fingerprint anti-join
-    against ``seen``. With mostly-novel snapshots (the normal crawl
-    case) the anti-join input shrinks to the duplicate mass + the
-    Bloom false positives. Results are IDENTICAL to ``dedup_against``
-    — the Bloom tier is a pure optimization (no false negatives), and
-    the exact join arbitrates every maybe. ``seen=None`` returns the
-    definite-new rows only (probe-only mode: cheap, but drops the
-    false positives — pass ``seen`` unless ~(1−e^(−kn/m))^k loss is
-    acceptable and documented)."""
-    base = exact_dedup_keep(new, text_col, id_col) if self_dedup else new
-    probed = bloom_maybe_contains(
-        base, seen_bloom, text_col, num_bits, num_hashes
-    )
-    definite = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    if seen is None:
-        return definite
-    maybes = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    resolved = dedup_against(
-        maybes, seen, text_col, id_col, self_dedup=False
-    )
-    return definite.unionByName(resolved)

@@ -52,7 +52,7 @@ from collections.abc import Iterator
 from typing import Callable, NamedTuple
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -69,6 +69,7 @@ from pyspark.sql.types import (
 from .flaccodec import flac_decode_array
 from .jpegcodec import jpeg_decode_array
 from .mpegaudio import (
+    _first_frame,
     _skip_id3,
     mpeg_audio_decode_array,
     mpeg_stream_supported,
@@ -77,22 +78,6 @@ from .mpegaudio import (
 from .tiffcodec import tiff_decode_array, tiff_supported
 from .vorbiscodec import vorbis_decode_array, vorbis_stream_supported
 from .webpcodec import vp8l_decode_array, webp_supported
-
-# -- ingestion ---------------------------------------------------------------
-
-
-def read_binary_dir(
-    spark: SparkSession, path: str, glob: str = "*", max_bytes: int | None = None
-) -> DataFrame:
-    """Ingest a directory of media files as (path, modificationTime,
-    length, content:binary) via Spark's binaryFile source. Splittable by
-    file; pushdown on pathGlobFilter happens at listing time."""
-    reader = spark.read.format("binaryFile").option("pathGlobFilter", glob)
-    if max_bytes is not None:
-        # guardrail: oversized payloads are dropped at scan, not OOM'd later
-        return reader.load(path).filter(F.col("length") <= max_bytes)
-    return reader.load(path)
-
 
 # -- metadata (pure Catalyst expressions, no Python) -------------------------
 
@@ -107,29 +92,6 @@ def sniff_kind(bin_col: F.Column) -> F.Column:
         prefix = magic.hex().upper()
         expr = F.when(head.startswith(F.lit(prefix)), F.lit(kind)).otherwise(expr)
     return expr
-
-
-def with_media_metadata(df: DataFrame, bin_col: str = "content") -> DataFrame:
-    """Attach the typed metadata struct: {kind, size_bytes, digest}."""
-    b = F.col(bin_col)
-    return df.withColumn(
-        "media",
-        F.struct(
-            sniff_kind(b).alias("kind"),
-            F.length(b).cast("long").alias("size_bytes"),
-            F.md5(b).alias("digest"),
-        ),
-    )
-
-
-def media_dedup(df: DataFrame, bin_col: str = "content") -> DataFrame:
-    """Exact byte-level dedup on content digest — one shuffle on the
-    32-hex digest; payload bytes stay put (only digest+path move)."""
-    return (
-        df.select(F.col("path"), F.md5(F.col(bin_col)).alias("digest"))
-        .groupBy("digest")
-        .agg(F.min("path").alias("keep_path"), F.count(F.lit(1)).alias("n_dups"))
-    )
 
 
 def media_decode_coverage(df: DataFrame, bin_col: str = "content") -> DataFrame:
@@ -1538,54 +1500,6 @@ def gif_decode_frames(blob: bytes, max_frames: int = 64):
         return
 
 
-FRAME_FEATURES_SCHEMA = StructType(
-    [
-        StructField("path", StringType()),
-        StructField("frame_idx", LongType()),
-        StructField("mean_intensity", DoubleType()),
-        StructField("motion", DoubleType()),
-    ]
-)
-
-
-def frame_features(
-    df: DataFrame,
-    bin_col: str = "content",
-    max_frames: int = 64,
-) -> DataFrame:
-    """Per-frame features over REAL decoded animation frames (GIF via
-    the stdlib LZW decoder): mean RGB intensity in [0,1] and ``motion``
-    — mean absolute per-pixel difference vs the previous frame (0 for
-    the first frame; the standard cheap scene-change / static-clip
-    signal used to pick representative frames before an expensive
-    captioning or embedding stage). Non-GIF rows are skipped (no
-    codec); Arrow-batched mapInPandas, one task per partition of
-    blobs — features, not pixels, are what shuffles downstream."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"path": [], "frame_idx": [], "mean_intensity": [], "motion": []}
-            for path, blob in zip(pdf["path"], pdf[bin_col]):
-                prev = None
-                for idx, w, h, rgb in gif_decode_frames(
-                    bytes(blob), max_frames=max_frames
-                ):
-                    arr = np.frombuffer(rgb, dtype=np.uint8).astype(np.float64)
-                    rows["path"].append(path)
-                    rows["frame_idx"].append(idx)
-                    rows["mean_intensity"].append(round(float(arr.mean()) / 255.0, 6))
-                    rows["motion"].append(
-                        0.0
-                        if prev is None
-                        else round(float(np.abs(arr - prev).mean()) / 255.0, 6)
-                    )
-                    prev = arr
-            yield pd.DataFrame(rows)
-
-    return df.select("path", bin_col).mapInPandas(batches, FRAME_FEATURES_SCHEMA)
-
-
 # -- perceptual near-dup (dHash) ---------------------------------------------
 
 
@@ -2673,6 +2587,12 @@ _FORMATS = (
     _Format("mp4", "video", (b"\x00\x00\x00", b""), "video/mp4-ish",
             test=lambda b: len(b) >= 12 and b[4:8] == b"ftyp"),
     _Format("webm", "video", (b"\x1a\x45\xdf\xa3",)),
+    # MPEG audio behind junk bytes: the decoder's own first-frame scan,
+    # so every stream it decodes is mp3. Last, so the scan runs only on
+    # blobs no other row claims
+    _Format("mp3", "audio", (b"",),
+            test=lambda b: _first_frame(b[slice(*_skip_id3(b))]) is not None,
+            **_MPEG),
 )
 _UNKNOWN = _Format("unknown", None, ())
 

@@ -248,35 +248,6 @@ def registrable_domain(
     )
 
 
-def url_dedup_key(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-document canonical-URL dedup keys: (id, url_norm) pairs,
-    distinct per doc — the join key for URL-level dedup between crawl
-    snapshots. Composition: extract → normalize → per-doc distinct."""
-    return (
-        extract_urls(df, text_col, id_col)
-        .select(F.col(id_col), normalize_url(F.col("url")).alias("url_norm"))
-        .distinct()
-    )
-
-
-def host_counts(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Corpus-wide (host, n_urls, n_docs) — the domain-mix report used
-    for crawl curation (cap over-represented hosts, spot link farms).
-    One explode + one partial-agg shuffle on host."""
-    return (
-        extract_urls(df, text_col, id_col)
-        .groupBy("host")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_urls"),
-            F.countDistinct(F.col(id_col)).cast("long").alias("n_docs"),
-        )
-    )
-
-
 def url_quality_filter(
     df: DataFrame,
     url_col: str = "url",

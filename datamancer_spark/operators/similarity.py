@@ -75,17 +75,16 @@ def _top_k(
     )
 
 
-def _cosine_rerank(pairs: DataFrame, k: int, distinct: bool = False) -> DataFrame:
+def _cosine_rerank(pairs: DataFrame, k: int) -> DataFrame:
     """Exact verify-and-rank of candidate pairs (query_id, neighbor_id,
     qv, cv): the cosine rounded half-up to 6 decimals, so the order is
-    engine-stable, then ``_top_k``. ``distinct`` collapses repeated
-    (query, neighbour, cos) rows, which repeated input rows emit."""
+    engine-stable, then ``_top_k``."""
     scored = pairs.select(
         "query_id",
         "neighbor_id",
         prnd(cosine(F.col("qv"), F.col("cv")), 6).alias("cos"),
     )
-    return _top_k(scored.distinct() if distinct else scored, k)
+    return _top_k(scored, k)
 
 
 def _sq_dists(V, C):
@@ -405,7 +404,7 @@ def knn_lsh(
     pairs = cb.join(F.broadcast(qb), "bucket").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    return _cosine_rerank(pairs, k, distinct=True)
+    return _cosine_rerank(pairs, k)
 
 
 # -- Product quantization (PQ) ANN -------------------------------------------

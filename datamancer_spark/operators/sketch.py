@@ -589,28 +589,3 @@ def rank_sketch_quantiles(
             F.max("_m").cast("long").alias("m"),
         )
     )
-
-
-def rank_sketch_rank(
-    sketch: DataFrame,
-    q: float,
-    group_cols: list[str] | None = None,
-) -> DataFrame:
-    """Estimated rank of ``q`` (count — or, on weighted sketches, total
-    WEIGHT — of corpus values <= q): each kept row contributes its own
-    effective mass (w · 2^rate_exp — per-ROW, so a mixed-rate union
-    that skipped ``rank_sketch_merge`` is scaled correctly instead of
-    uniformly by max(rate); review r15). Returns
-    (group_cols..., rank_est)."""
-    group_cols = list(group_cols or [])
-    base_w = F.col("w") if "w" in sketch.columns else F.lit(1).cast("long")
-    eff = base_w * F.expr("shiftleft(CAST(1 AS BIGINT), rate_exp)")
-    return sketch.groupBy(*group_cols).agg(
-        F.sum(
-            F.when(F.col("value") <= F.lit(float(q)), eff).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-        .cast("long")
-        .alias("rank_est")
-    )

@@ -64,68 +64,3 @@ def check_rules(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out.withColumn("pass", F.col("n_violations") == 0)
-
-
-def schema_drift(old: DataFrame, new: DataFrame) -> DataFrame:
-    """Schema + null-rate drift between two snapshots of a table: one
-    row per column that was added, removed, or changed type, plus
-    columns whose NULL fraction moved by more than a percentage point —
-    the pre-promotion diff a pipeline prints before accepting a new
-    crawl/export. Output: (column, status, old_type, new_type,
-    old_null_frac, new_null_frac).
-
-    Plan: schema comparison is driver-side metadata (free); null rates
-    are ONE ungrouped partial-aggregated pass per snapshot over only
-    the shared columns."""
-    old_t = dict(old.dtypes)
-    new_t = dict(new.dtypes)
-    spark = old.sparkSession
-
-    rows = []
-    for c in sorted(set(old_t) | set(new_t)):
-        if c not in new_t:
-            rows.append((c, "removed", old_t[c], None))
-        elif c not in old_t:
-            rows.append((c, "added", None, new_t[c]))
-        elif old_t[c] != new_t[c]:
-            rows.append((c, "type_changed", old_t[c], new_t[c]))
-    shared = sorted(set(old_t) & set(new_t))
-
-    def null_fracs(df, cols):
-        if not cols:
-            return {}
-        r = df.agg(
-            F.count(F.lit(1)).alias("_n"),
-            *[
-                F.count(F.when(F.col(c).isNull(), 1)).alias(f"_v_{i}")
-                for i, c in enumerate(cols)
-            ],
-        ).collect()[0]
-        n = max(r["_n"], 1)
-        return {c: r[f"_v_{i}"] / n for i, c in enumerate(cols)}
-
-    of, nf = null_fracs(old, shared), null_fracs(new, shared)
-    changed = {c for c, s, *_ in [(r[0], r[1]) for r in rows]}
-    for c in shared:
-        if c in changed:
-            continue
-        if abs(of[c] - nf[c]) > 0.01:
-            rows.append((c, "null_rate_drift", old_t[c], new_t[c]))
-
-    out = spark.createDataFrame(
-        rows or [(None, None, None, None)],
-        "column string, status string, old_type string, new_type string",
-    )
-    if not rows:
-        out = out.filter(F.col("column").isNotNull())  # empty, typed
-    fr = spark.createDataFrame(
-        [(c, float(of.get(c, float("nan"))), float(nf.get(c, float("nan"))))
-         for c in sorted(set(old_t) | set(new_t)) if c in shared]
-        or [(None, None, None)],
-        "column string, old_null_frac double, new_null_frac double",
-    )
-    return out.join(fr, "column", "left").select(
-        "column", "status", "old_type", "new_type",
-        F.round("old_null_frac", 6).alias("old_null_frac"),
-        F.round("new_null_frac", 6).alias("new_null_frac"),
-    )

@@ -1,6 +1,6 @@
-"""WARC / WET crawl ingestion — the front end of a training-data
-pipeline (Common Crawl convention: ``*.warc.gz`` with one gzip member
-per record; WET conversion records carry pre-extracted text).
+"""WARC crawl ingestion — the front end of a training-data pipeline
+(Common Crawl convention: ``*.warc.gz`` with one gzip member per
+record).
 
 Beyond-reference surface (the reference engine reads CSV/HDF5 only;
 see SURVEY.md §2.1): at 100 TB the corpus ARRIVES as WARC, so the
@@ -24,8 +24,7 @@ Scale design
   fields), never raises.
 
 Format notes (public specs: ISO 28500 WARC 1.0/1.1; RFC 9110/9112 for
-the HTTP payloads; WET is the Common Crawl "conversion"-record
-convention). No spec tables are involved anywhere — WARC and HTTP are
+the HTTP payloads). No spec tables are involved anywhere — WARC and HTTP are
 self-describing text formats.
 """
 
@@ -707,19 +706,3 @@ def extract_anchors(
         & (F.length("_h") > 0)
         & ~F.col("_h").rlike(r"(?i)^(javascript|mailto|tel|data):")
     ).drop("_h")
-
-
-def wet_text(records: DataFrame) -> DataFrame:
-    """Text rows from WET conversion records: (id, rec_idx, url, text).
-    WET payloads are already-extracted UTF-8 plain text — no HTML pass."""
-    # make_valid_utf8, not F.decode: a WET payload with invalid bytes
-    # (they exist in real dumps despite the spec) must degrade to
-    # U+FFFD, never kill the task — same fix as decode_payload_text
-    return records.filter(F.col("warc_type") == "conversion").select(
-        records.columns[0],
-        "rec_idx",
-        F.col("target_uri").alias("url"),
-        F.trim(
-            F.make_valid_utf8(F.col("payload").cast("string"))
-        ).alias("text"),
-    )

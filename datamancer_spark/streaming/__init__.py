@@ -8,8 +8,7 @@ unchanged over unbounded input, which is the point of the Spark-first
 design (one expression layer, two execution modes).
 
 Scale notes: every helper keeps state bounded — watermarks expire window
-state; streaming dedup uses ``dropDuplicatesWithinWatermark`` so the seen-
-set is windowed, not unbounded.
+state, and the screens are stateless stream-static joins.
 """
 
 from __future__ import annotations
@@ -17,18 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-
-def read_json_stream(
-    spark: SparkSession, path: str, schema: StructType, max_files: int = 10
-) -> DataFrame:
-    """File-source stream (the deterministic test harness source; swap for
-    kafka/rate in production — the downstream plan is identical)."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
-        .json(path)
-    )
 
 
 def tumbling_agg(
@@ -49,29 +36,6 @@ def tumbling_agg(
         .agg(*exprs)
         .select(
             F.col("window.start").alias("bucket"),
-            *keys,
-            *[k for k in aggs] if aggs else ["n"],
-        )
-    )
-
-
-def sliding_agg(
-    stream: DataFrame,
-    ts_col: str,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str = "10 minutes",
-    keys: tuple[str, ...] = (),
-    **aggs,
-) -> DataFrame:
-    exprs = [v.alias(k) for k, v in aggs.items()] or [F.count(F.lit(1)).alias("n")]
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window, slide), *keys)
-        .agg(*exprs)
-        .select(
-            F.col("window.start").alias("win_start"),
-            F.col("window.end").alias("win_end"),
             *keys,
             *[k for k in aggs] if aggs else ["n"],
         )
@@ -99,278 +63,6 @@ def session_agg(
             *keys,
             *[k for k in aggs] if aggs else ["n"],
         )
-    )
-
-
-def streaming_dedup(
-    stream: DataFrame,
-    text_col: str = "text",
-    ts_col: str | None = None,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup on the canonical fingerprint (same
-    normalization as the batch operator — operators.dedup.exact_dedup).
-    With a timestamp column, state is bounded by the watermark
-    (dropDuplicatesWithinWatermark); without one, Spark keeps the full
-    seen-set (only for bounded-cardinality streams)."""
-    from ..functions.text import fingerprint
-
-    tagged = stream.withColumn("_fp", fingerprint(F.col(text_col)))
-    if ts_col is not None:
-        return tagged.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-            ["_fp"]
-        ).drop("_fp")
-    return tagged.dropDuplicates(["_fp"]).drop("_fp")
-
-
-def stateful_running_totals(
-    stream: DataFrame,
-    key: str = "user",
-    value_col: str = "value",
-    timeout: str = "NoTimeout",
-) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-key
-    running (count, sum) carried across micro-batches in GroupState —
-    the escape hatch for operators Spark's built-in stateful ops can't
-    express (arbitrary accumulators, custom eviction).
-
-    State per key is two numbers — bounded by key cardinality, the same
-    budget as a streaming aggregation. Emits one row per key per batch
-    with the post-batch totals."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    # key field keeps the STREAM's actual key type (hardcoding StringType
-    # would break long/int-keyed streams at Arrow conversion)
-    out_schema = StructType(
-        [
-            StructField(key, stream.schema[key].dataType),
-            StructField("n_events", LongType()),
-            StructField("total", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("s", DoubleType())]
-    )
-
-    def update(key_tuple, pdfs, state: "GroupState"):
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf[value_col].sum())
-        state.update((n, s))
-        import pandas as pd
-
-        yield pd.DataFrame({key: [key_tuple[0]], "n_events": [n], "total": [s]})
-
-    return (
-        stream.groupBy(key)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=getattr(GroupStateTimeout, timeout),
-        )
-    )
-
-
-def write_incremental_parquet(
-    result: DataFrame,
-    path: str,
-    checkpoint: str,
-    partition_by: tuple[str, ...] = (),
-    dedupe_keys: tuple[str, ...] = (),
-):
-    """foreachBatch parquet sink, idempotent under micro-batch REPLAY:
-    each batch writes (mode=overwrite) into its own ``_batch_id=N``
-    partition directory, so a batch re-run after a crash-before-
-    checkpoint-commit overwrites its previous output instead of
-    double-appending. Readers of ``path`` see ``_batch_id`` as an extra
-    partition column (drop it downstream). ``dedupe_keys`` collapses
-    duplicate keys inside a batch before the write."""
-    import os as _os
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = batch_df
-        if dedupe_keys:
-            out = out.dropDuplicates(list(dedupe_keys))
-        w = out.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(_os.path.join(path, f"_batch_id={batch_id}"))
-
-    return (
-        result.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
-def run_to_memory(result: DataFrame, table: str, mode: str = "update"):
-    """Test/debug sink: run the streaming query into an in-memory table
-    until all available input is processed, return the query handle."""
-    q = (
-        result.writeStream.format("memory")
-        .queryName(table)
-        .outputMode(mode)
-        .start()
-    )
-    q.processAllAvailable()
-    return q
-
-
-def streaming_cms(
-    stream: DataFrame,
-    value_col: str = "value",
-    width: int = 1024,
-    depth: int = 4,
-) -> DataFrame:
-    """Streaming count-min sketch — continuous frequency monitoring
-    with state BOUNDED BY CONSTRUCTION: the running aggregate holds at
-    most ``depth × width`` counters no matter how unbounded the input
-    (the rare streaming aggregate that needs no watermark to stay
-    finite). Each row's counter coordinates are a stateless projection
-    (the same portable md5 hashes as the batch ``operators.sketch``
-    tier), then one grouped count over the bounded key space. Run with
-    ``outputMode("complete")`` (or ``update``) — the emitted frame IS
-    a sketch: query it with ``sketch.cms_estimate``, merge it into the
-    batch sketch with ``sketch.cms_merge`` (counter matrices are
-    linear, so stream + compaction compose exactly)."""
-    from ..operators.sketch import _cms_col
-
-    entries = stream.filter(F.col(value_col).isNotNull()).select(
-        F.posexplode(
-            F.array(
-                *[_cms_col(F.col(value_col), r, width) for r in range(depth)]
-            )
-        ).alias("row", "col")
-    )
-    return entries.groupBy("row", "col").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-
-
-def streaming_hll(
-    stream: DataFrame, value_col: str = "value", p: int = 8
-) -> DataFrame:
-    """Streaming HyperLogLog (r11) — continuous distinct counting with
-    state bounded by construction: at most ``2**p`` registers however
-    unbounded the input (like ``streaming_cms``, no watermark needed).
-    Register coordinates/ranks are the stateless portable-md5
-    projection of the batch ``operators.sketch.hll_build``; the
-    running aggregate is one grouped MAX over the bounded register
-    space. Run with ``outputMode("complete")``/``update`` — the
-    emitted frame IS a register file: estimate with
-    ``sketch.hll_estimate``, merge into batch registers with
-    ``sketch.hll_merge`` (max-registers compose exactly; pinned
-    stream==batch in tests)."""
-    if not 4 <= p <= 16:
-        raise ValueError(f"p={p} out of range [4, 16]")
-    from ..operators.dedup import portable_hash
-
-    m = 1 << p
-    cap = 61 - p
-    h = portable_hash(F.col(value_col), seed="hll")
-    w = F.shiftright(h, p)
-    rank = F.when(w > 0, F.lit(cap) - F.length(F.bin(w))).otherwise(
-        F.lit(cap)
-    )
-    return (
-        stream.filter(F.col(value_col).isNotNull())
-        .select((h % m).alias("register"), rank.alias("rank"))
-        .groupBy("register")
-        .agg(F.max("rank").cast("int").alias("rank"))
-    )
-
-
-def read_warc_stream(
-    spark: SparkSession, path: str, max_files: int = 10
-) -> DataFrame:
-    """Streaming WARC source: the ``binaryFile`` file stream over a
-    crawl drop directory — one row per arriving ``.warc``/``.warc.gz``
-    file, ``(path, modificationTime, length, content)``. The streaming
-    file source requires the schema stated explicitly (binaryFile's is
-    fixed, so this is boilerplate Spark can't infer on a stream). Swap
-    for a Kafka source carrying WARC payload bytes in production — the
-    downstream ingest plan is identical."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        TimestampType,
-    )
-
-    schema = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("modificationTime", TimestampType()),
-            StructField("length", LongType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-    return (
-        spark.readStream.format("binaryFile")
-        .schema(schema)
-        .option("maxFilesPerTrigger", max_files)
-        .load(path)
-    )
-
-
-def streaming_crawl_ingest(
-    stream: DataFrame,
-    band_index: DataFrame | None = None,
-    bin_col: str = "content",
-    id_col: str = "path",
-    min_words: int = 10,
-    min_distinct_ratio: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """The STREAMING twin of the batch crawl→corpus capstone
-    (``__spark_entry__.pipeline_from_crawl``), with the state split the
-    fuzzy screen documents: everything STATELESS runs in the stream —
-    WARC record walk + HTTP decode (one Arrow-batched mapInPandas,
-    stateless per micro-batch), the Catalyst HTML→text chain, the
-    quality gate (token count + distinct ratio, pure projections), and
-    the MinHash band screen against the PERSISTED history index
-    (stream-static joins) — while exact dedup WITHIN the stream and
-    exact-Jaccard verification, which need cross-row state, belong to
-    the periodic batch compaction (``dedup.fuzzy_dedup_against_index``
-    / ``pipeline_from_crawl``). A crawl pipeline runs both: this
-    stream ingests and pre-screens arriving segments continuously; the
-    compactor re-curates and refreshes ``band_index``.
-
-    ``band_index = None`` skips the screen (first segment of a fresh
-    corpus). Returns the surviving (id, rec_idx, url, host, text,
-    n_words) rows, still a streaming frame — attach any sink."""
-    from ..operators.warc import ingest_warc
-
-    pages = ingest_warc(stream.select(id_col, bin_col), bin_col=bin_col,
-                        id_col=id_col)
-    toks = F.split(F.col("text"), " ")
-    gated = pages.filter(
-        (F.size(toks) >= min_words)
-        & (F.size(F.array_distinct(toks)) / F.size(toks)
-           >= min_distinct_ratio)
-    ).withColumn("n_words", F.size(toks))
-    if band_index is None:
-        return gated
-    return streaming_fuzzy_screen(
-        gated,
-        band_index,
-        text_col="text",
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
     )
 
 

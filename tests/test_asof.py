@@ -1,4 +1,4 @@
-"""As-of and range join semantics (operators/asof.py)."""
+"""As-of join semantics (operators/asof.py)."""
 
 import pytest
 
@@ -44,30 +44,6 @@ def test_asof_forward(spark, trades_quotes):
         ("B", 1, 49.9),
         ("B", 5, 49.9),   # inclusive tie
     ]
-
-
-def test_range_join(spark):
-    from datamancer_spark.operators.asof import range_join
-
-    points = spark.createDataFrame(
-        [("A", 1), ("A", 5), ("A", 10), ("B", 5)], ["k", "t"]
-    )
-    intervals = spark.createDataFrame(
-        [("A", 0, 6, "early"), ("A", 6, 20, "late"), ("B", 0, 3, "short")],
-        ["k", "lo", "hi", "tag"],
-    )
-    out = range_join(points, intervals, "t", "lo", "hi", by=["k"])
-    got = rows_set(out.select("k", "t", "tag"))
-    assert got == [("A", 1, "early"), ("A", 5, "early"), ("A", 10, "late")]
-
-
-def test_range_join_left_keeps_unmatched(spark):
-    from datamancer_spark.operators.asof import range_join
-
-    points = spark.createDataFrame([("B", 5)], ["k", "t"])
-    intervals = spark.createDataFrame([("B", 0, 3, "short")], ["k", "lo", "hi", "tag"])
-    out = range_join(points, intervals, "t", "lo", "hi", by=["k"], how="left")
-    assert rows_set(out.select("k", "t", "tag")) == [("B", 5, None)]
 
 
 def test_asof_null_payload_and_row_integrity(spark):

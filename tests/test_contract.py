@@ -2,6 +2,8 @@
 FIRST 50 entries of queries() in dict order, so ordering is load-bearing;
 and every query must have a DuckDB oracle twin with aligned columns."""
 
+import functools
+
 import __spark_entry__ as e
 
 NORTH_STAR = [
@@ -148,3 +150,138 @@ def test_rotation_policy_window_is_packed():
             f"window slots wasted on already-proven {slack} while "
             f"{unproven_outside} wait outside unproven"
         )
+
+
+# -- reachability: every package function is reached by code outside tests/
+
+_PENDING = (
+    "no query reaches it; ROADMAP item 13 decides it (delete it with "
+    "its tests, or keep it with a reason)"
+)
+
+# Package functions that no code outside tests/ reaches, each with the
+# reason it stays. Keys are "<module path>::<function>".
+UNREACHED_SURVIVORS = {
+    **{
+        f"datamancer_spark/operators/bpe.py::{fn}": (
+            "the decoder the encoders' round-trip tests in "
+            "tests/test_bpe.py compare against (a reference implementation)"
+        )
+        for fn in ("bpe_decode_tokens", "byte_bpe_decode_tokens")
+    },
+    **{
+        f"datamancer_spark/plans/__init__.py::{fn}": (
+            "plan predicate of the plan tests; ROADMAP item 1 reworks plans"
+        )
+        for fn in (
+            "has_partial_aggregation",
+            "has_partition_filter",
+            "has_pushed_filter",
+            "scan_columns",
+            "uses_broadcast_join",
+        )
+    },
+    **{
+        f"datamancer_spark/{path}::{fn}": _PENDING
+        for path, fns in {
+            "functions/typed.py": ["define_column_type"],
+            "functions/udtf.py": ["sentence_split_native"],
+            "operators/bpe.py": [
+                "bpe_encode", "bpe_exact_token_count", "train_bpe",
+            ],
+            "operators/classify.py": ["train_hashed_classifier"],
+            "operators/dedup.py": ["minhash_band_index"],
+            "operators/multimodal.py": [
+                "dhash_band_index", "dhash_scalar_udf", "mp4_metadata_blob",
+                "png_decode_pixels", "sample_frames", "video_metadata",
+                "wav_metadata", "webm_metadata",
+            ],
+            "operators/quality.py": ["hot_window_index"],
+            "operators/sampling.py": ["histogram"],
+            "operators/scrub.py": ["extract_urls", "fix_mojibake_full"],
+            "operators/similarity.py": ["knn_pq_rerank", "train_pq_codebooks"],
+            "streaming/__init__.py": [
+                "session_agg", "streaming_fuzzy_screen",
+                "streaming_media_screen", "streaming_span_hits",
+            ],
+        }.items()
+        for fn in fns
+    },
+}
+
+
+def _names_used(node) -> set[str]:
+    """Identifiers a node references as code: names, attribute names and
+    imported names. Docstrings and comments never count."""
+    import ast
+
+    used = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            used.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            used.add(n.attr)
+        elif isinstance(n, ast.alias):
+            used.add(n.name.rsplit(".", 1)[-1])
+    return used
+
+
+@functools.cache
+def _code_graph() -> tuple[dict[str, tuple[str, frozenset[str]]], frozenset[str]]:
+    """Parse every .py file outside tests/ once: the top-level package
+    functions (key -> (name, names its body uses)) and the names that
+    module-level code uses (queries, perfbench, tools, package imports
+    and tables), which are the roots."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    bodies: dict[str, tuple[str, frozenset[str]]] = {}
+    roots: set[str] = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        if rel.parts[0] == "tests" or any(p.startswith(".") for p in rel.parts):
+            continue
+        in_pkg = rel.parts[0] == "datamancer_spark"
+        for st in ast.parse(path.read_text()).body:
+            if in_pkg and isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                bodies[f"{rel.as_posix()}::{st.name}"] = (
+                    st.name, frozenset(_names_used(st))
+                )
+            else:
+                roots |= _names_used(st)
+    return bodies, frozenset(roots)
+
+
+def _unreached(kept: frozenset[str] = frozenset()) -> set[str]:
+    """Top-level package functions that no code outside tests/ reaches.
+
+    A function is reached once a root or a reached body names it,
+    iterated to a fixpoint, so a function called only by unreached
+    functions is itself unreached. Functions in ``kept`` count as
+    reached. Matching is by name, so two functions that share a name
+    are reached together."""
+    bodies, roots = _code_graph()
+    reached = set(roots) | {bodies[k][0] for k in kept}
+    while True:
+        grown = set(reached)
+        for name, used in bodies.values():
+            if name in reached:
+                grown |= used
+        if grown == reached:
+            break
+        reached = grown
+    return {k for k, (name, _) in bodies.items() if name not in reached}
+
+
+def test_every_package_function_is_reached_or_a_named_survivor():
+    """The public functions no query, perfbench step or tool reaches are
+    exactly the named survivors, and nothing else (no private helper
+    either) is unreached once the survivors are kept."""
+    survivors = frozenset(UNREACHED_SURVIVORS)
+    public = {k for k in _unreached() if not k.rsplit("::", 1)[1].startswith("_")}
+    assert public == survivors, (
+        f"unreached, not named: {sorted(public - survivors)}; "
+        f"named, but reached or gone: {sorted(survivors - public)}"
+    )
+    assert _unreached(survivors) == set(), sorted(_unreached(survivors))

@@ -209,166 +209,6 @@ class TestXmlRoundtrip:
         assert rows[2]["name"] == "beta <&> quoted" and rows[2]["score"] is None
 
 
-class TestArrowIpc:
-    """r10: distributed Arrow IPC (Feather v2) source/sink — per-file
-    parallelism via binaryFile + pyarrow, schema round trip exact."""
-
-    def _frame(self, spark):
-        from datamancer_spark.frame import DamFrame
-
-        return DamFrame(
-            spark.range(200).selectExpr(
-                "id",
-                "cast(id % 7 as int) as g",
-                "cast(id as double) / 4 as x",
-                "concat('s', id) as s",
-                "id % 3 = 0 as flag",
-            )
-        )
-
-    def test_roundtrip_multifile(self, spark, tmp_path):
-        from datamancer_spark.io import read_arrow_ipc, write_arrow_ipc
-
-        d = self._frame(spark)
-        out = str(tmp_path / "ipc")
-        from datamancer_spark.frame import DamFrame as _DF
-        write_arrow_ipc(_DF(d.df.repartition(4)), out)
-        import glob
-
-        files = glob.glob(out + "/part-*.arrow")
-        assert len(files) == 4  # one per non-empty partition
-        back = read_arrow_ipc(spark, out + "/part-*.arrow")
-        assert back.df.schema == d.df.schema
-        want = sorted(tuple(r) for r in d.df.collect())
-        got = sorted(tuple(r) for r in back.df.collect())
-        assert got == want
-
-    def test_explicit_schema_and_ddl(self, spark, tmp_path):
-        from datamancer_spark.io import read_arrow_ipc, write_arrow_ipc
-
-        d = self._frame(spark)
-        out = str(tmp_path / "ipc2")
-        write_arrow_ipc(d, out)
-        back = read_arrow_ipc(
-            spark,
-            out + "/part-*.arrow",
-            schema="id long, g int, x double, s string, flag boolean",
-        )
-        assert back.df.count() == 200
-
-    def test_stream_framing_accepted(self, spark, tmp_path):
-        """A stream-framed .arrow (no ARROW1 footer) reads too — both
-        IPC framings occur in the wild."""
-        import pyarrow as pa
-
-        tbl = pa.table({"a": list(range(10)), "b": [f"v{i}" for i in range(10)]})
-        p = tmp_path / "stream.arrow"
-        with pa.OSFile(str(p), "wb") as sink:
-            with pa.ipc.new_stream(sink, tbl.schema) as w:
-                w.write_table(tbl)
-        from datamancer_spark.io import read_arrow_ipc
-
-        back = read_arrow_ipc(spark, str(p))
-        assert back.df.count() == 10
-        assert {r["b"] for r in back.df.collect()} == {f"v{i}" for i in range(10)}
-
-    def test_empty_partitions_write_nothing(self, spark, tmp_path):
-        from datamancer_spark.io import read_arrow_ipc, write_arrow_ipc
-
-        d = self._frame(spark)
-        out = str(tmp_path / "ipc3")
-        from datamancer_spark.frame import DamFrame as _DF
-        write_arrow_ipc(_DF(d.df.repartition(32)), out)  # 200 rows, 32 parts
-        import glob
-
-        files = glob.glob(out + "/part-*.arrow")
-        assert 0 < len(files) <= 32
-        back = read_arrow_ipc(spark, out + "/part-*.arrow")
-        assert back.df.count() == 200
-
-    def test_missing_path_raises(self, spark, tmp_path):
-        from datamancer_spark.io import read_arrow_ipc
-
-        import pytest as _pt
-
-        with _pt.raises(FileNotFoundError):
-            read_arrow_ipc(spark, str(tmp_path / "nope"))
-
-    def test_compressed_roundtrip(self, spark, tmp_path):
-        """VERDICT r10 #7: real Feather v2 producers compress record
-        batch buffers (LZ4/ZSTD per the IPC spec) — both codecs must
-        round-trip with identical values and schema, and compressed
-        files must actually be smaller than uncompressed on
-        compressible data."""
-        import glob
-
-        from datamancer_spark.frame import DamFrame as _DF
-        from datamancer_spark.io import read_arrow_ipc, write_arrow_ipc
-
-        d = _DF(
-            spark.range(2000).selectExpr(
-                "id",
-                "concat('same-prefix-every-row-', id % 5) as s",
-                "cast(id % 9 as double) as x",
-            )
-        )
-        want = sorted(tuple(r) for r in d.df.collect())
-        sizes = {}
-        for comp in (None, "lz4", "zstd"):
-            out = str(tmp_path / f"ipc_{comp}")
-            write_arrow_ipc(_DF(d.df.repartition(3)), out,
-                            compression=comp)
-            files = glob.glob(out + "/part-*.arrow")
-            sizes[comp] = sum(os.path.getsize(f) for f in files)
-            back = read_arrow_ipc(spark, out + "/part-*.arrow")
-            assert back.df.schema == d.df.schema, comp
-            got = sorted(tuple(r) for r in back.df.collect())
-            assert got == want, comp
-        assert sizes["lz4"] < sizes[None], sizes
-        assert sizes["zstd"] < sizes[None], sizes
-
-    def test_foreign_compressed_files_read(self, spark, tmp_path):
-        """Files produced by OTHER writers: pyarrow.feather with
-        compression (the pandas/polars default path, ZSTD) and a
-        compressed stream-framed IPC file — both must read through
-        read_arrow_ipc without any hint."""
-        import pyarrow as pa
-        import pyarrow.feather as feather
-
-        from datamancer_spark.io import read_arrow_ipc
-
-        tbl = pa.table(
-            {
-                "a": list(range(50)),
-                "b": [f"value-{i % 4}" for i in range(50)],
-            }
-        )
-        fp = str(tmp_path / "foreign.feather")
-        feather.write_feather(tbl, fp, compression="zstd")
-        back = read_arrow_ipc(spark, fp)
-        assert back.df.count() == 50
-        assert {r["b"] for r in back.df.collect()} == {
-            f"value-{i}" for i in range(4)
-        }
-
-        sp = str(tmp_path / "foreign_stream.arrow")
-        opts = pa.ipc.IpcWriteOptions(compression="lz4")
-        with pa.OSFile(sp, "wb") as sink:
-            with pa.ipc.new_stream(sink, tbl.schema, options=opts) as w:
-                w.write_table(tbl)
-        back2 = read_arrow_ipc(spark, sp)
-        assert back2.df.count() == 50
-
-    def test_bad_compression_rejected(self, spark, tmp_path):
-        import pytest as _pt
-
-        from datamancer_spark.io import write_arrow_ipc
-
-        d = self._frame(spark)
-        with _pt.raises(ValueError):
-            write_arrow_ipc(d, str(tmp_path / "x"), compression="snappy")
-
-
 class TestParquetBloomAndCompaction:
     def test_bloom_filter_cols_written_and_roundtrip(self, spark, tmp_path):
         """r11 point-lookup lever: bloom-filtered columns must grow the
@@ -402,33 +242,6 @@ class TestParquetBloomAndCompaction:
         with _pt.raises(ValueError):
             write_parquet(d, str(tmp_path / "x"),
                           bloom_filter_cols=["nope"])
-
-    def test_compact_parquet_reduces_files(self, spark, tmp_path):
-        from datamancer_spark.io import compact_parquet
-
-        frag = str(tmp_path / "frag")
-        spark.range(50000).selectExpr(
-            "id", "cast(id % 9 as double) as x"
-        ).repartition(64).write.parquet(frag)
-        import glob
-
-        n_in = len(glob.glob(frag + "/*.parquet"))
-        assert n_in >= 32  # genuinely fragmented
-        out = str(tmp_path / "compacted")
-        n_out = compact_parquet(spark, frag, out, target_mb=128)
-        assert n_out < n_in and n_out >= 1
-        a = sorted(tuple(r) for r in spark.read.parquet(frag).collect())
-        b = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-        assert a == b
-
-    def test_compact_missing_path_raises(self, spark, tmp_path):
-        import pytest as _pt
-
-        from datamancer_spark.io import compact_parquet
-
-        with _pt.raises(FileNotFoundError):
-            compact_parquet(spark, str(tmp_path / "void"),
-                            str(tmp_path / "o"))
 
 
 class TestUrlIngestion:

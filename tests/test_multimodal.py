@@ -1,5 +1,5 @@
 """Multimodal plumbing: binaryFile ingestion, Catalyst magic sniffing,
-digest dedup, and the real decode and perceptual-hash pipelines."""
+and the real decode and perceptual-hash pipelines."""
 
 import os
 import tempfile
@@ -15,7 +15,6 @@ def media_dir(spark):
         "a.png": b"\x89PNG\r\n\x1a\n" + b"\x00" * 64,
         "b.jpg": b"\xff\xd8\xff\xe0" + b"\x01" * 128,
         "c.bin": b"garbage-bytes" * 10,
-        "dup.png": b"\x89PNG\r\n\x1a\n" + b"\x00" * 64,  # same bytes as a.png
     }
     for name, blob in files.items():
         with open(os.path.join(d, name), "wb") as f:
@@ -23,36 +22,27 @@ def media_dir(spark):
     yield d
 
 
-def test_read_binary_and_sniff(spark, media_dir):
-    from datamancer_spark.operators.multimodal import read_binary_dir, with_media_metadata
+def _binary_files(spark, path, glob="*"):
+    return spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
 
-    df = with_media_metadata(read_binary_dir(spark, media_dir))
-    kinds = {
-        os.path.basename(r["path"]): r["media"]["kind"] for r in df.collect()
-    }
+
+def test_read_binary_and_sniff(spark, media_dir):
+    from datamancer_spark.operators.multimodal import sniff_kind
+
+    df = _binary_files(spark, media_dir).withColumn("kind", sniff_kind(F.col("content")))
+    kinds = {os.path.basename(r["path"]): r["kind"] for r in df.collect()}
     assert kinds["a.png"] == "image/png"
     assert kinds["b.jpg"] == "image/jpeg"
     assert kinds["c.bin"] == "application/octet-stream"
-    sizes = {os.path.basename(r["path"]): r["media"]["size_bytes"] for r in df.collect()}
-    assert sizes["a.png"] == 72
-
-
-def test_media_dedup(spark, media_dir):
-    from datamancer_spark.operators.multimodal import media_dedup, read_binary_dir
-
-    agg = media_dedup(read_binary_dir(spark, media_dir))
-    dups = [r for r in agg.collect() if r["n_dups"] == 2]
-    assert len(dups) == 1
-    assert os.path.basename(dups[0]["keep_path"]) == "a.png"
 
 
 def test_decode_images_null_for_undecodable(spark, media_dir):
     """Blobs the real-decode chain cannot read yield NULL metrics by
     default (a 100 TB job must not die on one bad blob) and raise only
     under on_unsupported='error'."""
-    from datamancer_spark.operators.multimodal import decode_images, read_binary_dir
+    from datamancer_spark.operators.multimodal import decode_images
 
-    src = read_binary_dir(spark, media_dir, glob="b.jpg")
+    src = _binary_files(spark, media_dir, glob="b.jpg")
     rows = decode_images(src).collect()
     assert len(rows) == 1 and rows[0]["width"] is None
     with pytest.raises(Exception, match="no decoder"):
@@ -295,17 +285,14 @@ class TestRealPngDecode:
         pixel stats through the Spark operator."""
         import numpy as np
 
-        from datamancer_spark.operators.multimodal import (
-            decode_images,
-            read_binary_dir,
-        )
+        from datamancer_spark.operators.multimodal import decode_images
 
         px = np.full((10, 20, 3), 100, dtype=np.uint8)
         px[:, :, 0] = 200  # mean = (200+100+100)/3 = 133.33../255
         (tmp_path / "real.png").write_bytes(
             _encode_png(px, 2, filters=[0, 1, 2, 3, 4])
         )
-        out = decode_images(read_binary_dir(spark, str(tmp_path))).collect()
+        out = decode_images(_binary_files(spark, str(tmp_path))).collect()
         assert len(out) == 1
         r = out[0]
         assert (r["width"], r["height"], r["channels"]) == (20, 10, 3)
@@ -365,16 +352,13 @@ class TestRealWavDecode:
         assert wav_decode_samples(b"\xff\xd8 not audio" * 10) is None
 
     def test_audio_features_real_wav_no_fake(self, spark, tmp_path):
-        from datamancer_spark.operators.multimodal import (
-            audio_features,
-            read_binary_dir,
-        )
+        from datamancer_spark.operators.multimodal import audio_features
 
         (tmp_path / "tone.wav").write_bytes(self._wav(amp=0.25))
         (tmp_path / "junk.mp3").write_bytes(b"ID3 not decodable here")
         out = {
             os.path.basename(r["path"]): r
-            for r in audio_features(read_binary_dir(spark, str(tmp_path))).collect()
+            for r in audio_features(_binary_files(spark, str(tmp_path))).collect()
         }
         tone = out["tone.wav"]
         assert tone["sample_rate"] == 8000
@@ -631,10 +615,7 @@ class TestRealGifDecode:
     def test_sample_frames_real_gif_no_fake(self, spark, tmp_path):
         import numpy as np
 
-        from datamancer_spark.operators.multimodal import (
-            read_binary_dir,
-            sample_frames,
-        )
+        from datamancer_spark.operators.multimodal import sample_frames
 
         rng = np.random.default_rng(5)
         frames = [
@@ -646,7 +627,7 @@ class TestRealGifDecode:
         )
         (tmp_path / "clip.mp4").write_bytes(b"\x00\x00\x00\x18ftypmp42 junk")
         out = sample_frames(
-            read_binary_dir(spark, str(tmp_path)), every_n=2, max_frames=2
+            _binary_files(spark, str(tmp_path)), every_n=2, max_frames=2
         ).collect()
         # mp4 dropped (no ffmpeg, no fake); GIF frames 0 and 2 emitted
         import os as _os
@@ -654,32 +635,6 @@ class TestRealGifDecode:
         assert all(_os.path.basename(r["path"]) == "anim.gif" for r in out)
         assert sorted(r["frame_idx"] for r in out) == [0, 2]
         assert all(len(r["frame_bytes"]) == 6 * 6 * 3 for r in out)
-
-
-class TestFrameFeatures:
-    def test_intensity_and_motion(self, spark, tmp_path):
-        import numpy as np
-
-        from datamancer_spark.operators.multimodal import (
-            frame_features,
-            read_binary_dir,
-        )
-
-        pal = [(0, 0, 0), (255, 255, 255), (128, 128, 128), (64, 64, 64)]
-        f0 = np.zeros((4, 4), dtype=np.uint8)          # all black
-        f1 = np.ones((4, 4), dtype=np.uint8)           # all white
-        f2 = np.ones((4, 4), dtype=np.uint8)           # unchanged
-        (tmp_path / "m.gif").write_bytes(
-            _encode_gif([f0.tobytes(), f1.tobytes(), f2.tobytes()], pal, 4, 4)
-        )
-        out = sorted(
-            frame_features(read_binary_dir(spark, str(tmp_path))).collect(),
-            key=lambda r: r["frame_idx"],
-        )
-        assert [r["frame_idx"] for r in out] == [0, 1, 2]
-        assert out[0]["mean_intensity"] == 0.0 and out[0]["motion"] == 0.0
-        assert out[1]["mean_intensity"] == 1.0 and out[1]["motion"] == 1.0
-        assert out[2]["motion"] == 0.0  # static frame
 
 
 class TestImageDhash:
@@ -2936,6 +2891,33 @@ class TestFormatTableContract:
         [cov] = media_decode_coverage(df).collect()
         assert (cov["container"], cov["n"], cov["n_screenable"]) == (
             "wav", 1, 1)
+
+    def test_mp3_behind_junk_prefix_is_mp3_and_decodable(self, spark):
+        """An MP3 with junk bytes before its first frame is found by the
+        decoder's own first-frame scan, so the table calls it mp3 and
+        decodable, as the decoder decodes it."""
+        from datamancer_spark.operators.fixtures import mp3_ws_blob
+        from datamancer_spark.operators.multimodal import (
+            _classify_decode_tier,
+            audio_container_metadata,
+            audio_decode_array,
+        )
+
+        blobs = [
+            bytes.fromhex(head) + mp3_ws_blob(i)
+            for i, head in enumerate(["a68347", "efa17786", "dbe8e636"])
+        ]
+        for blob in blobs:
+            rate, mono = audio_decode_array(blob)
+            assert (rate, len(mono)) == (44100, 1183)
+            assert _classify_decode_tier(blob) == ("mp3", True)
+        df = spark.createDataFrame(
+            [(str(i), bytearray(b)) for i, b in enumerate(blobs)],
+            "path string, content binary",
+        )
+        got = {(r["container"], r["decodable"], r["sample_rate"])
+               for r in audio_container_metadata(df).collect()}
+        assert got == {("mp3", True, 44100)}
 
     def test_avi_frames_follow_the_fourcc(self):
         """JPEG frames behind a non-MJPG fourcc are refused, as the

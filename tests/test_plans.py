@@ -96,6 +96,18 @@ def test_knn_corpus_not_shuffled(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
+@pytest.mark.parametrize("query", ["knn_ivf", "knn_lsh"])
+def test_knn_tier_ranks_in_one_exchange(spark, sf_dir, query):
+    """Like brute force, the kNN tiers shuffle once, for the per-query
+    top-k window. knn_lsh keeps repeated candidate rows, as the other
+    tiers do, so it needs no second exchange to collapse them."""
+    import __spark_entry__ as e
+    from datamancer_spark.plans import executed_plan
+
+    plan = executed_plan(e.queries()[query](spark, sf_dir))
+    assert plan.count("Exchange hashpartitioning") == 1
+
+
 def test_bucketed_join_no_shuffle(spark, sf_dir, tmp_path):
     """Bucketing both sides on the join key -> SortMergeJoin with ZERO
     exchanges: the co-located join that makes repeated 100 TB joins

@@ -454,24 +454,6 @@ class TestMinhashIndexLifecycle:
                   for r in fuzzy_dedup_against_index(new, index).collect()}
         assert probed == direct
 
-    def test_append_then_reprobe_is_idempotent(self, spark, sf_dir):
-        from pyspark.sql import functions as F
-        from datamancer_spark.operators.dedup import (
-            append_minhash_index,
-            build_minhash_index,
-            fuzzy_dedup_against_index,
-        )
-
-        doc = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        seen = doc.filter(F.col("source").isin("src0", "src1", "src2"))
-        new = doc.filter(~F.col("source").isin("src0", "src1", "src2"))
-        index = build_minhash_index(seen)
-        survivors = fuzzy_dedup_against_index(new, index)
-        grown = append_minhash_index(index, survivors)
-        assert grown.count() == index.count() + survivors.count()
-        # re-probing the same snapshot against the grown index removes
-        # every row: each survivor now matches its own index entry
-        assert fuzzy_dedup_against_index(new, grown).count() == 0
 
 
 class TestSemanticDedup:
@@ -771,9 +753,8 @@ class TestNullTextRobustness:
 
 
 class TestBloomPrescreen:
-    """r10 Bloom tier: no false negatives ever, plan adds zero
-    shuffles, and the pre-screened cross-snapshot dedup equals the
-    exact one row for row."""
+    """r10 Bloom tier: no false negatives ever, and the plan adds zero
+    shuffles."""
 
     def _corpora(self, spark):
         seen = spark.createDataFrame(
@@ -808,28 +789,6 @@ class TestBloomPrescreen:
         fp = sum(1 for i in range(160) if flags[2000 + i])
         assert fp <= 16, fp
 
-    def test_equals_exact_dedup_against(self, spark):
-        from datamancer_spark.operators.dedup import (
-            bloom_build,
-            dedup_against,
-            dedup_against_bloom,
-        )
-
-        seen, new = self._corpora(spark)
-        # tiny filter = many false positives: results must STILL match
-        for bits in (1 << 8, 1 << 14):
-            bloom = bloom_build(seen, "text", bits, 5)
-            got = {
-                r["doc_id"]
-                for r in dedup_against_bloom(
-                    new, bloom, seen, num_bits=bits, num_hashes=5
-                ).collect()
-            }
-            want = {
-                r["doc_id"] for r in dedup_against(new, seen).collect()
-            }
-            assert got == want, bits
-
     def test_probe_adds_no_shuffle(self, spark):
         from datamancer_spark.operators.dedup import (
             bloom_build,
@@ -854,13 +813,10 @@ class TestBloomPrescreen:
         """ADVICE r10 witness: a seen corpus whose only empty-doc
         representative has NULL text must still populate md5('') in the
         Bloom — under the old isNotNull pre-filter a new NULL/empty doc
-        probed definitely-new (false negative) and dedup_against_bloom
-        diverged from dedup_against."""
+        probed definitely-new (false negative)."""
         from datamancer_spark.operators.dedup import (
             bloom_build,
             bloom_maybe_contains,
-            dedup_against,
-            dedup_against_bloom,
         )
 
         seen = spark.createDataFrame(
@@ -880,14 +836,6 @@ class TestBloomPrescreen:
         # NULL, empty, and whitespace-only all share md5('') with the
         # seen NULL doc — all must probe maybe (no false negatives)
         assert flags[10] and flags[11] and flags[12], flags
-        got = {
-            r["doc_id"]
-            for r in dedup_against_bloom(
-                new, bloom, seen, num_bits=bits, num_hashes=k
-            ).collect()
-        }
-        want = {r["doc_id"] for r in dedup_against(new, seen).collect()}
-        assert got == want == {13}
 
     def test_hashed_path_filters_null_fingerprints(self, spark):
         """hashed=True means value_col holds fingerprints; a NULL there

@@ -189,35 +189,6 @@ def test_winsorize_keyless_no_global_window(spark, sf_dir):
     assert mn > raw_mn and mx < raw_mx
 
 
-def test_stateful_long_key(spark):
-    """stateful_running_totals with a non-string key type."""
-    import json, tempfile
-
-    from datamancer_spark.streaming import (
-        read_json_stream, run_to_memory, stateful_running_totals,
-    )
-    from pyspark.sql.types import (
-        DoubleType, LongType, StructField, StructType, TimestampType,
-    )
-
-    schema = StructType([
-        StructField("ts", TimestampType()),
-        StructField("uid", LongType()),
-        StructField("value", DoubleType()),
-    ])
-    with tempfile.TemporaryDirectory() as d:
-        with open(d + "/b.json", "w") as f:
-            f.write(json.dumps({"ts": "2024-01-01T00:00:00", "uid": 7, "value": 2.0}) + "\n")
-        stream = read_json_stream(spark, d, schema)
-        res = stateful_running_totals(stream, key="uid", value_col="value")
-        q = run_to_memory(res, "statelong_t", mode="update")
-        try:
-            rows = spark.sql("SELECT * FROM statelong_t").collect()
-            assert rows[0]["uid"] == 7 and rows[0]["total"] == 2.0
-        finally:
-            q.stop()
-
-
 def test_materialize_checkpoint_dir_toggle(spark, tmp_path):
     """set_checkpoint_dir upgrades every engine materialization point
     from executor-local localCheckpoint (lost-executor = dead job) to

@@ -10,10 +10,8 @@ from pyspark.sql import functions as F
 
 from datamancer_spark.operators.scrub import (
     extract_urls,
-    host_counts,
     normalize_url,
     redact_pii,
-    url_dedup_key,
     url_quality_filter,
 )
 
@@ -103,24 +101,6 @@ class TestUrls:
         for r in out.collect():
             assert r["got"] == r["want"], (r["got"], r["want"])
 
-    def test_url_dedup_key_distinct_per_doc(self, spark):
-        df = spark.createDataFrame(
-            [(1, "https://a.com/x?utm_source=s https://a.com/x#f")],
-            "doc_id long, text string",
-        )
-        rows = url_dedup_key(df).collect()
-        assert len(rows) == 1 and rows[0]["url_norm"] == "https://a.com/x"
-
-    def test_host_counts(self, spark):
-        df = spark.createDataFrame(
-            [
-                (1, "https://a.com/1 https://a.com/2"),
-                (2, "https://a.com/3 https://b.com/1"),
-            ],
-            "doc_id long, text string",
-        )
-        out = {r["host"]: (r["n_urls"], r["n_docs"]) for r in host_counts(df).collect()}
-        assert out["a.com"] == (3, 2) and out["b.com"] == (1, 1)
 
 
 class TestAdviceR3Fixes:

@@ -42,109 +42,39 @@ def stream_dir():
         yield d
 
 
+def _json_stream(spark, path, schema=SCHEMA):
+    return spark.readStream.schema(schema).json(path)
+
+
 def test_tumbling_agg(spark, stream_dir):
-    from datamancer_spark.streaming import read_json_stream, run_to_memory, tumbling_agg
+    from datamancer_spark.streaming import replay_available_now, tumbling_agg
 
-    stream = read_json_stream(spark, stream_dir, SCHEMA)
     res = tumbling_agg(
-        stream, "ts", window="1 hour", keys=("user",), n=F.count(F.lit(1)),
-        total=F.sum("value"),
+        _json_stream(spark, stream_dir), "ts", window="1 hour",
+        keys=("user",), n=F.count(F.lit(1)), total=F.sum("value"),
     )
-    q = run_to_memory(res, "tumble_t")
-    try:
-        rows = {
-            (str(r["bucket"]), r["user"]): (r["n"], r["total"])
-            for r in spark.sql("SELECT * FROM tumble_t").collect()
-        }
-        assert rows[("2024-01-01 00:00:00", "u1")] == (2, 3.0)
-        assert rows[("2024-01-01 01:00:00", "u2")] == (1, 3.0)
-    finally:
-        q.stop()
-
-
-def test_streaming_dedup(spark, stream_dir):
-    from datamancer_spark.streaming import read_json_stream, run_to_memory, streaming_dedup
-
-    stream = read_json_stream(spark, stream_dir, SCHEMA)
-    res = streaming_dedup(stream, text_col="text", ts_col="ts")
-    q = run_to_memory(res, "dedup_t", mode="append")
-    try:
-        texts = sorted(
-            r["text"] for r in spark.sql("SELECT * FROM dedup_t").collect()
-        )
-        assert texts == ["hello world", "other doc"]
-    finally:
-        q.stop()
+    rows = {
+        (str(r["bucket"]), r["user"]): (r["n"], r["total"])
+        for r in replay_available_now(res, "tumble_t").collect()
+    }
+    assert rows[("2024-01-01 00:00:00", "u1")] == (2, 3.0)
+    assert rows[("2024-01-01 01:00:00", "u2")] == (1, 3.0)
 
 
 def test_session_agg(spark, stream_dir):
-    from datamancer_spark.streaming import read_json_stream, run_to_memory, session_agg
+    from datamancer_spark.streaming import replay_available_now, session_agg
 
-    stream = read_json_stream(spark, stream_dir, SCHEMA)
     # session windows support complete/append only (update is rejected);
-    # complete re-emits full state each trigger — fine for a test sink
-    res = session_agg(stream, "ts", gap="30 minutes", keys=("user",))
-    q = run_to_memory(res, "session_t", mode="complete")
-    try:
-        rows = [
-            (r["user"], r["n"]) for r in spark.sql("SELECT * FROM session_t").collect()
-        ]
-        # u1's two events 15 min apart merge into one session; u2 separate
-        assert sorted(rows) == [("u1", 2), ("u2", 1)]
-    finally:
-        q.stop()
-
-
-def test_stateful_running_totals_across_batches(spark):
-    """State must persist across micro-batches: feed two files with
-    maxFilesPerTrigger=1 so they arrive in separate triggers."""
-    import tempfile
-
-    from datamancer_spark.streaming import (
-        read_json_stream,
-        run_to_memory,
-        stateful_running_totals,
+    # the replay's complete mode returns the final state
+    res = session_agg(
+        _json_stream(spark, stream_dir), "ts", gap="30 minutes", keys=("user",)
     )
-
-    with tempfile.TemporaryDirectory() as d:
-        _write_batch(d, "b0.json", [
-            {"ts": "2024-01-01T00:00:00", "user": "u1", "text": "t", "value": 1.0},
-            {"ts": "2024-01-01T00:01:00", "user": "u1", "text": "t", "value": 2.0},
-        ])
-        _write_batch(d, "b1.json", [
-            {"ts": "2024-01-01T00:02:00", "user": "u1", "text": "t", "value": 4.0},
-        ])
-        stream = read_json_stream(spark, d, SCHEMA, max_files=1)
-        res = stateful_running_totals(stream, key="user", value_col="value")
-        q = run_to_memory(res, "state_t", mode="update")
-        try:
-            rows = spark.sql("SELECT * FROM state_t").collect()
-            # one emission per batch; the final one must carry totals over
-            # BOTH batches (proves GroupState persisted)
-            finals = max((r["n_events"], r["total"]) for r in rows)
-            assert finals == (3, 7.0)
-            assert len(rows) >= 2
-        finally:
-            q.stop()
-
-
-def test_incremental_parquet_sink(spark, stream_dir):
-    import tempfile
-
-    from datamancer_spark.streaming import read_json_stream, write_incremental_parquet
-
-    out = tempfile.mkdtemp() + "/inc_out"
-    ckpt = tempfile.mkdtemp() + "/ckpt"
-    stream = read_json_stream(spark, stream_dir, SCHEMA)
-    q = write_incremental_parquet(stream, out, ckpt, dedupe_keys=("text",))
-    try:
-        q.processAllAvailable()
-        back = spark.read.parquet(out)
-        # 3 input rows, two share text "hello world" -> batch-deduped to 2;
-        # _batch_id arrives as the idempotency partition column
-        assert back.drop("_batch_id").count() == 2
-    finally:
-        q.stop()
+    rows = [
+        (r["user"], r["n"])
+        for r in replay_available_now(res, "session_t").collect()
+    ]
+    # u1's two events 15 min apart merge into one session; u2 separate
+    assert sorted(rows) == [("u1", 2), ("u2", 1)]
 
 
 def test_stream_batch_parity(spark):
@@ -155,7 +85,7 @@ def test_stream_batch_parity(spark):
     from pyspark.sql import functions as F
 
     from datamancer_spark import load_tables
-    from datamancer_spark.streaming import read_json_stream, run_to_memory, tumbling_agg
+    from datamancer_spark.streaming import replay_available_now, tumbling_agg
 
     ev = load_tables(spark, "/root/testdata/sf0.001", ["events"])["events"].df
     batch = {
@@ -184,38 +114,16 @@ def test_stream_batch_parity(spark):
                 StructField("value", DoubleType()),
             ]
         )
-        stream = read_json_stream(spark, d + "/js", schema)
         res = tumbling_agg(
-            stream, "ts", window="1 hour", watermark="0 seconds",
-            keys=("event_type",),
+            _json_stream(spark, d + "/js", schema), "ts", window="1 hour",
+            watermark="0 seconds", keys=("event_type",),
             n=F.count(F.lit(1)), total=F.sum("value"),
         )
-        q = run_to_memory(res, "parity_t")
-        try:
-            streamed = {
-                (str(r["bucket"]), r["event_type"]): (r["n"], round(r["total"], 6))
-                for r in spark.sql("SELECT * FROM parity_t").collect()
-            }
-        finally:
-            q.stop()
+        streamed = {
+            (str(r["bucket"]), r["event_type"]): (r["n"], round(r["total"], 6))
+            for r in replay_available_now(res, "parity_t").collect()
+        }
     assert streamed == batch
-
-
-def test_sliding_agg(spark, stream_dir):
-    from datamancer_spark.streaming import read_json_stream, run_to_memory, sliding_agg
-    from pyspark.sql import functions as F
-
-    stream = read_json_stream(spark, stream_dir, SCHEMA)
-    res = sliding_agg(stream, "ts", window="1 hour", slide="30 minutes",
-                      keys=("user",), n=F.count(F.lit(1)))
-    q = run_to_memory(res, "slide_t")
-    try:
-        rows = spark.sql("SELECT * FROM slide_t").collect()
-        # u1's 00:05 event falls in windows [23:30,00:30) and [00:00,01:00)
-        u1 = [r for r in rows if r["user"] == "u1"]
-        assert len(u1) >= 2
-    finally:
-        q.stop()
 
 
 def test_stream_stream_interval_join(spark):
@@ -225,8 +133,6 @@ def test_stream_stream_interval_join(spark):
     import tempfile
 
     from pyspark.sql import functions as F
-
-    from datamancer_spark.streaming import read_json_stream
 
     with tempfile.TemporaryDirectory() as d1, tempfile.TemporaryDirectory() as d2:
         clicks = [
@@ -243,13 +149,13 @@ def test_stream_stream_interval_join(spark):
             f.writelines(_json.dumps(r) + "\n" for r in purchases)
 
         cs = (
-            read_json_stream(spark, d1, SCHEMA)
+            _json_stream(spark, d1)
             .withWatermark("ts", "1 hour")
             .select(F.col("user").alias("c_user"), F.col("ts").alias("c_ts"),
                     F.col("text").alias("click_id"))
         )
         ps = (
-            read_json_stream(spark, d2, SCHEMA)
+            _json_stream(spark, d2)
             .withWatermark("ts", "1 hour")
             .select("user", F.col("ts").alias("p_ts"), F.col("text").alias("purchase_id"))
         )
@@ -332,200 +238,6 @@ def _check_streaming_fuzzy_screen(spark, tmp_path, bands):
         q.stop()
     texts = {r["text"] for r in rows}
     assert texts == {novel}
-
-
-def test_streaming_crawl_ingest(spark, tmp_path):
-    """The streaming twin of the crawl→corpus capstone: WARC files
-    arrive in a drop directory (binaryFile stream), records walk +
-    HTTP decode + HTML→text + quality gate run stateless in-flight,
-    and the MinHash band screen drops pages already in the persisted
-    history index. Doc 1 carries cluster page c1 + unique page u1;
-    doc 3 carries cluster page c3 (IN history → identical signature →
-    certain drop), a near-dup of c3, its unique page, and no spam/404.
-    The near-dup's band fate is probabilistic in general but FIXED for
-    these bytes — pinned here (it shares a band and drops, the
-    high-recall outcome the screen is built for)."""
-    from datamancer_spark.operators.dedup import (
-        build_minhash_index,
-        minhash_band_index,
-    )
-    from datamancer_spark.operators.fixtures import warc_corpus_blob
-    from datamancer_spark.streaming import (
-        read_warc_stream,
-        streaming_crawl_ingest,
-    )
-
-    d = str(tmp_path / "crawl")
-    os.makedirs(d)
-    for i in (1, 3):
-        with open(os.path.join(d, f"seg{i}.warc"), "wb") as f:
-            f.write(warc_corpus_blob(i))
-    hist_text = " ".join(f"c3_{j}" for j in range(40))
-    history = spark.createDataFrame(
-        [(999, hist_text)], "doc_id long, text string"
-    )
-    bidx = minhash_band_index(build_minhash_index(history))
-
-    stream = read_warc_stream(spark, d, max_files=1)
-    out = streaming_crawl_ingest(stream, band_index=bidx)
-    assert out.isStreaming
-    q = (
-        out.writeStream.format("memory")
-        .queryName("crawl_stream")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql(
-            "SELECT path, url, text, n_words FROM crawl_stream"
-        ).collect()
-    finally:
-        q.stop()
-    by_url = {r["url"]: r for r in rows}
-    # doc 1 survivors: its cluster page (c1 not in history) + unique
-    assert "http://s1.example/c/1" in by_url
-    assert "http://s1.example/u/1" in by_url
-    assert by_url["http://s1.example/u/1"]["text"] == " ".join(
-        f"u1_{j}" for j in range(16)
-    )
-    # doc 3: the c3 cluster page is in history — identical signature,
-    # every band matches: certain drop
-    assert "http://s3.example/c/3" not in by_url
-    # doc 3's unique page survives (disjoint token namespace)
-    assert "http://s3.example/u/3" in by_url
-    # the near-dup page (J=35/41 trigram vs history) band-hits for
-    # these fixed bytes and drops — the screen's designed outcome
-    assert "http://s3.example/nd/3" not in by_url
-    # nothing else leaked through (no spam/404 pages for docs 1, 3)
-    assert len(rows) == 3
-
-
-def test_streaming_crawl_ingest_no_index(spark, tmp_path):
-    """band_index=None skips the screen: every gated page survives."""
-    from datamancer_spark.operators.fixtures import warc_corpus_blob
-    from datamancer_spark.streaming import (
-        read_warc_stream,
-        streaming_crawl_ingest,
-    )
-
-    d = str(tmp_path / "crawl0")
-    os.makedirs(d)
-    # doc 5 carries a SPAM page (5 % 11 == 5): the quality gate must
-    # drop it in-flight (5 repeated tokens fail both thresholds)
-    with open(os.path.join(d, "seg5.warc"), "wb") as f:
-        f.write(warc_corpus_blob(5))
-    out = streaming_crawl_ingest(read_warc_stream(spark, d))
-    q = (
-        out.writeStream.format("memory")
-        .queryName("crawl_stream0")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT url FROM crawl_stream0").collect()
-    finally:
-        q.stop()
-    urls = {r["url"] for r in rows}
-    assert urls == {"http://s5.example/c/5", "http://s5.example/u/5"}
-
-
-def test_streaming_capstone_equals_batch(spark, tmp_path):
-    """VERDICT r10 #6: the documented state split's equivalence claim,
-    pinned end-to-end — stream the capstone WARC segments through the
-    stateless in-flight tier (record walk + HTTP decode + HTML→text +
-    quality gate), then run the stateful batch compaction (exact dedup
-    + exact-trigram-Jaccard fuzzy dedup) over the streamed rows; the
-    survivor corpus must EQUAL the all-batch capstone's on the same
-    blobs. 60 docs cover every fixture feature: shared clusters
-    (exact dups across docs), near-dups (%7==3), spam (%11==5), 404s
-    (%13==7), all three HTTP framings, gzip and plain WARC files; 3
-    micro-batches (max_files=25) prove batch boundaries don't leak
-    into the result."""
-    from datamancer_spark.operators.dedup import (
-        exact_dedup_keep,
-        ngram_jaccard_pairs,
-    )
-    from datamancer_spark.operators.fixtures import (
-        synth_blob_frame,
-        warc_corpus_blob,
-    )
-    from datamancer_spark.operators.warc import ingest_warc
-    from datamancer_spark.session import materialize
-    from datamancer_spark.streaming import (
-        read_warc_stream,
-        streaming_crawl_ingest,
-    )
-
-    ids = list(range(60))
-    d = str(tmp_path / "capstone_drop")
-    os.makedirs(d)
-    for i in ids:
-        with open(os.path.join(d, f"seg{i:04d}.warc"), "wb") as f:
-            f.write(warc_corpus_blob(i))
-
-    # --- streaming tier: stateless in-flight ingest + quality gate
-    out = streaming_crawl_ingest(
-        read_warc_stream(spark, d, max_files=25), band_index=None
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("capstone_stream")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        streamed = spark.sql(
-            "SELECT path, rec_idx, url, host, text, n_words "
-            "FROM capstone_stream"
-        )
-        streamed = materialize(
-            streamed.withColumn(
-                "doc_id",
-                F.regexp_extract("path", r"seg(\d+)\.warc$", 1).cast(
-                    "long"
-                ),
-            )
-        )
-    finally:
-        q.stop()
-
-    # --- batch compaction: the stateful tiers over the streamed rows
-    def compact(gated):
-        keyed = gated.withColumn(
-            "page_id", F.col("doc_id") * 8 + F.col("rec_idx")
-        )
-        kept = materialize(exact_dedup_keep(keyed, "text", "page_id"))
-        pairs = ngram_jaccard_pairs(
-            kept, "text", "page_id", shingle_n=3, threshold=0.8
-        )
-        drop = pairs.select(F.col("id_b").alias("page_id")).distinct()
-        return kept.join(drop, "page_id", "left_anti")
-
-    got = sorted(
-        (r["doc_id"], r["rec_idx"], r["text"])
-        for r in compact(streamed).collect()
-    )
-
-    # --- the all-batch capstone on the same blobs
-    idf = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-    pages = ingest_warc(synth_blob_frame(idf, warc_corpus_blob))
-    toks = F.split(F.col("text"), " ")
-    gated_b = pages.filter(
-        (F.size(toks) >= 10)
-        & (F.size(F.array_distinct(toks)) / F.size(toks) >= 0.5)
-    )
-    want = sorted(
-        (r["doc_id"], r["rec_idx"], r["text"])
-        for r in compact(gated_b).collect()
-    )
-    assert got == want
-    # sanity: the fixture exercised every fate (survivors exist, and
-    # fewer pages survive than were gated in)
-    assert len(want) > 60
-    assert len(want) < streamed.count()
 
 
 def test_streaming_bloom_prescreen(spark, tmp_path):

@@ -188,32 +188,6 @@ class TestCheckRules:
             check_rules(spark.range(1), rules={})
 
 
-class TestSchemaDrift:
-    def test_detects_all_statuses(self, spark):
-        from pyspark.sql import functions as F
-
-        from datamancer_spark.operators.validate import schema_drift
-
-        old = spark.createDataFrame(
-            [(1, "a", 1.0), (2, None, 2.0)], "id long, name string, score double"
-        )
-        new = spark.createDataFrame(
-            [(1, "a", "x"), (2, "b", "y"), (3, "c", None)],
-            "id long, name string, score string",
-        ).withColumn("extra", F.lit(5))
-        out = {r["column"]: r for r in schema_drift(old, new).collect()}
-        assert out["extra"]["status"] == "added"
-        assert out["score"]["status"] == "type_changed"
-        assert out["name"]["status"] == "null_rate_drift"
-        assert "id" not in out  # unchanged column emits nothing
-
-    def test_identical_snapshots_empty(self, spark):
-        from datamancer_spark.operators.validate import schema_drift
-
-        df = spark.createDataFrame([(1, "a")], "id long, name string")
-        assert schema_drift(df, df).count() == 0
-
-
 class TestGroupedLinfit:
     def test_exact_line_recovered(self, spark):
         from datamancer_spark.operators.stats import grouped_linfit

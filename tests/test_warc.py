@@ -16,7 +16,6 @@ from datamancer_spark.operators.warc import (
     html_text_col,
     ingest_warc,
     warc_records,
-    wet_text,
 )
 
 
@@ -209,25 +208,6 @@ class TestHtmlText:
         df = spark.range(1).select(html_text_col(F.lit("<p>x</p>")).alias("t"))
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "EvalPython" not in plan
-
-
-class TestWet:
-    def test_wet_conversion_records(self, spark):
-        payload = "Already extracted text.\nSecond line.".encode()
-        rec = (
-            b"WARC/1.0\r\nWARC-Type: conversion\r\n"
-            b"WARC-Target-URI: http://w.example/a\r\n"
-            b"Content-Type: text/plain\r\n"
-            b"Content-Length: %d\r\n\r\n" % len(payload)
-            + payload
-            + b"\r\n\r\n"
-        )
-        df = spark.createDataFrame([(9, bytearray(rec))], "doc_id long, content binary")
-        out = wet_text(warc_records(df)).collect()
-        assert len(out) == 1
-        r = out[0]
-        assert r["url"] == "http://w.example/a"
-        assert r["text"] == "Already extracted text.\nSecond line."
 
 
 class TestFuzz:
@@ -492,23 +472,3 @@ def test_decode_never_raises_on_lying_charsets(spark):
     assert out[0]["t"] == "ok \ufffd\ufffd bad"  # replaced, not raised
     assert out[1]["cs"] == "utf-16le"
     assert out[1]["t"] is None  # odd length: refuse, don't raise
-
-
-def test_wet_text_tolerates_invalid_utf8(spark):
-    """WET payloads with invalid bytes (real dumps carry them despite
-    the spec) must degrade to U+FFFD, never raise."""
-    from datamancer_spark.operators.warc import warc_records, wet_text
-
-    payload = b"good text \xff\xfe bad tail"
-    rec = (
-        b"WARC/1.0\r\nWARC-Type: conversion\r\n"
-        b"WARC-Target-URI: http://x/\r\n"
-        b"Content-Type: text/plain\r\n"
-        b"Content-Length: " + str(len(payload)).encode()
-        + b"\r\n\r\n" + payload + b"\r\n\r\n"
-    )
-    df = spark.createDataFrame([(1, bytearray(rec))],
-                               "doc_id long, content binary")
-    out = wet_text(warc_records(df)).collect()
-    assert len(out) == 1
-    assert out[0]["text"] == "good text �� bad tail"
