@@ -1056,7 +1056,7 @@ def array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based batch sessionization (two stacked windows, one shuffle —
-    operators/sessions.py; streaming twin is session_agg). Bit-stable
+    operators/sessions.py). Bit-stable
     cross-engine: microsecond gap precision, event_id tie-break in the
     window order, and total_value summed as integer cents (float-sum
     addend order differs between Spark partial aggregation and DuckDB)."""
@@ -1719,11 +1719,8 @@ def knn_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan becomes a broadcast join of unpacked (subspace, code)
     against the queries' exact distance tables plus a sum — fully
     relational, so the DuckDB twin inlines the same 8×16 sub-centroids
-    and replicates argmin + ADC + ranking exactly. The trained-codebook
-    path (per-subspace Lloyd's) and the exact-rerank production
-    composition (knn_pq_rerank: recall 0.86@shortlist-50 on the
-    synthetic embeddings) are covered by pytest recall tests — this
-    gate pins the MACHINERY bit-for-bit, the knn_ivf convention."""
+    and replicates argmin + ADC + ranking exactly. This gate pins the
+    MACHINERY bit-for-bit, the knn_ivf convention."""
     emb = _t(spark, sf_dir, "embeddings")["embeddings"].df
     queries_df = emb.filter(F.col("vec_id") < 10)
     cbs = S.pq_codebooks(m=8, k=16, dim=64, seed=11)
@@ -3082,7 +3079,7 @@ def _synthetic_dhash_pairs(
 
 def image_decode_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL PNG decode under the driver gate (operators/multimodal.py
-    decode_images ← png_decode_pixels): one solid-color PNG per doc_id
+    decode_images ← png_decode_array): one solid-color PNG per doc_id
     with arithmetic dims/color; the decoded (width, height, channels,
     mean_intensity) must match the closed form exactly — channel sums
     are multiples of 3 so the mean is an exact multiple of 1/15."""

@@ -1,40 +1,35 @@
-"""Byte-pair-encoding tokenizer: trainable merges + distributed apply.
+"""Byte-level byte-pair-encoding tokenizer: trainable merges +
+distributed apply.
 
 LLM-pipeline surface (token budgeting, sequence packing and mixture
 math all want REAL tokenizer counts, not whitespace proxies). The
 standard split of work:
 
-* ``train_bpe`` — learns the merge table on a bounded seeded SAMPLE
-  collected to the driver. Training is inherently sequential (merge
-  k+1 depends on merge k) over vocabulary-sized state, so the driver
-  is the right executor — the same recipe production tokenizers use
-  (they train on samples, not the corpus). Determinism: pair-frequency
-  ties break lexicographically, so the same sample always yields the
-  same table.
-* ``bpe_encode`` / ``bpe_exact_token_count`` — distributed apply: the merge
-  table broadcasts (vocabulary-sized) and each Arrow batch encodes its
-  own rows, with a per-batch word→tokens memo (natural-language word
-  frequency follows Zipf, so the memo hit rate is enormous — the
-  standard tokenizer-serving trick).
+* ``train_byte_bpe`` — learns the merge table on a bounded seeded
+  SAMPLE collected to the driver. Training is inherently sequential
+  (merge k+1 depends on merge k) over vocabulary-sized state, so the
+  driver is the right executor — the same recipe production tokenizers
+  use (they train on samples, not the corpus). Determinism:
+  pair-frequency ties break lexicographically, so the same sample
+  always yields the same table.
+* ``byte_bpe_encode`` / ``byte_bpe_exact_token_count`` — distributed
+  apply: the merge table broadcasts (vocabulary-sized) and each Arrow
+  batch encodes its own rows, with a per-batch pretoken→tokens memo
+  (natural-language word frequency follows Zipf, so the memo hit rate
+  is enormous — the standard tokenizer-serving trick).
 
-Two tiers share the trainer/apply machinery:
+The tokenizer follows the GPT-2 recipe (r11): a category-based
+pretokenizer (contractions / ``?letters`` / `` ?numbers`` /
+`` ?other`` / whitespace-keeping-one) then BPE over the pretoken's
+UTF-8 BYTES mapped through the reversible bytes↔unicode table. No OOV
+is possible by construction: every byte is in the base alphabet, so
+unknown scripts degrade to byte tokens instead of failing. The
+pretokenizer is a hand-rolled scanner (zero runtime deps); tests pin
+its equivalence to the published GPT-2 regex on mixed-script fixtures
++ hypothesis.
 
-* **word-level** (``train_bpe`` / ``bpe_encode``): whitespace
-  pre-tokenization with an end-of-word marker — the original NMT
-  formulation. Cheap, but OOV on anything the sample's vocabulary
-  missed and useless on non-space-delimited scripts.
-* **byte-level** (``train_byte_bpe`` / ``byte_bpe_encode``, r11): the
-  GPT-2 recipe — a category-based pretokenizer (contractions /
-  ``?letters`` / `` ?numbers`` / `` ?other`` / whitespace-keeping-one)
-  then BPE over the pretoken's UTF-8 BYTES mapped through the
-  reversible bytes↔unicode table. No OOV is possible by construction:
-  every byte is in the base alphabet, so unknown scripts degrade to
-  byte tokens instead of failing. The pretokenizer is a hand-rolled
-  scanner (zero runtime deps); tests pin its equivalence to the
-  published GPT-2 regex on mixed-script fixtures + hypothesis.
-
-The synthetic corpus has no gold tokenizer to differ against, so both
-tiers are pytest-proven with hand-computable merge sequences (the
+The synthetic corpus has no gold tokenizer to differ against, so the
+tokenizer is pytest-proven with hand-computable merge sequences (the
 scrub.py pattern) and lossless round-trip properties.
 """
 
@@ -45,189 +40,6 @@ from collections import Counter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: end-of-word marker symbol (rides the LAST character of each word)
-EOW = "</w>"
-
-
-def _word_freqs(texts, lowercase: bool):
-    freqs: Counter = Counter()
-    for t in texts:
-        if t is None:
-            continue
-        if lowercase:
-            t = t.lower()
-        freqs.update(t.split())
-    return freqs
-
-
-def train_bpe(
-    df: DataFrame,
-    text_col: str = "text",
-    num_merges: int = 200,
-    sample_rows: int = 10_000,
-    lowercase: bool = True,
-) -> list[tuple[str, str]]:
-    """Learn an ordered BPE merge table from a bounded, hash-ordered
-    sample of the corpus (``orderBy(xxhash64).limit`` compiles to a
-    partial top-k — layout-independent, unlike a bare ``limit``; the
-    ``train_pq_codebooks`` convention). Returns ``[(left, right), ...]``
-    in merge order; stops early when no adjacent pair occurs twice."""
-    rows = (
-        df.select(text_col)
-        .filter(F.col(text_col).isNotNull())
-        .orderBy(F.xxhash64(F.col(text_col)))
-        .limit(sample_rows)
-        .collect()
-    )
-    freqs = _word_freqs((r[0] for r in rows), lowercase)
-    # symbol sequences per word; EOW rides the final character so
-    # word-final merges differ from word-internal ones (the BPE paper's
-    # formulation)
-    words = {
-        w: tuple(list(w[:-1]) + [w[-1] + EOW]) for w in freqs if w
-    }
-    merges: list[tuple[str, str]] = []
-    for _ in range(num_merges):
-        pair_counts: Counter = Counter()
-        for w, syms in words.items():
-            f = freqs[w]
-            for a, b in zip(syms, syms[1:]):
-                pair_counts[(a, b)] += f
-        if not pair_counts:
-            break
-        # most frequent pair; ties break lexicographically so training
-        # is deterministic across runs and platforms
-        best, n = min(
-            pair_counts.items(), key=lambda kv: (-kv[1], kv[0])
-        )
-        if n < 2:
-            break
-        merges.append(best)
-        merged = best[0] + best[1]
-        new_words = {}
-        for w, syms in words.items():
-            out = []
-            i = 0
-            while i < len(syms):
-                if (
-                    i + 1 < len(syms)
-                    and syms[i] == best[0]
-                    and syms[i + 1] == best[1]
-                ):
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            new_words[w] = tuple(out)
-        words = new_words
-    return merges
-
-
-def _encode_word(word: str, ranks: dict, memo: dict) -> list[str]:
-    got = memo.get(word)
-    if got is not None:
-        return got
-    syms = list(word[:-1]) + [word[-1] + EOW]
-    while len(syms) > 1:
-        best_rank = None
-        best_i = -1
-        for i in range(len(syms) - 1):
-            r = ranks.get((syms[i], syms[i + 1]))
-            if r is not None and (best_rank is None or r < best_rank):
-                best_rank = r
-                best_i = i
-        if best_rank is None:
-            break
-        syms[best_i : best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-    memo[word] = syms
-    return syms
-
-
-def bpe_encode(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lowercase: bool = True,
-) -> DataFrame:
-    """(id, bpe_tokens array<string>, n_bpe_tokens) — the merge table
-    broadcasts; each Arrow batch encodes with a word→tokens memo (Zipf
-    makes the hit rate enormous). Greedy lowest-rank merge application,
-    the standard BPE inference."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    ranks = {pair: i for i, pair in enumerate(merges)}
-    bc = df.sparkSession.sparkContext.broadcast(ranks)
-    out_schema = StructType(
-        [
-            df.schema[id_col],
-            StructField("bpe_tokens", ArrayType(StringType())),
-            StructField("n_bpe_tokens", LongType()),
-        ]
-    )
-
-    def batches(it):
-        ranks_l = bc.value
-        memo: dict = {}
-        for pdf in it:
-            toks_col = []
-            n_col = []
-            for t in pdf[text_col]:
-                if t is None:
-                    toks_col.append([])
-                    n_col.append(0)
-                    continue
-                if lowercase:
-                    t = t.lower()
-                toks: list[str] = []
-                for w in t.split():
-                    toks.extend(_encode_word(w, ranks_l, memo))
-                toks_col.append(toks)
-                n_col.append(len(toks))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "bpe_tokens": toks_col,
-                    "n_bpe_tokens": n_col,
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(batches, out_schema)
-
-
-def bpe_exact_token_count(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lowercase: bool = True,
-) -> DataFrame:
-    """(id, n_bpe_tokens) under the TRAINED merge table — the budgeting
-    column sequence packing and mixture math actually want (whitespace
-    counts misprice morphology-heavy text by 2-4×; the Catalyst-side
-    ``functions.text.bpe_token_count`` stays the cheap zero-Python
-    ESTIMATE for gating). Same kernel as ``bpe_encode``, atomic."""
-    return bpe_encode(df, merges, text_col, id_col, lowercase).select(
-        id_col, "n_bpe_tokens"
-    )
-
-
-def bpe_decode_tokens(tokens: list[str]) -> str:
-    """Inverse of ``_encode_word`` over a token stream: concatenate and
-    split on the end-of-word markers (exactness pin for tests)."""
-    return "".join(tokens).replace(EOW, " ").rstrip()
-
-
-# -- byte-level BPE (r11: VERDICT r10 #3) -------------------------------------
 
 #: the GPT-2 pretokenizer pattern (published in openai/gpt-2
 #: encoder.py); the scanner below implements it without the `regex`
@@ -353,11 +165,11 @@ def train_byte_bpe(
     sample_rows: int = 10_000,
 ) -> list[tuple[str, str]]:
     """Learn a byte-level BPE merge table on a bounded, hash-ordered
-    sample (layout-independent, same convention as
-    ``train_pq_codebooks``). Pretokens come from ``gpt2_pretokenize``;
-    base symbols are the byte↔unicode alphabet, so there is NO unknown
-    token — anything unseen in training still encodes, one byte symbol
-    at a time. No lowercasing and no end-of-word marker (the GPT-2
+    sample (``orderBy(xxhash64).limit`` compiles to a partial top-k —
+    layout-independent, unlike a bare ``limit``). Pretokens come from
+    ``gpt2_pretokenize``; base symbols are the byte↔unicode alphabet,
+    so there is NO unknown token — anything unseen in training still
+    encodes, one byte symbol at a time. No lowercasing and no end-of-word marker (the GPT-2
     formulation: pretoken boundaries already delimit merges). Returns
     ``[(left, right), ...]`` in merge order; ties break
     lexicographically so training is deterministic."""
@@ -441,8 +253,7 @@ def byte_bpe_encode_text(text: str, ranks: dict, memo: dict) -> list[str]:
 def byte_bpe_decode_tokens(tokens: list[str]) -> str:
     """EXACT inverse of byte-level encoding: concatenate, map symbols
     back through the byte table, UTF-8 decode. Lossless for any input
-    (whitespace, case, every script) — the property the word-level
-    tier cannot offer."""
+    (whitespace, case, every script)."""
     data = bytes(_BYTE_DECODER[c] for c in "".join(tokens))
     return data.decode("utf-8")
 
@@ -454,9 +265,9 @@ def byte_bpe_encode(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """(id, bpe_tokens array<string>, n_bpe_tokens) under a byte-level
-    merge table — same distributed shape as ``bpe_encode`` (broadcast
-    ranks, Arrow batches, per-batch pretoken→tokens memo), but no OOV
-    is possible and the round trip is exact."""
+    merge table: broadcast ranks, Arrow batches, a per-batch
+    pretoken→tokens memo. No OOV is possible and the round trip is
+    exact."""
     import pandas as pd
     from pyspark.sql.types import (
         ArrayType,

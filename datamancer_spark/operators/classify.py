@@ -116,86 +116,6 @@ def calibration_table(
     )
 
 
-def train_hashed_classifier(
-    df: DataFrame,
-    label_col: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    dim: int = 1024,
-    max_iter: int = 30,
-    reg_param: float = 0.0,
-    sample_rows: int = 100_000,
-    seed: int = 7,
-) -> tuple[dict[int, float], float]:
-    """Train the hashed bag-of-words quality classifier IN Spark and
-    return ``(weights, bias)`` ready for ``hashed_linear_score`` — the
-    full CCNet-style loop: weak labels (a lang flag, a source flag, a
-    benchmark-overlap bit) → logistic regression → zero-shuffle corpus
-    scoring with the trained model.
-
-    Features are term frequencies over the SAME md5 buckets the scorer
-    folds over (``hash32(token) % dim``, counts normalized by document
-    token count), so the trained logit ``Σ_b w_b·tf_b + b0`` equals the
-    scorer's mean-per-token weight + bias EXACTLY — weights transfer
-    with no re-featurization.
-
-    Training runs on a bounded sample (``sample_rows``, like the IVF
-    codebook: models need thousands of examples, not the corpus); the
-    bucket ids are computed JVM-side, and only the sampled (buckets,
-    label) rows cross into Python to become ml SparseVectors. Scoring
-    the full corpus afterwards stays a pure projection."""
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.linalg import Vectors
-
-    toks = F.filter(tokens(F.col(text_col)), lambda t: F.length(t) > 0)
-    # A bare .limit(sample_rows) is a partition-order PREFIX — on a
-    # source- or time-sorted corpus the training set could be a single
-    # domain/class. Order by a seeded md5 of the doc id instead: a
-    # deterministic uniform shuffle, and orderBy+limit compiles to
-    # TakeOrderedAndProject (bounded per-partition heaps, no global
-    # sort shuffle).
-    prepped = (
-        df.select(
-            F.transform(toks, lambda t: (hash32(t) % dim).cast("int")).alias(
-                "_buckets"
-            ),
-            F.col(label_col).cast("int").cast("double").alias("_label"),
-            F.md5(
-                F.concat(F.lit(str(seed)), F.col(id_col).cast("string"))
-            ).alias("_shuf"),
-        )
-        .filter(F.col("_label").isNotNull())
-        .orderBy("_shuf")
-        .limit(sample_rows)
-        .drop("_shuf")
-    )
-
-    def to_vec(row):
-        from collections import Counter
-
-        c = Counter(row["_buckets"])
-        n = max(1, sum(c.values()))
-        idx = sorted(c)
-        return (
-            Vectors.sparse(dim, idx, [c[i] / n for i in idx]),
-            float(row["_label"]),
-        )
-
-    spark = df.sparkSession
-    train = spark.createDataFrame(
-        prepped.rdd.map(to_vec), ["features", "label"]
-    )
-    lr = LogisticRegression(
-        maxIter=max_iter, regParam=reg_param, standardization=False
-    )
-    model = lr.fit(train)
-    w = model.coefficients
-    weights = {int(i): float(w[int(i)]) for i in w.indices} if hasattr(
-        w, "indices"
-    ) else {i: float(v) for i, v in enumerate(w) if v != 0.0}
-    return weights, float(model.intercept)
-
-
 def naive_bayes_classify(
     df: DataFrame,
     label_col: str = "lang",
@@ -211,9 +131,8 @@ def naive_bayes_classify(
     docs only, textbook multinomial NB; unlabeled docs are scored but
     never counted into V). Every step is a groupBy/join, so the whole
     train+score
-    composition is differentially checkable against SQL — unlike the
-    logistic tier (train_hashed_classifier), whose iterative solver is
-    rows-only by nature.
+    composition is differentially checkable against SQL — unlike an
+    iterative logistic solver, which is rows-only by nature.
 
     Scores round to 1e-6 BEFORE the argmax (drift from float sum order
     and 1-ulp log differences is ~1e-15, absorbed), ties break to the

@@ -585,11 +585,9 @@ def band_hash_columns(
     sig: Column, num_hashes: int = 16, bands: int = 4
 ) -> list[Column]:
     """The b LSH band keys of a MinHash signature as SEPARATE columns —
-    the one band-key encoding: the self-join, the cross-corpus screens
-    and ``minhash_band_index`` explode these columns to rows
-    (``_band_keys``), and the streaming screen keeps them as columns
-    (per-doc aggregation over exploded band rows would need state), so
-    band keys agree everywhere. Band b is the md5 of its r = k/b
+    the one band-key encoding: the self-join and the cross-corpus
+    screens explode these columns to rows (``_band_keys``), so band
+    keys agree everywhere. Band b is the md5 of its r = k/b
     signature slots, identical in the DuckDB oracle. At r=1 (the
     recall-certain geometry the LSH capstone pins) the md5 adds nothing
     — one slot IS the band key — so the slot value serializes directly
@@ -629,19 +627,6 @@ def bit_block_columns(sig: Column, bands: int) -> list[Column]:
         F.shiftrightunsigned(sig, b * width).bitwiseAND(F.lit((1 << width) - 1))
         for b in range(bands)
     ]
-
-
-def minhash_band_index(
-    index: DataFrame, num_hashes: int = 16, bands: int = 4
-) -> DataFrame:
-    """Collapse a ``build_minhash_index`` frame to its DISTINCT
-    (band, bhash) keys — the compact membership structure a streaming
-    screen joins against (one row per occupied band bucket, not per
-    doc)."""
-    keys = band_hash_columns(F.col("sig"), num_hashes, bands)
-    return _band_keys(index.select("sig").distinct(), keys).select(
-        "band", "bhash"
-    ).distinct()
 
 
 def build_minhash_index(
@@ -1249,9 +1234,9 @@ def bloom_maybe_contains(
     DEFINITELY not in the building corpus (no false negatives, ever);
     True means maybe (false-positive rate ≈ (1 − e^(−kn/m))^k). Plan
     shape: ``num_hashes`` broadcast LEFT joins of position columns
-    against the (re-broadcastable) occupied-position set — the
-    ``streaming_fuzzy_screen`` column-wise pattern, so the probe adds
-    ZERO shuffles and runs on streams unchanged."""
+    against the (re-broadcastable) occupied-position set, kept as
+    columns rather than exploded rows, so the probe adds ZERO shuffles
+    and runs on streams unchanged."""
     v = F.col(value_col) if hashed else fingerprint(F.col(value_col))
     probed = df.withColumns(
         {

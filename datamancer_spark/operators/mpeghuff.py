@@ -16,8 +16,8 @@ STRUCTURALLY at import time:
   entry length vector essentially cannot hit Kraft equality by
   accident, so this is a strong (not airtight) transcription check.
 
-A table that fails either check is EXCLUDED from ``SUPPORTED_TABLES``
-and the Layer III decoder refuses (returns ``None`` for) any frame
+A table that fails either check is EXCLUDED from ``PAIR_TABLES`` and
+the Layer III decoder refuses (returns ``None`` for) any frame
 that selects it — a structurally unsound table never silently decodes
 garbage. ``tests/test_mpegaudio.py`` pins exactly which tables
 validated.
@@ -386,5 +386,3 @@ def pair_table_for_select(select: int):
     dec, maxlen = built
     return dec, maxlen, linbits
 
-
-SUPPORTED_TABLES = frozenset(PAIR_TABLES)

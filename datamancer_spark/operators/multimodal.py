@@ -10,16 +10,15 @@ One format table, ``_FORMATS``, has a row per container: its magic
 test, ``sniff_kind`` label, media kind, header capability walk, decode,
 audio metadata and frame sampler. ``sniff_kind``, the coverage tier
 (``media_decode_coverage``), ``decode_image_blob``,
-``audio_decode_array``, ``sample_frames`` and
-``audio_container_metadata`` all dispatch through it, so each magic
-test exists once and the ``screenable`` / ``decodable`` answer is the
-same function everywhere: False means the decode returns None.
+``audio_decode_array`` and ``audio_container_metadata`` all dispatch
+through it, so each magic test exists once and the ``screenable`` /
+``decodable`` answer is the same function everywhere: False means the
+decode returns None.
 
 - **Header metadata — REAL.** Container headers are plain bytes:
   ``image_dimensions`` (PNG/GIF/BMP/WebP in pure Catalyst, JPEG/TIFF via
-  stdlib walks), ``wav_metadata`` (canonical RIFF layout in Catalyst),
-  ``audio_container_metadata`` and ``video_metadata`` parse actual
-  on-disk formats with no codec library.
+  stdlib walks) and ``audio_container_metadata`` parse actual on-disk
+  formats with no codec library.
 - **Pixel/sample decode — REAL for every image format plus PCM and the
   table-driven audio codecs, refused only where a codec is genuinely
   unavoidable.** PNG, baseline/progressive JPEG (``jpegcodec``), GIF
@@ -37,8 +36,9 @@ same function everywhere: False means the decode returns None.
   coder, with no Kraft-style structural self-check (a range coder
   accepts ANY probability table and silently decodes plausible noise
   from a wrong one). Same gate failure as the MP3 ESC tables
-  (``mpeghuff.py``) and the video probability tables
-  (``sample_frames``); metadata (rate/channels/duration via the Ogg
+  (``mpeghuff.py``) and the video codecs' probability tables (VP8's
+  coefficient probabilities, H.264's CAVLC tables / CABAC
+  initializers); metadata (rate/channels/duration via the Ogg
   page walk) stays real.
 
 Scale notes: binary payloads never shuffle — every stage here is
@@ -187,8 +187,8 @@ def png_decode_array(blob: bytes):
     Returns ``(width, height, channels, pixels)`` with pixels an
     (h, w, channels) uint8 ndarray — alpha dropped, palette expanded
     through PLTE to RGB — or ``None`` for non-PNG / malformed input.
-    ``png_decode_pixels`` wraps this for summary stats; ``dhash``
-    consumes the array."""
+    ``decode_images`` and ``dhash`` consume the array through
+    ``decode_image_blob``."""
     import struct
     import zlib
 
@@ -347,18 +347,6 @@ def png_decode_array(blob: bytes):
     return (w, h, nch, color)
 
 
-def png_decode_pixels(blob: bytes):
-    """Summary-stat wrapper over ``png_decode_array``: returns
-    ``(width, height, channels, mean_intensity)`` with mean over the
-    non-alpha samples in [0, 1], or ``None`` for undecodable input —
-    callers treat that as undecodable, never as an error."""
-    decoded = png_decode_array(blob)
-    if decoded is None:
-        return None
-    w, h, nch, px = decoded
-    return (w, h, nch, round(float(px.mean()) / 255.0, 6))
-
-
 def decode_image_blob(blob: bytes):
     """ONE image blob → ``(width, height, channels, pixels uint8
     (h, w, ch))`` or ``None`` — the pure-Python decode shared by every
@@ -412,15 +400,6 @@ def decode_images(
     return df.select("path", bin_col).mapInPandas(batches, DECODE_SCHEMA)
 
 
-FRAME_SCHEMA = StructType(
-    [
-        StructField("path", StringType()),
-        StructField("frame_idx", LongType()),
-        StructField("frame_bytes", BinaryType()),
-    ]
-)
-
-
 def avi_mjpeg_frames(blob: bytes, every_n: int = 1, max_frames: int = 64):
     """REAL video frame decode for MJPEG-in-AVI — the one mainstream
     video profile that needs no codec library, because the container is
@@ -465,50 +444,6 @@ def avi_mjpeg_frames(blob: bytes, every_n: int = 1, max_frames: int = 64):
             frame_idx += 1
     except Exception:
         return
-
-
-def sample_frames(
-    df: DataFrame,
-    bin_col: str = "content",
-    every_n: int = 10,
-    max_frames: int = 8,
-) -> DataFrame:
-    """Sample every-Nth frame from animation/video blobs → one row per
-    frame (explode-shaped output, bounded by max_frames so one giant
-    clip cannot blow up a task). Animated GIF decodes FOR REAL with the
-    stdlib LZW decoder (``gif_decode_frames``; frame_bytes is the RGB24
-    canvas after compositing), and MJPEG-in-AVI video decodes FOR REAL
-    too (``avi_mjpeg_frames`` — RIFF walk + the baseline JPEG decoder);
-    compressed video codecs (mp4/webm, non-MJPEG AVI) are refused —
-    those rows are dropped. Dispatch is the ``frames`` sampler of the
-    blob's ``_FORMATS`` row.
-
-    Why compressed video stays refused: VP8/VP9/AV1 and H.264 entropy-
-    code against LARGE spec-constant tables (VP8's coefficient
-    probabilities, H.264's CAVLC tables / CABAC initializers) with no
-    Kraft-style structural self-check, so a mis-transcribed entry
-    silently decodes plausible garbage — the gate the MP3 ESC tables
-    failed (mpeghuff.py). Vorbis decodes because its tables travel in
-    the stream. Containers yield metadata + codec ids
-    (``video_metadata``), ``media_decode_coverage`` reports the
-    unscreenable fraction, and curation never silently drops what it
-    cannot read."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"path": [], "frame_idx": [], "frame_bytes": []}
-            for path, blob in zip(pdf["path"], pdf[bin_col]):
-                blob = bytes(blob)
-                row = _format_of(blob)
-                if row.frames is None:
-                    continue  # undecodable without ffmpeg: no rows
-                for idx, _w, _h, rgb in row.frames(blob, every_n, max_frames):
-                    rows["path"].append(path)
-                    rows["frame_idx"].append(idx)
-                    rows["frame_bytes"].append(rgb)
-            yield pd.DataFrame(rows)
-
-    return df.select("path", bin_col).mapInPandas(batches, FRAME_SCHEMA)
 
 
 AUDIO_SCHEMA = StructType(
@@ -1294,40 +1229,6 @@ def image_dimensions(df: DataFrame, bin_col: str = "content") -> DataFrame:
     return catalyst.unionByName(walked)
 
 
-def wav_metadata(df: DataFrame, bin_col: str = "content") -> DataFrame:
-    """REAL WAV (RIFF) metadata from the canonical header layout —
-    pure Catalyst, no audio library: channels (LE u16 @ byte 23),
-    sample_rate (LE u32 @ 25), bits_per_sample (LE u16 @ 35), and
-    duration from the data-chunk size when the layout is canonical
-    (fmt chunk of length 16 at byte 13, data chunk directly after —
-    the layout every standard PCM writer emits). Non-canonical or
-    non-WAV rows yield NULLs rather than wrong numbers: the 'WAVE'
-    tag, fmt length, and 'data' tag are all checked."""
-    b = F.col(bin_col)
-    is_riff_wave = (
-        (F.substring(b, 1, 4).cast("string") == "RIFF")
-        & (F.substring(b, 9, 4).cast("string") == "WAVE")
-        & (F.substring(b, 13, 4).cast("string") == "fmt ")
-        & (_le_u32(b, 17) == 16)  # canonical PCM fmt chunk
-        & (F.substring(b, 37, 4).cast("string") == "data")
-    )
-    channels = _le_u16(b, 23)
-    rate = _le_u32(b, 25)
-    bits = _le_u16(b, 35)
-    data_size = _le_u32(b, 41)
-    bytes_per_s = rate * channels * (bits / F.lit(8.0))
-    return df.select(
-        "path",
-        F.when(is_riff_wave, channels).alias("channels"),
-        F.when(is_riff_wave, rate).alias("sample_rate"),
-        F.when(is_riff_wave, bits).alias("bits_per_sample"),
-        F.when(
-            is_riff_wave & (bytes_per_s > 0),
-            F.round(data_size / bytes_per_s, 6),
-        ).alias("duration_s"),
-    )
-
-
 def _gif_lzw_decode(min_code_size: int, data: bytes, expected: int):
     """GIF-variant LZW decode (little-endian bit packing, CLEAR/END
     codes, 12-bit max code width). Returns index bytes or None."""
@@ -1856,261 +1757,6 @@ def dhash_pairs(
     )
 
 
-def dhash_scalar_udf(kind: str = "image"):
-    """Arrow-batched SCALAR pandas UDF computing the 64-bit dHash of
-    ``kind`` from a binary column (NULL for NULL or undecodable blobs)
-    — the column-preserving form of ``dhash`` for plans that must stay
-    stateless projections (streaming screens):
-    ``df.withColumn("dhash", dhash_scalar_udf()(F.col("content")))``."""
-    from pyspark.sql.functions import pandas_udf
-
-    kernel = _dhash_kernel(kind)
-
-    @pandas_udf(LongType())
-    def _dhash(blobs: pd.Series) -> pd.Series:
-        return pd.Series([kernel(b) for b in blobs], dtype="object")
-
-    return _dhash
-
-
-def dhash_band_index(
-    df: DataFrame,
-    bin_col: str = "content",
-    id_col: str = "path",
-    bands: int = 4,
-    kind: str = "image",
-) -> DataFrame:
-    """The PERSISTABLE side of streaming perceptual image dedup: one row
-    per (band, val) 16-bit block bucket occupied by the corpus's dHash
-    signatures, carrying the DISTINCT full 64-bit signatures in that
-    bucket (``sigs``, sorted) — the media analog of
-    ``minhash_band_index``. The full signatures are load-bearing, not an
-    optimization: each band has only 65536 possible values, so bucket
-    membership alone saturates as the corpus grows (at ~65k distinct
-    signatures nearly every bucket is occupied and a membership-only
-    screen would drop nearly all NOVEL media); carrying the bucket's
-    signatures lets the probe verify true Hamming distance and stay
-    exact at any corpus size. Write it as the media index;
-    ``streaming.streaming_media_screen`` probes incoming blobs against
-    it statelessly, and compaction refreshes it with ``dhash``
-    over the accumulated corpus. Index size is bands x n_distinct_sigs
-    entries total across the arrays — per-bucket arrays grow ~linearly
-    past 65k distinct signatures; re-derive with wider bands (e.g.
-    bands=2, 32-bit buckets) before buckets get hot.
-    ``kind="audio"`` (r9) indexes the audio envelope dHash instead —
-    same engine, cross-codec by construction (WAV/FLAC/MP3/Vorbis of
-    the same clip land in the same buckets)."""
-    from .dedup import _band_keys, bit_block_columns
-
-    sigs = dhash(df, bin_col, id_col, kind).filter(F.col("dhash").isNotNull())
-    banded = _band_keys(
-        sigs.select(F.col("dhash").alias("sig")),
-        bit_block_columns(F.col("sig"), bands),
-    )
-    return (
-        banded.select("band", F.col("bhash").alias("val"), "sig")
-        .distinct()
-        .groupBy("band", "val")
-        .agg(F.sort_array(F.collect_list("sig")).alias("sigs"))
-    )
-
-
-VIDEO_META_SCHEMA = StructType(
-    [
-        StructField("path", StringType()),
-        StructField("container", StringType()),
-        StructField("duration_s", DoubleType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("codec", StringType()),
-    ]
-)
-
-
-def mp4_metadata_blob(blob: bytes):
-    """REAL MP4/MOV metadata from the ISO-BMFF box structure — pure
-    stdlib byte walk, no media library: major brand from ``ftyp``,
-    duration from ``moov/mvhd`` (version 0 and 1 layouts), presentation
-    dimensions from the first ``trak/tkhd`` with nonzero 16.16
-    fixed-point width/height (the video track; audio tracks carry 0x0),
-    codec from that track's ``stbl/stsd`` first sample-entry fourcc
-    (avc1/hev1/vp09/av01/…; r7). Returns ``(brand, duration_s, width,
-    height, codec)`` or ``None`` for non-MP4 input. Fields may be None
-    individually when the corresponding box is absent/malformed — a
-    curation filter should treat that as unknown, not zero."""
-    import struct
-
-    def boxes(data, pos, end):
-        while pos + 8 <= end:
-            size = struct.unpack(">I", data[pos : pos + 4])[0]
-            typ = data[pos + 4 : pos + 8]
-            hdr = 8
-            if size == 1:
-                if pos + 16 > end:
-                    return
-                size = struct.unpack(">Q", data[pos + 8 : pos + 16])[0]
-                hdr = 16
-            elif size == 0:
-                size = end - pos
-            if size < hdr or pos + size > end:
-                return
-            yield typ, pos + hdr, pos + size
-            pos += size
-
-    if len(blob) < 12:
-        return None
-    brand = None
-    duration = None
-    width = height = codec = None
-    try:
-        for typ, body, bend in boxes(blob, 0, len(blob)):
-            if typ == b"ftyp":
-                brand = blob[body : body + 4].decode("ascii", "replace")
-            elif typ == b"moov":
-                for t2, b2, e2 in boxes(blob, body, bend):
-                    if t2 == b"mvhd" and duration is None:
-                        ver = blob[b2]
-                        if ver == 1:
-                            ts = struct.unpack(">I", blob[b2 + 20 : b2 + 24])[0]
-                            dur = struct.unpack(">Q", blob[b2 + 24 : b2 + 32])[0]
-                        else:
-                            ts = struct.unpack(">I", blob[b2 + 12 : b2 + 16])[0]
-                            dur = struct.unpack(">I", blob[b2 + 16 : b2 + 20])[0]
-                        if ts:
-                            duration = round(dur / ts, 6)
-                    elif t2 == b"trak" and width is None:
-                        tw = th = tcodec = None
-                        for t3, b3, e3 in boxes(blob, b2, e2):
-                            if t3 == b"tkhd":  # v0/v1: dims sit last
-                                w16, h16 = struct.unpack(
-                                    ">II", blob[e3 - 8 : e3]
-                                )
-                                if w16 and h16:
-                                    tw, th = w16 >> 16, h16 >> 16
-                            elif t3 == b"mdia":
-                                # mdia -> minf -> stbl -> stsd: first
-                                # sample entry's format fourcc
-                                for t4, b4, e4 in boxes(blob, b3, e3):
-                                    if t4 != b"minf":
-                                        continue
-                                    for t5, b5, e5 in boxes(blob, b4, e4):
-                                        if t5 != b"stbl":
-                                            continue
-                                        for t6, b6, e6 in boxes(
-                                            blob, b5, e5
-                                        ):
-                                            if (
-                                                t6 == b"stsd"
-                                                and e6 - b6 >= 16
-                                            ):
-                                                tcodec = blob[
-                                                    b6 + 12 : b6 + 16
-                                                ].decode("ascii", "replace")
-                        if tw and th:
-                            width, height = tw, th
-                            codec = tcodec
-    except Exception:
-        return None
-    if brand is None:
-        return None
-    return (brand, duration, width, height, codec)
-
-
-def _ebml_vint(data: bytes, pos: int, keep_marker: bool):
-    """EBML variable-length integer at ``pos``: returns (value, n_bytes)
-    or None. Element IDs keep the length-marker bit; sizes strip it."""
-    if pos >= len(data):
-        return None
-    first = data[pos]
-    if first == 0:
-        return None
-    n = 1
-    mask = 0x80
-    while not (first & mask):
-        mask >>= 1
-        n += 1
-    if pos + n > len(data):
-        return None
-    v = first if keep_marker else (first & (mask - 1))
-    for i in range(1, n):
-        v = (v << 8) | data[pos + i]
-    return (v, n)
-
-
-def webm_metadata(blob: bytes):
-    """WebM/Matroska metadata — pure stdlib EBML walk, no media
-    library: duration from Segment→Info (Duration float ×
-    TimecodeScale), video dimensions from Segment→Tracks→TrackEntry→
-    Video (PixelWidth/PixelHeight). Returns
-    ``(duration_s|None, width|None, height|None)`` or ``None`` for
-    non-EBML input. Frame DECODE (VP8/VP9/AV1) genuinely needs a
-    codec — this is the filter-before-decode metadata tier."""
-    import struct
-
-    if len(blob) < 8 or blob[:4] != b"\x1a\x45\xdf\xa3":
-        return None
-
-    def walk(pos, end):
-        """Yield (element_id, body_start, body_end) at this level."""
-        while pos < end:
-            eid = _ebml_vint(blob, pos, True)
-            if eid is None:
-                return
-            esz = _ebml_vint(blob, pos + eid[1], False)
-            if esz is None:
-                return
-            body = pos + eid[1] + esz[1]
-            bend = min(body + esz[0], end)
-            yield (eid[0], body, bend)
-            pos = bend
-
-    duration = width = height = codec = None
-    tscale = 1_000_000  # Matroska default: ns per timecode unit
-    try:
-        # skip the EBML header element, find Segment (0x18538067)
-        seg = None
-        for eid, b, e in walk(0, len(blob)):
-            if eid == 0x18538067:
-                seg = (b, e)
-                break
-        if seg is None:
-            return None
-        for eid, b, e in walk(seg[0], seg[1]):
-            if eid == 0x1549A966:  # Info
-                raw_dur = None
-                for eid2, b2, e2 in walk(b, e):
-                    if eid2 == 0x2AD7B1:  # TimecodeScale (uint)
-                        tscale = int.from_bytes(blob[b2:e2], "big") or tscale
-                    elif eid2 == 0x4489:  # Duration (float 4/8 bytes)
-                        if e2 - b2 == 4:
-                            raw_dur = struct.unpack(">f", blob[b2:e2])[0]
-                        elif e2 - b2 == 8:
-                            raw_dur = struct.unpack(">d", blob[b2:e2])[0]
-                if raw_dur is not None:
-                    duration = round(raw_dur * tscale / 1e9, 6)
-            elif eid == 0x1654AE6B and width is None:  # Tracks
-                for eid2, b2, e2 in walk(b, e):
-                    if eid2 != 0xAE:  # TrackEntry
-                        continue
-                    tcodec = None
-                    has_video = False
-                    for eid3, b3, e3 in walk(b2, e2):
-                        if eid3 == 0x86:  # CodecID (ASCII)
-                            tcodec = blob[b3:e3].decode("ascii", "replace")
-                        elif eid3 == 0xE0:  # Video
-                            has_video = True
-                            for eid4, b4, e4 in walk(b3, e3):
-                                if eid4 == 0xB0:
-                                    width = int.from_bytes(blob[b4:e4], "big")
-                                elif eid4 == 0xBA:
-                                    height = int.from_bytes(blob[b4:e4], "big")
-                    if has_video and codec is None:
-                        codec = tcodec
-    except Exception:
-        return None
-    return (duration, width, height, codec)
-
-
 def avi_video_fourcc(blob: bytes):
     """The AVI video stream's codec fourcc from the real
     hdrl → strl → strh/strf walk: ``strf``'s BITMAPINFOHEADER
@@ -2155,58 +1801,6 @@ def avi_video_fourcc(blob: bytes):
             except UnicodeDecodeError:
                 return None
     return None
-
-
-def video_metadata(df: DataFrame, bin_col: str = "content") -> DataFrame:
-    """Per-clip container metadata for video curation: MP4/MOV via the
-    stdlib ISO-BMFF walk (``mp4_metadata_blob``), WebM/Matroska via the
-    EBML walk (``webm_metadata``), AVI via its canonical
-    RIFF header (frame count dims from ``avih``, codec fourcc from the
-    r7 ``avi_video_fourcc`` stream walk; mp4 codec from stsd, webm
-    codec from CodecID). Lets a 100 TB media pipeline filter by
-    resolution/duration/codec next to the scan, BEFORE any decode
-    attempt — metadata is a byte walk, decode is the expensive tier.
-    Unknown containers yield NULL fields, never errors."""
-    import struct
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"path": [], "container": [], "duration_s": [],
-                   "width": [], "height": [], "codec": []}
-            for path, blob in zip(pdf["path"], pdf[bin_col]):
-                blob = bytes(blob)
-                container = dur = w = h = codec = None
-                meta = mp4_metadata_blob(blob)
-                wb = webm_metadata(blob) if meta is None else None
-                if meta is not None:
-                    brand, dur, w, h, codec = meta
-                    container = f"mp4/{brand}"
-                elif wb is not None:
-                    dur, w, h, codec = wb
-                    container = "webm"
-                elif _format_of(blob).container == "avi":
-                    container = "avi"
-                    codec = avi_video_fourcc(blob)
-                    # canonical avih: LIST hdrl at 12, avih body at 32
-                    if blob[12:16] == b"LIST" and blob[20:24] == b"hdrl" \
-                            and blob[24:28] == b"avih":
-                        body = blob[32:88]
-                        if len(body) >= 40:
-                            us_pf, _, _, _, frames = struct.unpack(
-                                "<5I", body[:20]
-                            )
-                            w, h = struct.unpack("<II", body[32:40])
-                            if us_pf:
-                                dur = round(frames * us_pf / 1e6, 6)
-                out["path"].append(path)
-                out["container"].append(container)
-                out["duration_s"].append(dur)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["codec"].append(codec)
-            yield pd.DataFrame(out)
-
-    return df.select("path", bin_col).mapInPandas(batches, VIDEO_META_SCHEMA)
 
 
 AUDIO_META_SCHEMA = StructType(
@@ -2413,11 +2007,11 @@ def ogg_metadata(blob: bytes):
 # -- the media format table --------------------------------------------------
 #
 # One row per container. Every dispatch site walks it: sniff_kind's
-# MAGIC_KINDS, the coverage tier, decode_image_blob, audio_decode_array,
-# sample_frames and audio_container_metadata. A blob belongs to the FIRST
-# row whose magic it passes, so each magic test exists once, here, and a
-# row's ``capable`` header walk is the one answer both the coverage report
-# and the ``decodable`` metadata column give. Contract: ``capable`` False
+# MAGIC_KINDS, the coverage tier, decode_image_blob, audio_decode_array
+# and audio_container_metadata. A blob belongs to the FIRST row whose
+# magic it passes, so each magic test exists once, here, and a row's
+# ``capable`` header walk is the one answer both the coverage report and
+# the ``decodable`` metadata column give. Contract: ``capable`` False
 # means ``decode`` returns None (the walk may over-report — a payload
 # truncated mid-stream passes the header walk — but never under-reports).
 

@@ -1243,41 +1243,6 @@ def _window_hash_base(
     )
 
 
-def hot_window_index(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 8,
-    min_docs: int = 2,
-) -> DataFrame:
-    """The PERSISTABLE side of duplicated-span detection: the distinct
-    window fingerprints (full-md5 ``window_fp``; 32-bit ids birthday-
-    collide and would poison every probe) appearing in >= ``min_docs``
-    distinct documents — one ``wh`` column, usually tiny relative to the
-    corpus. Write it as the span index; ``streaming.streaming_span_hits``
-    probes incoming documents against it statelessly, and a batch semi
-    join flags spans in any later snapshot without re-reading this
-    corpus."""
-    counts = _window_hash_base(df, text_col, id_col, window)
-    wh = counts.filter(F.col("n_windows") > 0).select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.col("n_windows").cast("int")),
-                lambda s: window_fp(
-                    F.concat_ws(" ", F.slice(F.col("_toks"), s, window))
-                ),
-            )
-        ).alias("wh"),
-    )
-    return (
-        wh.groupBy("wh")
-        .agg(F.countDistinct(id_col).alias("_nd"))
-        .filter(F.col("_nd") >= min_docs)
-        .select("wh")
-    )
-
-
 def duplicate_span_stats(
     df: DataFrame,
     text_col: str = "text",

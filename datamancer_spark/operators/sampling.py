@@ -1,4 +1,4 @@
-"""Deterministic dataset splitting + histogram utilities.
+"""Deterministic dataset splitting and sampling utilities.
 
 ``hash_split`` assigns rows to named splits by portable md5 hash of a key
 — the reproducible train/test split every data pipeline needs: stable
@@ -99,27 +99,6 @@ def winsorize(
             F.least(F.greatest(F.col(col), F.col("_lo")), F.col("_hi")),
         )
         .drop("_lo", "_hi")
-    )
-
-
-def histogram(
-    df: DataFrame,
-    col: str,
-    lo: float,
-    hi: float,
-    buckets: int = 20,
-) -> DataFrame:
-    """Equi-width histogram via width_bucket — one partial-aggregated
-    shuffle, engine-portable semantics (bucket 0 = below lo,
-    buckets+1 = at/above hi)."""
-    return (
-        df.select(
-            F.width_bucket(F.col(col), F.lit(lo), F.lit(hi), F.lit(buckets)).alias(
-                "bucket"
-            )
-        )
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
     )
 
 

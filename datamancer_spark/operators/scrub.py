@@ -103,27 +103,6 @@ def redact_pii(
 
 # -- URLs -------------------------------------------------------------------
 
-URL_RE = r"https?://[^\s<>\"')\]]+"
-
-
-def extract_urls(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """One row per URL occurrence: (id, url, host). Host extraction is
-    a pure regexp (scheme-stripped, first path/port separator ends the
-    host, lowercased) — no Python, no java.net parsing."""
-    urls = df.select(
-        F.col(id_col),
-        F.explode(F.regexp_extract_all(F.col(text_col), F.lit(URL_RE), 0)).alias(
-            "url"
-        ),
-    )
-    host = F.lower(
-        F.regexp_extract(F.col("url"), r"^https?://([^/:?#]+)", 1)
-    )
-    return urls.withColumn("host", host)
-
-
 def resolve_dot_segments(path: Column) -> Column:
     """RFC 3986 §5.2.4 dot-segment removal as ONE Catalyst
     ``F.aggregate`` fold over the '/'-split segments (JVM whole-stage
@@ -158,10 +137,9 @@ def normalize_url(url: Column) -> Column:
     (``:80`` http / ``:443`` https, r12), strip fragment, resolve
     ``.``/``..`` dot segments (r12, ``resolve_dot_segments``), strip
     common tracking params (utm_*, fbclid, gclid), drop a trailing
-    ``/`` on bare paths. Non-http(s) inputs pass through unchanged
-    (extract_urls only emits http/https). Conservative: the
-    query-string scrub removes only the known-tracking keys,
-    preserving semantic params; percent-encoding is NOT normalized
+    ``/`` on bare paths. Non-http(s) inputs pass through unchanged.
+    Conservative: the query-string scrub removes only the
+    known-tracking keys, preserving semantic params; percent-encoding is NOT normalized
     (decoding unreserved escapes changes bytes — out of scope,
     documented)."""
     u = F.regexp_replace(url, r"#.*$", "")  # fragment
@@ -396,39 +374,10 @@ def fix_mojibake(text: Column, passes: int = 1) -> Column:
     replacement maps ≥2 chars to 1, so iterating strictly shrinks the
     string and reaches a detector-clean fixpoint in ≤ len(text)
     passes; pass ``passes=2..3`` to cover the doubly/triply-encoded
-    text seen in the wild as one expression tree, or route the
-    (screened, tiny) suspicious slice through ``fix_mojibake_full``."""
+    text seen in the wild as one expression tree."""
     out = text
     for _ in range(int(passes)):
         for broken, fixed in MOJIBAKE_MAP:
             out = F.replace(out, F.lit(broken), F.lit(fixed))
     return out
 
-
-def fix_mojibake_full(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Byte-level mojibake repair (the ftfy-style general case): where
-    the text cp1252-encodes cleanly AND the bytes decode as valid UTF-8
-    AND that shrinks the string, the UTF-8 reading is the original.
-    Arrow-batched mapInPandas — the slow path by design; run AFTER
-    ``mojibake_hits`` has filtered to the (tiny) suspicious slice,
-    never corpus-wide."""
-
-    def _repair(batches):
-        for pdf in batches:
-            def one(s):
-                if s is None:
-                    return s
-                try:
-                    b = s.encode("cp1252")
-                except UnicodeEncodeError:
-                    return s
-                try:
-                    d = b.decode("utf-8")
-                except UnicodeDecodeError:
-                    return s
-                return d if len(d) < len(s) else s
-
-            pdf[text_col] = pdf[text_col].map(one)
-            yield pdf
-
-    return df.mapInPandas(_repair, df.schema)

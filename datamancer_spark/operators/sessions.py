@@ -6,8 +6,7 @@ The classic two-window composition (no UDF, fully SQL-portable):
 
 Both windows share the same (partition, order) spec, so Catalyst plans a
 single shuffle + sort; at 100 TB this is one exchange on the session key
-(user), which is the lower bound for any per-user computation. The
-streaming twin is ``streaming.session_agg`` (Spark session_window).
+(user), which is the lower bound for any per-user computation.
 
 Gap comparison happens at native timestamp precision (microseconds via
 ``timestamp_diff``), not whole seconds — a 1800.5 s gap with

@@ -14,8 +14,8 @@ before ranking them. The candidate stages:
 - ``knn_lsh`` — the candidates share the query's random-hyperplane
   bucket. Hyperplanes are md5-derived (portable, seedable), so there is
   no stored model object.
-- ``knn_pq`` / ``knn_pq_rerank`` — asymmetric distances over packed
-  product-quantization codes, optionally reranked exactly.
+- ``knn_pq`` — asymmetric distances over packed product-quantization
+  codes.
 - ``knn_jl_rerank`` — a shortlist in a Johnson–Lindenstrauss sketch
   space, reranked exactly.
 """
@@ -426,49 +426,6 @@ def pq_codebooks(m: int = 8, k: int = 16, dim: int = 64, seed: int = 11):
     ]
 
 
-def train_pq_codebooks(
-    corpus: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    sample_fraction: float = 1.0,
-    normalize: bool = True,
-):
-    """Per-subspace Lloyd's on a bounded seeded sample — the production
-    PQ recipe (the ``train_codebook`` contract, once per subspace).
-    ``normalize=True`` L2-normalizes the sample first: PQ ADC measures
-    squared L2, and on unit vectors L2² = 2 − 2·cos, making the PQ
-    ranking commensurate with the cosine tiers (pass the same
-    ``normalize`` to ``pq_encode``/``knn_pq``).
-
-    The sample is a deterministic hash-ordered top-``target``: a bare
-    ``limit`` on a distributed frame is partition-layout dependent, so
-    "same corpus, same seed" would train different codebooks across
-    cluster sizes/file layouts. ``orderBy(xxhash64(vec)).limit(n)``
-    compiles to TakeOrderedAndProject — a per-partition partial top-k,
-    no full sort shuffle — and is stable under any layout. Zero
-    vectors are excluded before normalization (0/‖0‖ is NaN and would
-    poison every centroid update through the means)."""
-    target = max(2000, 50 * k)
-    vecs = corpus.select(vec_col).filter(F.col(vec_col).isNotNull())
-    if sample_fraction < 1.0:
-        vecs = vecs.sample(fraction=sample_fraction, seed=seed)
-    rows = (
-        vecs.orderBy(F.xxhash64(F.col(vec_col), F.lit(seed)))
-        .limit(target)
-        .collect()
-    )
-    X = np.array([r[0] for r in rows], dtype=np.float64)
-    if normalize:
-        norms = np.linalg.norm(X, axis=1, keepdims=True)
-        X = X[norms[:, 0] > 0.0]
-        X /= np.linalg.norm(X, axis=1, keepdims=True)
-    sub = X.shape[1] // m
-    rng = np.random.default_rng(seed)
-    return [_lloyd(X[:, j * sub : (j + 1) * sub], k, rng) for j in range(m)]
-
-
 def _pq_bits(k: int) -> int:
     return max(1, (k - 1).bit_length())
 
@@ -591,41 +548,6 @@ def knn_pq(
     return _top_k(adc, k, "adc", ascending=True)
 
 
-def knn_pq_rerank(
-    corpus: DataFrame,
-    queries: DataFrame,
-    codebooks,
-    k: int = 5,
-    shortlist: int = 50,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    max_queries: int = DEFAULT_MAX_QUERIES,
-    normalize: bool = True,
-) -> DataFrame:
-    """The production PQ architecture: ADC over packed codes produces a
-    ``shortlist`` per query (cheap — the scan reads 8-byte codes, never
-    vectors), then ONLY the shortlisted rows join back to their true
-    vectors for an exact cosine rerank. Recall equals the shortlist's
-    recall (tunable: bigger shortlist, same asymptotics) while the
-    full-corpus scan stays at PQ-code width — at 100 TB this is the
-    difference between scanning 0.8 TB of codes and 50 TB of vectors.
-    Output: (query_id, neighbor_id, cos, rank) — knn_bruteforce's
-    contract, so the two tiers swap freely."""
-    cand = knn_pq(
-        corpus, queries, codebooks, k=shortlist,
-        vec_col=vec_col, id_col=id_col,
-        max_queries=max_queries, normalize=normalize,
-    ).select("query_id", "neighbor_id")
-    vecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    qvecs = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    pairs = cand.join(vecs, "neighbor_id").join(F.broadcast(qvecs), "query_id")
-    return _cosine_rerank(pairs, k)
-
-
 def mine_bitext(
     src: DataFrame,
     tgt: DataFrame,
@@ -653,7 +575,7 @@ def mine_bitext(
     fully relational after the kNN tier, so a DuckDB twin replicates
     it exactly. The margin rounds half-up to 1e-6 BEFORE thresholding
     (the portable-rounding convention) so the cut is engine-stable.
-    At crawl scale, swap the exact kNN tier for knn_pq_rerank /
+    At crawl scale, swap the exact kNN tier for knn_pq /
     knn_lsh candidate generation — the margin arithmetic is
     unchanged. Output: (src_id, tgt_id, cos, margin), margin DESC
     being the mining quality order.

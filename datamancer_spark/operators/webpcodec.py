@@ -42,7 +42,7 @@ Deliberate refusals, each loud (clip → ``None``):
   sniffing, so the reported screenable fraction stays honest.
 * **VP8 (lossy) and ALPH chunks** — arithmetic/bool-coded against
   large spec-constant probability tables; refused with the
-  compressed-video determination (see ``multimodal.sample_frames``).
+  compressed-video determination (see the ``multimodal`` module notes).
 
 Two remembered-convention caveats, documented rather than hidden
 (both verified round-trip against the INDEPENDENT test-side encoder

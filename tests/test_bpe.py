@@ -1,143 +1,6 @@
-"""BPE tokenizer tier (operators/bpe.py): hand-computable merge
+"""Byte-level BPE tokenizer (operators/bpe.py): hand-computable merge
 sequences pin training exactly; encode round-trips; the distributed
 apply equals the driver-side reference."""
-
-from pyspark.sql import functions as F
-
-from datamancer_spark.operators.bpe import (
-    EOW,
-    _encode_word,
-    bpe_decode_tokens,
-    bpe_encode,
-    bpe_exact_token_count,
-    train_bpe,
-)
-
-
-class TestTrain:
-    def test_textbook_merge_sequence(self, spark):
-        """The BPE paper's shape: corpus {low×5, lower×2, newest×6,
-        widest×3}. Pair counts are hand-computable: (e,s)=9 wins round
-        1, (es,t</w>)=9 round 2, (l,o)=7 round 3, then the 6-count trio
-        (n,e)/(e,w)/(w,est</w>) with the lexicographic tie-break."""
-        rows = (
-            [("low",)] * 5 + [("lower",)] * 2
-            + [("newest",)] * 6 + [("widest",)] * 3
-        )
-        df = spark.createDataFrame(rows, "text string")
-        merges = train_bpe(df, num_merges=4, sample_rows=100)
-        # round 4: (lo,w</w>)=5 and (lo,w)=2 are DIFFERENT pairs under
-        # the end-of-word marker, so the 6-count trio (n,e)/(e,w)/
-        # (w,est</w>) wins and the lexicographic tie-break picks (e,w)
-        assert merges == [
-            ("e", "s"),
-            ("es", "t" + EOW),
-            ("l", "o"),
-            ("e", "w"),
-        ]
-
-    def test_tie_breaks_lexicographically(self, spark):
-        # "ab" x2 and "cd" x2: both pairs count 2 -> (a, b</w>) wins
-        df = spark.createDataFrame(
-            [("ab",), ("ab",), ("cd",), ("cd",)], "text string"
-        )
-        merges = train_bpe(df, num_merges=1)
-        assert merges == [("a", "b" + EOW)]
-
-    def test_stops_when_no_repeating_pair(self, spark):
-        df = spark.createDataFrame([("abc def",)], "text string")
-        merges = train_bpe(df, num_merges=50)
-        assert merges == []  # every pair occurs once
-
-    def test_deterministic(self, spark):
-        docs = spark.createDataFrame(
-            [(f"token{i % 7} word{i % 5} stem{i % 3}ing",) for i in range(60)],
-            "text string",
-        )
-        m1 = train_bpe(docs, num_merges=30)
-        m2 = train_bpe(docs, num_merges=30)
-        assert m1 == m2 and len(m1) > 5
-
-
-class TestEncode:
-    def test_encode_applies_merges_in_rank_order(self, spark):
-        rows = (
-            [("low",)] * 5 + [("lower",)] * 2
-            + [("newest",)] * 6 + [("widest",)] * 3
-        )
-        df = spark.createDataFrame(rows, "text string")
-        merges = train_bpe(df, num_merges=20, sample_rows=100)
-        ranks = {p: i for i, p in enumerate(merges)}
-        # a frequent training word fully merges to one symbol
-        assert _encode_word("newest", ranks, {}) == ["newest" + EOW]
-        # an unseen word still encodes (falls back toward characters)
-        # and decodes exactly
-        toks = _encode_word("lowest", ranks, {})
-        assert len(toks) > 1
-        assert bpe_decode_tokens(toks) == "lowest"
-
-    def test_distributed_matches_reference_and_counts(self, spark):
-        docs = spark.createDataFrame(
-            [(i, f"the quick brown fox {i % 4} jumps the fence") for i in range(40)],
-            "doc_id long, text string",
-        )
-        merges = train_bpe(docs, num_merges=40)
-        out = {r["doc_id"]: r for r in bpe_encode(docs, merges).collect()}
-        ranks = {p: i for i, p in enumerate(merges)}
-        memo: dict = {}
-        for r in docs.collect():
-            want: list[str] = []
-            for w in r["text"].lower().split():
-                want.extend(_encode_word(w, ranks, memo))
-            got = out[r["doc_id"]]
-            assert list(got["bpe_tokens"]) == want
-            assert got["n_bpe_tokens"] == len(want)
-        counts = {
-            r["doc_id"]: r["n_bpe_tokens"]
-            for r in bpe_exact_token_count(docs, merges).collect()
-        }
-        assert counts == {
-            k: v["n_bpe_tokens"] for k, v in out.items()
-        }
-
-    def test_roundtrip_decode(self, spark):
-        docs = spark.createDataFrame(
-            [(1, "compression compresses compressible text")],
-            "doc_id long, text string",
-        )
-        merges = train_bpe(docs, num_merges=20)
-        row = bpe_encode(docs, merges).collect()[0]
-        assert bpe_decode_tokens(list(row["bpe_tokens"])) == (
-            "compression compresses compressible text"
-        )
-
-    def test_null_and_empty_text(self, spark):
-        docs = spark.createDataFrame(
-            [(1, None), (2, ""), (3, "  ")], "doc_id long, text string"
-        )
-        out = {r["doc_id"]: r["n_bpe_tokens"]
-               for r in bpe_encode(docs, []).collect()}
-        assert out == {1: 0, 2: 0, 3: 0}
-
-    def test_budget_use_on_corpus(self, spark, sf_dir):
-        """End-to-end over the synthetic documents: trained counts are
-        strictly fewer tokens than characters and at least the word
-        count (each word is >= 1 token)."""
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
-        merges = train_bpe(docs, num_merges=100, sample_rows=200)
-        assert len(merges) > 50  # synthetic text runs out of repeating pairs ~93
-        joined = (
-            bpe_exact_token_count(docs, merges)
-            .join(docs, "doc_id")
-            .select(
-                "doc_id",
-                "n_bpe_tokens",
-                F.size(F.split(F.trim("text"), r"\s+")).alias("n_words"),
-                F.length("text").alias("n_chars"),
-            )
-        )
-        for r in joined.collect():
-            assert r["n_words"] <= r["n_bpe_tokens"] <= r["n_chars"]
 
 
 class TestBytePretokenizer:
@@ -344,38 +207,3 @@ class TestByteBPE:
                for r in byte_bpe_encode(docs, []).collect()}
         assert out == {1: 0, 2: 0}
 
-
-class TestProperties:
-    def test_roundtrip_property(self, spark):
-        """Hypothesis: encode→decode is the identity on whitespace-
-        normalized lowercase text, for ANY merge table trained on ANY
-        corpus (merges only ever concatenate adjacent symbols)."""
-        from hypothesis import given, settings
-        from hypothesis import strategies as st
-
-        docs = spark.createDataFrame(
-            [("the cat sat on the mat with the hat",)] * 8, "text string"
-        )
-        merges = train_bpe(docs, num_merges=15)
-        ranks = {p: i for i, p in enumerate(merges)}
-
-        @settings(max_examples=200, deadline=None)
-        @given(
-            st.lists(
-                st.text(
-                    alphabet="abcdefghijklmnopqrstuvwxyz",
-                    min_size=1,
-                    max_size=12,
-                ),
-                min_size=1,
-                max_size=8,
-            )
-        )
-        def check(words):
-            memo: dict = {}
-            toks = []
-            for w in words:
-                toks.extend(_encode_word(w, ranks, memo))
-            assert bpe_decode_tokens(toks) == " ".join(words)
-
-        check()

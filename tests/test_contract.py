@@ -154,21 +154,17 @@ def test_rotation_policy_window_is_packed():
 
 # -- reachability: every package function is reached by code outside tests/
 
-_PENDING = (
-    "no query reaches it; ROADMAP item 13 decides it (delete it with "
-    "its tests, or keep it with a reason)"
-)
-
-# Package functions that no code outside tests/ reaches, each with the
-# reason it stays. Keys are "<module path>::<function>".
+# Package functions, classes and constants that no code outside tests/
+# reaches, each with the reason it stays. Keys are "<module path>::<name>".
 UNREACHED_SURVIVORS = {
-    **{
-        f"datamancer_spark/operators/bpe.py::{fn}": (
-            "the decoder the encoders' round-trip tests in "
-            "tests/test_bpe.py compare against (a reference implementation)"
-        )
-        for fn in ("bpe_decode_tokens", "byte_bpe_decode_tokens")
-    },
+    "datamancer_spark/operators/bpe.py::byte_bpe_decode_tokens": (
+        "the decoder the encoders' round-trip tests in tests/test_bpe.py "
+        "compare against (a reference implementation)"
+    ),
+    "datamancer_spark/operators/bpe.py::GPT2_PRETOKEN_PATTERN": (
+        "the published GPT-2 regex that tests/test_bpe.py checks the "
+        "hand-rolled pretokenizer against"
+    ),
     **{
         f"datamancer_spark/plans/__init__.py::{fn}": (
             "plan predicate of the plan tests; ROADMAP item 1 reworks plans"
@@ -181,43 +177,18 @@ UNREACHED_SURVIVORS = {
             "uses_broadcast_join",
         )
     },
-    **{
-        f"datamancer_spark/{path}::{fn}": _PENDING
-        for path, fns in {
-            "functions/typed.py": ["define_column_type"],
-            "functions/udtf.py": ["sentence_split_native"],
-            "operators/bpe.py": [
-                "bpe_encode", "bpe_exact_token_count", "train_bpe",
-            ],
-            "operators/classify.py": ["train_hashed_classifier"],
-            "operators/dedup.py": ["minhash_band_index"],
-            "operators/multimodal.py": [
-                "dhash_band_index", "dhash_scalar_udf", "mp4_metadata_blob",
-                "png_decode_pixels", "sample_frames", "video_metadata",
-                "wav_metadata", "webm_metadata",
-            ],
-            "operators/quality.py": ["hot_window_index"],
-            "operators/sampling.py": ["histogram"],
-            "operators/scrub.py": ["extract_urls", "fix_mojibake_full"],
-            "operators/similarity.py": ["knn_pq_rerank", "train_pq_codebooks"],
-            "streaming/__init__.py": [
-                "session_agg", "streaming_fuzzy_screen",
-                "streaming_media_screen", "streaming_span_hits",
-            ],
-        }.items()
-        for fn in fns
-    },
 }
 
 
 def _names_used(node) -> set[str]:
-    """Identifiers a node references as code: names, attribute names and
-    imported names. Docstrings and comments never count."""
+    """Identifiers a node reads as code: loaded names, attribute names
+    and imported names. Assigned names, docstrings and comments never
+    count."""
     import ast
 
     used = set()
     for n in ast.walk(node):
-        if isinstance(n, ast.Name):
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
             used.add(n.id)
         elif isinstance(n, ast.Attribute):
             used.add(n.attr)
@@ -226,12 +197,35 @@ def _names_used(node) -> set[str]:
     return used
 
 
+def _defined(st) -> list[str]:
+    """The names a top-level package statement defines as graph nodes:
+    a function, a class, or a plain assignment to names or tuples of
+    names (dunders excluded). Any other statement defines none."""
+    import ast
+
+    if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [st.name]
+    if isinstance(st, ast.Assign):
+        targets = st.targets
+    elif isinstance(st, ast.AnnAssign) and st.value is not None:
+        targets = [st.target]
+    else:
+        return []
+    names = []
+    for t in targets:
+        for n in t.elts if isinstance(t, (ast.Tuple, ast.List)) else [t]:
+            if not isinstance(n, ast.Name) or n.id.startswith("__"):
+                return []
+            names.append(n.id)
+    return names
+
+
 @functools.cache
 def _code_graph() -> tuple[dict[str, tuple[str, frozenset[str]]], frozenset[str]]:
     """Parse every .py file outside tests/ once: the top-level package
-    functions (key -> (name, names its body uses)) and the names that
-    module-level code uses (queries, perfbench, tools, package imports
-    and tables), which are the roots."""
+    functions, classes and constants (key -> (name, names it uses)) and
+    the names that all other module-level code uses (queries, perfbench,
+    tools, package imports and tables), which are the roots."""
     import ast
     from pathlib import Path
 
@@ -244,23 +238,24 @@ def _code_graph() -> tuple[dict[str, tuple[str, frozenset[str]]], frozenset[str]
             continue
         in_pkg = rel.parts[0] == "datamancer_spark"
         for st in ast.parse(path.read_text()).body:
-            if in_pkg and isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                bodies[f"{rel.as_posix()}::{st.name}"] = (
-                    st.name, frozenset(_names_used(st))
+            names = _defined(st) if in_pkg else []
+            for name in names:
+                bodies[f"{rel.as_posix()}::{name}"] = (
+                    name, frozenset(_names_used(st))
                 )
-            else:
+            if not names:
                 roots |= _names_used(st)
     return bodies, frozenset(roots)
 
 
 def _unreached(kept: frozenset[str] = frozenset()) -> set[str]:
-    """Top-level package functions that no code outside tests/ reaches.
+    """Top-level package functions, classes and constants that no code
+    outside tests/ reaches.
 
-    A function is reached once a root or a reached body names it,
-    iterated to a fixpoint, so a function called only by unreached
-    functions is itself unreached. Functions in ``kept`` count as
-    reached. Matching is by name, so two functions that share a name
-    are reached together."""
+    A node is reached once a root or a reached node names it, iterated
+    to a fixpoint, so a function called only by unreached functions is
+    itself unreached. Nodes in ``kept`` count as reached. Matching is by
+    name, so two nodes that share a name are reached together."""
     bodies, roots = _code_graph()
     reached = set(roots) | {bodies[k][0] for k in kept}
     while True:
@@ -275,9 +270,10 @@ def _unreached(kept: frozenset[str] = frozenset()) -> set[str]:
 
 
 def test_every_package_function_is_reached_or_a_named_survivor():
-    """The public functions no query, perfbench step or tool reaches are
-    exactly the named survivors, and nothing else (no private helper
-    either) is unreached once the survivors are kept."""
+    """The public functions, classes and constants no query, perfbench
+    step or tool reaches are exactly the named survivors, and nothing
+    else (no private helper either) is unreached once the survivors are
+    kept."""
     survivors = frozenset(UNREACHED_SURVIVORS)
     public = {k for k in _unreached() if not k.rsplit("::", 1)[1].startswith("_")}
     assert public == survivors, (

@@ -469,21 +469,6 @@ class TestMjpegAvi:
         out = list(avi_mjpeg_frames(blob, every_n=3, max_frames=2))
         assert [f[0] for f in out] == [0, 3]
 
-    def test_sample_frames_real_avi(self, spark):
-        from datamancer_spark.operators.multimodal import sample_frames
-
-        frames = [encode_jpeg(np.full((8, 8), 60 * i + 30, dtype=np.uint8))
-                  for i in range(3)]
-        blob = _encode_avi_mjpeg(frames, 8, 8)
-        df = spark.createDataFrame(
-            [("clip.avi", bytearray(blob)), ("junk.mp4", bytearray(b"\x00\x00\x00 ftypmp42"))],
-            "path string, content binary",
-        )
-        rows = sample_frames(df, every_n=1, max_frames=8).collect()
-        got = {(r["path"], r["frame_idx"]): r["frame_bytes"] for r in rows}
-        assert set(got) == {("clip.avi", 0), ("clip.avi", 1), ("clip.avi", 2)}
-        assert len(got[("clip.avi", 0)]) == 8 * 8 * 3
-
     def test_garbage_avi_yields_nothing(self):
         from datamancer_spark.operators.multimodal import avi_mjpeg_frames
 
@@ -955,19 +940,6 @@ def test_avi_video_fourcc_walk():
     assert _classify_decode_tier(mjpg) == ("avi", True)
     assert _classify_decode_tier(h264) == ("avi", False)
     assert avi_video_fourcc(b"RIFF\x08\x00\x00\x00AVI ") is None
-
-
-def test_video_metadata_codec_column(spark):
-    from datamancer_spark.operators.multimodal import video_metadata
-
-    img = np.full((8, 8), 90, dtype=np.uint8)
-    blob = _encode_avi_mjpeg([encode_jpeg(img)], 8, 8)
-    df = spark.createDataFrame(
-        [("v.avi", bytearray(blob))], "path string, content binary"
-    )
-    [row] = video_metadata(df).collect()
-    assert row["container"] == "avi"
-    assert row["codec"] == "MJPG"
 
 
 def test_progressive_random_scan_scripts_property():

@@ -162,21 +162,6 @@ def test_minhash_rejects_indivisible_bands(spark, sf_dir):
         minhash_lsh_pairs(docs, num_hashes=16, bands=5)
 
 
-def test_band_index_rejects_indivisible_bands(spark):
-    """The band index checks k % b like the pair join does: at bands=5
-    it would otherwise silently band 15 of the 16 signature slots."""
-    from datamancer_spark.operators.dedup import (
-        build_minhash_index,
-        minhash_band_index,
-    )
-
-    idx = build_minhash_index(
-        spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    )
-    with pytest.raises(ValueError, match="divisible"):
-        minhash_band_index(idx, 16, 5)
-
-
 def test_winsorize_keyless_no_global_window(spark, sf_dir):
     from datamancer_spark.operators.sampling import winsorize
     from datamancer_spark.plans import executed_plan
@@ -418,31 +403,6 @@ class TestProductQuantization:
                 want.append((qi, rk, int(ids[mask][o]), float(adc[mask][o])))
         assert sorted(got) == sorted(want)
 
-    def test_trained_rerank_recall(self, spark, sf_dir):
-        """The production composition (trained sub-codebooks +
-        normalized ADC shortlist + exact cosine rerank) recovers most
-        of the exact top-5 (measured 0.86 at shortlist=50 on the
-        synthetic embeddings; pinned with head-room)."""
-        from datamancer_spark.operators.similarity import (
-            knn_bruteforce,
-            knn_pq_rerank,
-            train_pq_codebooks,
-        )
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        q = emb.filter(F.col("vec_id") < 10)
-        cbs = train_pq_codebooks(emb, m=8, k=16, seed=42)
-        brute = {
-            (r["query_id"], r["neighbor_id"])
-            for r in knn_bruteforce(emb, q, k=5).collect()
-        }
-        rr = {
-            (r["query_id"], r["neighbor_id"])
-            for r in knn_pq_rerank(emb, q, cbs, k=5, shortlist=50).collect()
-        }
-        recall = len(brute & rr) / len(brute)
-        assert recall >= 0.7, f"PQ+rerank recall too low: {recall}"
-
     def test_pq_rejects_bad_shapes(self, spark):
         import pytest as _pt
 
@@ -450,53 +410,6 @@ class TestProductQuantization:
 
         with _pt.raises(ValueError):
             pq_codebooks(m=7, k=16, dim=64)
-
-    def test_trainer_layout_independent(self, spark):
-        """ADVICE r10 witness: the training sample must not depend on
-        partition layout — a bare limit() picked whichever partitions
-        answered first, so 'same corpus, same seed' trained different
-        codebooks on different cluster sizes. The hash-ordered top-k is
-        layout-stable: 1 partition and 16 partitions train identical
-        codebooks."""
-        import numpy as np
-
-        from datamancer_spark.operators.similarity import (
-            train_pq_codebooks,
-        )
-
-        # 3000 rows > target=2000 so the limit actually selects
-        data = [
-            (i, [float((i * 7 + j * 13) % 29) + 1.0 for j in range(8)])
-            for i in range(3000)
-        ]
-        df = spark.createDataFrame(
-            data, "vec_id long, embedding array<double>"
-        )
-        a = train_pq_codebooks(df.coalesce(1), m=4, k=8, seed=7)
-        b = train_pq_codebooks(df.repartition(16), m=4, k=8, seed=7)
-        for ca, cb in zip(a, b):
-            assert np.allclose(ca, cb), "codebooks differ across layouts"
-
-    def test_trainer_survives_zero_vectors(self, spark):
-        """A zero vector in the sample must not NaN-poison the
-        centroids through 0/||0|| (old behavior propagated NaN into
-        every mean update)."""
-        import numpy as np
-
-        from datamancer_spark.operators.similarity import (
-            train_pq_codebooks,
-        )
-
-        data = [(0, [0.0] * 8)] + [
-            (i, [float((i + j) % 5) + 0.5 for j in range(8)])
-            for i in range(1, 60)
-        ]
-        df = spark.createDataFrame(
-            data, "vec_id long, embedding array<double>"
-        )
-        cbs = train_pq_codebooks(df, m=4, k=4, seed=3, normalize=True)
-        for cb in cbs:
-            assert np.isfinite(cb).all(), "NaN leaked into centroids"
 
 
 class TestBitextMining:

@@ -9,7 +9,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from datamancer_spark.operators.scrub import (
-    extract_urls,
     normalize_url,
     redact_pii,
     url_quality_filter,
@@ -78,15 +77,6 @@ class TestRedactPii:
 
 
 class TestUrls:
-    def test_extract_and_host(self, spark):
-        df = spark.createDataFrame(
-            [(1, "see https://Ex.COM/a and http://b.org:8080/c?q=1.")],
-            "doc_id long, text string",
-        )
-        rows = {r["url"]: r["host"] for r in extract_urls(df).collect()}
-        assert rows["https://Ex.COM/a"] == "ex.com"
-        assert rows["http://b.org:8080/c?q=1."] == "b.org"
-
     def test_normalize(self, spark):
         cases = [
             ("https://EX.com/Path#frag", "https://ex.com/Path"),
@@ -480,27 +470,3 @@ class TestMojibake:
         ).agg(F.sum("r")).first()[0]
         assert residual == 0
 
-    def test_full_repair_handles_unmapped_chars(self, spark):
-        """The byte-level path must fix artifacts OUTSIDE the mapping
-        table (e.g. CJK through the double-encode wringer) and leave
-        clean text and lone high-bytes untouched."""
-        from datamancer_spark.operators.scrub import (
-            _cp1252ish,
-            fix_mojibake_full,
-        )
-
-        broken_cjk = _cp1252ish("中文".encode("utf-8"))
-        rows = [
-            (1, broken_cjk),
-            (2, "already fine 中文"),
-            (3, "résumé"),          # organic accents, NOT mojibake
-            (4, None),
-        ]
-        df = spark.createDataFrame(rows, "id long, text string")
-        got = {
-            r["id"]: r["text"] for r in fix_mojibake_full(df).collect()
-        }
-        assert got[1] == "中文"
-        assert got[2] == "already fine 中文"
-        assert got[3] == "résumé"
-        assert got[4] is None

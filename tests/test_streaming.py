@@ -61,22 +61,6 @@ def test_tumbling_agg(spark, stream_dir):
     assert rows[("2024-01-01 01:00:00", "u2")] == (1, 3.0)
 
 
-def test_session_agg(spark, stream_dir):
-    from datamancer_spark.streaming import replay_available_now, session_agg
-
-    # session windows support complete/append only (update is rejected);
-    # the replay's complete mode returns the final state
-    res = session_agg(
-        _json_stream(spark, stream_dir), "ts", gap="30 minutes", keys=("user",)
-    )
-    rows = [
-        (r["user"], r["n"])
-        for r in replay_available_now(res, "session_t").collect()
-    ]
-    # u1's two events 15 min apart merge into one session; u2 separate
-    assert sorted(rows) == [("u1", 2), ("u2", 1)]
-
-
 def test_stream_batch_parity(spark):
     """The streaming tumbling aggregation must produce exactly the batch
     hourly rollup on the same data — the one-expression-layer guarantee."""
@@ -184,62 +168,6 @@ def test_stream_stream_interval_join(spark):
             q.stop()
 
 
-def test_streaming_fuzzy_screen(spark, tmp_path):
-    """Stream docs are screened against a persisted MinHash band index:
-    exact and near duplicates of history drop in-flight, novel docs
-    survive; the streaming plan is stateless (no aggregation state)."""
-    _check_streaming_fuzzy_screen(spark, tmp_path, bands=4)
-
-
-def test_streaming_fuzzy_screen_one_row_bands(spark, tmp_path):
-    """bands=16 over 16 hashes is the r=1 geometry, where the batch
-    index and the stream must still encode band keys the same way."""
-    _check_streaming_fuzzy_screen(spark, tmp_path, bands=16)
-
-
-def _check_streaming_fuzzy_screen(spark, tmp_path, bands):
-    from datamancer_spark.operators.dedup import (
-        build_minhash_index,
-        minhash_band_index,
-    )
-    from datamancer_spark.streaming import streaming_fuzzy_screen
-
-    base = ("the quick brown fox jumps over the lazy dog while rain "
-            "falls softly on the quiet green meadow near the old mill")
-    near = base.replace("lazy dog", "sleepy dog")
-    novel = ("astronomy telescopes orbit planets stars galaxies nebulae "
-             "comets asteroids meteors moons eclipses observatories")
-    history = spark.createDataFrame(
-        [(1, base)], "doc_id long, text string"
-    )
-    bidx = minhash_band_index(build_minhash_index(history), 16, bands)
-
-    d = str(tmp_path / "in")
-    os.makedirs(d)
-    _write_batch(d, "b0.json", [
-        {"ts": "2024-01-01T00:00:00", "user": "u", "text": base, "value": 1.0},
-        {"ts": "2024-01-01T00:01:00", "user": "u", "text": near, "value": 2.0},
-        {"ts": "2024-01-01T00:02:00", "user": "u", "text": novel, "value": 3.0},
-    ])
-    stream = (
-        spark.readStream.schema(SCHEMA).json(d)
-    )
-    out = streaming_fuzzy_screen(stream, bidx, num_hashes=16, bands=bands)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(f"fuzzy_screen_{bands}")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql(f"SELECT text FROM fuzzy_screen_{bands}").collect()
-    finally:
-        q.stop()
-    texts = {r["text"] for r in rows}
-    assert texts == {novel}
-
-
 def test_streaming_bloom_prescreen(spark, tmp_path):
     """bloom_maybe_contains documents that its probe 'adds ZERO
     shuffles and runs on streams unchanged' — pin it: the probe over a
@@ -309,22 +237,15 @@ def test_streaming_bloom_prescreen(spark, tmp_path):
 
 def test_streaming_curation_pipeline_composes(spark, tmp_path):
     """The batch curation tier composes unchanged on a stream: heuristic
-    quality score + hashed classifier score (both pure projections) and
-    the fuzzy history screen run in ONE stateless streaming query."""
+    quality score + hashed classifier score (both pure projections) run
+    in ONE stateless streaming query."""
     from datamancer_spark.functions.text import quality_score
     from datamancer_spark.operators.classify import hashed_linear_score
-    from datamancer_spark.operators.dedup import (
-        build_minhash_index,
-        minhash_band_index,
-    )
-    from datamancer_spark.streaming import streaming_fuzzy_screen
 
     base = ("the quick brown fox jumps over the lazy dog while rain "
             "falls softly on the quiet green meadow near the old mill")
     novel = ("astronomy telescopes orbit planets stars galaxies nebulae "
              "comets asteroids meteors moons eclipses observatories")
-    history = spark.createDataFrame([(1, base)], "doc_id long, text string")
-    bidx = minhash_band_index(build_minhash_index(history))
 
     d = str(tmp_path / "in")
     os.makedirs(d)
@@ -334,9 +255,8 @@ def test_streaming_curation_pipeline_composes(spark, tmp_path):
         {"ts": "2024-01-01T00:02:00", "user": "u", "text": "x", "value": 3.0},
     ])
     stream = spark.readStream.schema(SCHEMA).json(d)
-    screened = streaming_fuzzy_screen(stream, bidx)
     curated = hashed_linear_score(
-        screened.withColumn("q", quality_score(F.col("text"))), dim=64
+        stream.withColumn("q", quality_score(F.col("text"))), dim=64
     ).filter(F.col("q") >= 0.75)
     q = (
         curated.writeStream.format("memory")
@@ -349,312 +269,9 @@ def test_streaming_curation_pipeline_composes(spark, tmp_path):
         rows = spark.sql("SELECT text, q, score FROM curated_stream").collect()
     finally:
         q.stop()
-    # base drops at the fuzzy screen; "x" (2/4 heuristics) at the 0.75 gate
-    assert [r["text"] for r in rows] == [novel]
-    assert 0.0 <= rows[0]["score"] <= 1.0
-
-
-def test_streaming_span_hits(spark, tmp_path):
-    """Stream docs probe a persisted hot-window index: known boilerplate
-    spans are emitted with their positions, clean docs emit nothing;
-    stateless stream-static join."""
-    from datamancer_spark.operators.quality import hot_window_index
-    from datamancer_spark.streaming import streaming_span_hits
-
-    boiler = "all rights reserved unauthorized copying is strictly prohibited"
-    corpus = spark.createDataFrame(
-        [(1, f"first document text {boiler} trailing words"),
-         (2, f"second document {boiler} and more"),
-         (3, "independent content with no shared spans at all here")],
-        "doc_id long, text string",
-    )
-    hot = hot_window_index(corpus, window=4, min_docs=2)
-
-    d = str(tmp_path / "in")
-    os.makedirs(d)
-    _write_batch(d, "b0.json", [
-        {"ts": "2024-01-01T00:00:00", "user": "hit",
-         "text": f"incoming page {boiler} footer", "value": 1.0},
-        {"ts": "2024-01-01T00:01:00", "user": "clean",
-         "text": "totally novel writing nothing shared with history corpus",
-         "value": 2.0},
-    ])
-    stream = spark.readStream.schema(SCHEMA).json(d)
-    out = streaming_span_hits(stream, hot, id_col="user", window=4)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("span_hits")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM span_hits").collect()
-    finally:
-        q.stop()
-    users = {r["user"] for r in rows}
-    assert users == {"hit"}
-    # the 8-token boilerplate contributes 5 hot 4-grams
-    assert len(rows) == 5
-
-
-def test_streaming_media_screen(spark, tmp_path):
-    """Stream image blobs screen against a persisted dHash band index:
-    a perceptual duplicate of an indexed image (same pixels, different
-    PNG filter bytes — exact byte dedup would miss it) is dropped, a
-    novel image survives, an undecodable blob always survives."""
-    import numpy as np
-
-    from datamancer_spark.operators.multimodal import dhash_band_index
-    from datamancer_spark.streaming import streaming_media_screen
-    from tests.test_multimodal import _encode_png
-
-    rng = np.random.default_rng(41)
-    known = rng.integers(0, 256, size=(24, 24), dtype=np.uint8)
-    novel = rng.integers(0, 256, size=(24, 24), dtype=np.uint8)
-    corpus = spark.createDataFrame(
-        [("hist1", bytearray(_encode_png(known, 0, [0])))],
-        "path string, content binary",
-    )
-    index = dhash_band_index(corpus)
-    assert set(index.columns) == {"band", "val", "sigs"}
-
-    d = str(tmp_path / "media_in")
-    incoming = spark.createDataFrame(
-        [
-            ("dup", bytearray(_encode_png(known, 0, [2]))),   # re-encoded dup
-            ("new", bytearray(_encode_png(novel, 0, [0]))),
-            ("bad", bytearray(b"not an image at all")),
-        ],
-        "path string, content binary",
-    )
-    incoming.write.parquet(d)
-    stream = spark.readStream.schema(incoming.schema).parquet(d)
-    out = streaming_media_screen(stream, index)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("media_screen")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        survivors = {
-            r["path"] for r in spark.sql("SELECT * FROM media_screen").collect()
-        }
-    finally:
-        q.stop()
-    assert survivors == {"new", "bad"}
-
-
-def test_streaming_media_screen_verifies_hamming(spark, tmp_path):
-    """The r6-advice saturation scenario: 16-bit band buckets fill up as
-    the corpus grows, so a bucket COLLISION alone must not drop a stream
-    row — only a verified bit_count(xor) <= max_hamming against the
-    bucket's full 64-bit signatures may. Here the index is seeded with a
-    signature that shares band 0 with the incoming image but differs by
-    ~32 bits overall: membership-only screening would drop the row; the
-    verified screen keeps it. A second index row holds a true 2-bit
-    neighbor, which is dropped."""
-    import numpy as np
-
-    from datamancer_spark.operators.multimodal import dhash
-    from datamancer_spark.streaming import streaming_media_screen
-    from tests.test_multimodal import _encode_png
-
-    rng = np.random.default_rng(43)
-    img = rng.integers(0, 256, size=(24, 24), dtype=np.uint8)
-    blob = bytearray(_encode_png(img, 0, [0]))
-    frame = spark.createDataFrame(
-        [("probe", blob)], "path string, content binary"
-    )
-    [row] = dhash(frame).collect()
-    sig = row["dhash"]
-
-    def to_signed(x):
-        return x - (1 << 64) if x >= 1 << 63 else x
-
-    u = sig % (1 << 64)
-    # shares band 0 (low 16 bits) exactly; upper 48 bits inverted
-    far = to_signed(u ^ 0xFFFFFFFFFFFF0000)
-    near = to_signed(u ^ (0b101 << 20))  # 2 bits flipped, in band 1
-
-    def bucket(s, b):
-        return ((s % (1 << 64)) >> (b * 16)) & 0xFFFF
-
-    index = spark.createDataFrame(
-        [
-            (0, bucket(far, 0), [far]),
-            # indexed under band 2, where near agrees with sig (its
-            # flipped bits live in band 1)
-            (2, bucket(near, 2), [near]),
-        ],
-        "band int, val bigint, sigs array<bigint>",
-    )
-    assert bucket(far, 0) == bucket(sig, 0)  # genuine band-0 collision
-
-    d = str(tmp_path / "media_ham")
-    frame.write.parquet(d)
-    stream = spark.readStream.schema(frame.schema).parquet(d)
-
-    # far-only index: bucket hit but Hamming 48 -> row must SURVIVE
-    far_only = index.filter(index.band == 0)
-    out = streaming_media_screen(stream, far_only)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ham_far")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        far_rows = spark.sql("SELECT path FROM ham_far").collect()
-    finally:
-        q.stop()
-    assert {r["path"] for r in far_rows} == {"probe"}
-
-    # full index: the true 2-bit neighbor verifies -> row dropped
-    out2 = streaming_media_screen(stream, index)
-    q2 = (
-        out2.writeStream.format("memory")
-        .queryName("ham_near")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q2.processAllAvailable()
-        near_rows = spark.sql("SELECT path FROM ham_near").collect()
-    finally:
-        q2.stop()
-    assert near_rows == []
-
-    import pytest
-
-    with pytest.raises(ValueError, match="pigeonhole"):
-        streaming_media_screen(stream, index, max_hamming=4)
-
-
-def test_streaming_screens_emit_hits_for_quarantine(spark, tmp_path):
-    """emit='hits' inverts the screens so probable duplicates route to
-    a quarantine/audit sink instead of vanishing; survivors+hits
-    partition the decodable stream."""
-    import numpy as np
-
-    from datamancer_spark.operators.multimodal import dhash_band_index
-    from datamancer_spark.streaming import streaming_media_screen
-    from tests.test_multimodal import _encode_png
-
-    rng = np.random.default_rng(47)
-    known = rng.integers(0, 256, size=(24, 24), dtype=np.uint8)
-    novel = rng.integers(0, 256, size=(24, 24), dtype=np.uint8)
-    corpus = spark.createDataFrame(
-        [("hist", bytearray(_encode_png(known, 0, [0])))],
-        "path string, content binary",
-    )
-    index = dhash_band_index(corpus)
-
-    d = str(tmp_path / "quarantine_in")
-    incoming = spark.createDataFrame(
-        [
-            ("dup", bytearray(_encode_png(known, 0, [2]))),
-            ("new", bytearray(_encode_png(novel, 0, [0]))),
-            ("bad", bytearray(b"not an image")),
-        ],
-        "path string, content binary",
-    )
-    incoming.write.parquet(d)
-    stream = spark.readStream.schema(incoming.schema).parquet(d)
-    q = (
-        streaming_media_screen(stream, index, emit="hits")
-        .writeStream.format("memory")
-        .queryName("quarantine")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        hits = {r["path"] for r in spark.sql("SELECT * FROM quarantine").collect()}
-    finally:
-        q.stop()
-    assert hits == {"dup"}  # undecodable never lands in quarantine
-
-    import pytest
-
-    with pytest.raises(ValueError, match="emit"):
-        streaming_media_screen(stream, index, emit="both")
-
-
-def test_streaming_audio_screen_cross_codec(spark, tmp_path):
-    """r9: the audio twin of the media screen, cross-CODEC — the index
-    holds a WAV clip's envelope dHash (kind="audio"); the stream's OGG
-    VORBIS re-encode of the same clip verifies within the Hamming
-    radius and is dropped, a novel clip survives, an undecodable Ogg
-    stub always survives (a screen never drops what it cannot read)."""
-    import struct
-
-    import numpy as np
-
-    from datamancer_spark.operators.multimodal import dhash_band_index
-    from datamancer_spark.streaming import streaming_media_screen
-    from tests.vorbis_encoder import encode_vorbis
-
-    def bl_noise(n, seed, frac=0.35):
-        rng = np.random.default_rng(seed)
-        x = rng.standard_normal(n)
-        spec = np.fft.rfft(x)
-        spec[int(len(spec) * frac):] = 0
-        return 0.3 * np.fft.irfft(spec, n)
-
-    def wav_of(sig):
-        data = np.clip(sig * 32767, -32768, 32767).astype("<i2").tobytes()
-        return bytearray(
-            b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-            + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
-            + b"data" + struct.pack("<I", len(data)) + data
-        )
-
-    # amplitude-modulate so adjacent envelope frames differ decisively
-    # (a flat envelope leaves near-tie energy comparisons that codec
-    # quantization noise can flip — real music/speech is modulated)
-    t = np.arange(16384)
-    am1 = 0.6 + 0.4 * np.sin(2 * np.pi * t / 5000.0)
-    am2 = 0.6 + 0.4 * np.cos(2 * np.pi * t / 3700.0)
-    clip = bl_noise(16384, 71) * am1
-    novel = bl_noise(16384, 72) * am2
-    ogg_dup = bytearray(encode_vorbis([clip], 8000, delta=0.004))
-    # index the WAV aligned to the Vorbis priming trim (half a block)
-    corpus = spark.createDataFrame(
-        [("hist", wav_of(clip[256:-256]))], "path string, content binary"
-    )
-    index = dhash_band_index(corpus, kind="audio")
-
-    d = str(tmp_path / "audio_in")
-    incoming = spark.createDataFrame(
-        [
-            ("dup_ogg", ogg_dup),  # same clip, different codec
-            ("new", wav_of(novel)),
-            ("bad", bytearray(b"OggS not really a page")),
-        ],
-        "path string, content binary",
-    )
-    incoming.write.parquet(d)
-    stream = spark.readStream.schema(incoming.schema).parquet(d)
-    out = streaming_media_screen(stream, index, kind="audio")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("audio_screen")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        survivors = {
-            r["path"]
-            for r in spark.sql("SELECT * FROM audio_screen").collect()
-        }
-    finally:
-        q.stop()
-    assert survivors == {"new", "bad"}
+    # "x" (2/4 heuristics) drops at the 0.75 gate
+    assert sorted(r["text"] for r in rows) == sorted([base, novel])
+    assert all(0.0 <= r["score"] <= 1.0 for r in rows)
 
 
 def test_streaming_warc_ingest_composes(spark, tmp_path):

@@ -85,27 +85,6 @@ def test_str_tab_to_df_parse_ladder(spark):
     assert types == {"i": "bigint", "f": "double", "s": "string"}
 
 
-def test_udtf_sentence_split(spark):
-    from datamancer_spark.functions.udtf import SentenceSplit
-
-    spark.udtf.register("sentence_split", SentenceSplit)
-    rows = spark.sql(
-        "SELECT * FROM sentence_split('Hello world. How are you? Fine!')"
-    ).collect()
-    got = [(r["sentence"], r["n_tokens"], r["idx"]) for r in rows]
-    assert got == [("Hello world", 2, 0), ("How are you", 3, 1), ("Fine", 1, 2)]
-
-
-def test_sentence_split_native_matches_udtf(spark):
-    from pyspark.sql import functions as F
-
-    from datamancer_spark.functions.udtf import sentence_split_native
-
-    d = spark.createDataFrame([(1, "A b. C d e! ")], ["id", "t"])
-    arr = d.select(sentence_split_native(F.col("t")).alias("s")).collect()[0]["s"]
-    assert arr == ["A b", "C d e"]
-
-
 class TestStatsOperators:
     def test_corr_matrix_known_values(self, spark):
         from datamancer_spark.operators.stats import corr_matrix
