@@ -6899,10 +6899,12 @@ def oracle_sql() -> dict[str, str]:
           SELECT CAST(count(DISTINCT tok) AS DOUBLE) AS v
           FROM labeled WHERE cls IS NOT NULL
         ),
-        nd AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
+        -- priors over LABELED docs only: a NULL label is no class
+        nd AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents
+               WHERE lang IS NOT NULL),
         priors AS (
           SELECT lang AS cls, ln(count(*) / (SELECT n FROM nd)) AS logprior
-          FROM documents GROUP BY lang
+          FROM documents WHERE lang IS NOT NULL GROUP BY lang
         ),
         scored AS (
           SELECT dt.doc_id, p.cls,

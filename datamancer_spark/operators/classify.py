@@ -27,7 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.rounding import prnd
-from .dedup import hash32, tokens
+from .dedup import hash32, words
+from .tfidf import _grams, _weighted_sum, _with_totals
 
 
 def _pseudo_weight(bucket: Column, seed: int) -> Column:
@@ -57,7 +58,7 @@ def hashed_linear_score(
     (score ≥ threshold). Empty documents score ``sigmoid(bias)``.
     """
     p = out_prefix
-    toks = F.filter(tokens(F.col(text_col)), lambda t: F.length(t) > 0)
+    toks = words(F.col(text_col))
     bucket = lambda t: hash32(t) % dim  # noqa: E731
     if weights is None:
         wsum = F.aggregate(
@@ -147,93 +148,75 @@ def naive_bayes_classify(
     constant factor, never quadratic.
 
     Eager: calling this runs Spark jobs while the plan is built
-    (``materialize`` of the label, token and class-count frames), and
-    the pinned blocks live until GC or unpersist unless
+    (``materialize`` of the label, per-doc token-count and class-count
+    frames), and the pinned blocks live until GC or unpersist unless
     ``set_checkpoint_dir`` was called."""
     from ..session import materialize
 
-    # the token stream and the (id, label) projection feed MANY
-    # consumers (counts, vocab, priors, the zero-token arm, the final
-    # join) — pinned once, or every consumer re-scans the corpus
-    # (audited: 18 parquet scans unpinned, 1 pinned)
+    # the per-doc token counts and the (id, label) projection feed MANY
+    # consumers (class counts, priors, the scoring, the zero-token arm,
+    # the final join) — pinned once, or every consumer re-scans the corpus
     labels = materialize(
         df.select(F.col(id_col), F.col(label_col).alias("_cls"))
     )
-    toks = materialize(
-        df.select(
-            F.col(id_col),
-            F.explode(tokens(F.col(text_col))).alias("tok"),
-        ).filter(F.length("tok") > 0)
-    )
+    doc_toks = materialize(_grams(df, [id_col], "tok", "cnt", text_col))
     # NULL-labeled docs are EXCLUDED from training (they would become a
     # phantom class) but still scored and joined back (correct = NULL)
     train = labels.filter(F.col("_cls").isNotNull())
-    doc_toks = toks.groupBy(id_col, "tok").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    labeled = toks.join(train, id_col)
-    # r16 (VERDICT r15 #4 aggregate-chain sharing): the (class, token)
-    # count table feeds THREE consumers (the scored broadcast,
-    # class_tot → model, and the vocabulary count) and ReuseExchange
-    # does not deduplicate them (0 ReusedExchange in the r16 plan dump)
-    # — so the corpus-token join+aggregate ran three times. Pin it
-    # once: class_tok is vocabulary × |classes| rows, model-sized, not
-    # corpus-sized, so the checkpoint is bounded state.
+    # the (class, token) count table feeds three consumers (the weight
+    # table, class_tot and the vocabulary count) and ReuseExchange does
+    # not deduplicate them — pinned once; it is vocabulary × |classes|
+    # rows, model-sized, not corpus-sized
     class_tok = materialize(
-        labeled.groupBy("_cls", "tok").agg(
-            F.count(F.lit(1)).alias("n_tc")
-        )
+        doc_toks.join(train, id_col)
+        .groupBy("_cls", "tok")
+        .agg(F.sum("cnt").alias("n_tc"))
     )
     class_tot = class_tok.groupBy("_cls").agg(
         F.sum("n_tc").alias("n_c")
     )
     # smoothing vocabulary V = the TRAINING vocabulary (distinct tokens
-    # of labeled docs), the textbook definition — counting unlabeled
-    # docs' tokens too (r11 ADVICE) silently shifted every smoothed
-    # probability whenever scored-only docs carried unseen tokens.
-    # r16 (VERDICT r15 #4): derived from class_tok, not from `labeled`
-    # directly — distinct tok of the (class, token) counts IS the
-    # labeled-token set, and class_tok is vocabulary×|classes| rows
-    # where `labeled` is corpus-sized; the old form re-ran the
-    # corpus-wide join+distinct as a second full pass.
+    # of labeled docs), the textbook definition: counting unlabeled
+    # docs' tokens too would shift every smoothed probability whenever
+    # scored-only docs carry unseen tokens
     vocab = class_tok.select("tok").distinct().agg(
         F.count(F.lit(1)).cast("double").alias("v")
     )
     n_docs = train.agg(F.count(F.lit(1)).cast("double").alias("n"))
-    priors = (
-        train.groupBy("_cls")
-        .agg(F.count(F.lit(1)).cast("double").alias("n_cls"))
-        .crossJoin(F.broadcast(n_docs))
-        .select("_cls", F.log(F.col("n_cls") / F.col("n")).alias("logprior"))
+    priors = _with_totals(
+        train.groupBy("_cls").agg(
+            F.count(F.lit(1)).cast("double").alias("n_cls")
+        ),
+        n_docs,
+    ).select("_cls", F.log(F.col("n_cls") / F.col("n")).alias("logprior"))
+    model = _with_totals(priors.join(class_tot, "_cls"), vocab).select(
+        "_cls",
+        "logprior",
+        (F.col("n_c") + F.lit(alpha) * F.col("v")).alias("_d"),
     )
-    model = (
-        priors.join(class_tot, "_cls")
-        .crossJoin(F.broadcast(vocab))
+    # log((n_tc+α)/(n_c+α·V)) per seen (class, token); unseen tokens
+    # take the smoothed zero-count arm _lw0 through the left join.
+    # Both weight frames broadcast (class- or vocabulary-bounded), so the
+    # only corpus-sized exchange is the (doc, class) score aggregation.
+    # (A 100-TB corpus with a >broadcast-threshold vocab drops the hint
+    # and takes the sort-merge join — same semantics.)
+    lw = class_tok.join(F.broadcast(model), "_cls").select(
+        "_cls",
+        "tok",
+        F.log((F.col("n_tc") + F.lit(alpha)) / F.col("_d")).alias("_lw"),
     )
-    # per (doc, class): Σ cnt·log((n_tc+α)/(n_c+α·V)); unseen tokens
-    # take the smoothed zero-count arm via the left join's coalesce
-    # class_tok is vocabulary × |classes| rows — broadcast it so the
-    # corpus-sized (doc, token) frame never shuffles on (class, token);
-    # the only corpus-sized exchange left is the (doc, class) score
-    # aggregation. (A 100-TB corpus with a >broadcast-threshold vocab
-    # drops the hint and takes the sort-merge join — same semantics.)
-    scored = (
-        doc_toks.crossJoin(F.broadcast(model.select("_cls")))
-        .join(F.broadcast(class_tok), ["_cls", "tok"], "left")
-        .join(F.broadcast(model), "_cls")
-        .withColumn(
-            "_lp",
-            F.col("cnt")
-            * F.log(
-                (F.coalesce(F.col("n_tc"), F.lit(0)) + F.lit(alpha))
-                / (F.col("n_c") + F.lit(alpha) * F.col("v"))
-            ),
-        )
-        .groupBy(id_col, "_cls")
-        .agg(
-            (F.first("logprior") + F.sum("_lp")).alias("_raw")
-        )
+    lw0 = model.select(
+        "_cls", "logprior", F.log(F.lit(alpha) / F.col("_d")).alias("_lw0")
     )
+    scored = _weighted_sum(
+        doc_toks.crossJoin(F.broadcast(lw0)),
+        F.broadcast(lw),
+        ["_cls", "tok"],
+        [id_col, "_cls", "logprior"],
+        "cnt",
+        F.coalesce(F.col("_lw"), F.col("_lw0")),
+        "left",
+    ).select(id_col, "_cls", (F.col("logprior") + F.col("_s")).alias("_raw"))
     # zero-token docs never reach `scored`: give them prior-only rows
     base = labels.select(id_col).join(
         doc_toks.select(id_col).distinct(), id_col, "left_anti"

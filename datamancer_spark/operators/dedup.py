@@ -66,6 +66,11 @@ def tokens(text: Column) -> Column:
     return F.split(F.lower(F.trim(F.coalesce(text, F.lit("")))), r"\s+")
 
 
+def words(text: Column) -> Column:
+    """``tokens`` without the empty token that blank text splits into."""
+    return F.filter(tokens(text), lambda t: F.length(t) > 0)
+
+
 def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles from a PRE-TOKENIZED array column.
     Catalyst higher-order funcs only (transform over an index sequence) —

@@ -23,6 +23,11 @@ between ingestion and tokenization):
 - ``dup_cluster_sizes`` — duplicate-cluster size histogram, the
   summary view over exact-dedup groups used to pick dedup thresholds.
 
+The corpus-statistics scorers (``token_topk``, ``zipf_fit``, the
+unigram/bigram LM scores, DSIR, ``corpus_health``'s language entropy)
+share ``tfidf``'s count-model helpers: one gram count, one broadcast
+totals row, one weighted per-document sum.
+
 Scale design: everything is relational (explode → shuffle-on-key →
 agg/window → join). No Python, no collects, no cartesian stages. The
 only skew-sensitive spot is the per-line window in ``line_dedup_global``
@@ -40,7 +45,8 @@ from pyspark.sql.window import Window
 from ..functions.rounding import prnd
 from ..functions.text import fingerprint
 from ..session import materialize
-from .dedup import hash32, spread_partitions, tokens, word_shingles
+from .dedup import hash32, spread_partitions, tokens, word_shingles, words
+from .tfidf import _grams, _weighted_sum, _with_totals
 
 
 def ngrams_from_tokens(toks, n: int):
@@ -388,7 +394,7 @@ def pack_sequences(
     n_tok = (
         F.col(token_col)
         if token_col
-        else F.size(F.filter(tokens(F.col(text_col)), lambda t: F.length(t) > 0))
+        else F.size(words(F.col(text_col)))
     ).cast("long")
     d = spread_partitions(df).select(
         F.col(id_col),
@@ -440,7 +446,7 @@ def chunk_documents(
             f"need 0 < stride <= chunk_tokens, got stride={stride}, "
             f"chunk_tokens={chunk_tokens}"
         )
-    toks = F.filter(tokens(F.col(text_col)), lambda t: F.length(t) > 0)
+    toks = words(F.col(text_col))
     d = df.select(
         F.col(id_col), toks.alias("_toks"), F.size(toks).alias("_n")
     )
@@ -693,40 +699,33 @@ def dsir_importance_weights(
     bit-for-bit."""
     from .dedup import portable_hash
 
-    d = spread_partitions(df).select(
-        F.col(id_col),
-        F.col(target_col).cast("boolean").alias("_is_t"),
-        F.filter(
-            tokens(F.col(text_col)), lambda t: F.length(t) > 0
-        ).alias("_toks"),
-    )
-    grams = F.col("_toks")
-    if use_bigrams:
-        k = F.size("_toks") - 1
-        bigrams = F.when(k <= 0, F.array().cast("array<string>")).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), k),
-                lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i, 2)),
+    def buckets(toks):
+        if use_bigrams:
+            k = F.size(toks) - 1
+            bigrams = F.when(
+                k <= 0, F.array().cast("array<string>")
+            ).otherwise(
+                F.transform(
+                    F.sequence(F.lit(1), k),
+                    lambda i: F.concat_ws(" ", F.slice(toks, i, 2)),
+                )
             )
-        )
-        grams = F.concat(grams, bigrams)
-    g = d.select(
-        F.col(id_col),
-        F.col("_is_t"),
-        F.explode(grams).alias("_g"),
-    ).select(
-        F.col(id_col),
-        F.col("_is_t"),
-        (portable_hash(F.col("_g")) % n_buckets).alias("_b"),
-    )
+            toks = F.concat(toks, bigrams)
+        return F.transform(toks, lambda g: portable_hash(g) % n_buckets)
+
     # docb feeds BOTH the bucket score table and the final per-doc sum;
     # without a lineage cut each consumer re-runs the corpus-wide gram
     # explode (the plan's dominant cost). Post-reduction it is at most
-    # docs x n_buckets rows — the checkpoint-beats-recompute case (same
-    # call the fuzzy-verify candidate frames use).
+    # docs x n_buckets rows. dsir_select_en at sf0.1: 1.76 s pinned vs
+    # 2.24 s lazy (medians of 12 alternating pairs, pinned faster in 11).
     docb = materialize(
-        g.groupBy(id_col, "_is_t", "_b").agg(
-            F.count(F.lit(1)).cast("long").alias("_c")
+        _grams(
+            df.withColumn("_is_t", F.col(target_col).cast("boolean")),
+            [id_col, "_is_t"],
+            "_b",
+            "_c",
+            text_col,
+            buckets,
         )
     )
     bucket = docb.groupBy("_b").agg(
@@ -735,11 +734,10 @@ def dsir_importance_weights(
         .alias("_ct"),
         F.sum("_c").cast("long").alias("_cr"),
     )
-    totals = bucket.agg(
-        F.sum("_ct").alias("_t_tot"), F.sum("_cr").alias("_r_tot")
-    )
     sb = float(smooth) * n_buckets
-    scores = bucket.crossJoin(F.broadcast(totals)).select(
+    scores = _with_totals(
+        bucket, F.sum("_ct").alias("_t_tot"), F.sum("_cr").alias("_r_tot")
+    ).select(
         "_b",
         F.floor(
             (
@@ -750,23 +748,15 @@ def dsir_importance_weights(
             + 0.5
         )
         .cast("long")
-        .alias("_s"),
+        .alias("_w"),
     )
-    return (
-        docb.join(F.broadcast(scores), "_b")
-        .groupBy(id_col)
-        .agg(
-            F.sum("_c").cast("long").alias("n_feats"),
-            F.sum(F.col("_c") * F.col("_s")).cast("long").alias(
-                "logw_micros"
-            ),
-        )
-        .select(
-            id_col,
-            "n_feats",
-            "logw_micros",
-            (F.col("logw_micros") / F.lit(1e6)).alias("dsir_logw"),
-        )
+    return _weighted_sum(
+        docb, F.broadcast(scores), "_b", [id_col], "_c", F.col("_w")
+    ).select(
+        id_col,
+        F.col("_n").alias("n_feats"),
+        F.col("_s").alias("logw_micros"),
+        (F.col("_s") / F.lit(1e6)).alias("dsir_logw"),
     )
 
 
@@ -877,17 +867,7 @@ def token_topk(
     the DISTINCT-token frame, which is vocabulary-sized — millions of
     rows at 100 TB, not trillions — so the rank window is cheap.
     Deterministic tie-break: (count desc, token asc)."""
-    toks = (
-        spread_partitions(df)
-        .select(
-            F.col(group_col),
-            F.explode(tokens(F.col(text_col))).alias("token"),
-        )
-        .filter(F.length("token") > 0)
-    )
-    counts = toks.groupBy(group_col, "token").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
+    counts = _grams(df, [group_col], "token", "n", text_col)
     w = Window.partitionBy(group_col).orderBy(
         F.col("n").desc(), F.col("token").asc()
     )
@@ -922,9 +902,7 @@ def budget_select(
     n_tok = (
         F.col(token_col)
         if token_col
-        else F.size(
-            F.filter(tokens(F.col(text_col)), lambda t: F.length(t) > 0)
-        )
+        else F.size(words(F.col(text_col)))
     ).cast("long")
     gcols = [F.col(group_col)] if group_col else []
     d = spread_partitions(df).select(
@@ -996,29 +974,22 @@ def unigram_logprob_score(
     fits and falls back to a shuffle join when a web-scale vocabulary
     doesn't; never forced. Then one per-doc aggregation. Tokenization
     is recomputed per consumer (cheap narrow op) rather than pinning
-    corpus-sized state."""
-    toks = (
-        spread_partitions(df)
-        .select(
-            F.col(id_col),
-            F.explode(tokens(F.col(text_col))).alias("_tok"),
-        )
-        .filter(F.length("_tok") > 0)
+    corpus-sized state. The per-doc sum runs over the token stream, not
+    over per-doc token counts: counting first adds a corpus-sized
+    (doc, token) shuffle and measured slower at sf0.1."""
+    toks = _grams(df, [id_col], "_tok", text_col=text_col).withColumn(
+        "_c", F.lit(1)
     )
-    vocab = toks.groupBy("_tok").agg(
-        F.count(F.lit(1)).cast("long").alias("_n")
-    )
-    total = vocab.agg(F.sum("_n").alias("_total"))
-    probs = vocab.crossJoin(F.broadcast(total)).select(
+    vocab = toks.groupBy("_tok").agg(F.count(F.lit(1)).alias("_n"))
+    probs = _with_totals(vocab, F.sum("_n").alias("_total")).select(
         "_tok", (-F.log(F.col("_n") / F.col("_total"))).alias("_nlp")
     )
-    return (
-        toks.join(probs, "_tok")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            prnd(F.avg("_nlp"), 6).alias("avg_neg_logprob"),
-        )
+    return _weighted_sum(
+        toks, probs, "_tok", [id_col], "_c", F.col("_nlp")
+    ).select(
+        id_col,
+        F.col("_n").alias("n_tokens"),
+        prnd(F.col("_s") / F.col("_n"), 6).alias("avg_neg_logprob"),
     )
 
 
@@ -1046,29 +1017,23 @@ def bigram_logprob_score(
     scan (r9: scans 2 → 1, exchanges 13 → 9 vs the r6 shape). The
     per-doc score is the multiplicity-weighted mean, the exact same
     arithmetic shape the DuckDB twin uses."""
-    toks_arr = F.filter(tokens(F.col(text_col)), lambda t: F.length(t) > 0)
-    d = spread_partitions(df).select(
-        F.col(id_col), toks_arr.alias("_toks")
-    )
-    # F.sequence counts DOWN when start > stop — guard empty docs.
-    # i=1 emits the sentinel begin-of-doc pair ("" -> first token).
-    idx = F.when(
-        F.size("_toks") >= 1, F.sequence(F.lit(1), F.size("_toks"))
-    ).otherwise(F.array().cast("array<int>"))
-    bg = d.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                idx,
-                lambda i: F.struct(
-                    F.when(i == F.lit(1), F.lit(""))
-                    .otherwise(F.element_at("_toks", i - 1))
-                    .alias("w1"),
-                    F.element_at("_toks", i).alias("w2"),
-                ),
-            )
-        ).alias("_p"),
-    ).select(F.col(id_col), F.col("_p.w1"), F.col("_p.w2"))
+
+    def pairs(toks):
+        # F.sequence counts DOWN when start > stop — guard empty docs.
+        # i=1 emits the sentinel begin-of-doc pair ("" -> first token).
+        idx = F.when(
+            F.size(toks) >= 1, F.sequence(F.lit(1), F.size(toks))
+        ).otherwise(F.array().cast("array<int>"))
+        return F.transform(
+            idx,
+            lambda i: F.struct(
+                F.when(i == F.lit(1), F.lit(""))
+                .otherwise(F.element_at(toks, i - 1))
+                .alias("w1"),
+                F.element_at(toks, i).alias("w2"),
+            ),
+        )
+
     # per-doc pair multiplicities, PINNED: three consumers (bc, ctx via
     # bc, the scored join) each re-derived the scan+explode+groupBy
     # pipeline when left lazy — 5 corpus scans / 19 exchanges in the r5
@@ -1076,16 +1041,17 @@ def bigram_logprob_score(
     # exactly this frame (it is what a production pipeline would persist
     # as the doc-bigram index; the corpus-sized raw PAIR stream stays
     # unpinned — materializing it measured ~5× slower) cuts the plan to
-    # 2 scans. Same fix shape as curate-v2's gate pin.
+    # 2 scans. bigram_perplexity_proxy at sf0.1: 1.29 s pinned vs 2.43 s
+    # lazy with 17 jobs vs 15 (medians of 12 alternating pairs, pinned
+    # faster in all 12).
     g = materialize(
-        bg.groupBy(id_col, "w1", "w2").agg(
-            F.count(F.lit(1)).cast("long").alias("_m")
+        _grams(df, [id_col], "_p", "_m", text_col, pairs).select(
+            id_col, "_p.w1", "_p.w2", "_m"
         )
     )
     # w2-marginal over ALL pairs (incl. the sentinel) = exact corpus
     # token counts: every token is w2 of exactly one pair
     un = g.groupBy("w2").agg(F.sum("_m").alias("_n"))
-    total = un.agg(F.sum("_n").alias("_total"))
     real = g.filter(F.col("w1") != F.lit(""))
     bc = real.groupBy("w1", "w2").agg(F.sum("_m").alias("_nb"))
     ctx = bc.groupBy("w1").agg(F.sum("_nb").alias("_nc"))
@@ -1095,29 +1061,24 @@ def bigram_logprob_score(
     # through three successive join keys — four corpus-sized shuffles
     # ((w1,w2), w1, w2, id); this shape has two (the LM join + the
     # final per-doc reduction), the difference that compounds at 100 TB.
-    lm = (
-        bc.join(ctx, "w1")
-        .join(un, "w2")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "w1",
-            "w2",
-            (
-                -F.log(
-                    F.lit(lam) * (F.col("_nb") / F.col("_nc"))
-                    + F.lit(1.0 - lam) * (F.col("_n") / F.col("_total"))
-                )
-            ).alias("_nlp"),
-        )
+    lm = _with_totals(
+        bc.join(ctx, "w1").join(un, "w2"), un.agg(F.sum("_n").alias("_total"))
+    ).select(
+        "w1",
+        "w2",
+        (
+            -F.log(
+                F.lit(lam) * (F.col("_nb") / F.col("_nc"))
+                + F.lit(1.0 - lam) * (F.col("_n") / F.col("_total"))
+            )
+        ).alias("_nlp"),
     )
-    scored = real.join(lm, ["w1", "w2"]).select(
-        F.col(id_col), F.col("_m"), F.col("_nlp")
-    )
-    return scored.groupBy(id_col).agg(
-        F.sum("_m").cast("long").alias("n_bigrams"),
-        prnd(F.sum(F.col("_m") * F.col("_nlp")) / F.sum("_m"), 6).alias(
-            "avg_neg_logprob"
-        ),
+    return _weighted_sum(
+        real, lm, ["w1", "w2"], [id_col], "_m", F.col("_nlp")
+    ).select(
+        id_col,
+        F.col("_n").alias("n_bigrams"),
+        prnd(F.col("_s") / F.col("_n"), 6).alias("avg_neg_logprob"),
     )
 
 
@@ -1172,9 +1133,8 @@ def corpus_health(
         F.avg("_q").alias("_mq"),
     )
     lc = d.groupBy("_lang").agg(F.count(F.lit(1)).cast("long").alias("_c"))
-    tot = lc.agg(F.sum("_c").alias("_t"))
     ent = (
-        lc.crossJoin(F.broadcast(tot))
+        _with_totals(lc, F.sum("_c").alias("_t"))
         .select((F.col("_c") / F.col("_t")).alias("_p"))
         .agg((-F.sum(F.col("_p") * F.log("_p"))).alias("_ent"))
     )
@@ -1342,13 +1302,7 @@ def zipf_fit(
     breaks down and where hapax noise lives."""
     from pyspark.sql.window import Window
 
-    freqs = (
-        spread_partitions(df)
-        .select(F.explode(tokens(F.col(text_col))).alias("_tok"))
-        .filter(F.length("_tok") > 0)
-        .groupBy("_tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("_n"))
-    )
+    freqs = _grams(df, [], "_tok", "_n", text_col)
     top = freqs.orderBy(F.col("_n").desc(), F.col("_tok").asc()).limit(top_k)
     w = Window.partitionBy(F.pmod(F.col("_n"), F.lit(1))).orderBy(
         F.col("_n").desc(), F.col("_tok").asc()
@@ -1409,7 +1363,7 @@ def gopher_quality_filter(
     values scaled for short test docs and are all keyword-tunable.
     Output: (id, n_words, pass, fail_reasons array — empty when pass).
     """
-    toks = F.filter(tokens(F.col(text_col)), lambda t: F.length(t) > 0)
+    toks = words(F.col(text_col))
     d = spread_partitions(df).select(
         F.col(id_col),
         F.col(text_col).alias("_txt"),

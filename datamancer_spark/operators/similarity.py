@@ -783,9 +783,9 @@ def hashed_embedding(
 
     Components are integers pre-normalization, so normalized values are
     bit-identical across engines up to the shared sqrt/divide."""
-    from ..operators.dedup import hash32, tokens
+    from ..operators.dedup import hash32, words
 
-    toks = F.filter(tokens(F.col(text_col)), lambda t: F.length(t) > 0)
+    toks = words(F.col(text_col))
     ex = df.select(
         F.col(id_col), F.explode(toks).alias("_tok")
     ).select(F.col(id_col), hash32(F.col("_tok")).alias("_h"))

@@ -13,6 +13,13 @@ oracle):
     tfidf     = tf · idf
     bm25(t,d) = idf_bm25 · tf·(k1+1) / (tf + k1·(1 − b + b·|d|/avgdl))
     idf_bm25  = ln(1 + (N − df + 0.5)/(df + 0.5))
+
+The count-model core here also serves the corpus-statistics scorers in
+``quality`` (token heads, Zipf fit, unigram/bigram LM, DSIR, corpus
+health) and ``classify`` (Naive Bayes), each keeping its own smoothing:
+``_grams`` counts grams per (keys…, gram), ``_with_totals`` broadcasts a
+one-row totals frame onto a weight table, and ``_weighted_sum`` joins
+weights back and sums count × weight per document.
 """
 
 from __future__ import annotations
@@ -22,22 +29,70 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import prnd
 from ..session import materialize
-from .dedup import _posting_pairs, spread_partitions, tokens
+from .dedup import _posting_pairs, spread_partitions, tokens, words
 
 
-def term_counts(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, term, tf) — lowercased whitespace terms."""
+def _grams(
+    df: DataFrame,
+    keys: list[str],
+    gram: str,
+    count: str | None = None,
+    text_col: str = "text",
+    grams=None,
+    clustered: bool = False,
+) -> DataFrame:
+    """Stage 1 of the count-model scorers: the spread-out rows exploded
+    into (keys…, gram) rows and, when ``count`` names a column, counted
+    per (keys…, gram). Grams are the text's non-empty lowercased
+    tokens, or ``grams(words)`` — an array the caller builds from the
+    ``words`` array column (bigram pairs, hashed buckets). ``clustered``
+    hash-partitions the gram stream by the first key before the count,
+    so the count and a window over that key share one exchange."""
+    d = spread_partitions(df)
+    if grams is None:
+        s = d.select(
+            *keys, F.explode(tokens(F.col(text_col))).alias(gram)
+        ).filter(F.length(gram) > 0)
+    else:
+        s = d.select(*keys, words(F.col(text_col)).alias("_toks")).select(
+            *keys, F.explode(grams(F.col("_toks"))).alias(gram)
+        )
+    if clustered:
+        s = s.repartition(F.col(keys[0]))
+    if count is None:
+        return s
+    return s.groupBy(*keys, gram).agg(F.count(F.lit(1)).alias(count))
+
+
+def _with_totals(frame: DataFrame, *totals) -> DataFrame:
+    """Stage 2: ``frame`` with a one-row totals frame broadcast onto
+    every row — ``frame.agg(*totals)``, or ``totals[0]`` when it is
+    already a one-row frame. The scalars ride the plan instead of an
+    eager driver action."""
+    one = totals[0] if isinstance(totals[0], DataFrame) else frame.agg(*totals)
+    return frame.crossJoin(F.broadcast(one))
+
+
+def _weighted_sum(
+    counts: DataFrame,
+    weights: DataFrame,
+    on,
+    keys: list[str],
+    count: str,
+    weight,
+    how: str = "inner",
+) -> DataFrame:
+    """(keys…, _n = Σ count, _s = Σ count·weight) — stage 3: the weight
+    table joined back onto the per-document counts and summed per
+    ``keys``."""
     return (
-        spread_partitions(df)
-        .select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term"))
-        .filter(F.length("term") > 0)
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
+        counts.join(weights, on, how)
+        .groupBy(*keys)
+        .agg(
+            F.sum(count).alias("_n"),
+            F.sum(F.col(count) * weight).alias("_s"),
+        )
     )
-
-
-def doc_freq(tc: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    return tc.groupBy("term").agg(F.count_distinct(id_col).alias("df"))
 
 
 def _n_docs_frame(df: DataFrame) -> DataFrame:
@@ -50,19 +105,30 @@ def _n_docs_frame(df: DataFrame) -> DataFrame:
     return df.agg(F.count(F.lit(1)).cast("double").alias("_n"))
 
 
-def _idf_frame(dfreq: DataFrame, df: DataFrame) -> DataFrame:
-    """(term, df, idf) with smooth idf = log((N+1)/(df+1)) + 1, N derived
-    in-plan via ``_n_docs_frame``. NOT broadcast-hinted: the idf frame is
-    vocabulary-sized — forcing a broadcast of an open-ended term
-    dictionary can exceed the broadcast cap / driver memory on a large
-    corpus; AQE broadcasts it anyway whenever it measures small."""
-    return (
-        dfreq.crossJoin(F.broadcast(_n_docs_frame(df)))
-        .withColumn(
-            "idf", F.log((F.col("_n") + 1) / (F.col("df") + 1)) + 1.0
-        )
-        .drop("_n")
+def _idf_frame(
+    tc: DataFrame,
+    df: DataFrame,
+    id_col: str,
+    max_doc_freq_frac: float | None = None,
+) -> DataFrame:
+    """(term, df, idf) from the (id, term, tf) counts: smooth idf =
+    log((N+1)/(df+1)) + 1, N derived in-plan via ``_n_docs_frame``;
+    ``max_doc_freq_frac`` drops terms with df > floor(frac·N) first.
+    NOT broadcast-hinted: the idf frame is vocabulary-sized — forcing a
+    broadcast of an open-ended term dictionary can exceed the broadcast
+    cap / driver memory on a large corpus; AQE broadcasts it anyway
+    whenever it measures small."""
+    dfreq = _with_totals(
+        tc.groupBy("term").agg(F.count_distinct(id_col).alias("df")),
+        _n_docs_frame(df),
     )
+    if max_doc_freq_frac is not None:
+        dfreq = dfreq.filter(
+            F.col("df") <= F.floor(F.lit(max_doc_freq_frac) * F.col("_n"))
+        )
+    return dfreq.withColumn(
+        "idf", F.log((F.col("_n") + 1) / (F.col("df") + 1)) + 1.0
+    ).drop("_n")
 
 
 def tfidf(
@@ -73,8 +139,8 @@ def tfidf(
 ) -> DataFrame:
     """(id, term, tf, tfidf) — optionally only each doc's top_k terms
     (deterministic tie-break on term)."""
-    tc = term_counts(df, text_col, id_col)
-    idf = _idf_frame(doc_freq(tc, id_col), df)
+    tc = _grams(df, [id_col], "term", "tf", text_col)
+    idf = _idf_frame(tc, df, id_col)
     scored = tc.join(idf, "term").select(
         F.col(id_col),
         "term",
@@ -124,19 +190,11 @@ def bm25(
       the doc-frequency aggregation, the avgdl aggregation, and the
       scoring join; the checkpoint scan erases partitioning info, so
       each leg re-partitions the pinned rows — cheap — instead of
-      re-running tokenize+count)."""
-    toks = (
-        spread_partitions(df)
-        .select(
-            F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term")
-        )
-        .filter(F.length("term") > 0)
-    )
-    tc = (
-        toks.repartition(F.col(id_col))
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+      re-running tokenize+count). Lazy, ``bm25_search_terms`` at sf0.1
+      ran 0.97 s vs 1.01 s pinned (medians of 12 alternating pairs,
+      same 12 jobs) but planned 14 exchanges against the 8 that
+      ``test_bm25_exchange_budget`` holds, so the pin stays."""
+    tc = _grams(df, [id_col], "term", "tf", text_col, clustered=True)
     w = Window.partitionBy(id_col)
     tcdl = materialize(
         tc.withColumn("dl", F.sum("tf").over(w)).withColumn(
@@ -145,13 +203,11 @@ def bm25(
         )
     )
     tct = tcdl.repartition(F.col("term"))
-    avgdl = tct.agg(
-        (F.sum("tf") / F.sum("_first")).alias("_avgdl")
-    )  # one row, in-plan
     idf = (
-        tct.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(_n_docs_frame(df)))
+        _with_totals(
+            tct.groupBy("term").agg(F.count(F.lit(1)).alias("df")),
+            _n_docs_frame(df),
+        )
         .withColumn(
             "idf",
             F.log(
@@ -160,23 +216,21 @@ def bm25(
         )
         .drop("_n")
     )
-    return (
-        tct.join(idf, "term")
-        .crossJoin(F.broadcast(avgdl))
-        .select(
-            F.col(id_col),
-            "term",
-            prnd(
-                F.col("idf")
-                * (F.col("tf") * (k1 + 1))
-                / (
-                    F.col("tf")
-                    + F.lit(k1)
-                    * (1 - b + F.lit(b) * F.col("dl") / F.col("_avgdl"))
-                ),
-                6,
-            ).alias("bm25"),
-        )
+    # avgdl = sum(tf)/sum(_first), one row, in-plan
+    avgdl = tct.agg((F.sum("tf") / F.sum("_first")).alias("_avgdl"))
+    return _with_totals(tct.join(idf, "term"), avgdl).select(
+        F.col(id_col),
+        "term",
+        prnd(
+            F.col("idf")
+            * (F.col("tf") * (k1 + 1))
+            / (
+                F.col("tf")
+                + F.lit(k1)
+                * (1 - b + F.lit(b) * F.col("dl") / F.col("_avgdl"))
+            ),
+            6,
+        ).alias("bm25"),
     )
 
 
@@ -200,16 +254,8 @@ def tfidf_cosine_pairs(
     doc-freq cap (high-df terms carry ~zero idf weight anyway); the cap
     is a fraction of the corpus so it prunes the same share as N grows.
     Output (id_a < id_b, cosine ≥ threshold)."""
-    tc = term_counts(df, text_col, id_col)
-    dfreq = doc_freq(tc, id_col).crossJoin(F.broadcast(_n_docs_frame(df)))
-    if max_doc_freq_frac is not None:
-        # floor(frac*N): the int() truncation, computed in-plan
-        dfreq = dfreq.filter(
-            F.col("df") <= F.floor(F.lit(max_doc_freq_frac) * F.col("_n"))
-        )
-    idf = dfreq.withColumn(
-        "idf", F.log((F.col("_n") + 1) / (F.col("df") + 1)) + 1.0
-    ).drop("_n")
+    tc = _grams(df, [id_col], "term", "tf", text_col)
+    idf = _idf_frame(tc, df, id_col, max_doc_freq_frac)
     # no broadcast hint: vocabulary-sized frame (see _idf_frame)
     w = tc.join(idf, "term").select(
         F.col(id_col),

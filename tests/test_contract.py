@@ -166,6 +166,47 @@ UNREACHED_SURVIVORS = {
         "hand-rolled pretokenizer against"
     ),
     **{
+        f"datamancer_spark/frame.py::{fn}": (
+            "Datamancer verb re-exported by the package API (COVERAGE.md "
+            "§2.1–§2.11), with no query twin"
+        )
+        for fn in (
+            "add_row",
+            "col_max",
+            "col_min",
+            "evaluate",
+            "frames_equal",
+            "groups_iter",
+            "reduce_formula",
+            "to_df",
+        )
+    },
+    **{
+        f"datamancer_spark/io.py::{fn}": (
+            "Datamancer I/O verb re-exported by the package API "
+            "(COVERAGE.md §2.1, §2.11)"
+        )
+        for fn in (
+            "parse_csv_string",
+            "show_browser",
+            "str_tab_to_df",
+            "to_html",
+            "to_org_table",
+            "val_tab_to_df",
+        )
+    },
+    **{
+        f"datamancer_spark/io.py::{fn}": (
+            "ORC / XML source or sink (COVERAGE.md I/O rows), tested by "
+            "round trip; no query reads those formats"
+        )
+        for fn in ("read_orc", "write_orc", "read_xml", "write_xml")
+    },
+    "datamancer_spark/session.py::set_checkpoint_dir": (
+        "deployment setting that materialize() documents for "
+        "fault-tolerant runs; no query sets it"
+    ),
+    **{
         f"datamancer_spark/plans/__init__.py::{fn}": (
             "plan predicate of the plan tests; ROADMAP item 1 reworks plans"
         )
@@ -225,7 +266,8 @@ def _code_graph() -> tuple[dict[str, tuple[str, frozenset[str]]], frozenset[str]
     """Parse every .py file outside tests/ once: the top-level package
     functions, classes and constants (key -> (name, names it uses)) and
     the names that all other module-level code uses (queries, perfbench,
-    tools, package imports and tables), which are the roots."""
+    tools and tables), which are the roots. The package's own import
+    statements are not roots: a re-export reaches nothing."""
     import ast
     from pathlib import Path
 
@@ -238,6 +280,8 @@ def _code_graph() -> tuple[dict[str, tuple[str, frozenset[str]]], frozenset[str]
             continue
         in_pkg = rel.parts[0] == "datamancer_spark"
         for st in ast.parse(path.read_text()).body:
+            if in_pkg and isinstance(st, (ast.Import, ast.ImportFrom)):
+                continue  # a re-export is not a use
             names = _defined(st) if in_pkg else []
             for name in names:
                 bodies[f"{rel.as_posix()}::{name}"] = (

@@ -32,6 +32,12 @@ QUERIES = [
     "bigram_perplexity_proxy",
     # round-7: the new bm25 contract query
     "bm25_search_terms",
+    # the count-model scorers: NB's prior-only arm for zero-token docs
+    # and its NULL-label docs, DSIR dropping featureless docs
+    "unigram_perplexity_proxy",
+    "dsir_select_en",
+    "nb_lang_classify",
+    "tfidf_top_terms",
 ]
 
 

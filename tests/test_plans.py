@@ -272,6 +272,20 @@ def test_bm25_exchange_budget(spark, sf_dir):
     assert plan.count("BroadcastExchange") >= 2
 
 
+def test_tfidf_top_terms_plan(spark, sf_dir):
+    """tfidf_top_terms runs in perfbench's curate_ingest: its plan keeps
+    the 9 exchanges it had when the count-model helpers replaced the
+    hand-written term counts, N rides the plan as a broadcast, and no
+    eager job pins anything (no checkpoint scan)."""
+    import __spark_entry__ as e
+    from datamancer_spark.plans import executed_plan
+
+    plan = executed_plan(e.queries()["tfidf_top_terms"](spark, sf_dir))
+    assert plan.count("Exchange") <= 9, plan.count("Exchange")
+    assert plan.count("BroadcastExchange") >= 1
+    assert "ExistingRDD" not in plan
+
+
 def test_media_fixture_tier_plans(spark, sf_dir):
     """r9 media-tier plan pins: the real decode/fingerprint pipelines
     stay banded (no cartesian / nested-loop anywhere), single-pass
