@@ -1,21 +1,77 @@
 """Sources / sinks (SURVEY.md §2.1).
 
-The reference's readCsv (io.nim:686-784) is an mmap'd single-pass parser
-with sample-based type inference and mid-parse promotion; Spark's
-distributed CSV reader with ``inferSchema`` is the scale-correct
-equivalent (splittable, vectorized, permissive mode ≈ promote-to-object).
-HDF5 serialization (serialize.nim:8-52) maps to parquet — the columnar
-format Spark pushes filters and column pruning into.
+The reference's readCsv (io.nim:686-784) infers types during its single
+parse. Spark's CSV/JSON readers infer in a separate pass (jobs while the
+plan is built), so the writers here record the schema they wrote beside
+their part files and the readers scan an unchanged package-written
+directory with it; anything else is inferred (permissive mode ≈
+promote-to-object). HDF5 serialization (serialize.nim:8-52) maps to
+parquet — the columnar format Spark pushes filters and column pruning
+into.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import stat
 from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .frame import DamFrame
+
+# The schema record a plain write_csv / write_jsonl / write_parquet leaves
+# in its output directory once the write has committed: the format, the
+# writer's dialect, df.schema and the (name, size, mtime_ns) of every
+# visible file. A leading "_" without "=" hides it from Spark's file
+# index, the streaming file source and `part-*` globs.
+_RECORD = "_datamancer_schema.json"
+
+
+def _visible_files(d: str) -> list[list]:
+    """The entries of ``d`` that Spark's file index lists, as sorted
+    [name, size, mtime_ns] triples."""
+    out = []
+    for e in os.scandir(d):
+        if e.name.startswith(".") or (
+            e.name.startswith("_") and "=" not in e.name
+        ):
+            continue
+        st = e.stat()
+        out.append([e.name, st.st_size, st.st_mtime_ns])
+    return sorted(out)
+
+
+def _record_schema(df: DataFrame, path: str, fmt: str, **dialect) -> None:
+    try:
+        rec = {
+            "format": fmt,
+            "dialect": dialect,
+            "schema": df.schema.jsonValue(),
+            "files": _visible_files(path),
+        }
+        with open(os.path.join(path, _RECORD), "w") as f:
+            json.dump(rec, f)
+    except OSError:
+        pass  # not a local, writable directory: its readers infer
+
+
+def _recorded_schema(path: str, fmt: str, **dialect) -> StructType | None:
+    """The schema a package writer recorded for directory ``path``, if
+    its visible files are still exactly the ones that writer committed
+    and ``fmt``/``dialect`` match the writer's; else None (infer)."""
+    try:
+        with open(os.path.join(path, _RECORD)) as f:
+            rec = json.load(f)
+        if (rec["format"], rec["dialect"], rec["files"]) == (
+            fmt, dialect, _visible_files(path)
+        ):
+            return StructType.fromJson(rec["schema"])
+    except (OSError, ValueError, KeyError, TypeError):
+        pass
+    return None
 
 
 def _stage_url_to_warehouse(spark: SparkSession, url: str) -> str:
@@ -110,7 +166,15 @@ def read_csv(
     differ, so addFile can't feed a file:// scan either. The warehouse
     dir is shared storage (HDFS/S3) on any real deployment and a local
     dir under local[*]; the Hadoop FileSystem API handles both. The
-    read itself stays the ordinary splittable distributed CSV scan."""
+    read itself stays the ordinary splittable distributed CSV scan.
+
+    A local directory that ``write_csv`` wrote with the same ``sep``,
+    ``header``, ``escape`` and ``quote``, and whose part files are
+    unchanged, reads with the writer's recorded schema (no inference
+    jobs): its columns come back with the writer's names and types — a
+    long stays int64 where inference gives int32, a timestamp stays a
+    timestamp. ``infer_schema=False``, ``skip_lines`` or any other
+    directory infers as before."""
     if path.startswith(("http://", "https://")):
         path = _stage_url_to_warehouse(spark, path)
     reader = (
@@ -128,6 +192,12 @@ def read_csv(
     )
     if comment:
         reader = reader.option("comment", comment)
+    if infer_schema and not skip_lines:
+        recorded = _recorded_schema(
+            path, "csv", sep=sep, header=header, escape=escape, quote=quote
+        )
+        if recorded is not None:
+            reader = reader.schema(recorded)
     if skip_lines:
         # Spark has no skipRows for CSV; drop the first N physical lines
         # with zipWithIndex — distributed (one extra count job to size
@@ -243,13 +313,21 @@ def write_csv(
     part files at scale; coalesce(1) deliberately NOT default). Escapes
     embedded quotes by DOUBLING them (``escape='"'``, RFC 4180) rather
     than Spark's backslash default, so the output is directly readable
-    by DuckDB/pandas/the reference parser without dialect options."""
+    by DuckDB/pandas/the reference parser without dialect options.
+
+    On a local path the write then records its schema and dialect in a
+    hidden file beside the part files, so ``read_csv`` with the same
+    dialect reads the columns back with their written types and names,
+    without an inference pass."""
     (
         frame.df.write.mode("overwrite")
         .option("header", header)
         .option("sep", sep)
         .option("escape", escape)
         .csv(path)
+    )
+    _record_schema(
+        frame.df, path, "csv", sep=sep, header=header, escape=escape, quote='"'
     )
 
 
@@ -268,7 +346,19 @@ def read_parquet(
     loop. Off by default because schema merging reads every footer up
     front — on a petabyte directory that is an extra planning pass the
     common fixed-schema case shouldn't pay. Multiple ``paths`` read as
-    one dataset (snapshot directories, month partitions)."""
+    one dataset (snapshot directories, month partitions).
+
+    One local path without ``merge_schema`` comes from the session's
+    handle cache that ``load_tables`` also uses: an unchanged file or
+    directory returns the same lazy handle, with no footer job and no
+    FileIndex rebuild, and a directory ``write_parquet`` wrote reads
+    with its recorded schema (equal to what inference gives) even on
+    the first call. Multiple paths, ``merge_schema`` or non-local paths
+    read uncached."""
+    if len(paths) == 1 and not merge_schema:
+        df = _cached_parquet(spark, paths[0])
+        if df is not None:
+            return DamFrame(df)
     r = spark.read
     if merge_schema:
         r = r.option("mergeSchema", "true")
@@ -286,7 +376,11 @@ def read_jsonl(
     Spark's native splittable JSON reader: schema inference costs one
     extra pass, so at scale pass an explicit ``schema`` (DDL string) to
     make ingestion single-pass with per-field pruning pushed into the
-    scan.
+    scan. Without one, a local directory that ``write_jsonl`` wrote and
+    nothing changed since reads single-pass with the writer's recorded
+    schema: written types come back as written (a timestamp as a
+    timestamp, not a string; a map as a map, not a struct; an all-NULL
+    column is kept). Any other input is inferred.
 
     Malformed lines follow the engine's permissive promote-never-fail
     model (SURVEY.md §1.3): ``keep_corrupt=True`` reads PERMISSIVE and
@@ -296,16 +390,19 @@ def read_jsonl(
     ``_corrupt_record``: a downstream plan that references only the
     corrupt column (e.g. a bare ``count()`` after pruning) raises
     AnalysisException UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN."""
+    schema = schema or _recorded_schema(path, "json")
     if keep_corrupt:
         r = spark.read.option("mode", "PERMISSIVE")
+        # the corrupt column must be IN the read schema or PERMISSIVE
+        # mode silently yields an all-null row for a bad line instead
+        # of something filterable
+        if isinstance(schema, StructType):
+            if "_corrupt_record" not in schema.fieldNames():
+                schema = schema.add("_corrupt_record", "string")
+        elif schema and "_corrupt_record" not in schema:
+            schema = schema + ", _corrupt_record string"
         if schema:
-            # the corrupt column must be IN the read schema or PERMISSIVE
-            # mode silently yields an all-null row for a bad line instead
-            # of something filterable
-            s = schema
-            if "_corrupt_record" not in s:
-                s = s + ", _corrupt_record string"
-            r = r.schema(s)
+            r = r.schema(schema)
         df = r.option("columnNameOfCorruptRecord", "_corrupt_record").json(path)
         return DamFrame(df)
     r = spark.read.option("mode", "DROPMALFORMED")
@@ -316,8 +413,10 @@ def read_jsonl(
 
 def write_jsonl(frame: DamFrame, path: str) -> None:
     """JSONL sink — a directory of part files at scale (same rule as
-    write_csv: no implicit coalesce(1))."""
+    write_csv: no implicit coalesce(1)). On a local path the write then
+    records its schema beside the part files for ``read_jsonl``."""
     frame.df.write.mode("overwrite").json(path)
+    _record_schema(frame.df, path, "json")
 
 
 def read_avro(
@@ -585,7 +684,9 @@ def write_parquet(
     otherwise). Columns are validated against the schema eagerly.
     Verification note: pyarrow (16.x) does not expose bloom offsets in
     its metadata API, so tests pin the behavior via the written-bytes
-    delta and roundtrip equality."""
+    delta and roundtrip equality. A write to a local path without
+    ``partition_by`` or ``bucket_by`` records its schema beside the part
+    files, so ``read_parquet`` and ``load_tables`` skip the footer job."""
     df = frame.df
     if cluster_by:
         missing = [c for c in cluster_by if c not in df.columns]
@@ -626,18 +727,21 @@ def write_parquet(
         w.bucketBy(n, *cols).sortBy(*cols).option("path", path).saveAsTable(table_name)
         return
     w.parquet(path)
+    if not partition_by:
+        _record_schema(frame.df, path, "parquet")
 
 
-# Session-scoped table-handle cache (r15-opt): ``spark.read.parquet``
+# Session-scoped parquet handle cache (r15-opt): ``spark.read.parquet``
 # pays driver-side FileIndex + footer-schema work through py4j on EVERY
-# call (measured 0.1-0.7 s per call even on a 1 KB file), and every
-# query constructor calls ``load_tables`` — across a bench run that is
-# hundreds of redundant metadata reads. The cache holds the LAZY
-# DataFrame handle per (session, path); no data or results are cached
-# — every execution still scans the parquet files. File identity
-# (size + mtime_ns) invalidates the entry when the driver regenerates
-# testdata; weak session keys drop entries when a session is replaced.
-_TABLE_CACHE = None  # WeakKeyDictionary[SparkSession, {path: (sig, df)}]
+# call (a footer job; measured 0.1-0.7 s per call even on a 1 KB file),
+# and every query constructor calls ``load_tables`` — across a bench run
+# that is hundreds of redundant metadata reads. ``read_parquet`` on one
+# local path shares the cache. It holds the LAZY DataFrame handle per
+# (session, path); no data or results are cached — every execution
+# still scans the parquet files. File identity (size + mtime_ns)
+# invalidates the entry when the driver regenerates testdata; weak
+# session keys drop entries when a session is replaced.
+_TABLE_CACHE = None  # WeakKeyDictionary[SparkSession, {(path, post): (sig, df)}]
 
 
 def _session_cache(spark: SparkSession) -> dict:
@@ -649,18 +753,71 @@ def _session_cache(spark: SparkSession) -> dict:
     return _TABLE_CACHE.setdefault(spark, {})
 
 
+def _cached_parquet(spark: SparkSession, p: str, post=None) -> DataFrame | None:
+    """The session's lazy handle for the local parquet file or directory
+    ``p``, with ``post`` applied once when the handle is built; None
+    when ``p`` is not a local path that exists."""
+    try:
+        st = os.stat(p)
+    except OSError:
+        return None
+    sig: tuple = (st.st_size, st.st_mtime_ns)
+    is_dir = stat.S_ISDIR(st.st_mode)
+    if is_dir:
+        # Directory datasets (Spark-written {name}.parquet dirs):
+        # in-place rewrites change MEMBER files without necessarily
+        # touching any directory's own size/mtime (ADVICE r15), so
+        # fold the stats of every member of the tree — partition
+        # subdirectories included — into the signature. Driver
+        # testdata tables are single files and never take this
+        # branch; it exists so a stale FileIndex can't be served
+        # for directory inputs.
+        try:
+            members = []
+            for root, dirs, files in os.walk(p):
+                dirs.sort()
+                for m in sorted(files):
+                    mp = os.path.join(root, m)
+                    ms = os.stat(mp)
+                    members.append(
+                        (os.path.relpath(mp, p), ms.st_size, ms.st_mtime_ns)
+                    )
+            sig = sig + (tuple(members),)
+        except OSError:
+            pass
+    cache = _session_cache(spark)
+    hit = cache.get((p, post))
+    if hit is not None and hit[0] == sig:
+        return hit[1]
+    recorded = _recorded_schema(p, "parquet") if is_dir else None
+    df = (spark.read.schema(recorded) if recorded else spark.read).parquet(p)
+    if post is not None:
+        df = post(df)
+    cache[(p, post)] = (sig, df)
+    return df
+
+
+def _events_ts_micros(df: DataFrame) -> DataFrame:
+    """TIMESTAMP(NANOS) parquet columns arrive as long ns-since-epoch
+    (session.py nanosAsLong); normalize to microsecond timestamps, the
+    precision DuckDB/Spark agree on. Integer division keeps exactness
+    (doubles can't hold ns epochs > 2^53)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    if isinstance(df.schema["ts"].dataType, LongType):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
+
+
 def load_tables(spark: SparkSession, sf_dir: str, names: Sequence[str] | None = None) -> dict[str, DamFrame]:
     """Load the driver's TPC-H-ish parquet tables from an sf directory."""
     names = names or [
         "region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "documents", "embeddings",
     ]
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType
-
     from .session import ensure_session_defaults
 
-    cache = _session_cache(spark)
     # Defensive: the caller's session may not be ours (the verification
     # driver builds its own), and a foreign driver may mutate a required
     # conf mid-session. These confs are required for correct reads, so
@@ -671,49 +828,14 @@ def load_tables(spark: SparkSession, sf_dir: str, names: Sequence[str] | None = 
 
     out: dict[str, DamFrame] = {}
     for n in names:
-        p = os.path.join(sf_dir, f"{n}.parquet")
-        try:
-            st = os.stat(p)
-        except OSError:
-            continue
-        sig: tuple = (st.st_size, st.st_mtime_ns)
-        if os.path.isdir(p):
-            # Directory datasets (Spark-written {name}.parquet dirs):
-            # in-place rewrites change MEMBER files without necessarily
-            # touching any directory's own size/mtime (ADVICE r15), so
-            # fold the stats of every member of the tree — partition
-            # subdirectories included — into the signature. Driver
-            # testdata tables are single files and never take this
-            # branch; it exists so a stale FileIndex can't be served
-            # for directory inputs.
-            try:
-                members = []
-                for root, dirs, files in os.walk(p):
-                    dirs.sort()
-                    for m in sorted(files):
-                        mp = os.path.join(root, m)
-                        ms = os.stat(mp)
-                        members.append(
-                            (os.path.relpath(mp, p), ms.st_size,
-                             ms.st_mtime_ns)
-                        )
-                sig = sig + (tuple(members),)
-            except OSError:
-                pass
-        hit = cache.get(p)
-        if hit is not None and hit[0] == sig:
-            out[n] = hit[1]
-            continue
-        df = spark.read.parquet(p)
-        # TIMESTAMP(NANOS) parquet columns arrive as long ns-since-epoch
-        # (session.py nanosAsLong); normalize to microsecond timestamps,
-        # the precision DuckDB/Spark agree on. Integer division keeps
-        # exactness (doubles can't hold ns epochs > 2^53).
-        if n == "events" and isinstance(df.schema["ts"].dataType, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        cache[p] = (sig, df)
-        out[n] = df
-    return {k: DamFrame(v) for k, v in out.items()}
+        df = _cached_parquet(
+            spark,
+            os.path.join(sf_dir, f"{n}.parquet"),
+            _events_ts_micros if n == "events" else None,
+        )
+        if df is not None:
+            out[n] = DamFrame(df)
+    return out
 
 
 def to_html(frame: DamFrame, n: int = 100) -> str:

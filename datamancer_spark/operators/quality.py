@@ -787,8 +787,10 @@ def dsir_resample(
     ) / 1e6
     gm = F.floor(-F.log(-F.log(u)) * 1e6 + 0.5).cast("long")
     # keyed feeds both the top-k and the flag join — cut lineage so the
-    # upstream weight computation (two shuffles over the gram stream)
-    # runs once, not twice
+    # upstream weighted sum over the pinned doc-bucket counts (a bucket
+    # aggregate, a join and a per-doc aggregate) runs once, not twice.
+    # dsir_select_en at sf0.1: 0.66 s pinned vs 0.72 s lazy (medians of
+    # 12 alternating pairs, lazy no slower in 3; 12 jobs either way).
     keyed = materialize(
         weights.withColumn("_key", F.col("logw_micros") + gm)
     )

@@ -550,3 +550,194 @@ class TestLoadTablesCache:
         assert b is not a
         # partitioned: 9 rewritten rows in part=0 plus keys 1, 3 in part=1
         assert b.count() == (11 if partitioned else 9)
+
+
+def _jobs(spark, build):
+    """``build()`` and the number of Spark jobs it ran (setJobGroup +
+    statusTracker)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"io-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestSchemaRecord:
+    """A plain write_csv / write_jsonl / write_parquet records the
+    schema it wrote; the readers use it for an unchanged directory in
+    the writer's dialect (no inference job, the writer's exact types)
+    and infer as before for anything else."""
+
+    DDL = "l long, d double, s string, b boolean, dt date, ts timestamp"
+
+    @staticmethod
+    def _rows(n0=1, n=2):
+        import datetime as dt
+
+        utc = dt.timezone.utc
+        return [
+            (i, i + 0.5, f"s{i}", True, dt.date(2020, 1, i),
+             dt.datetime(2020, 1, i, 3, 4, 5, tzinfo=utc))
+            if i % 2 else (i, -0.25, None, False, None, None)
+            for i in range(n0, n0 + n)
+        ]
+
+    @staticmethod
+    def _io(fmt):
+        from datamancer_spark import read_jsonl, write_jsonl
+
+        return {
+            "csv": (write_csv, read_csv),
+            "jsonl": (write_jsonl, read_jsonl),
+            "parquet": (write_parquet, read_parquet),
+        }[fmt]
+
+    @pytest.mark.parametrize("fmt", ["csv", "jsonl", "parquet"])
+    def test_roundtrip_keeps_writer_types(self, spark, tmp_path, fmt):
+        from datamancer_spark.frame import DamFrame
+
+        rows, ddl = self._rows(), self.DDL
+        if fmt != "csv":  # CSV cannot hold a map
+            rows = [r + ({"k": r[0]},) for r in rows]
+            ddl += ", m map<string,bigint>"
+        df = spark.createDataFrame(rows, ddl)
+        write, read = self._io(fmt)
+        p = str(tmp_path / fmt)
+        write(DamFrame(df), p)
+        back, jobs = _jobs(spark, lambda: read(spark, p).df)
+        assert jobs == 0
+        assert back.schema == df.schema
+        assert sorted(back.collect()) == sorted(df.collect())
+
+    def test_parquet_record_equals_inference(self, spark, tmp_path):
+        import json
+
+        from pyspark.sql.types import StructType
+
+        from datamancer_spark.frame import DamFrame
+        from datamancer_spark.io import _RECORD
+
+        p = str(tmp_path / "pq")
+        df = spark.createDataFrame(self._rows(), self.DDL).selectExpr(
+            "*", "map('k', l) m", "array(d) a", "named_struct('x', s) st"
+        )
+        write_parquet(DamFrame(df), p)
+        with open(os.path.join(p, _RECORD)) as f:
+            recorded = StructType.fromJson(json.load(f)["schema"])
+        inferred = spark.read.parquet(p).schema
+        assert read_parquet(spark, p).df.schema == inferred
+        # Spark writes parquet columns nullable; compare on that basis
+        assert recorded.simpleString() == inferred.simpleString()
+
+    @pytest.mark.parametrize("change", ["added", "removed"])
+    @pytest.mark.parametrize("fmt", ["csv", "jsonl", "parquet"])
+    def test_changed_files_fall_back_to_inference(
+        self, spark, tmp_path, fmt, change
+    ):
+        import shutil
+
+        from pyspark.sql import functions as F
+
+        from datamancer_spark.frame import DamFrame
+
+        write, read = self._io(fmt)
+        df = spark.createDataFrame(self._rows(), self.DDL)
+        p = str(tmp_path / fmt)
+        # one part file per row: part-00000 holds l=1, part-00001 l=2
+        write(DamFrame(df.repartitionByRange(2, "l")), p)
+        parts = sorted(f for f in os.listdir(p) if f.startswith("part-"))
+        assert len(parts) == 2
+        if change == "added":
+            extra = spark.createDataFrame(self._rows(3, 1), self.DDL)
+            stage = str(tmp_path / "stage")
+            write(DamFrame(extra.coalesce(1)), stage)
+            src = next(f for f in os.listdir(stage) if f.startswith("part-"))
+            shutil.copy(os.path.join(stage, src),
+                        os.path.join(p, "part-foreign-" + src[5:]))
+            want = df.union(extra)
+        else:
+            os.remove(os.path.join(p, parts[1]))
+            want = df.filter("l = 1")
+        back, jobs = _jobs(spark, lambda: read(spark, p).df)
+        assert jobs > 0  # the schema was inferred, not taken on trust
+        typed = back.select(
+            [F.col(c).cast(t).alias(c) for c, t in df.dtypes]
+        )
+        assert sorted(typed.collect()) == sorted(want.collect())
+
+    def test_reader_choices_skip_the_record(self, spark, tmp_path):
+        from datamancer_spark import read_jsonl, write_jsonl
+        from datamancer_spark.frame import DamFrame
+
+        df = spark.createDataFrame(self._rows(), self.DDL)
+        csv_dir, json_dir = str(tmp_path / "csv"), str(tmp_path / "jsonl")
+        write_csv(DamFrame(df), csv_dir)
+        write_jsonl(DamFrame(df), json_dir)
+
+        # another separator: one column per line, as inference reads it
+        other_sep, jobs = _jobs(
+            spark, lambda: read_csv(spark, csv_dir, sep=";").df
+        )
+        assert jobs > 0
+        assert other_sep.columns == [",".join(df.columns)]
+        assert other_sep.count() == 2
+        # infer_schema=False: every column a string
+        raw = read_csv(spark, csv_dir, infer_schema=False).df
+        assert set(dict(raw.dtypes).values()) == {"string"}
+        assert sorted(r["l"] for r in raw.collect()) == ["1", "2"]
+        # the writer's dialect still reads l as the recorded long
+        # (inference would give int)
+        assert dict(read_csv(spark, csv_dir).df.dtypes)["l"] == "bigint"
+        # an explicit schema wins over the record
+        typed = read_jsonl(spark, json_dir, schema="l long, s string").df
+        assert typed.columns == ["l", "s"]
+        assert sorted(tuple(r) for r in typed.collect()) == [
+            (1, "s1"), (2, None)
+        ]
+
+    def test_keep_corrupt_appends_to_recorded_schema(self, spark, tmp_path):
+        from datamancer_spark import read_jsonl, write_jsonl
+        from datamancer_spark.frame import DamFrame
+
+        df = spark.createDataFrame(self._rows(), self.DDL)
+        p = str(tmp_path / "jsonl")
+        write_jsonl(DamFrame(df), p)
+        back, jobs = _jobs(
+            spark, lambda: read_jsonl(spark, p, keep_corrupt=True).df
+        )
+        assert jobs == 0
+        assert back.columns == df.columns + ["_corrupt_record"]
+        assert [r["_corrupt_record"] for r in back.collect()] == [None] * 2
+
+    def test_read_parquet_handle_cached_until_rewrite(self, spark, tmp_path):
+        import shutil
+
+        from datamancer_spark.frame import DamFrame
+
+        p = str(tmp_path / "pq")
+        write_parquet(DamFrame(spark.range(5).coalesce(1)), p)
+        a = read_parquet(spark, p).df
+        assert read_parquet(spark, p).df is a
+        assert a.count() == 5
+
+        # rewrite the member file in place, directory stats pinned
+        pinned = os.stat(p)
+        spark.range(9).coalesce(1).write.parquet(str(tmp_path / "_stage"))
+        src = next(
+            f for f in os.listdir(str(tmp_path / "_stage"))
+            if f.endswith(".parquet")
+        )
+        member = next(f for f in os.listdir(p) if f.endswith(".parquet"))
+        shutil.copyfile(str(tmp_path / "_stage" / src), f"{p}/{member}")
+        for f in os.listdir(p):
+            if f.endswith(".crc"):
+                os.remove(f"{p}/{f}")
+        os.utime(p, ns=(pinned.st_atime_ns, pinned.st_mtime_ns))
+        b = read_parquet(spark, p).df
+        assert b is not a
+        assert b.count() == 9

@@ -630,3 +630,49 @@ def test_ann_recall_pins_approx_candidates(spark, sf_dir):
     # PySpark 4.1 expectation, re-baselined on a Spark upgrade; the
     # ExistingRDD check above is the primary guard.
     assert plan.count("Scan parquet") <= 1
+
+
+def test_package_written_reads_run_no_plan_time_jobs(spark, tmp_path):
+    """Building a read of a directory the package wrote runs no Spark
+    job: read_csv and read_jsonl take the writer's recorded schema
+    instead of an inference pass, and read_parquet / load_tables skip
+    the footer job (setJobGroup + statusTracker)."""
+    from datamancer_spark.frame import DamFrame
+    from datamancer_spark.io import (
+        load_tables,
+        read_csv,
+        read_jsonl,
+        read_parquet,
+        write_csv,
+        write_jsonl,
+        write_parquet,
+    )
+
+    df = DamFrame(
+        spark.range(20).selectExpr(
+            "id", "id % 3 as k", "cast(id as double) / 4 as v",
+            "timestamp_seconds(id * 3600) as ts",
+        )
+    )
+    d = str(tmp_path)
+    write_csv(df, f"{d}/e.csv")
+    write_jsonl(df, f"{d}/e.jsonl")
+    write_parquet(df, f"{d}/e.parquet")
+    write_parquet(df, f"{d}/events.parquet")
+    builds = {
+        "read_csv": lambda: read_csv(spark, f"{d}/e.csv"),
+        "read_jsonl": lambda: read_jsonl(spark, f"{d}/e.jsonl"),
+        "read_parquet": lambda: read_parquet(spark, f"{d}/e.parquet"),
+        "load_tables": lambda: load_tables(spark, d, ["events"])["events"],
+    }
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for name, build in builds.items():
+        group = f"plan-time-jobs-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            frame = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(tracker.getJobIdsForGroup(group)) == 0, name
+        assert frame.df.count() == 20, name
